@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..registry import query, track_persist
+from ..registry import query, session_memo, track_persist
 from ..tables import load
 
 N_MINHASH = 12  # signature length
@@ -1037,9 +1037,7 @@ class NearDupIndex:
         }
 
 
-_NDIDX_CACHE: dict = {}
-
-
+@session_memo
 def _demo_neardup_index(spark: SparkSession, sf_dir: str):
     """Incremental-index demo, memoized per (session, sf_dir): corpus =
     documents with doc_id % 3 != 0 ingested at build; batch = the rest
@@ -1048,10 +1046,6 @@ def _demo_neardup_index(spark: SparkSession, sf_dir: str):
     import tempfile
     import uuid as _uuid
 
-    cache_key = (id(spark), sf_dir)
-    got = _NDIDX_CACHE.get(cache_key)
-    if got is not None and _os.path.isdir(got[0].root):
-        return got
     root = _os.path.join(tempfile.gettempdir(), f"ndidx_{_uuid.uuid4().hex[:8]}")
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = d.where(F.col("doc_id") % 3 != 0)
@@ -1078,8 +1072,7 @@ def _demo_neardup_index(spark: SparkSession, sf_dir: str):
             len(hist) == 2 and (hist[1][1] or "") == "WRITE" and hist[1][3] == 0
         )
         flags[f"{name}_batch_rows_only"] = int(hist[1][4] == per_doc * n_batch_sh)
-    _NDIDX_CACHE[cache_key] = (idx, union_pairs, flags)
-    return _NDIDX_CACHE[cache_key]
+    return idx, union_pairs, flags
 
 
 @query(

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..registry import query, track_persist
+from ..registry import query, session_memo, track_persist
 from ..tables import load
 
 M_SUB = 8      # subspaces
@@ -96,21 +96,13 @@ def encode(emb: DataFrame, cb: DataFrame) -> DataFrame:
     return _assign(_subvectors(emb), cb).select("vec_id", "sub_id", "cid")
 
 
-_EXACT_L2_CACHE: dict = {}
-
-
+@session_memo
 def exact_l2_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """exact_l2_topk over the standard embeddings fixture, memoized and
     track_persist'ed per (session, sf_dir) — q114 and q164 both rank
     against this same truth (the cosine twin lives in
     similarity.exact_topk_memo)."""
-    key = (id(spark), sf_dir)
-    got = _EXACT_L2_CACHE.get(key)
-    if got is not None:
-        return got
-    out = track_persist(exact_l2_topk(load(spark, sf_dir, "embeddings")))
-    _EXACT_L2_CACHE[key] = out
-    return out
+    return track_persist(exact_l2_topk(load(spark, sf_dir, "embeddings")))
 
 
 def exact_l2_topk(emb: DataFrame, k: int = TOP_K) -> DataFrame:

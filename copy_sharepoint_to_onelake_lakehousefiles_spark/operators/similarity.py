@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..registry import query, track_persist
+from ..registry import query, session_memo, track_persist
 from ..tables import load
 
 TOP_K = 5
@@ -71,9 +71,7 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = TOP_K) -> DataFr
     )
 
 
-_EXACT_TOPK_CACHE: dict = {}
-
-
+@session_memo
 def exact_topk_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The standard exact cosine top-k (N_QUERIES queries, TOP_K) memoized
     per (session, sf_dir) and track_persist'ed: q30/q31/q51/q107 all rank
@@ -82,14 +80,8 @@ def exact_topk_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier's repeated fixed cost). Generational cache aging may unpersist it
     later; the plan then lazily recomputes — correctness never depends on
     the persist."""
-    key = (id(spark), sf_dir)
-    got = _EXACT_TOPK_CACHE.get(key)
-    if got is not None:
-        return got
     emb = load(spark, sf_dir, "embeddings")
-    out = track_persist(cosine_topk(emb.where(F.col("vec_id") < N_QUERIES), emb, TOP_K))
-    _EXACT_TOPK_CACHE[key] = out
-    return out
+    return track_persist(cosine_topk(emb.where(F.col("vec_id") < N_QUERIES), emb, TOP_K))
 
 
 # Shared oracle CTE: exact top-k cosine neighbours (DuckDB recomputes the
@@ -401,7 +393,8 @@ def _ivf_centroids(emb: DataFrame) -> list[tuple[int, list[float]]]:
             "vec_id", "emb", _nearest_cell_expr([c for _, c in cents]).alias("cell")
         )
         new = (
-            assigned.select(
+            assigned.where(F.col("cell") >= 0)
+            .select(
                 "cell", *[F.element_at("emb", i + 1).alias(f"d{i}") for i in range(dim)]
             )
             .groupBy("cell")
@@ -427,25 +420,27 @@ def _nearest_cell_expr(centroids: list[list[float]], emb_col: str = "emb"):
     deliberately: a one-row broadcast centroid table and a flat
     array-literal + slice() form were both MEASURED SLOWER (see
     OPTIMIZATION_r13.md) — the per-iteration broadcast/slice overhead
-    exceeds the literal-tree analysis cost at any warmth."""
+    exceeds the literal-tree analysis cost at any warmth.
+
+    A NULL embedding gets cell -1 ("no cell"), so it joins no probe and
+    never skews a centroid."""
     structs = ", ".join(
         f"named_struct('cid', {cid}, 'c', array({', '.join(f'CAST({x} AS DOUBLE)' for x in c)}))"
         for cid, c in enumerate(centroids)
     )
     return F.expr(
         f"""
+        CASE WHEN {emb_col} IS NULL THEN -1 ELSE
         array_min(transform(array({structs}),
           s -> struct(
             aggregate(zip_with({emb_col}, s.c, (x, y) -> (x - y) * (x - y)),
                       CAST(0 AS DOUBLE), (a, v) -> a + v) AS d,
-            s.cid AS cid))).cid
+            s.cid AS cid))).cid END
         """
     )
 
 
-_IVF_CENTS_CACHE: dict = {}
-
-
+@session_memo
 def ivf_centroids_memo(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[float]]]:
     """`_ivf_centroids` over the standard embeddings fixture, memoized per
     (session, sf_dir) — the exact_topk_memo pattern. q51 (IVF) and q164
@@ -453,14 +448,9 @@ def ivf_centroids_memo(spark: SparkSession, sf_dir: str) -> list[tuple[int, list
     the same table; before r13 each ran its own (≈14 s cold / 4 s warm at
     sf0.1 — the largest duplicated subtree left in the ANN tier, guide
     §7.2). The memo holds only the N_CELLS×dim centroid list (driver-side
-    metadata, ~8 KB), keyed on id(spark) so it dies with the session —
-    never a cross-run result cache."""
-    key = (id(spark), sf_dir)
-    got = _IVF_CENTS_CACHE.get(key)
-    if got is None:
-        got = _ivf_centroids(load(spark, sf_dir, "embeddings"))
-        _IVF_CENTS_CACHE[key] = got
-    return got
+    metadata, ~8 KB) and dies with the session — never a cross-run
+    result cache."""
+    return _ivf_centroids(load(spark, sf_dir, "embeddings"))
 
 
 def _cells_ranked_expr(centroids: list[list[float]], n: int, emb_col: str = "emb"):

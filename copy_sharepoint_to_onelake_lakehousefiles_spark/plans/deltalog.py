@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..registry import materialize, query
+from ..registry import materialize, query, session_memo
 from ..tables import load
 from .roaring import (
     deserialize_rba,
@@ -3655,19 +3655,13 @@ def stream_append(table: DeltaTable, stream_df: DataFrame, stream_id: str, check
 
 # ------------------------------------------------------------------ queries
 
-_DELTA_CACHE: dict = {}
-
-
+@session_memo
 def _demo_delta_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """Per-nation supplier counts, written through a partitioned Delta table
     in three commits: v0 CREATE (partitioned by region name), v1 APPEND of
     per-nation customer counts, v2 OVERWRITE dropping one region. Memoized
     per (session, sf_dir) like the TxTable demo (rebuild costs seconds of
     tiny jobs per query otherwise)."""
-    cache_key = (id(spark), sf_dir)
-    t = _DELTA_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.log_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"delta_{uuid.uuid4().hex[:8]}")
@@ -3703,7 +3697,6 @@ def _demo_delta_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     t.overwrite(
         suppliers.unionByName(customers).where(F.col("r_name") != F.lit("EUROPE"))
     )
-    _DELTA_CACHE[cache_key] = t
     return t
 
 
@@ -3948,37 +3941,25 @@ _MERGE_ROWS = [(0, "RENAMED", 9), (7, "PATCHED", 2), (999, "NEWLAND", 1)]
 _MERGE_DDL = "n_nationkey int, n_name string, n_regionkey int"
 _MERGE_VALUES_SQL = "VALUES (0, 'RENAMED', 9), (7, 'PATCHED', 2), (999, 'NEWLAND', 1)"
 
-_MERGED_CACHE: dict = {}
 
-
+@session_memo
 def _merged_delta_nation(spark: SparkSession, sf_dir: str) -> DeltaTable:
-    cache_key = (id(spark), sf_dir)
-    t = _MERGED_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.log_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"delta_merge_{uuid.uuid4().hex[:8]}")
     nation = load(spark, sf_dir, "nation").repartitionByRange(4, "n_nationkey")
     t = DeltaTable.create(spark, root, nation)
     t.merge(spark.createDataFrame(_MERGE_ROWS, _MERGE_DDL), key="n_nationkey")
-    _MERGED_CACHE[cache_key] = t
     return t
 
 
-_DV_CACHE: dict = {}
-
-
+@session_memo
 def _dv_customer_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """Deletion-vector demo, memoized per (session, sf_dir): customer in 4
     data files; DV-delete of negative balances (no file rewritten); append
     three rows (one with a negative balance — it survives: its file carries
     no DV); a second DV-delete by custkey digit spanning old and new files;
     then a copy-on-write DELETE on top, whose rewrite must apply the DVs."""
-    cache_key = (id(spark), sf_dir)
-    t = _DV_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.log_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"delta_dv_{uuid.uuid4().hex[:8]}")
@@ -4001,7 +3982,6 @@ def _dv_customer_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     )
     t.delete_vectors("c_custkey % 10 = 7")
     t.delete("c_mktsegment = 'FURNITURE'")
-    _DV_CACHE[cache_key] = t
     return t
 
 
@@ -4143,9 +4123,7 @@ def q158_delta_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_V2CKPT_CACHE: dict = {}
-
-
+@session_memo
 def _v2_checkpoint_demo(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """nation×region Delta table: CREATE partitioned by r_name, DV-delete
     one residue class, then a V2 CHECKPOINT with 2 sidecars and the JSON
@@ -4154,10 +4132,6 @@ def _v2_checkpoint_demo(spark: SparkSession, sf_dir: str) -> DeltaTable:
     per (session, sf_dir)."""
     import tempfile
 
-    cache_key = (id(spark), sf_dir)
-    t = _V2CKPT_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.log_dir):
-        return t
     root = os.path.join(tempfile.gettempdir(), f"delta_v2ck_{uuid.uuid4().hex[:8]}")
     nation = load(spark, sf_dir, "nation")
     region = load(spark, sf_dir, "region")
@@ -4170,7 +4144,6 @@ def _v2_checkpoint_demo(spark: SparkSession, sf_dir: str) -> DeltaTable:
     t.delete_vectors("n_nationkey % 5 = 2")
     t.write_checkpoint_v2(sidecar_parts=2)
     t.cleanup_log(keep_versions=1)
-    _V2CKPT_CACHE[cache_key] = t
     return t
 
 
@@ -4227,9 +4200,7 @@ def q166_delta_v2_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -------------------------------------------------------- inline-DV demo
 
-_INLINE_DV_CACHE: dict = {}
-
-
+@session_memo
 def _inline_dv_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """Delta DV STORAGE-FLAVOR demo, memoized per (session, sf_dir): nation
     partitioned into 3 files by ``n_nationkey % 3``; delete #1 rides the
@@ -4239,10 +4210,6 @@ def _inline_dv_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     flavors at once and the reader must apply them identically. Content
     derives from nation only (25 rows at every sf), so survivors are a
     closed-form SQL expression."""
-    cache_key = (id(spark), sf_dir)
-    t = _INLINE_DV_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.log_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"delta_idv_{uuid.uuid4().hex[:8]}")
@@ -4262,7 +4229,6 @@ def _inline_dv_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     t.INLINE_DV_MAX_BYTES = 0
     t.delete_vectors("n_nationkey IN (5, 10)")
     t.INLINE_DV_MAX_BYTES = DeltaTable.INLINE_DV_MAX_BYTES
-    _INLINE_DV_CACHE[cache_key] = t
     return t
 
 
@@ -4309,19 +4275,13 @@ def q173_delta_inline_dv_flavors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------- CDF demo
 
-_CDF_CACHE: dict = {}
-
-
+@session_memo
 def _cdf_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """Change-data-feed demo, memoized per (session, sf_dir): nation →
     enable CDF → one MERGE updating every fifth nation's name and
     inserting five region-derived rows. The merge commit's row-level
     changes are only recoverable from its ``_change_data`` file —
     add/remove netting would show whole-file delete+insert churn."""
-    cache_key = (id(spark), sf_dir)
-    t = _CDF_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.log_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"delta_cdf_{uuid.uuid4().hex[:8]}")
@@ -4340,7 +4300,6 @@ def _cdf_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
         )
     )
     t.merge(updates, key="n_nationkey")
-    _CDF_CACHE[cache_key] = t
     return t
 
 
@@ -4380,19 +4339,13 @@ def q175_delta_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GEN_CACHE: dict = {}
-
-
+@session_memo
 def _generated_demo_table(spark: SparkSession, sf_dir: str) -> tuple:
     """Generated-columns demo, memoized per (session, sf_dir): events →
     Delta table PARTITIONED BY a generated ``day`` column (CAST(ts AS
     DATE), computed at create) → one append that OMITS the column (the
     writer computes it) → one refused append that LIES about it (the
     writer validates). Returns (table, bad_write_refused flag)."""
-    cache_key = (id(spark), sf_dir)
-    got = _GEN_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got[0].log_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"dlgen_{uuid.uuid4().hex[:8]}")
@@ -4419,8 +4372,7 @@ def _generated_demo_table(spark: SparkSession, sf_dir: str) -> tuple:
         )
     except ValueError:
         refused = 1
-    _GEN_CACHE[cache_key] = (DeltaTable(spark, root), refused)
-    return _GEN_CACHE[cache_key]
+    return DeltaTable(spark, root), refused
 
 
 _Q191_ORACLE = """
@@ -4462,19 +4414,13 @@ def q191_delta_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IDC_CACHE: dict = {}
-
-
+@session_memo
 def _identity_demo_table(spark: SparkSession, sf_dir: str) -> tuple:
     """Identity-columns demo, memoized per (session, sf_dir): customer →
     Delta table with a generated-always identity column ``c_sk`` (start
     100, step 3) → one append that omits it (values continue above the
     watermark) → one refused append that supplies it explicitly. Returns
     (table, explicit_refused flag)."""
-    cache_key = (id(spark), sf_dir)
-    got = _IDC_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got[0].log_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"dlidc_{uuid.uuid4().hex[:8]}")
@@ -4496,8 +4442,7 @@ def _identity_demo_table(spark: SparkSession, sf_dir: str) -> tuple:
         t.append(cust.limit(5).withColumn("c_sk", F.lit(5).cast("long")))
     except ValueError:
         refused = 1
-    _IDC_CACHE[cache_key] = (DeltaTable(spark, root), refused)
-    return _IDC_CACHE[cache_key]
+    return DeltaTable(spark, root), refused
 
 
 _Q192_ORACLE = """
@@ -4549,18 +4494,12 @@ def q192_delta_identity_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DFLT_CACHE: dict = {}
-
-
+@session_memo
 def _defaults_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """Column-defaults demo, memoized per (session, sf_dir): orders →
     Delta table whose ``source`` column defaults to 'legacy' → one append
     that OMITS the column (default fills) → one that PROVIDES it (kept
     verbatim)."""
-    cache_key = (id(spark), sf_dir)
-    got = _DFLT_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got.log_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"dldflt_{uuid.uuid4().hex[:8]}")
@@ -4576,8 +4515,7 @@ def _defaults_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
         o.select((F.col("o_orderkey") + 20_000_000).alias("o_orderkey"), "o_totalprice")
         .withColumn("source", F.lit("stream"))
     )
-    _DFLT_CACHE[cache_key] = DeltaTable(spark, root)
-    return _DFLT_CACHE[cache_key]
+    return DeltaTable(spark, root)
 
 
 _Q196_ORACLE = """
@@ -4620,18 +4558,12 @@ def q196_delta_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_VAR_CACHE: dict = {}
-
-
+@session_memo
 def _variant_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """Delta VARIANT demo, memoized per (session, sf_dir): events with the
     JSON props parsed into a VariantType column → create + append (both
     write the variant parquet encoding) → one copy-on-write DELETE that
     rewrites variant-bearing files."""
-    cache_key = (id(spark), sf_dir)
-    got = _VAR_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got.log_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"dlvar_{uuid.uuid4().hex[:8]}")
@@ -4641,8 +4573,7 @@ def _variant_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     t = DeltaTable.create(spark, root, ev.where(F.col("event_id") % 2 == 0))
     t.append(ev.where(F.col("event_id") % 2 == 1))
     t.delete("event_id % 10 = 3")
-    _VAR_CACHE[cache_key] = DeltaTable(spark, root)
-    return _VAR_CACHE[cache_key]
+    return DeltaTable(spark, root)
 
 
 _Q195_ORACLE = """
@@ -4690,9 +4621,7 @@ def q195_delta_variant_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHRED_CACHE: dict = {}
-
-
+@session_memo
 def _shredded_variant_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """Shredded-VARIANT demo, memoized per (session, sf_dir): events with
     props parsed into a VariantType column, range-laid-out on the JSON
@@ -4701,10 +4630,6 @@ def _shredded_variant_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable
     contiguous boundary interval), created with ``shred_variants=["pv"]``
     so every file stores pv in the VariantShredding layout and its
     add-action stats carry ``pv.typed_value.k.typed_value`` bounds."""
-    cache_key = (id(spark), sf_dir)
-    got = _SHRED_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got.log_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"dlshred_{uuid.uuid4().hex[:8]}")
@@ -4717,7 +4642,6 @@ def _shredded_variant_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable
         .select("event_id", "event_type", "value", F.parse_json("props").alias("pv"))
     )
     t = DeltaTable.create(spark, root, ev, shred_variants=["pv"])
-    _SHRED_CACHE[cache_key] = t
     return t
 
 
@@ -4798,19 +4722,13 @@ def q200_delta_variant_shredding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BLOOM_CACHE: dict = {}
-
-
+@session_memo
 def _bloom_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """Bloom point-lookup demo, memoized per (session, sf_dir): events
     HASH-distributed into 4 files (every file spans the full event_id
     range — min/max stats deliberately useless for a point lookup),
     created with ``bloom_filters={"event_id": ...}`` so each file carries
     a split-block Bloom filter sized for its rows."""
-    cache_key = (id(spark), sf_dir)
-    got = _BLOOM_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got.log_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"dlbloom_{uuid.uuid4().hex[:8]}")
@@ -4822,7 +4740,6 @@ def _bloom_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     t = DeltaTable.create(
         spark, root, ev, bloom_filters={"event_id": max(1, ev.count() // 4)}
     )
-    _BLOOM_CACHE[cache_key] = t
     return t
 
 
@@ -4891,19 +4808,13 @@ def q202_delta_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_RTCDF_CACHE: dict = {}
-
-
+@session_memo
 def _rt_cdf_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """Row-tracking × CDF composition demo, memoized per (session,
     sf_dir): nation as ONE sorted file → enable_row_tracking (ids 0..24
     in key order) → enable_change_data_feed → one MERGE renaming every
     key %5=2 (the cdc file materializes each pre/postimage pair's stable
     ``_row_id``)."""
-    cache_key = (id(spark), sf_dir)
-    t = _RTCDF_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.log_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"dlrtcdf_{uuid.uuid4().hex[:8]}")
@@ -4920,7 +4831,6 @@ def _rt_cdf_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
         ),
         key="n_nationkey",
     )
-    _RTCDF_CACHE[cache_key] = t
     return t
 
 
@@ -4985,9 +4895,7 @@ def q186_delta_row_tracking_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RT_CACHE: dict = {}
-
-
+@session_memo
 def _row_tracking_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """Row-tracking demo, memoized per (session, sf_dir): nation written as
     ONE ordered file → enable_row_tracking (backfill ids 0..24 in key
@@ -4998,10 +4906,6 @@ def _row_tracking_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     → one more ordered append (ids start at |base| + 2·|live| = 82).
     Deterministic because every commit writes exactly one file in sorted
     key order."""
-    cache_key = (id(spark), sf_dir)
-    t = _RT_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.log_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"dlrt_{uuid.uuid4().hex[:8]}")
@@ -5026,7 +4930,6 @@ def _row_tracking_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
             F.concat(F.lit("RT2_"), F.col("r_name")).alias("name"),
         ).orderBy("k").coalesce(1)
     )
-    _RT_CACHE[cache_key] = t
     return t
 
 
@@ -5086,19 +4989,13 @@ def q178_delta_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ICT_CACHE: dict = {}
-
-
+@session_memo
 def _ict_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """ICT demo, memoized per (session, sf_dir): nation (v0, pre-ICT) →
     enable_in_commit_timestamps (v1) → two region-derived appends (v2,
     v3) → a CoW delete (v4). Wall-clock values are nondeterministic, so
     the GATE checks structural invariants (first-action placement,
     strict monotonicity, enablement properties) as integer flags."""
-    cache_key = (id(spark), sf_dir)
-    t = _ICT_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.log_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"dlict_{uuid.uuid4().hex[:8]}")
@@ -5117,7 +5014,6 @@ def _ict_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
             ).orderBy("k").coalesce(1)
         )
     t.delete("k % 9 = 4")
-    _ICT_CACHE[cache_key] = t
     return t
 
 
@@ -5168,9 +5064,7 @@ def q179_delta_in_commit_timestamps(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-_WIDEN_CACHE: dict = {}
-
-
+@session_memo
 def _widen_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """Type-widening demo, memoized per (session, sf_dir): nation with an
     INT key column (v0) → widen_column k -> long (v1, metadata-only) →
@@ -5178,10 +5072,6 @@ def _widen_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     that updates one narrow-file row and one wide-file row (v3) — so the
     gate reads narrow-physical and wide-physical files through ONE
     declared schema."""
-    cache_key = (id(spark), sf_dir)
-    t = _WIDEN_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.log_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"dlwide_{uuid.uuid4().hex[:8]}")
@@ -5205,7 +5095,6 @@ def _widen_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
         ),
         key="k",
     )
-    _WIDEN_CACHE[cache_key] = t
     return t
 
 
@@ -5251,19 +5140,13 @@ def q180_delta_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LC_CACHE: dict = {}
-
-
+@session_memo
 def _liquid_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """Liquid-clustering demo, memoized per (session, sf_dir): part rows
     written SHUFFLED across 6 files → CLUSTER BY p_retailprice (domain
     metadata) → OPTIMIZE range-clusters into 4 non-overlapping files →
     re-cluster by p_size + OPTIMIZE again (the metadata-only re-layout
     hive partitioning cannot do)."""
-    cache_key = (id(spark), sf_dir)
-    t = _LC_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.log_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"dllc_{uuid.uuid4().hex[:8]}")
@@ -5277,7 +5160,6 @@ def _liquid_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     t.compact(target_files=4)
     t.set_clustering_columns(["sz"])
     t.compact(target_files=4)
-    _LC_CACHE[cache_key] = t
     return t
 
 
@@ -5324,19 +5206,13 @@ def q182_delta_liquid_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LC3_CACHE: dict = {}
-
-
+@session_memo
 def _liquid_3col_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """3-column liquid-clustering demo, memoized per (session, sf_dir):
     part rows written SHUFFLED across 6 files → CLUSTER BY
     (sz, price_c, k) → OPTIMIZE rewrites along the 3-D Hilbert curve
     into 8 files (2³ octants — EVERY clustering column's per-file range
     roughly halves)."""
-    cache_key = (id(spark), sf_dir)
-    t = _LC3_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.log_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"dllc3_{uuid.uuid4().hex[:8]}")
@@ -5348,7 +5224,6 @@ def _liquid_3col_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     t = DeltaTable.create(spark, root, part.repartition(6))
     t.set_clustering_columns(["sz", "price_c", "k"])
     t.compact(target_files=8)
-    _LC3_CACHE[cache_key] = t
     return t
 
 
@@ -5403,9 +5278,7 @@ def q185_delta_liquid_clustering_3col(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-_VCLUST_CACHE: dict = {}
-
-
+@session_memo
 def _variant_clustered_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """Variant-PATH liquid clustering demo, memoized per (session, sf_dir):
     events with props parsed into a shredded VariantType column, written
@@ -5413,10 +5286,6 @@ def _variant_clustered_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTabl
     CLUSTER BY ("pv:$.k") + OPTIMIZE — the liquid-clustering rewrite
     range-lays the table out by the variant's typed subpath into 4 files
     with disjoint shredded-stats spans."""
-    cache_key = (id(spark), sf_dir)
-    got = _VCLUST_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got.log_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"dlvclust_{uuid.uuid4().hex[:8]}")
@@ -5428,7 +5297,6 @@ def _variant_clustered_demo_table(spark: SparkSession, sf_dir: str) -> DeltaTabl
     t = DeltaTable.create(spark, root, ev, shred_variants=["pv"])
     t.set_clustering_columns(["pv:$.k"])
     t.compact(target_files=4)
-    _VCLUST_CACHE[cache_key] = t
     return t
 
 

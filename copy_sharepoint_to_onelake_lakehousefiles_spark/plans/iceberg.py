@@ -68,7 +68,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..registry import materialize, query
+from ..registry import materialize, query, session_memo
 from ..sources.avro_ocf import read_ocf, write_ocf
 from ..tables import load
 from .deltalog import _decoded_file_path
@@ -5788,20 +5788,12 @@ def delta_to_iceberg_uniform(delta, ice_root: str | None = None) -> IcebergTable
 
 # ------------------------------------------------------------------ queries
 
-_ICE_CACHE: dict = {}
-
-
+@session_memo
 def _demo_iceberg_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     """Same three-commit demo as the Delta tier (q128), through Iceberg
     metadata instead: v0 CREATE partitioned by region, v1 fast-APPEND,
     v2 OVERWRITE dropping one region. Memoized per (session, sf_dir)."""
-    cache_key = (id(spark), sf_dir)
-    t = _ICE_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.meta_dir):
-        return t
     import tempfile
-
-    from .deltalog import _demo_delta_table  # reuse the metric builders
 
     root = os.path.join(tempfile.gettempdir(), f"iceberg_{uuid.uuid4().hex[:8]}")
     nation = load(spark, sf_dir, "nation")
@@ -5834,7 +5826,6 @@ def _demo_iceberg_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     t.overwrite(
         suppliers.unionByName(customers).where(F.col("r_name") != F.lit("EUROPE"))
     )
-    _ICE_CACHE[cache_key] = t
     return t
 
 
@@ -6026,14 +6017,8 @@ def q138_iceberg_sql_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialize(out)
 
 
-_MOR_CACHE: dict = {}
-
-
+@session_memo
 def _mor_nation_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
-    cache_key = (id(spark), sf_dir)
-    t = _MOR_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.meta_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"ice_mor_{uuid.uuid4().hex[:8]}")
@@ -6045,18 +6030,11 @@ def _mor_nation_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     t.append(
         spark.createDataFrame([(3, "REBORN", 1)], "n_nationkey long, n_name string, n_regionkey long")
     )
-    _MOR_CACHE[cache_key] = t
     return t
 
 
-_UPSERT_CACHE: dict = {}
-
-
+@session_memo
 def _upsert_nation_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
-    cache_key = (id(spark), sf_dir)
-    t = _UPSERT_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.meta_dir):
-        return t
     import tempfile
 
     from .deltalog import _MERGE_DDL, _MERGE_ROWS
@@ -6067,7 +6045,6 @@ def _upsert_nation_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     )
     t = IcebergTable.create(spark, root, nation.coalesce(1))
     t.upsert(spark.createDataFrame(_MERGE_ROWS, _MERGE_DDL), key="n_nationkey")
-    _UPSERT_CACHE[cache_key] = t
     return t
 
 
@@ -6188,18 +6165,12 @@ def q148_iceberg_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_PEVO_CACHE: dict = {}
-
-
+@session_memo
 def _pevo_orders_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     """Partition-evolution demo, memoized per (session, sf_dir): orders
     created UNPARTITIONED, the spec evolved to identity-partition by
     o_orderpriority (metadata-only), then a new batch appended under the
     new layout — so the table mixes unpartitioned and partitioned files."""
-    cache_key = (id(spark), sf_dir)
-    t = _PEVO_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.meta_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"ice_pevo_{uuid.uuid4().hex[:8]}")
@@ -6220,7 +6191,6 @@ def _pevo_orders_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
             "o_orderkey long, o_orderpriority string, o_totalprice double",
         )
     )
-    _PEVO_CACHE[cache_key] = t
     return t
 
 
@@ -6270,19 +6240,13 @@ def q147_iceberg_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFr
     return materialize(out)
 
 
-_POS_CACHE: dict = {}
-
-
+@session_memo
 def _pos_supplier_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     """Position-delete demo, memoized per (session, sf_dir): supplier in 4
     data files; MoR position-delete of negative balances; append three rows
     (one with a negative balance — it survives: its file postdates the
     delete); a second position delete by suppkey digit that spans BOTH the
     original and the appended files."""
-    cache_key = (id(spark), sf_dir)
-    t = _POS_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.meta_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"ice_pos_{uuid.uuid4().hex[:8]}")
@@ -6305,7 +6269,6 @@ def _pos_supplier_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
         )
     )
     t.position_delete("s_suppkey % 10 = 7")
-    _POS_CACHE[cache_key] = t
     return t
 
 
@@ -6360,19 +6323,13 @@ def q143_iceberg_position_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialize(out)
 
 
-_EVO_CACHE: dict = {}
-
-
+@session_memo
 def _evolution_tables(spark: SparkSession, sf_dir: str):
     """Schema-evolution demo pair, memoized per (session, sf_dir): the SAME
     rename → drop → re-add-with-evolution sequence through Delta (column
     mapping: physical-name indirection) and Iceberg (field-id resolution).
     The re-added ``n_regionkey`` must read NULL for every original row in
     both stacks — the non-resurrection guarantee in the hashed contract."""
-    cache_key = (id(spark), sf_dir)
-    pair = _EVO_CACHE.get(cache_key)
-    if pair is not None and os.path.isdir(pair[0].log_dir):
-        return pair
     import tempfile
 
     from .deltalog import DeltaTable
@@ -6400,7 +6357,6 @@ def _evolution_tables(spark: SparkSession, sf_dir: str):
         ),
         allow_evolution=True,
     )
-    _EVO_CACHE[cache_key] = (dl, ic)
     return dl, ic
 
 
@@ -6667,19 +6623,13 @@ def q142_federated_lakehouse_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------- bucket-transform partitioning
 
-_BUCKET_CACHE: dict = {}
-
-
+@session_memo
 def _bucket_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     """supplier partitioned by bucket(4, s_suppkey) — the spec's murmur3
     hash transform (Appendix B), exercised end-to-end: staging computes the
     bucket per row (vectorized murmur3 over Arrow batches), manifests carry
     int bucket tuples, planning prunes on them. Memoized per (session,
     sf_dir)."""
-    cache_key = (id(spark), sf_dir)
-    t = _BUCKET_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.meta_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"ice_bucket_{uuid.uuid4().hex[:8]}")
@@ -6689,7 +6639,6 @@ def _bucket_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     t = IcebergTable.create(
         spark, root, supplier.coalesce(1), partition_by=["bucket(4, s_suppkey)"]
     )
-    _BUCKET_CACHE[cache_key] = t
     return t
 
 
@@ -6746,9 +6695,7 @@ def q154_iceberg_bucket_transform(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # ------------------------------------------------- in-place migration tier
 
-_MIGRATE_CACHE: dict = {}
-
-
+@session_memo
 def _migration_demo(spark: SparkSession, sf_dir: str) -> tuple:
     """Two identical hive-layout parquet dirs built from supplier×nation×
     region (partitioned by r_name), one converted IN PLACE to Delta, the
@@ -6761,10 +6708,6 @@ def _migration_demo(spark: SparkSession, sf_dir: str) -> tuple:
 
     from .deltalog import convert_parquet_to_delta
 
-    cache_key = (id(spark), sf_dir)
-    hit = _MIGRATE_CACHE.get(cache_key)
-    if hit is not None and os.path.isdir(hit[0].root):
-        return hit
     supplier = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
     region = load(spark, sf_dir, "region")
@@ -6791,7 +6734,6 @@ def _migration_demo(spark: SparkSession, sf_dir: str) -> tuple:
     ice = IcebergTable.migrate_parquet(spark, roots[1])
     in_place = all(data_files(r) == b for r, b in zip(roots, before))
     out = (dl, ice, 1 if in_place else 0)
-    _MIGRATE_CACHE[cache_key] = out
     return out
 
 
@@ -6886,18 +6828,12 @@ def q159_iceberg_sorted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_TRUNC_CACHE: dict = {}
-
-
+@session_memo
 def _trunc_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     """customer partitioned by truncate(100, c_custkey): one file per
     present truncated value (coalesce(1) + partitionBy), so file counts in
     the pruning audit are relationally derivable — count(DISTINCT
     c_custkey - c_custkey % 100). Memoized per (session, sf_dir)."""
-    cache_key = (id(spark), sf_dir)
-    t = _TRUNC_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.meta_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"ice_trunc_{uuid.uuid4().hex[:8]}")
@@ -6907,7 +6843,6 @@ def _trunc_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     t = IcebergTable.create(
         spark, root, customer.coalesce(1), partition_by=["truncate(100, c_custkey)"]
     )
-    _TRUNC_CACHE[cache_key] = t
     return t
 
 
@@ -6957,9 +6892,7 @@ def q165_iceberg_truncate_range_scan(spark: SparkSession, sf_dir: str) -> DataFr
 
 # ------------------------------------------------------------ v3 DV demo
 
-_V3_CACHE: dict = {}
-
-
+@session_memo
 def _v3_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     """Iceberg V3 deletion-vector demo, memoized per (session, sf_dir):
     CREATE nation (one ordered file) → APPEND five region-derived rows →
@@ -6967,10 +6900,6 @@ def _v3_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     (union semantics, one DV per file). Content derives from nation/region
     only, so the expected survivors are a closed-form SQL expression at
     every scale factor."""
-    cache_key = (id(spark), sf_dir)
-    t = _V3_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.meta_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"icev3_{uuid.uuid4().hex[:8]}")
@@ -6987,7 +6916,6 @@ def _v3_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     )
     t.delete_vectors_v3("n_nationkey % 7 = 3")   # kills 3, 10, 17, 24
     t.delete_vectors_v3("n_nationkey IN (5, 10)")  # 10 already dead: union DV
-    _V3_CACHE[cache_key] = t
     return t
 
 
@@ -7032,9 +6960,7 @@ def q172_iceberg_v3_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-_RL_CACHE: dict = {}
-
-
+@session_memo
 def _row_lineage_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     """Row-lineage demo, memoized per (session, sf_dir): nation written as
     ONE ordered file → enable_row_lineage (ids 0..24 in key order) → append
@@ -7045,10 +6971,6 @@ def _row_lineage_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     start at next_row_id-after-rewrite (inheritance again). Deterministic
     id assignment because each commit writes exactly one file in sorted
     key order."""
-    cache_key = (id(spark), sf_dir)
-    t = _RL_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.meta_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"icerl_{uuid.uuid4().hex[:8]}")
@@ -7074,7 +6996,6 @@ def _row_lineage_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
             F.concat(F.lit("RL2_"), F.col("r_name")).alias("n_name"),
         ).orderBy("n_nationkey").coalesce(1)
     )
-    _RL_CACHE[cache_key] = t
     return t
 
 
@@ -7133,9 +7054,7 @@ def q174_iceberg_v3_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LRW_CACHE: dict = {}
-
-
+@session_memo
 def _lineage_writers_demo_tables(
     spark: SparkSession, sf_dir: str
 ) -> tuple[IcebergTable, IcebergTable]:
@@ -7149,10 +7068,6 @@ def _lineage_writers_demo_tables(
       'MRG_') — matched rows KEEP their ids; carried rows keep their
       original _last_updated_sequence_number (=1, the create commit),
       updated rows take the merge's (=3: create, enable, merge)."""
-    cache_key = (id(spark), sf_dir)
-    t = _LRW_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t[0].meta_dir):
-        return t
     import tempfile
 
     nation = load(spark, sf_dir, "nation").select(
@@ -7191,7 +7106,6 @@ def _lineage_writers_demo_tables(
         key="n_nationkey",
     )
     pair = (IcebergTable(spark, tu.root), IcebergTable(spark, tm.root))
-    _LRW_CACHE[cache_key] = pair
     return pair
 
 
@@ -7281,17 +7195,11 @@ def q184_iceberg_lineage_merge_cow(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-_RLCDC_CACHE: dict = {}
-
-
+@session_memo
 def _lineage_cdc_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     """Row-lineage CDC demo, memoized per (session, sf_dir): nation as ONE
     sorted file (ids 0..24 by key rank after enable) → DV delete
     ``k % 9 = 4`` → one sorted append (ids 25..29)."""
-    cache_key = (id(spark), sf_dir)
-    t = _RLCDC_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.meta_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"icerlcdc_{uuid.uuid4().hex[:8]}")
@@ -7309,7 +7217,6 @@ def _lineage_cdc_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
             F.concat(F.lit("RLC_"), F.col("r_name")).alias("n_name"),
         ).orderBy("n_nationkey").coalesce(1)
     )
-    _RLCDC_CACHE[cache_key] = t
     return t
 
 
@@ -7389,19 +7296,13 @@ def q187_iceberg_lineage_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_DFLT_CACHE: dict = {}
-
-
+@session_memo
 def _column_defaults_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     """Column-defaults demo, memoized per (session, sf_dir): region written
     first → add_column("category", default="LEGACY", write_default="FRESH")
     upgrades to v3 → one append that OMITS the column (write-default) →
     one append that PROVIDES it (explicit wins). Three distinct fill
     semantics in one table."""
-    cache_key = (id(spark), sf_dir)
-    t = _DFLT_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.meta_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"icedf_{uuid.uuid4().hex[:8]}")
@@ -7429,7 +7330,6 @@ def _column_defaults_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTabl
             F.col("n_name").alias("category"),
         ).orderBy("k").coalesce(1)
     )
-    _DFLT_CACHE[cache_key] = t
     return t
 
 
@@ -7670,17 +7570,11 @@ def iceberg_to_delta_uniform(ic: IcebergTable, delta_root: str | None = None):
     return t
 
 
-_IC2DL_CACHE: dict = {}
-
-
+@session_memo
 def _reverse_uniform_demo(spark: SparkSession, sf_dir: str):
     """Reverse-UniForm demo, memoized per (session, sf_dir): nation as ONE
     Iceberg file → append region-derived rows → a v3 DV delete → overlay a
     Delta log on the SAME files. Returns (IcebergTable, DeltaTable)."""
-    cache_key = (id(spark), sf_dir)
-    pair = _IC2DL_CACHE.get(cache_key)
-    if pair is not None and os.path.isdir(pair[0].meta_dir):
-        return pair
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"icrev_{uuid.uuid4().hex[:8]}")
@@ -7700,7 +7594,6 @@ def _reverse_uniform_demo(spark: SparkSession, sf_dir: str):
     t = IcebergTable(spark, root)
     dl = iceberg_to_delta_uniform(t)
     pair = (t, dl)
-    _IC2DL_CACHE[cache_key] = pair
     return pair
 
 
@@ -7754,19 +7647,13 @@ def q181_reverse_uniform_delta_read(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-_WAP_CACHE: dict = {}
-
-
+@session_memo
 def _wap_demo_table(spark: SparkSession, sf_dir: str) -> tuple:
     """Write-audit-publish demo, memoized per (session, sf_dir): even
     event_ids land on the table head; odd event_ids are STAGED on an
     ``audit`` branch (append(branch=)); the branch is then published with
     ``fast_forward``. Returns (table, pre-publish head snapshot id,
     staged_invisible flag, branch_saw_both flag, commits_published)."""
-    cache_key = (id(spark), sf_dir)
-    got = _WAP_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got[0].meta_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"icewap_{uuid.uuid4().hex[:8]}")
@@ -7780,14 +7667,13 @@ def _wap_demo_table(spark: SparkSession, sf_dir: str) -> tuple:
     )
     branch_saw_both = int(t.read(ref="audit").count() == ev.count())
     pub = t.fast_forward("audit")
-    _WAP_CACHE[cache_key] = (
+    return (
         IcebergTable(spark, root),
         old_head,
         staged_invisible,
         branch_saw_both,
         pub["commits_published"],
     )
-    return _WAP_CACHE[cache_key]
 
 
 _Q193_ORACLE = """
@@ -7844,18 +7730,12 @@ def q193_iceberg_wap_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVAR_CACHE: dict = {}
-
-
+@session_memo
 def _iceberg_variant_demo(spark: SparkSession, sf_dir: str) -> IcebergTable:
     """Iceberg v3 variant demo, memoized per (session, sf_dir): events
     with the JSON props parsed into a ``variant`` column (spec §Primitive
     Types, v3) → create + append → one equality delete applied
     merge-on-read over the variant-bearing files."""
-    cache_key = (id(spark), sf_dir)
-    got = _IVAR_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got.meta_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"icevar_{uuid.uuid4().hex[:8]}")
@@ -7867,8 +7747,7 @@ def _iceberg_variant_demo(spark: SparkSession, sf_dir: str) -> IcebergTable:
     t.equality_delete(
         ev.where(F.col("event_id") % 10 == 3).select("event_id")
     )
-    _IVAR_CACHE[cache_key] = IcebergTable(spark, root)
-    return _IVAR_CACHE[cache_key]
+    return IcebergTable(spark, root)
 
 
 _Q197_ORACLE = """
@@ -7984,19 +7863,13 @@ def q220_variant_lite_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialize(out)
 
 
-_TSTT_CACHE: dict = {}
-
-
+@session_memo
 def _timestamp_travel_demo(spark: SparkSession, sf_dir: str) -> tuple:
     """AS OF TIMESTAMP demo, memoized per (session, sf_dir): even events
     at create → capture a wall-clock instant → odd events appended. The
     snapshot-log resolves the captured instant back to the create
     snapshot. 20 ms sleeps bracket the capture so millisecond-resolution
     log entries can't straddle it."""
-    cache_key = (id(spark), sf_dir)
-    got = _TSTT_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got[0].meta_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"icetst_{uuid.uuid4().hex[:8]}")
@@ -8011,8 +7884,7 @@ def _timestamp_travel_demo(spark: SparkSession, sf_dir: str) -> tuple:
         t.snapshot_at_timestamp(0)  # before the table existed
     except ValueError:
         refused = 1
-    _TSTT_CACHE[cache_key] = (IcebergTable(spark, root), t_mid, refused)
-    return _TSTT_CACHE[cache_key]
+    return IcebergTable(spark, root), t_mid, refused
 
 
 _Q199_ORACLE = """
@@ -8060,9 +7932,7 @@ def q199_iceberg_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_VARDEF_WAP_CACHE: dict = {}
-
-
+@session_memo
 def _variant_default_wap_demo(spark: SparkSession, sf_dir: str) -> tuple:
     """Composition demo (r9 — VERDICT r8 ask #6), memoized per (session,
     sf_dir): v3 VARIANT column + v3 COLUMN DEFAULTS + BRANCH WRITES +
@@ -8081,10 +7951,6 @@ def _variant_default_wap_demo(spark: SparkSession, sf_dir: str) -> tuple:
 
     Returns (table, staged_invisible, default_filled_both_tiers,
     refs_agree_after_publish)."""
-    cache_key = (id(spark), sf_dir)
-    got = _VARDEF_WAP_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got[0].meta_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"icevdw_{uuid.uuid4().hex[:8]}")
@@ -8119,13 +7985,12 @@ def _variant_default_wap_demo(spark: SparkSession, sf_dir: str) -> tuple:
     )
     t.fast_forward("audit")
     refs_agree = int(t.read().count() == t.read(ref="audit").count())
-    _VARDEF_WAP_CACHE[cache_key] = (
+    return (
         IcebergTable(spark, root),
         staged_invisible,
         int(head_defaulted and branch_defaulted),
         refs_agree,
     )
-    return _VARDEF_WAP_CACHE[cache_key]
 
 
 _Q201_ORACLE = """
@@ -8180,18 +8045,12 @@ def q201_iceberg_variant_default_wap(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-_PARTS_CACHE: dict = {}
-
-
+@session_memo
 def _partitions_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
     """``partitions`` metadata-table demo, memoized per (session, sf_dir):
     events identity-partitioned by event_type, written twice (create +
     append, each coalesced to one task) so every partition holds exactly
     two files — the file_count the oracle pins."""
-    cache_key = (id(spark), sf_dir)
-    got = _PARTS_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got.meta_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"iceparts_{uuid.uuid4().hex[:8]}")
@@ -8203,7 +8062,6 @@ def _partitions_demo_table(spark: SparkSession, sf_dir: str) -> IcebergTable:
         partition_by=["event_type"],
     )
     t.append(ev.where(F.col("event_id") % 2 == 1).coalesce(1))
-    _PARTS_CACHE[cache_key] = t
     return t
 
 
@@ -8268,9 +8126,7 @@ def q203_iceberg_partitions_table(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_NSDEMO_CACHE: dict = {}
-
-
+@session_memo
 def _demo_iceberg_ns(spark: SparkSession, sf_dir: str) -> "IcebergTable":
     """Iceberg v3 ``timestamp_ns`` demo, memoized per (session, sf_dir):
     events carry a synthesized NANOSECOND timestamp (epoch-nano long with
@@ -8279,10 +8135,6 @@ def _demo_iceberg_ns(spark: SparkSession, sf_dir: str) -> "IcebergTable":
     partitioned on it (spec Appendix B: ns timestamps bucket as
     hashLong(nanosFromEpoch)). Two snapshots (even ids, then odd) so time
     travel is exercised."""
-    cache_key = (id(spark), sf_dir)
-    got = _NSDEMO_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got.meta_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"icens_{uuid.uuid4().hex[:8]}")
@@ -8301,8 +8153,7 @@ def _demo_iceberg_ns(spark: SparkSession, sf_dir: str) -> "IcebergTable":
         column_types={"ts_ns": "timestamp_ns"},
     )
     t.append(ev.where(F.col("event_id") % 2 == 1))
-    _NSDEMO_CACHE[cache_key] = IcebergTable(spark, root)
-    return _NSDEMO_CACHE[cache_key]
+    return IcebergTable(spark, root)
 
 
 _Q206_ORACLE = """
@@ -8366,18 +8217,12 @@ def q206_iceberg_timestamp_ns(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialize(out)
 
 
-_STATS_CACHE: dict = {}
-
-
+@session_memo
 def _demo_iceberg_stats(spark: SparkSession, sf_dir: str):
     """Analyzed-table demo, memoized per (session, sf_dir): an Iceberg
     table over orders' (unique key, mid-cardinality key, 3-value status)
     with ``analyze()`` run once — exercising estimation mode, exact mode,
     and the string hash rule in one statistics file."""
-    cache_key = (id(spark), sf_dir)
-    got = _STATS_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got[0].meta_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"icestats_{uuid.uuid4().hex[:8]}")
@@ -8393,8 +8238,7 @@ def _demo_iceberg_stats(spark: SparkSession, sf_dir: str):
             ("o_custkey", "o_orderstatus"),
         ]
     )
-    _STATS_CACHE[cache_key] = (t, res)
-    return _STATS_CACHE[cache_key]
+    return t, res
 
 
 _Q207_ORACLE = """
@@ -8441,18 +8285,12 @@ def q207_iceberg_ndv_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INCSTATS_CACHE: dict = {}
-
-
+@session_memo
 def _demo_incremental_stats(spark: SparkSession, sf_dir: str):
     """Incremental-ANALYZE demo, memoized per (session, sf_dir): orders'
     even keys ingested + analyzed at create; odd keys appended and
     analyzed INCREMENTALLY (only the appended files hashed, sketches
     unioned with the prior blobs)."""
-    cache_key = (id(spark), sf_dir)
-    got = _INCSTATS_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got[0].meta_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"icinc_{uuid.uuid4().hex[:8]}")
@@ -8464,8 +8302,7 @@ def _demo_incremental_stats(spark: SparkSession, sf_dir: str):
     n_v0 = len(t.files()[0])
     t.append(o.where(F.col("o_orderkey") % 2 == 1))
     res = t.analyze_incremental()
-    _INCSTATS_CACHE[cache_key] = (t, res, n_v0)
-    return _INCSTATS_CACHE[cache_key]
+    return t, res, n_v0
 
 
 _Q211_ORACLE = """
@@ -8511,17 +8348,11 @@ def q211_iceberg_incremental_analyze(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-_PSTATS_CACHE: dict = {}
-
-
+@session_memo
 def _demo_iceberg_pstats(spark: SparkSession, sf_dir: str):
     """Partition-analyzed demo, memoized per (session, sf_dir): orders
     identity-partitioned by o_orderstatus with ``analyze_partitions()``
     run once over the unique key and the mid-cardinality key."""
-    cache_key = (id(spark), sf_dir)
-    got = _PSTATS_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got[0].meta_dir):
-        return got
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"icepst_{uuid.uuid4().hex[:8]}")
@@ -8530,8 +8361,7 @@ def _demo_iceberg_pstats(spark: SparkSession, sf_dir: str):
     )
     t = IcebergTable.create(spark, root, o, partition_by=["o_orderstatus"])
     res = t.analyze_partitions(columns=["o_orderkey", "o_custkey"])
-    _PSTATS_CACHE[cache_key] = (t, res)
-    return _PSTATS_CACHE[cache_key]
+    return t, res
 
 
 _Q212_ORACLE = """
@@ -8603,9 +8433,7 @@ FROM orders
 """
 
 
-_STREAMSTATS_CACHE: dict = {}
-
-
+@session_memo
 def _demo_streaming_stats(spark: SparkSession, sf_dir: str) -> IcebergTable:
     """Streamed-stats demo, memoized per (session, sf_dir) like
     _demo_iceberg_stats (VERDICT r10: q217 paid the ~14 s fixture build on
@@ -8614,10 +8442,6 @@ def _demo_streaming_stats(spark: SparkSession, sf_dir: str) -> IcebergTable:
     checks are read-only over the finished table, so caching is safe."""
     import tempfile
 
-    cache_key = (id(spark), sf_dir)
-    got = _STREAMSTATS_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got.meta_dir):
-        return got
     scratch = os.path.join(
         tempfile.gettempdir(), f"icstream_{uuid.uuid4().hex[:8]}"
     )
@@ -8642,7 +8466,6 @@ def _demo_streaming_stats(spark: SparkSession, sf_dir: str) -> IcebergTable:
         os.path.join(scratch, "ckpt"),
         maintain_statistics=True,
     )
-    _STREAMSTATS_CACHE[cache_key] = t
     return t
 
 
@@ -8679,9 +8502,7 @@ def q217_streaming_stats_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FILESTATS_CACHE: dict = {}
-
-
+@session_memo
 def _demo_file_stats(spark: SparkSession, sf_dir: str):
     """Per-file-statistics demo, memoized per (session, sf_dir): orders
     range-clustered on o_orderkey into 8 files (the layout OPTIMIZE
@@ -8689,18 +8510,13 @@ def _demo_file_stats(spark: SparkSession, sf_dir: str):
     distinct-under-range is exactly answerable from metadata."""
     import tempfile
 
-    cache_key = (id(spark), sf_dir)
-    got = _FILESTATS_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got[0].meta_dir):
-        return got
     root = os.path.join(tempfile.gettempdir(), f"icfile_{uuid.uuid4().hex[:8]}")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
     t = IcebergTable.create(spark, root, o.repartitionByRange(8, "o_orderkey"))
     res = t.analyze_files(columns=["o_orderkey", "o_custkey"])
-    _FILESTATS_CACHE[cache_key] = (t, res)
-    return _FILESTATS_CACHE[cache_key]
+    return t, res
 
 
 _Q219_ORACLE = """
@@ -8811,9 +8627,7 @@ def q219_ndv_under_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INCFILE_CACHE: dict = {}
-
-
+@session_memo
 def _demo_incremental_file_stats(spark: SparkSession, sf_dir: str):
     """Incremental per-file-stats demo, memoized per (session, sf_dir):
     the LOW half of the o_orderkey domain range-clustered + analyze_files
@@ -8821,10 +8635,6 @@ def _demo_incremental_file_stats(spark: SparkSession, sf_dir: str):
     file blobs carried verbatim, only the appended files hashed."""
     import tempfile
 
-    cache_key = (id(spark), sf_dir)
-    got = _INCFILE_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got[0].meta_dir):
-        return got
     root = os.path.join(tempfile.gettempdir(), f"icincf_{uuid.uuid4().hex[:8]}")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     # bounded: one min/max row
@@ -8841,8 +8651,7 @@ def _demo_incremental_file_stats(spark: SparkSession, sf_dir: str):
         o.where(F.col("o_orderkey") > mid).repartitionByRange(4, "o_orderkey")
     )
     res = t.analyze_incremental()
-    _INCFILE_CACHE[cache_key] = (t, res, n_v0, mid)
-    return _INCFILE_CACHE[cache_key]
+    return t, res, n_v0, mid
 
 
 _Q221_ORACLE = """
@@ -8916,9 +8725,7 @@ def q221_incremental_file_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_UNISTATS_CACHE: dict = {}
-
-
+@session_memo
 def _demo_unified_stats(spark: SparkSession, sf_dir: str):
     """Unified-statistics demo, memoized per (session, sf_dir): orders
     partitioned by o_orderstatus and range-clustered on o_orderkey,
@@ -8930,10 +8737,6 @@ def _demo_unified_stats(spark: SparkSession, sf_dir: str):
     new file blobs."""
     import tempfile
 
-    cache_key = (id(spark), sf_dir)
-    got = _UNISTATS_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got[0].meta_dir):
-        return got
     scratch = os.path.join(
         tempfile.gettempdir(), f"icuni_{uuid.uuid4().hex[:8]}"
     )
@@ -8968,8 +8771,7 @@ def _demo_unified_stats(spark: SparkSession, sf_dir: str):
         os.path.join(scratch, "ckpt"),
         maintain_statistics=True,
     )
-    _UNISTATS_CACHE[cache_key] = (t, res0, out)
-    return _UNISTATS_CACHE[cache_key]
+    return t, res0, out
 
 
 _Q222_ORACLE = """

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import materialize, query
+from ..registry import materialize, query, session_memo
 from ..tables import load
 
 # Spark's own autoBroadcastJoinThreshold default: 10 MB of in-memory size.
@@ -795,9 +795,7 @@ def stats_sql(
     return spark.sql(query), decisions
 
 
-_JOIN_CACHE: dict = {}
-
-
+@session_memo
 def _demo_join_tables(spark: SparkSession, sf_dir: str):
     """Planner demo tables, memoized per (session, sf_dir): the analyzed
     orders table from the q207 demo (fact side) plus an analyzed customer
@@ -808,17 +806,12 @@ def _demo_join_tables(spark: SparkSession, sf_dir: str):
 
     from .iceberg import IcebergTable, _demo_iceberg_stats
 
-    cache_key = (id(spark), sf_dir)
-    got = _JOIN_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got[1].meta_dir):
-        return got
     ot, _ = _demo_iceberg_stats(spark, sf_dir)
     root = os.path.join(tempfile.gettempdir(), f"icejoin_{uuid.uuid4().hex[:8]}")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     ct = IcebergTable.create(spark, root, c)
     ct.analyze(columns=["c_custkey"])
-    _JOIN_CACHE[cache_key] = (ot, ct)
-    return _JOIN_CACHE[cache_key]
+    return ot, ct
 
 
 _Q213_ORACLE = """
@@ -950,9 +943,7 @@ def q218_stats_sql_broadcast_flip(spark: SparkSession, sf_dir: str) -> DataFrame
     return materialize(out)
 
 
-_TXJOIN_CACHE: dict = {}
-
-
+@session_memo
 def _demo_txtable_join(spark: SparkSession, sf_dir: str):
     """TxTable fact/dim pair for the stats-view pin, memoized per
     (session, sf_dir)."""
@@ -962,17 +953,12 @@ def _demo_txtable_join(spark: SparkSession, sf_dir: str):
 
     from .txtable import TxTable
 
-    cache_key = (id(spark), sf_dir)
-    got = _TXJOIN_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got[0].log_dir):
-        return got
     base = os.path.join(tempfile.gettempdir(), f"txjoin_{uuid.uuid4().hex[:8]}")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     ot = TxTable.create(spark, os.path.join(base, "o"), o, key="o_orderkey")
     ct = TxTable.create(spark, os.path.join(base, "c"), c, key="c_custkey")
-    _TXJOIN_CACHE[cache_key] = (ot, ct)
-    return _TXJOIN_CACHE[cache_key]
+    return ot, ct
 
 
 _Q223_ORACLE = """
@@ -1532,9 +1518,7 @@ def planned_join_tree(
     return execute_join_tree(plan, dfs, n_salts=n_salts), plan
 
 
-_STAR_CACHE: dict = {}
-
-
+@session_memo
 def _demo_star_tables(spark: SparkSession, sf_dir: str) -> dict:
     """Four-table analyzed Iceberg star schema for the join-order pins,
     memoized per (session, sf_dir): lineitem (fact) -> orders -> customer
@@ -1545,10 +1529,6 @@ def _demo_star_tables(spark: SparkSession, sf_dir: str) -> dict:
 
     from .iceberg import IcebergTable
 
-    cache_key = (id(spark), sf_dir)
-    got = _STAR_CACHE.get(cache_key)
-    if got is not None and all(os.path.isdir(t.meta_dir) for t in got.values()):
-        return got
     base = os.path.join(tempfile.gettempdir(), f"icestar_{uuid.uuid4().hex[:8]}")
     specs = {
         "lineitem": (
@@ -1575,7 +1555,6 @@ def _demo_star_tables(spark: SparkSession, sf_dir: str) -> dict:
         t = IcebergTable.create(spark, os.path.join(base, name), df)
         t.analyze(columns=keys)
         out[name] = t
-    _STAR_CACHE[cache_key] = out
     return out
 
 
@@ -1658,9 +1637,7 @@ def q224_join_order_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialize(out)
 
 
-_PSTAR_CACHE: dict = {}
-
-
+@session_memo
 def _demo_pruned_star(spark: SparkSession, sf_dir: str) -> dict:
     """Star fixture with a PARTITIONED, partition-analyzed orders table
     swapped in — identity-partitioned on the derived ``o_bucket =
@@ -1674,10 +1651,6 @@ def _demo_pruned_star(spark: SparkSession, sf_dir: str) -> dict:
 
     from .iceberg import IcebergTable
 
-    cache_key = (id(spark), sf_dir)
-    got = _PSTAR_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got["orders"].meta_dir):
-        return got
     star = _demo_star_tables(spark, sf_dir)
     root = os.path.join(
         tempfile.gettempdir(), f"icepstar_{uuid.uuid4().hex[:8]}"
@@ -1690,7 +1663,6 @@ def _demo_pruned_star(spark: SparkSession, sf_dir: str) -> dict:
     ot = IcebergTable.create(spark, root, o, partition_by=["o_bucket"])
     ot.analyze_partitions()
     out = {**star, "orders": ot}
-    _PSTAR_CACHE[cache_key] = out
     return out
 
 
@@ -1790,9 +1762,7 @@ def q225_join_order_partition_pruned(
     return materialize(out)
 
 
-_SKEW_CACHE: dict = {}
-
-
+@session_memo
 def _demo_skew_tables(spark: SparkSession, sf_dir: str):
     """Hot-key fact + nation dim for the salted-execution pin, memoized
     per (session, sf_dir): lineitem mapped onto a derived join key where
@@ -1805,10 +1775,6 @@ def _demo_skew_tables(spark: SparkSession, sf_dir: str):
 
     from .iceberg import IcebergTable
 
-    cache_key = (id(spark), sf_dir)
-    got = _SKEW_CACHE.get(cache_key)
-    if got is not None and os.path.isdir(got[0].meta_dir):
-        return got
     base = os.path.join(tempfile.gettempdir(), f"iceskew_{uuid.uuid4().hex[:8]}")
     li = load(spark, sf_dir, "lineitem")
     r = F.col("l_orderkey") % 20
@@ -1823,8 +1789,7 @@ def _demo_skew_tables(spark: SparkSession, sf_dir: str):
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     nt = IcebergTable.create(spark, os.path.join(base, "nation"), n)
     nt.analyze(columns=["n_nationkey"])
-    _SKEW_CACHE[cache_key] = (ft, nt)
-    return _SKEW_CACHE[cache_key]
+    return ft, nt
 
 
 _Q226_ORACLE = """

@@ -42,7 +42,7 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import materialize, query
+from ..registry import materialize, query, session_memo
 from ..tables import load
 
 
@@ -877,9 +877,7 @@ _UPDATE_DDL = "n_nationkey int, n_name string, n_regionkey int"
 _UPDATE_VALUES_SQL = "VALUES (0, 'RENAMED', 9), (7, 'PATCHED', 2), (999, 'NEWLAND', 1)"
 
 
-_TABLE_CACHE: dict[tuple[int, str], TxTable] = {}
-
-
+@session_memo
 def _merged_nation_table(spark: SparkSession, sf_dir: str) -> TxTable:
     """nation → TxTable v0 (range-partitioned into 4 files so the commit
     log's min/max stats give real pruning), then one MERGE → v1.
@@ -888,10 +886,6 @@ def _merged_nation_table(spark: SparkSession, sf_dir: str) -> TxTable:
     two commits, and rebuilding costs ~8 s of tiny Spark jobs per query in
     the driver gate. The table is a few KB on local disk; it lives for the
     session (commits are immutable, so reuse is safe)."""
-    cache_key = (id(spark), sf_dir)
-    t = _TABLE_CACHE.get(cache_key)
-    if t is not None and os.path.isdir(t.log_dir):
-        return t
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"txtable_{uuid.uuid4().hex[:8]}")
@@ -899,7 +893,6 @@ def _merged_nation_table(spark: SparkSession, sf_dir: str) -> TxTable:
     t = TxTable.create(spark, root, nation, key="n_nationkey")
     updates = spark.createDataFrame(_UPDATE_ROWS, _UPDATE_DDL)
     t.merge(updates)
-    _TABLE_CACHE[cache_key] = t
     return t
 
 

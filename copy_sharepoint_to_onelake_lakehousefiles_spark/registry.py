@@ -10,10 +10,12 @@ oracle uses.
 from __future__ import annotations
 
 import atexit
+import functools
 import os
 import shutil
 import tempfile
 import uuid
+import weakref
 from collections.abc import Callable
 from typing import Any
 
@@ -80,6 +82,8 @@ def release_caches(keep_generations: int | None = None) -> None:
     global _GENERATION
     keep = KEEP_GENERATIONS if keep_generations is None else keep_generations
     _GENERATION += 1
+    if keep == 0:
+        _SESSION_MEMO.clear()
     cutoff = _GENERATION - keep
     survivors: list[tuple[int, Any]] = []
     for gen, df in _TRACKED_CACHES:
@@ -91,6 +95,66 @@ def release_caches(keep_generations: int | None = None) -> None:
         else:
             survivors.append((gen, df))
     _TRACKED_CACHES[:] = survivors
+
+
+# Session memo (see session_memo()): session -> {(builder, sf_dir):
+# (fingerprint, value)}. Weak keys, so a collected session cannot be
+# aliased by a new one that reuses its id().
+_SESSION_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# The directory whose presence proves a memoized table is still on disk:
+# DeltaTable/TxTable log, IcebergTable metadata, else the table root.
+_TABLE_DIR_ATTRS = ("log_dir", "meta_dir", "root")
+
+
+def _fingerprint(sf_dir: str) -> tuple:
+    """(name, size, mtime_ns) of every entry under ``sf_dir`` — rewriting
+    an input table changes it. Empty for a path that is not a local dir."""
+    try:
+        with os.scandir(sf_dir) as it:
+            stats = [(e.name, e.stat()) for e in it]
+    except OSError:
+        return ()
+    return tuple(sorted((n, st.st_size, st.st_mtime_ns) for n, st in stats))
+
+
+def _tables_live(value) -> bool:
+    """True while every table in ``value`` (directly or inside a tuple,
+    list or dict) still has its directory. Values without tables are
+    always live."""
+    if isinstance(value, (tuple, list)):
+        return all(_tables_live(v) for v in value)
+    if isinstance(value, dict):
+        return all(_tables_live(v) for v in value.values())
+    attrs = getattr(value, "__dict__", {})
+    for a in _TABLE_DIR_ATTRS:
+        if a in attrs:
+            return os.path.isdir(attrs[a])
+    return True
+
+
+def session_memo(fn):
+    """Memoize a ``fn(spark, sf_dir)`` builder for the life of the session.
+
+    A hit is served to the same session while the files under ``sf_dir``
+    are unchanged (name, size, mtime_ns) and every table the value holds
+    still has its directory; otherwise ``fn`` rebuilds.
+    ``release_caches(0)`` empties the memo."""
+
+    @functools.wraps(fn)
+    def wrapped(spark, sf_dir):
+        fp = _fingerprint(sf_dir)
+        hit = _SESSION_MEMO.get(spark, {}).get((fn, sf_dir))
+        if hit is not None and hit[0] == fp and _tables_live(hit[1]):
+            return hit[1]
+        value = fn(spark, sf_dir)
+        # memoized tables hold their session, so a stopped session would
+        # never be collected: drop its entries here instead
+        for s in [s for s in _SESSION_MEMO if s._sc._jsc is None]:
+            del _SESSION_MEMO[s]
+        _SESSION_MEMO.setdefault(spark, {})[(fn, sf_dir)] = (fp, value)
+        return value
+
+    return wrapped
 
 
 def query(name: str, oracle: str | None = None):

@@ -86,38 +86,27 @@ def main() -> None:
     qs = all_queries()
     result = {"metric": "scale_ratio_10x", "sf": 0.1, "queries": {}, "rows": {}}
     try:
-        # r13 measurement fix: several queries memoize bounded per-session
-        # intermediates (exact_topk/exact_l2 memos, the IVF centroid list,
-        # track_persist'ed shingle tables). The warm run used to leave the
-        # BASE timed run a cache hit while the x10 run (different sf_dir
-        # key) computed fresh — inflating ratios for exactly the queries
-        # the memos help (q30 read 19x while its compute is ~linear).
-        # Resetting the session memos before EVERY timed run times the
-        # computation at both scales; the warm run still pays JIT/codegen.
-        from copy_sharepoint_to_onelake_lakehousefiles_spark.operators import (
-            pq as _pq,
-        )
-        from copy_sharepoint_to_onelake_lakehousefiles_spark.operators import (
-            similarity as _sim,
-        )
+        # Several queries memoize bounded per-session intermediates
+        # (registry.session_memo: exact top-k truths, the IVF centroid
+        # list, the lakehouse demo tables) and track_persist shingle
+        # tables. Without a reset the warm run leaves the BASE timed run a
+        # cache hit while the x10 run (different sf_dir) computes fresh —
+        # inflating ratios for exactly the queries the memos help.
+        # release_caches(0) before EVERY timed run empties both, so the
+        # computation is timed at both scales; the warm run still pays
+        # JIT/codegen.
         from copy_sharepoint_to_onelake_lakehousefiles_spark.registry import (
             release_caches,
         )
 
-        def _reset_session_memos() -> None:
-            release_caches(0)
-            _sim._EXACT_TOPK_CACHE.clear()
-            _sim._IVF_CENTS_CACHE.clear()
-            _pq._EXACT_L2_CACHE.clear()
-
         for name in QUERIES:
             qs[name](spark, base).count()  # warm code paths once per query
             rec = {}
-            _reset_session_memos()
+            release_caches(0)
             t0 = time.time()
             n_base = qs[name](spark, base).count()
             rec["base_sec"] = round(time.time() - t0, 3)
-            _reset_session_memos()
+            release_caches(0)
             t0 = time.time()
             n_10 = qs[name](spark, inflated).count()
             rec["x10_sec"] = round(time.time() - t0, 3)

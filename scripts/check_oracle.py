@@ -59,7 +59,14 @@ def main() -> int:
         # configs (ANSI on, 200 shuffle partitions, no Arrow tuning).
         from pyspark.sql import SparkSession
 
-        spark = SparkSession.builder.master("local[8]").appName("vanilla_gate").getOrCreate()
+        # Console progress bars only decorate the terminal; off, they no
+        # longer bury the gate log.
+        spark = (
+            SparkSession.builder.master("local[8]")
+            .appName("vanilla_gate")
+            .config("spark.ui.showConsoleProgress", "false")
+            .getOrCreate()
+        )
         spark.sparkContext.setLogLevel("ERROR")
     else:
         spark = get_spark("check_oracle")

@@ -1,4 +1,5 @@
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -149,7 +150,26 @@ SLOW_TESTS = {
 }
 
 
+def _check_slow_tables(items) -> None:
+    """Fail collection when a tier entry no longer names a test: a renamed
+    function or file would otherwise silently drop out of the slow tier.
+    SLOW_TESTS entries are checked against the module of every collected
+    file, so a run filtered to one test or one file still collects."""
+    missing = sorted(f for f in SLOW_FILES if not (Path(__file__).parent / f).is_file())
+    modules = {item.fspath.basename: item.module for item in items}
+    missing += sorted(
+        f"{fname}::{func}"
+        for fname, func in SLOW_TESTS
+        if fname in modules and not callable(getattr(modules[fname], func, None))
+    )
+    if missing:
+        raise pytest.UsageError(
+            "tests/conftest.py slow-tier entries match no test: " + ", ".join(missing)
+        )
+
+
 def pytest_collection_modifyitems(config, items):
+    _check_slow_tables(items)
     for item in items:
         fname = item.fspath.basename
         func = item.name.split("[")[0]

@@ -109,3 +109,20 @@ def test_ann_recall_flags_assert_true(spark, sf_dir):
         for r in rows:
             for f in flags:
                 assert r[f] == 1, (fn.__name__, f, r)
+
+
+def test_null_embedding_gets_no_cell(spark):
+    cents = [[0.0, 0.0], [1.0, 1.0], [0.0, 1.0]]
+    df = spark.createDataFrame(
+        [(0, [0.1, 0.2]), (1, [0.9, 0.8]), (2, None), (3, [0.0, 0.9]), (4, [0.5, 0.5])],
+        "vec_id long, emb array<double>",
+    )
+    got = dict(df.select("vec_id", S._nearest_cell_expr(cents).alias("cell")).collect())
+    # row 4 is equidistant from all three: ties go to the lowest cell id
+    assert got == {0: 0, 1: 1, 2: -1, 3: 2, 4: 0}
+
+
+def test_null_embedding_leaves_centroids_unchanged(spark, sf_dir):
+    emb = load(spark, sf_dir, "embeddings")
+    null_row = spark.createDataFrame([(10**6, None, 0)], emb.schema)
+    assert S._ivf_centroids(emb.unionByName(null_row)) == S._ivf_centroids(emb)
