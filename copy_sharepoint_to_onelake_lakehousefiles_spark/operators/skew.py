@@ -7,8 +7,9 @@ Two tools, both pure DataFrame:
   then final on key. Spark's partial aggregation already does this for
   algebraic aggs; the explicit form is for aggregates that Spark computes in
   a single exchange (e.g. collect-style) or to cap per-reducer input.
-- `salted_join` — replicate the SMALL side ×S, salt the BIG side's key with
-  hash%S: the hot key's rows spread over S reducers. AQE's skew-join split
+- `salted_join` — replicate the SMALL side ×S, salt each BIG row with its
+  position in its task mod S: the hot key's rows spread over S reducers,
+  even when they are identical. AQE's skew-join split
   handles moderate skew automatically; explicit salting is the tool when one
   key alone exceeds a task's memory.
 """
@@ -34,6 +35,13 @@ _SALT_LEGAL = {
 }
 
 
+def _with_row_salt(df: DataFrame, n_salts: int) -> DataFrame:
+    """`_salt` = the row's position in its task mod n_salts. Unlike a hash
+    of the row, it differs between identical rows; unlike an unseeded
+    random draw, a retried task over the same input recomputes it."""
+    return df.withColumn("_salt", F.pmod(F.monotonically_increasing_id(), F.lit(n_salts)))
+
+
 def salted_join(
     big: DataFrame,
     small: DataFrame,
@@ -53,7 +61,7 @@ def salted_join(
             " replicated per salt, so only big-side-preserving joins"
             " (inner/left/left_semi/left_anti) keep plain-join semantics"
         )
-    salted_big = big.withColumn("_salt", F.pmod(F.xxhash64(*big.columns), F.lit(n_salts)))
+    salted_big = _with_row_salt(big, n_salts)
     exploded_small = small.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )

@@ -142,8 +142,8 @@ def execute_copy(
     auth=None,
 ) -> DataFrame:
     """Distributed fetch+write. Each executor task copies its partition's
-    files (local/file: URLs here; an http(s) fetcher slots into `_read_src`
-    with a pooled session) and emits an audit row per file.
+    files — http(s) downloadUrls through `_http_fetch`, local paths and
+    file: URLs from disk (`_read_src`) — and emits an audit row per file.
 
     Per-row retry with exponential backoff (max_attempts, base backoff_s)
     covers transient fetch errors WITHIN a task before Spark's own task

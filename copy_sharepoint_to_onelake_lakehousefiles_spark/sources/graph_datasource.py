@@ -6,11 +6,21 @@ The reference lists a drive tree with driver-side recursion + cursor pages
 pushes `$filter`/`$select` to the service (NB:86/95/161 — O6 in SURVEY §2).
 This source reproduces that split with Spark's own source contract:
 
-- The DRIVER enumerates only the directory frontier (cheap: names, no file
-  stats) and plans ONE InputPartition PER DIRECTORY.
-- EXECUTORS page through their directory's listing and emit manifest rows —
-  the per-page fetching the reference did serially on the driver runs in
-  parallel across the cluster.
+- The DRIVER walks the directory frontier. It reads every directory's
+  entries once — the `scandir` entries locally, every cursor page of the
+  listing in http mode — to find the subdirectories, and sums each
+  directory's file sizes on the way.
+- It packs the directories into InputPartitions the way Spark packs files
+  (`FilePartition.maxSplitBytes`): a file costs its size plus
+  `OPEN_COST_BYTES`, and a partition takes a run of WHOLE directories in
+  frontier order until the next one would exceed
+  `min(MAX_PARTITION_BYTES, max(OPEN_COST_BYTES, total_cost / cores))`.
+  A directory is never split, so its cursor chain stays in one task.
+  Every Python task costs a fixed ~170 ms of CPU (README design rule 7),
+  so a tree of small directories is read by about `cores` tasks, not one
+  task per directory.
+- EXECUTORS page through their partition's directories and emit the
+  manifest rows, in parallel across the cluster.
 - `pushFilters` accepts size comparisons and name prefix/equality filters —
   the engine-side equivalent of the reference's server-evaluated OData
   `$filter` — so non-matching rows never leave the lister. Unsupported
@@ -49,11 +59,37 @@ from pyspark.sql.datasource import (
 
 MANIFEST_DDL = "file_id string, name string, rel_path string, download_url string, size long"
 
+# Spark's file-split defaults: spark.sql.files.openCostInBytes and
+# spark.sql.files.maxPartitionBytes.
+OPEN_COST_BYTES = 4 * 1024 * 1024
+MAX_PARTITION_BYTES = 128 * 1024 * 1024
+
 
 @dataclass
-class DirPartition(InputPartition):
-    dir_path: str  # filesystem path OR http(s) listing-endpoint URL
-    rel_base: str
+class DirsPartition(InputPartition):
+    # (filesystem path OR http(s) listing-endpoint URL, rel_base) per
+    # directory, in frontier order
+    dirs: list[tuple[str, str]]
+
+
+def _pack_dirs(dirs: list[tuple[str, str, int]], cores: int) -> list[DirsPartition]:
+    """Pack (dir, rel_base, cost) runs into partitions like Spark's
+    `FilePartition.getFilePartitions`: close the current partition before
+    a directory would take it past `FilePartition.maxSplitBytes`."""
+    total = sum(cost for _, _, cost in dirs)
+    split = min(MAX_PARTITION_BYTES, max(OPEN_COST_BYTES, total // cores))
+    parts: list[DirsPartition] = []
+    run: list[tuple[str, str]] = []
+    size = 0
+    for d, base, cost in dirs:
+        if run and size + cost > split:
+            parts.append(DirsPartition(run))
+            run, size = [], 0
+        run.append((d, base))
+        size += cost
+    if run:
+        parts.append(DirsPartition(run))
+    return parts
 
 
 def _iter_pages(url: str, timeout: float = 30.0, auth=None):
@@ -110,7 +146,7 @@ def _row_filter(filters: list[Filter]):
 
 
 class GraphManifestReader(DataSourceReader):
-    """Base reader: partition-per-directory planning, NO pushFilters —
+    """Base reader: size-packed directory partitions, NO pushFilters —
     merely defining pushFilters makes Spark demand the
     `spark.sql.python.filterPushdown.enabled` conf, which a stock session
     lacks; the pushdown flavor is the opt-in subclass below."""
@@ -140,39 +176,47 @@ class GraphManifestReader(DataSourceReader):
             )
 
     def partitions(self):
-        # Frontier walk over DIRECTORIES only — the driver never touches
-        # file metadata; that cost is paid inside each partition's read().
-        # In http mode the driver pages each directory's listing just to
-        # find subfolders (cheap: names + facets), exactly the recursion
-        # the reference runs on the driver (NB:213-236) — but file-row
-        # emission happens in read(), parallel across executors.
-        parts = [DirPartition(self.root, "")]
+        # Frontier walk on the driver, the recursion the reference runs
+        # there (NB:213-236); each directory's cost comes from the entries
+        # the walk reads anyway, and file rows are emitted in read().
+        dirs = []
         frontier = [(self.root, "")]
         while frontier:
             nxt = []
             for d, base in frontier:
-                for name, child in self._subdirs(d):
-                    rel = f"{base}/{name}" if base else name
-                    nxt.append((child, rel))
-                    parts.append(DirPartition(child, rel))
+                cost = 0
+                for name, child, size in self._entries(d):
+                    if child is None:
+                        cost += size + OPEN_COST_BYTES
+                    else:
+                        nxt.append((child, f"{base}/{name}" if base else name))
+                dirs.append((d, base, cost))
             frontier = nxt
-        return parts
+        return _pack_dirs(dirs, len(os.sched_getaffinity(0)))
 
-    def _subdirs(self, d: str):
+    def _entries(self, d: str):
+        """(name, subdir path or None, file size) per listed entry."""
         if self.http:
             for item in _iter_pages(d, auth=self.auth):
-                if "folder" in item and item.get("childrenUrl"):
-                    yield item["name"], item["childrenUrl"]
+                if "folder" not in item:
+                    yield item["name"], None, int(item.get("size", 0))
+                elif item.get("childrenUrl"):
+                    yield item["name"], item["childrenUrl"], 0
         else:
             for e in sorted(os.scandir(d), key=lambda e: e.name):
                 if e.is_dir():
-                    yield e.name, e.path
+                    yield e.name, e.path, 0
+                elif e.is_file():
+                    yield e.name, None, e.stat().st_size
 
-    def read(self, partition: DirPartition):
+    def read(self, partition: DirsPartition):
         keep = _row_filter(self.pushed)
-        base = partition.rel_base
+        for d, base in partition.dirs:
+            yield from self._read_dir(d, base, keep)
+
+    def _read_dir(self, d: str, base: str, keep):
         if self.http:
-            for item in _iter_pages(partition.dir_path, auth=self.auth):
+            for item in _iter_pages(d, auth=self.auth):
                 if "folder" in item:
                     continue
                 name, size = item["name"], int(item.get("size", 0))
@@ -187,14 +231,14 @@ class GraphManifestReader(DataSourceReader):
                     size,
                 )
             return
-        for e in sorted(os.scandir(partition.dir_path), key=lambda e: e.name):
+        for e in sorted(os.scandir(d), key=lambda e: e.name):
             if not e.is_file():
                 continue
             size = e.stat().st_size
             if not keep(e.name, size):
                 continue
             rel = f"{base}/{e.name}" if base else e.name
-            yield (partition.dir_path + "/" + e.name, e.name, rel, e.path, size)
+            yield (d + "/" + e.name, e.name, rel, e.path, size)
 
 
 class GraphManifestPushdownReader(GraphManifestReader):

@@ -3,6 +3,7 @@
 from pyspark.sql import functions as F
 
 from copy_sharepoint_to_onelake_lakehousefiles_spark.operators.skew import (
+    _with_row_salt,
     salted_aggregate,
     salted_join,
 )
@@ -52,6 +53,22 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
     plain = o.join(c, "o_custkey").select("o_orderkey", "c_mktsegment")
     salted = salted_join(o, c, "o_custkey", n_salts=4).select("o_orderkey", "c_mktsegment")
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
+
+
+def test_identical_hot_rows_spread_over_salts(spark):
+    """1,000 literally identical hot rows: a whole-row hash would give them
+    one salt (one reducer); the row-position salt spreads them."""
+    big = spark.createDataFrame([(7, "hot")] * 1000, "k long, v string").repartition(3)
+    small = spark.createDataFrame([(7, "x"), (8, "y")], "k long, w string")
+    salts = {
+        r["_salt"]: r["n"]
+        for r in _with_row_salt(big, 8).groupBy("_salt").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert len(salts) >= 2
+    assert sum(salts.values()) == 1000
+    plain = sorted(map(tuple, big.join(small, "k").collect()))
+    assert sorted(map(tuple, salted_join(big, small, "k", n_salts=8).collect())) == plain
+    assert len(plain) == 1000
 
 
 def test_salted_aggregate_equals_plain(spark, sf_dir):

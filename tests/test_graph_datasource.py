@@ -1,11 +1,15 @@
-"""Python Data Source for the tree listing: partition-per-directory planning,
-row parity with the driver-walk manifest, and filter pushdown semantics."""
+"""Python Data Source for the tree listing: size-packed directory
+partitions, row parity with the driver-walk manifest, and filter pushdown
+semantics."""
 
 import os
+from collections import Counter
 
 from pyspark.sql import functions as F
 
 from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.graph_datasource import (
+    MAX_PARTITION_BYTES,
+    OPEN_COST_BYTES,
     GraphManifestDataSource,
     GraphManifestPushdownReader,
     GraphManifestReader,
@@ -47,16 +51,6 @@ def test_source_matches_driver_walk_manifest(spark, tmp_path):
     }
     assert via_source == via_walk
     assert ("sub1/sub2/c.txt", 6) in via_source
-
-
-def test_partition_per_directory(tmp_path):
-    root = str(tmp_path / "tree")
-    os.makedirs(root)
-    _build_tree(root)
-    reader = GraphManifestReader({"path": root})
-    parts = reader.partitions()
-    rels = sorted(p.rel_base for p in parts)
-    assert rels == ["", "empty_dir", "sub1", "sub1/sub2"]
 
 
 def test_filter_pushdown_applies_in_reader(spark, tmp_path):
@@ -131,11 +125,12 @@ _TREE = {
 
 class _ListingHandler(BaseHTTPRequestHandler):
     base = ""  # filled by fixture
+    tree = _TREE  # listing path → items; `_serve` swaps in other trees
     hits = []  # every (path, skip) request seen — asserts real pagination
 
     def do_GET(self):  # noqa: N802
         u = urlparse(self.path)
-        items = _TREE.get(u.path)
+        items = type(self).tree.get(u.path)
         if items is None:
             self.send_error(404)
             return
@@ -162,14 +157,29 @@ class _ListingHandler(BaseHTTPRequestHandler):
 
 
 @pytest.fixture()
-def listing_base():
-    _ListingHandler.hits = []
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), _ListingHandler)
-    _ListingHandler.base = f"http://127.0.0.1:{srv.server_address[1]}"
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    yield _ListingHandler.base
-    srv.shutdown()
+def serve():
+    """serve(tree) → base URL of a loopback listing server for `tree`."""
+    servers = []
+
+    def _serve(tree):
+        _ListingHandler.tree = tree
+        _ListingHandler.hits = []
+        srv = ThreadingHTTPServer(("127.0.0.1", 0), _ListingHandler)
+        _ListingHandler.base = f"http://127.0.0.1:{srv.server_address[1]}"
+        threading.Thread(target=srv.serve_forever, daemon=True).start()
+        servers.append(srv)
+        return _ListingHandler.base
+
+    yield _serve
+    for srv in servers:
+        srv.shutdown()
+        srv.server_close()
+    _ListingHandler.tree = _TREE
+
+
+@pytest.fixture()
+def listing_base(serve):
+    return serve(_TREE)
 
 
 def test_http_paged_listing_full_manifest(spark, listing_base):
@@ -193,13 +203,6 @@ def test_http_paged_listing_full_manifest(spark, listing_base):
     assert ("/list/docs", 2) in _ListingHandler.hits
 
 
-def test_http_mode_plans_partition_per_directory(listing_base):
-    reader = GraphManifestReader({"path": f"{listing_base}/list/root"})
-    parts = reader.partitions()
-    assert sorted(p.rel_base for p in parts) == ["", "docs"]
-    assert parts[1].dir_path.endswith("/list/docs")
-
-
 def test_http_mode_pushdown_filters_at_source(spark, listing_base):
     _register(spark)
     df = (
@@ -210,3 +213,136 @@ def test_http_mode_pushdown_filters_at_source(spark, listing_base):
     )
     got = [(r["rel_path"], r["size"]) for r in df.collect()]
     assert got == [("docs/d.txt", 44)]
+
+
+# --- size-packed partitions (Spark's FilePartition.maxSplitBytes) ---------------
+
+
+def _tree_from_dir(root):
+    """The listing tree that serves the local directory `root` over http:
+    `/tree` is the root, `/tree/<rel>` each subdirectory."""
+    tree = {}
+    for d, subdirs, files in os.walk(root):
+        rel = os.path.relpath(d, root)
+        rel = "" if rel == "." else rel
+        key = f"/tree/{rel}" if rel else "/tree"
+        items = []
+        for name in sorted(subdirs + files):
+            child = f"{rel}/{name}" if rel else name
+            if name in subdirs:
+                items.append({"id": child, "name": name, "folder": {}, "childrenUrl": f"/tree/{child}"})
+            else:
+                size = os.path.getsize(os.path.join(d, name))
+                items.append({"id": child, "name": name, "size": size, "downloadUrl": f"http://x/{child}"})
+        tree[key] = items
+    return tree
+
+
+def _wide_tree(root, bulk=False):
+    """16 directories (the root, 5 children, 10 grandchildren), each with
+    3 small files, so every http listing needs 2+ pages at PAGE_SIZE=2.
+    `bulk` adds a 17th directory of 33 files: 33 × OPEN_COST_BYTES alone
+    exceeds MAX_PARTITION_BYTES."""
+    dirs = [""] + [f"c{i}" for i in range(5)] + [f"c{i}/g{j}" for i in range(5) for j in range(2)]
+    for rel in dirs:
+        os.makedirs(os.path.join(root, rel), exist_ok=True)
+        for k in range(3):
+            with open(os.path.join(root, rel, f"f{k}.bin"), "wb") as f:
+                f.write(b"x" * (10 + k))
+    if bulk:
+        os.makedirs(os.path.join(root, "c0", "bulk"))
+        for k in range(33):
+            with open(os.path.join(root, "c0", "bulk", f"b{k:02d}.bin"), "wb") as f:
+                f.write(b"y" * 7)
+    return dirs + (["c0/bulk"] if bulk else [])
+
+
+def _dir_costs(root):
+    """Each directory's cost, rel_base → Σ (file size + OPEN_COST_BYTES)."""
+    costs = {}
+    for d, _, files in os.walk(root):
+        rel = os.path.relpath(d, root)
+        costs["" if rel == "." else rel] = sum(
+            os.path.getsize(os.path.join(d, f)) + OPEN_COST_BYTES for f in files
+        )
+    return costs
+
+
+def _source(mode, root, serve):
+    return serve(_tree_from_dir(root)) + "/tree" if mode == "http" else root
+
+
+@pytest.fixture()
+def pin_cores(monkeypatch):
+    """Fix the planning process's core count that the split size uses."""
+
+    def _pin(n):
+        monkeypatch.setattr(os, "sched_getaffinity", lambda pid: set(range(n)))
+
+    return _pin
+
+
+@pytest.mark.parametrize("mode", ["local", "http"])
+@pytest.mark.parametrize("bulk", [False, True])
+@pytest.mark.parametrize("cores", [1, 4, 64])
+def test_packed_partitions_hold_whole_directories(tmp_path, serve, pin_cores, mode, bulk, cores):
+    root = str(tmp_path / "tree")
+    dirs = _wide_tree(root, bulk)
+    costs = _dir_costs(root)
+    pin_cores(cores)
+    reader = GraphManifestReader({"path": _source(mode, root, serve)})
+    parts = reader.partitions()
+    placed = [base for p in parts for _, base in p.dirs]
+    # every directory in exactly one partition, in frontier order
+    assert sorted(placed) == sorted(dirs)
+    depths = [b.count("/") + (b != "") for b in placed]
+    assert depths == sorted(depths)
+    assert len(parts) >= min(len(dirs), cores)
+    split = min(MAX_PARTITION_BYTES, max(OPEN_COST_BYTES, sum(costs.values()) // cores))
+    for p in parts:
+        bases = [base for _, base in p.dirs]
+        if any(costs[b] > split for b in bases):
+            assert len(bases) == 1, bases  # an oversized directory is alone
+    assert not bulk or costs["c0/bulk"] > split  # the oversized case is exercised
+    # each directory's rows — all its cursor pages — come from one partition
+    owner = {}
+    for i, p in enumerate(parts):
+        for row in reader.read(p):
+            owner.setdefault(os.path.dirname(row[2]), set()).add(i)
+    assert set(owner) == set(dirs)
+    assert all(len(v) == 1 for v in owner.values())
+
+
+@pytest.mark.parametrize("mode", ["local", "http"])
+def test_small_directories_share_partitions(spark, tmp_path, serve, pin_cores, mode):
+    root = str(tmp_path / "tree")
+    _wide_tree(root)
+    src = _source(mode, root, serve)
+    pin_cores(4)
+    parts = GraphManifestReader({"path": src}).partitions()
+    assert 4 <= len(parts) < 16
+    _register(spark)
+    via_source = sorted(
+        (r["rel_path"], r["size"]) for r in spark.read.format("graph_manifest").load(src).collect()
+    )
+    via_walk = sorted(
+        (r["rel_path"], r["size"]) for r in manifest_from_local_dir(spark, root).collect()
+    )
+    assert via_source == via_walk
+    assert len(via_source) == 48
+
+
+def test_packing_adds_no_listing_requests(spark, listing_base, pin_cores):
+    # the driver walk and read() each page every directory once, however
+    # the directories are packed: 2 requests per cursor page
+    per_page = {("/list/root", 0): 2, ("/list/root", 2): 2, ("/list/docs", 0): 2, ("/list/docs", 2): 2}
+    _register(spark)
+    spark.read.format("graph_manifest").load(f"{listing_base}/list/root").collect()
+    assert Counter(_ListingHandler.hits) == per_page
+    _ListingHandler.hits = []
+    pin_cores(1)  # both directories in one partition
+    reader = GraphManifestReader({"path": f"{listing_base}/list/root"})
+    parts = reader.partitions()
+    assert [[b for _, b in p.dirs] for p in parts] == [["", "docs"]]
+    assert len([row for p in parts for row in reader.read(p)]) == 6
+    assert Counter(_ListingHandler.hits) == per_page
