@@ -422,22 +422,28 @@ def _nearest_cell_expr(centroids: list[list[float]], emb_col: str = "emb"):
     OPTIMIZATION_r13.md) — the per-iteration broadcast/slice overhead
     exceeds the literal-tree analysis cost at any warmth.
 
-    A NULL embedding gets cell -1 ("no cell"), so it joins no probe and
-    never skews a centroid."""
-    structs = ", ".join(
-        f"named_struct('cid', {cid}, 'c', array({', '.join(f'CAST({x} AS DOUBLE)' for x in c)}))"
-        for cid, c in enumerate(centroids)
-    )
+    A NULL embedding, one whose length differs from the centroids' or one
+    holding a NULL element gets a NULL distance to every centroid (zip_with
+    pads the shorter side with NULL), and such a row gets cell -1 ("no
+    cell"), so it joins no probe and never skews a centroid."""
     return F.expr(
         f"""
-        CASE WHEN {emb_col} IS NULL THEN -1 ELSE
-        array_min(transform(array({structs}),
-          s -> struct(
-            aggregate(zip_with({emb_col}, s.c, (x, y) -> (x - y) * (x - y)),
-                      CAST(0 AS DOUBLE), (a, v) -> a + v) AS d,
-            s.cid AS cid))).cid END
+        array_min(transform({_centroid_dists_sql(centroids, emb_col)},
+          (d, i) -> struct(d, IF(d IS NULL, -1, i) AS cid))).cid
         """
     )
+
+
+def _centroid_dists_sql(centroids: list[list[float]], emb_col: str) -> str:
+    """SQL for the array of squared L2 distances from `emb_col` to each
+    centroid, indexed by cell id; every entry is NULL for a NULL or
+    malformed embedding."""
+    cents = ", ".join(
+        f"array({', '.join(f'CAST({x} AS DOUBLE)' for x in c)})" for c in centroids
+    )
+    return f"""transform(array({cents}),
+          c -> aggregate(zip_with({emb_col}, c, (x, y) -> (x - y) * (x - y)),
+                         CAST(0 AS DOUBLE), (a, v) -> a + v))"""
 
 
 @session_memo
@@ -454,20 +460,15 @@ def ivf_centroids_memo(spark: SparkSession, sf_dir: str) -> list[tuple[int, list
 
 
 def _cells_ranked_expr(centroids: list[list[float]], n: int, emb_col: str = "emb"):
-    """Array of the n nearest cell ids (for multi-probe queries)."""
-    structs = ", ".join(
-        f"named_struct('cid', {cid}, 'c', array({', '.join(f'CAST({x} AS DOUBLE)' for x in c)}))"
-        for cid, c in enumerate(centroids)
-    )
+    """Array of the n nearest cell ids (for multi-probe queries); empty for
+    a NULL or malformed query embedding."""
     return F.expr(
         f"""
         slice(transform(
-          array_sort(
-            transform(array({structs}),
-              s -> named_struct(
-                'd', aggregate(zip_with({emb_col}, s.c, (x, y) -> (x - y) * (x - y)),
-                               CAST(0 AS DOUBLE), (a, v) -> a + v),
-                'cid', s.cid))),
+          array_sort(filter(
+            transform({_centroid_dists_sql(centroids, emb_col)},
+              (d, i) -> named_struct('d', d, 'cid', i)),
+            s -> s.d IS NOT NULL)),
           s -> s.cid), 1, {n})
         """
     )

@@ -26,6 +26,11 @@ def get_spark(app_name: str = "sharepoint_onelake_spark", cpus: str | None = Non
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Spark's LRU of compiled generated classes holds 100 by default;
+        # the 9-query relational mix alone needs ~120 and the 225-query
+        # gate 3,761, so at 100 every warm query recompiled (and re-JITted)
+        # 5-15 classes. Sized to cover the gate's working set.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))

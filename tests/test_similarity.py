@@ -111,15 +111,31 @@ def test_ann_recall_flags_assert_true(spark, sf_dir):
                 assert r[f] == 1, (fn.__name__, f, r)
 
 
+# wrong length, or a NULL element: a NULL distance to every centroid
+MALFORMED = [(5, [0.5]), (6, [0.1, 0.2, 0.3]), (7, [0.9, None]), (8, [None, None])]
+
+
 def test_null_embedding_gets_no_cell(spark):
     cents = [[0.0, 0.0], [1.0, 1.0], [0.0, 1.0]]
     df = spark.createDataFrame(
-        [(0, [0.1, 0.2]), (1, [0.9, 0.8]), (2, None), (3, [0.0, 0.9]), (4, [0.5, 0.5])],
+        [(0, [0.1, 0.2]), (1, [0.9, 0.8]), (2, None), (3, [0.0, 0.9]), (4, [0.5, 0.5])]
+        + MALFORMED,
         "vec_id long, emb array<double>",
     )
     got = dict(df.select("vec_id", S._nearest_cell_expr(cents).alias("cell")).collect())
-    # row 4 is equidistant from all three: ties go to the lowest cell id
-    assert got == {0: 0, 1: 1, 2: -1, 3: 2, 4: 0}
+    # row 4 is equidistant from all three: ties go to the lowest cell id;
+    # malformed rows get no cell rather than the lowest one
+    assert got == {0: 0, 1: 1, 2: -1, 3: 2, 4: 0, 5: -1, 6: -1, 7: -1, 8: -1}
+
+
+def test_null_or_malformed_query_probes_no_cell(spark):
+    cents = [[0.0, 0.0], [1.0, 1.0], [0.0, 1.0]]
+    df = spark.createDataFrame(
+        [(0, [0.1, 0.2]), (1, [0.9, 0.8]), (2, None)] + MALFORMED,
+        "vec_id long, emb array<double>",
+    )
+    got = dict(df.select("vec_id", S._cells_ranked_expr(cents, 2).alias("cells")).collect())
+    assert got == {0: [0, 2], 1: [1, 2], 2: [], 5: [], 6: [], 7: [], 8: []}
 
 
 def test_null_embedding_leaves_centroids_unchanged(spark, sf_dir):
