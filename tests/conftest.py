@@ -133,7 +133,6 @@ SLOW_TESTS = {
     ("test_pq.py", "test_ivfpq_recall_beats_flat_pq_floor"),
     ("test_pq.py", "test_ivfpq_recall_flags_assert_true"),
     ("test_pq.py", "test_pq_recall_after_rerank"),
-    ("test_session.py", "test_warm_query_compiles_nothing_after_a_large_working_set"),
     ("test_similarity.py", "test_ann_recall_flags_assert_true"),
     ("test_text.py", "test_bpe_20_merges_matches_unrolled_oracle"),
     ("test_txtable.py", "test_bloom_prunes_scattered_key_merge"),
