@@ -6,8 +6,10 @@ SharePoint→OneLake copy notebook), generalized to a DataFrame engine:
 
 - ``tables``      — schema-declared loaders for the fixture star schema
 - ``operators``   — relational / text / dedup / similarity / as-of operators
-- ``sources``     — manifest builders (recursive tree walk → DataFrame)
-- ``plans``       — the copy subsystem (plan = anti-join, execute = mapInPandas)
+- ``sources``     — custom Data Sources (the ``graph_manifest`` tree listing,
+                    lite lakehouse readers, stream sources and sinks)
+- ``plans``       — the copy subsystem (plan = anti-join, execute = mapInPandas
+                    with atomic per-file publish)
 - ``streaming``   — Structured Streaming tier over the events table
 - ``multimodal``  — binary-column plumbing with stubbed decoders
 

@@ -7,9 +7,12 @@ Reference semantics being generalized:
   everything every run — this is the fix SURVEY.md §2.1 calls out).
 - sequential per-file GET+write loop (NB:283-305)
   → here: `execute_copy` runs the fetch+write INSIDE executors via
-  mapInPandas, one HTTP/filesystem session per partition, parallel across
+  mapInPandas, one pooled HTTP session per Python worker, parallel across
   partitions, with per-row status instead of silent `continue` — the audit
   line (NB:299) becomes a queryable result DataFrame (SURVEY §2.1 O24).
+  Each file is written under a hidden temp name and renamed into place, so
+  a file exists under its final name only when complete and a failed or
+  killed write is simply planned again by the next run.
 - destination path construction (lakehouse_dest_path, NB:254-263) and
   '//'→'/' normalization (NB:242/263/290) as column expressions.
 
@@ -20,7 +23,11 @@ a 100 TB copy is just more partitions.
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import os
+import time
+import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -30,6 +37,7 @@ from pyspark.sql import types as T
 
 from ..functions.paths import join_path
 from ..registry import query
+from ..sources.graph_datasource import FetchClientError, _http_fetch
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -43,72 +51,6 @@ RESULT_SCHEMA = T.StructType(
         T.StructField("error", T.StringType()),
     ]
 )
-
-
-class FetchClientError(Exception):
-    """A definitive HTTP client error (4xx): retrying cannot help, so the
-    copy loop records the status row immediately instead of backing off —
-    the reference's non-200 skip (NB:294-296) with the status preserved."""
-
-
-_HTTP_SESSION = None  # one pooled requests.Session per Python worker
-
-
-def _http_fetch(url: str, timeout: float = 60.0, auth=None) -> bytes:
-    """GET via a per-interpreter pooled `requests.Session` (connection
-    keep-alive across the many small files a copy partition fetches —
-    the reference opens a fresh connection per file, NB:293). Raises
-    FetchClientError on 4xx (no retry), generic errors on 5xx/transport
-    (retried by the caller's backoff loop). Falls back to urllib when
-    requests is unavailable.
-
-    `auth` is an O3 token provider (sources/auth.py): its bearer header is
-    attached to every request, and a 401 triggers ONE invalidate+refresh
-    retry before the 4xx is treated as definitive (token expired
-    server-side — the reference would simply crash, NB:141-143)."""
-    raw = _http_get_once(url, timeout, auth)
-    if raw is None:  # 401 with an auth provider → refresh once
-        auth.invalidate()
-        raw = _http_get_once(url, timeout, auth)
-        if raw is None:
-            raise FetchClientError(f"HTTP 401 for {url} (after token refresh)")
-    return raw
-
-
-def _http_get_once(url: str, timeout: float, auth) -> bytes | None:
-    """One GET. Returns None for a refreshable 401 (auth provided);
-    raises FetchClientError for other 4xx, generic errors for 5xx."""
-    global _HTTP_SESSION
-    headers = auth.auth_headers() if auth is not None else {}
-    try:
-        import requests
-    except ImportError:
-        from urllib.error import HTTPError
-        from urllib.request import Request, urlopen
-
-        try:
-            with urlopen(Request(url, headers=headers), timeout=timeout) as r:
-                return r.read()
-        except HTTPError as e:
-            if e.code == 401 and auth is not None:
-                return None
-            if 400 <= e.code < 500:
-                raise FetchClientError(f"HTTP {e.code} for {url}") from e
-            raise
-    if _HTTP_SESSION is None:
-        _HTTP_SESSION = requests.Session()
-        adapter = requests.adapters.HTTPAdapter(
-            pool_connections=4, pool_maxsize=16
-        )
-        _HTTP_SESSION.mount("http://", adapter)
-        _HTTP_SESSION.mount("https://", adapter)
-    resp = _HTTP_SESSION.get(url, timeout=timeout, headers=headers)
-    if resp.status_code == 401 and auth is not None:
-        return None
-    if 400 <= resp.status_code < 500:
-        raise FetchClientError(f"HTTP {resp.status_code} for {url}")
-    resp.raise_for_status()
-    return resp.content
 
 
 def dest_path_col(dest_root: str, site_folder: str) -> F.Column:
@@ -132,6 +74,60 @@ def plan_copy(manifest: DataFrame, existing: DataFrame | None) -> DataFrame:
     return todo
 
 
+def _read_src(src: str, auth) -> bytes:
+    """http(s) downloadUrls (the reference's case, NB:293) or local paths.
+    `auth` (O3, sources/auth.py) rides into the executor closure; its lazy
+    per-interpreter token state means each worker fetches its own."""
+    if src.startswith(("http://", "https://")):
+        return _http_fetch(src, auth=auth)
+    path = src[len("file:") :] if src.startswith("file:") else src
+    with open(path, "rb") as f:
+        return f.read()
+
+
+def _publish(raw: bytes, dest_path: str) -> None:
+    """Write `raw` to a unique hidden temp name in `dest_path`'s directory,
+    then `os.replace` it onto `dest_path`. A failed write removes the temp,
+    so no name ever holds a partial file. (An in-place write, as in the
+    reference's write_bytes_to_lakehouse NB:271-281, can leave a truncated
+    file under the final name, which `plan_copy`'s anti-join then counts
+    as landed.)"""
+    d, name = os.path.split(dest_path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "xb") as f:
+            f.write(raw)
+        os.replace(tmp, dest_path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
+
+
+def _copy_file(row, auth, max_attempts: int, backoff_s: float) -> tuple:
+    """Copy one planned file (file_id, src_path, dest_path) and return its
+    RESULT_SCHEMA row. Transient errors back off exponentially up to
+    `max_attempts`; a definitive 4xx is recorded at once."""
+    err = None
+    for attempt in range(1, max_attempts + 1):
+        try:
+            raw = _read_src(row.src_path, auth)
+            _publish(raw, row.dest_path)
+            checksum = hashlib.md5(raw).hexdigest()
+            return (row.file_id, row.src_path, row.dest_path, len(raw), checksum, attempt, "ok", None)
+        except FetchClientError as exc:
+            # definitive 4xx: the reference skips these files (NB:294-296)
+            # — record and move on, no backoff
+            err = str(exc)
+            break
+        except Exception as exc:  # noqa: BLE001 — audit row, task keeps going
+            err = str(exc)
+            if attempt < max_attempts:
+                time.sleep(backoff_s * (2 ** (attempt - 1)))
+    return (row.file_id, row.src_path, row.dest_path, 0, None, attempt, "error", err)
+
+
 def execute_copy(
     todo: DataFrame,
     dest_root: str,
@@ -142,12 +138,14 @@ def execute_copy(
     auth=None,
 ) -> DataFrame:
     """Distributed fetch+write. Each executor task copies its partition's
-    files — http(s) downloadUrls through `_http_fetch`, local paths and
-    file: URLs from disk (`_read_src`) — and emits an audit row per file.
+    files — http(s) downloadUrls through the shared `_http_fetch`, local
+    paths and file: URLs from disk — publishes each one atomically
+    (`_publish`) and emits an audit row per file.
 
     Per-row retry with exponential backoff (max_attempts, base backoff_s)
-    covers transient fetch errors WITHIN a task before Spark's own task
-    retry kicks in — the reference has neither (skip-on-error, NB:294-296).
+    covers transient fetch errors — 5xx, transport, 429 throttling — WITHIN
+    a task before Spark's own task retry kicks in — the reference has
+    neither (skip-on-error, NB:294-296).
 
     Returns the result-manifest DataFrame (src_path, dest_path, bytes,
     checksum, attempts, status, error) — the queryable replacement for the
@@ -160,73 +158,13 @@ def execute_copy(
     if parallelism:
         planned = planned.repartition(parallelism)
 
-    def _read_src(src: str) -> bytes:
-        # http(s) downloadUrls (the reference's case, NB:293) or local paths.
-        # `auth` (O3, sources/auth.py) rides into the closure; its lazy
-        # per-interpreter token state means each worker fetches its own.
-        if src.startswith(("http://", "https://")):
-            return _http_fetch(src, auth=auth)
-        path = src[len("file:") :] if src.startswith("file:") else src
-        with open(path, "rb") as f:
-            return f.read()
-
     def copy_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import time
-
         for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                err = None
-                attempts_used = max_attempts
-                for attempt in range(1, max_attempts + 1):
-                    try:
-                        raw = _read_src(row.src_path)
-                        os.makedirs(os.path.dirname(row.dest_path), exist_ok=True)
-                        with open(row.dest_path, "wb") as f:
-                            f.write(raw)
-                        out.append(
-                            (
-                                row.file_id,
-                                row.src_path,
-                                row.dest_path,
-                                len(raw),
-                                hashlib.md5(raw).hexdigest(),
-                                attempt,
-                                "ok",
-                                None,
-                            )
-                        )
-                        err = None
-                        break
-                    except FetchClientError as exc:
-                        # definitive 4xx: the reference skips these files
-                        # (NB:294-296) — record and move on, no backoff
-                        err = str(exc)
-                        attempts_used = attempt
-                        break
-                    except Exception as exc:  # noqa: BLE001 — audit row, task keeps going
-                        err = str(exc)
-                        attempts_used = attempt
-                        if attempt < max_attempts:
-                            time.sleep(backoff_s * (2 ** (attempt - 1)))
-                if err is not None:
-                    out.append(
-                        (row.file_id, row.src_path, row.dest_path, 0, None, attempts_used, "error", err)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "file_id",
-                    "src_path",
-                    "dest_path",
-                    "bytes",
-                    "checksum",
-                    "attempts",
-                    "status",
-                    "error",
-                ],
-            )
+            out = [
+                _copy_file(row, auth, max_attempts, backoff_s)
+                for row in pdf.itertuples(index=False)
+            ]
+            yield pd.DataFrame(out, columns=RESULT_SCHEMA.names)
 
     return planned.mapInPandas(copy_partition, RESULT_SCHEMA)
 
@@ -303,6 +241,29 @@ def verify_copy(spark: SparkSession, result: DataFrame, dest_root: str) -> DataF
     )
 
 
+def manifest_from_local_dir(spark: SparkSession, root: str) -> DataFrame:
+    """Filesystem flavor of the listing: Spark's own distributed recursive
+    listing (binaryFile + recursiveFileLookup) — no driver walk at all.
+    Only file STATUS is read here (content deferred; pathGlobFilter and
+    pushdown apply). Rows follow `MANIFEST_SCHEMA`'s columns."""
+    root = os.path.abspath(root)
+    listing = (
+        spark.read.format("binaryFile")
+        .option("recursiveFileLookup", "true")
+        .load(root)
+        .select("path", "length")
+    )
+    prefix = "file:" + root.rstrip("/") + "/"
+    rel = F.replace(F.col("path"), F.lit(prefix), F.lit(""))
+    return listing.select(
+        F.md5("path").alias("file_id"),
+        F.element_at(F.split(F.col("path"), "/"), -1).alias("name"),
+        rel.alias("rel_path"),
+        F.col("path").alias("download_url"),
+        F.col("length").alias("size"),
+    )
+
+
 def copy_tree(
     spark: SparkSession,
     src_root: str,
@@ -311,8 +272,6 @@ def copy_tree(
 ) -> DataFrame:
     """End-to-end: enumerate src_root → anti-join against dest state →
     distributed copy → result manifest."""
-    from ..sources.manifest import manifest_from_local_dir
-
     manifest = manifest_from_local_dir(spark, src_root)
     existing = None
     if os.path.isdir(dest_root) and any(os.scandir(dest_root)):

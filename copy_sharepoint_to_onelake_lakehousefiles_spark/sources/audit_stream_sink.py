@@ -7,9 +7,10 @@ written ONLY after every task of the batch succeeded — so a reader that
 honors the ledger never sees uncommitted rows, and replayed batches (task
 retry after failure) overwrite idempotently by (batch_id, task) file name.
 
-This completes the custom-source matrix: batch read (graph_manifest),
-batch write (binary_copy), stream read (events_replay), stream write
-(this). Same public Data Source API, all four quadrants.
+Beside batch read (graph_manifest) and stream read (events_replay), this
+is the engine's custom stream write, on the same public Data Source API.
+The copy itself is a transformation (`plans/copy_plan.execute_copy`),
+not a batch write source.
 """
 
 from __future__ import annotations

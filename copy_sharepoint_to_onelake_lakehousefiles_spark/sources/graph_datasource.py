@@ -1,5 +1,5 @@
-"""A real pluggable source for the Graph-shaped tree listing: the PySpark
-Python Data Source API (Spark 4) upgrade of `manifest.walk_tree`.
+"""The Graph-shaped tree listing as a PySpark Python Data Source (Spark 4),
+and the one HTTP GET the copy subsystem sends to the service.
 
 The reference lists a drive tree with driver-side recursion + cursor pages
 (collect_files_recursive NB:213-236, list_children_paged NB:204-211) and
@@ -34,6 +34,11 @@ Two backends behind the same planning:
   "@odata.nextLink": "...?cursor=..."}` pages — the reference's cursor walk
   (NB:204-211) executed with real HTTP fetches (loopback-served in tests),
   executors following each directory's cursor chain in parallel.
+
+Every Graph GET — listing pages here, file downloads in
+`plans/copy_plan.execute_copy` — goes through `_http_fetch`, so the
+status policy (401 refresh, definitive 4xx, transient 429/5xx) and the
+timeout live in one place.
 """
 
 from __future__ import annotations
@@ -41,8 +46,8 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
-from urllib.request import urlopen
 
+from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -57,7 +62,18 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 
-MANIFEST_DDL = "file_id string, name string, rel_path string, download_url string, size long"
+# One row per listed file (the reference's item dict, NB:230-235).
+MANIFEST_SCHEMA = T.StructType(
+    [
+        T.StructField("file_id", T.StringType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("rel_path", T.StringType()),
+        T.StructField("download_url", T.StringType()),
+        T.StructField("size", T.LongType()),
+    ]
+)
+
+_TIMEOUT_S = 60.0
 
 # Spark's file-split defaults: spark.sql.files.openCostInBytes and
 # spark.sql.files.maxPartitionBytes.
@@ -92,28 +108,85 @@ def _pack_dirs(dirs: list[tuple[str, str, int]], cores: int) -> list[DirsPartiti
     return parts
 
 
-def _iter_pages(url: str, timeout: float = 30.0, auth=None):
+class FetchClientError(Exception):
+    """A definitive HTTP client error (4xx other than 429): retrying cannot
+    help, so the copy loop records the status row immediately instead of
+    backing off — the reference's non-200 skip (NB:294-296) with the
+    status preserved."""
+
+
+_HTTP_SESSION = None  # one pooled requests.Session per Python worker
+
+
+def _http_fetch(url: str, auth=None) -> bytes:
+    """GET `url` and return the body. Uses a per-interpreter pooled
+    `requests.Session` (connection keep-alive across the many small
+    requests a task sends — the reference opens a fresh connection per
+    file, NB:293), or urllib when requests is not installed.
+
+    Status policy: 429 and 5xx/transport errors raise generic exceptions,
+    which the copy loop's backoff retries (429 is throttling, not a verdict
+    on the file); every other 4xx raises FetchClientError. `auth` is an O3
+    token provider (sources/auth.py): its bearer header rides on every
+    request, and a 401 triggers ONE invalidate+refresh retry before it is
+    treated as definitive (token expired server-side — the reference would
+    simply crash, NB:141-143)."""
+    raw = _http_get_once(url, auth)
+    if raw is None:  # 401 with an auth provider → refresh once
+        auth.invalidate()
+        raw = _http_get_once(url, auth)
+        if raw is None:
+            raise FetchClientError(f"HTTP 401 for {url} (after token refresh)")
+    return raw
+
+
+def _check_status(code: int, url: str, auth) -> bool:
+    """True for a refreshable 401; raises FetchClientError for the other
+    definitive 4xx; False otherwise (the caller raises 429/5xx itself)."""
+    if code == 401 and auth is not None:
+        return True
+    if 400 <= code < 500 and code != 429:
+        raise FetchClientError(f"HTTP {code} for {url}")
+    return False
+
+
+def _http_get_once(url: str, auth) -> bytes | None:
+    """One GET. Returns None for a refreshable 401 (auth provided)."""
+    global _HTTP_SESSION
+    headers = auth.auth_headers() if auth is not None else {}
+    try:
+        import requests
+    except ImportError:
+        from urllib.error import HTTPError
+        from urllib.request import Request, urlopen
+
+        try:
+            with urlopen(Request(url, headers=headers), timeout=_TIMEOUT_S) as r:
+                return r.read()
+        except HTTPError as e:
+            if _check_status(e.code, url, auth):
+                return None
+            raise
+    if _HTTP_SESSION is None:
+        _HTTP_SESSION = requests.Session()
+        adapter = requests.adapters.HTTPAdapter(pool_connections=4, pool_maxsize=16)
+        _HTTP_SESSION.mount("http://", adapter)
+        _HTTP_SESSION.mount("https://", adapter)
+    resp = _HTTP_SESSION.get(url, timeout=_TIMEOUT_S, headers=headers)
+    if _check_status(resp.status_code, url, auth):
+        return None
+    resp.raise_for_status()
+    return resp.content
+
+
+def _iter_pages(url: str, auth=None):
     """Follow a cursor-paged listing: GET url → {"value": [...],
     "@odata.nextLink": next_url?} until no nextLink remains (the
     reference's list_children_paged loop, NB:204-211). `auth` is an O3
     token provider (sources/auth.py) supplying the bearer header the
     reference sends on every Graph call (NB:53-59)."""
-    from urllib.error import HTTPError
-    from urllib.request import Request
-
     while url:
-        headers = auth.auth_headers() if auth is not None else {}
-        try:
-            with urlopen(Request(url, headers=headers), timeout=timeout) as r:
-                page = json.load(r)
-        except HTTPError as e:
-            if e.code == 401 and auth is not None:  # expired → refresh once
-                auth.invalidate()
-                headers = auth.auth_headers()
-                with urlopen(Request(url, headers=headers), timeout=timeout) as r:
-                    page = json.load(r)
-            else:
-                raise
+        page = json.loads(_http_fetch(url, auth=auth))
         yield from page.get("value", [])
         url = page.get("@odata.nextLink")
 
@@ -272,8 +345,8 @@ class GraphManifestDataSource(DataSource):
     def name(cls) -> str:
         return "graph_manifest"
 
-    def schema(self) -> str:
-        return MANIFEST_DDL
+    def schema(self) -> T.StructType:
+        return MANIFEST_SCHEMA
 
     def reader(self, schema) -> GraphManifestReader:
         if str(self.options.get("pushdown", "")).lower() == "true":

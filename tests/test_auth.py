@@ -15,7 +15,7 @@ from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.auth import (
     ClientCredentialsTokenProvider,
     TokenError,
 )
-from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.manifest import MANIFEST_SCHEMA
+from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.graph_datasource import MANIFEST_SCHEMA
 
 PAYLOAD = b"protected bytes" * 20
 CLIENT_ID, CLIENT_SECRET = "app-123", "s3cret"

@@ -1,23 +1,26 @@
-"""Copy subsystem: manifest walk (pagination, facets), idempotent planning
-(anti-join), distributed execution, grant planner — the reference's whole
-behavior surface (NB:110-305) under test, which the reference itself lacks."""
+"""Copy subsystem: idempotent planning (anti-join), distributed execution
+with atomic publish, grant planner — the reference's whole behavior
+surface (NB:110-305) under test, which the reference itself lacks. The
+Graph page fixture below is served over http in test_graph_datasource.py."""
 
+import errno
 import os
+from types import SimpleNamespace
 
 from pyspark.sql import functions as F
 
+from copy_sharepoint_to_onelake_lakehousefiles_spark.plans import copy_plan
 from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.copy_plan import (
     PERMISSIONS_SCHEMA,
     copy_tree,
     execute_copy,
+    manifest_from_local_dir,
     plan_copy,
     plan_grants,
 )
-from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.manifest import (
+from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.graph_datasource import (
     MANIFEST_SCHEMA,
-    manifest_from_local_dir,
-    manifest_from_tree,
-    walk_tree,
+    GraphManifestDataSource,
 )
 
 
@@ -32,7 +35,7 @@ def _build_tree(root):
         f.write("hello\n")
 
 
-# --- Graph-shaped paged walk (FIXTURES.md B2) -------------------------------
+# --- Graph-shaped paged listing (FIXTURES.md B2) ----------------------------
 
 PAGES = {
     "root#1": {
@@ -76,21 +79,15 @@ PAGES = {
 }
 
 
-def test_walk_tree_pagination_facets_and_paths():
-    rows = list(walk_tree(PAGES.__getitem__, "root#1", lambda i: f"children/{i}"))
-    by_name = {r["name"]: r for r in rows}
-    # package (neither facet) dropped, both pages consumed, folder recursed
-    assert set(by_name) == {"a.csv", "nourl.dat", "b bin.dat"}
-    assert by_name["b bin.dat"]["rel_path"] == "sub1/b bin.dat"
-    assert by_name["a.csv"]["rel_path"] == "a.csv"
-    assert by_name["nourl.dat"]["download_url"] is None
-
-
 def test_plan_copy_drops_null_urls_and_already_copied(spark):
-    manifest = manifest_from_tree(
-        spark, PAGES.__getitem__, "root#1", lambda i: f"children/{i}"
+    manifest = spark.createDataFrame(
+        [
+            ("I1", "a.csv", "a.csv", "u/a.csv", 8),
+            ("I3", "nourl.dat", "nourl.dat", None, 1),
+            ("I4", "b bin.dat", "sub1/b bin.dat", "u/b%20bin.dat", 9),
+        ],
+        MANIFEST_SCHEMA,
     )
-    assert manifest.schema == MANIFEST_SCHEMA
     todo = plan_copy(manifest, existing=None)
     assert {r["name"] for r in todo.collect()} == {"a.csv", "b bin.dat"}
 
@@ -128,6 +125,63 @@ def test_execute_copy_reports_errors_not_raises(spark, tmp_path):
     assert len(out) == 1 and out[0]["status"] == "error" and out[0]["error"]
 
 
+def _hidden(root):
+    return [f for _, _, fs in os.walk(root) for f in fs if f.startswith(".")]
+
+
+def test_failed_write_publishes_nothing_and_is_replanned(spark, tmp_path, monkeypatch):
+    """A write that dies part-way (here ENOSPC after half the bytes, on
+    every attempt) leaves nothing under the final name and no temp file,
+    so the next plan against the destination listing plans the file
+    again; a clean run then lands it and leaves no temp file either."""
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    src.mkdir()
+    payload = bytes(range(256)) * 32
+    (src / "a.bin").write_bytes(payload)
+    real_open = open
+
+    class _HalfWriter:
+        def __init__(self, f):
+            self.f = f
+
+        def write(self, data):
+            self.f.write(data[: len(data) // 2])
+            self.f.flush()
+            raise OSError(errno.ENOSPC, "No space left on device")
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.f.close()
+
+    def failing_open(path, mode="r", *a, **k):
+        f = real_open(path, mode, *a, **k)
+        return _HalfWriter(f) if "w" in mode or "x" in mode else f
+
+    monkeypatch.setattr(copy_plan, "open", failing_open, raising=False)
+    row = SimpleNamespace(file_id="a", src_path=str(src / "a.bin"), dest_path=str(dst / "a.bin"))
+    out = dict(zip(copy_plan.RESULT_SCHEMA.names, copy_plan._copy_file(row, None, 2, 0.0)))
+    monkeypatch.undo()
+    assert out["status"] == "error" and out["attempts"] == 2
+    assert "No space left" in out["error"]
+    assert not (dst / "a.bin").exists()
+    assert _hidden(dst) == []
+
+    try:
+        spark.dataSource.register(GraphManifestDataSource)
+    except Exception:
+        pass  # already registered in this session
+    manifest = spark.read.format("graph_manifest").load(str(src))
+    todo = plan_copy(manifest, spark.read.format("graph_manifest").load(str(dst)))
+    assert [r["rel_path"] for r in todo.collect()] == ["a.bin"]
+
+    rows = execute_copy(todo, str(dst)).collect()
+    assert [(r["status"], r["bytes"]) for r in rows] == [("ok", len(payload))]
+    assert (dst / "a.bin").read_bytes() == payload
+    assert _hidden(dst) == []
+
+
 # --- grant planner (FIXTURES.md B3, NB:110-144) ------------------------------
 
 
@@ -160,29 +214,6 @@ def test_manifest_from_local_dir_rel_paths(spark, tmp_path):
     assert sizes["sub1/b.bin"] == 200
 
 
-def test_local_fetcher_adapts_fs_to_graph_protocol(spark, tmp_path):
-    src = str(tmp_path / "src2")
-    _build_tree(src)
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.manifest import local_fetcher
-
-    fetch, root_url, child_url = local_fetcher(src)
-    rows = list(walk_tree(fetch, root_url, child_url))
-    assert {r["rel_path"] for r in rows} == {"a.csv", "sub1/b.bin", "sub1/sub2/c.txt"}
-    # facet discrimination happened through the page protocol, not os.walk
-    assert all(r["download_url"] for r in rows)
-
-
-def test_manifest_from_tree_empty(spark, tmp_path):
-    empty = tmp_path / "nothing"
-    empty.mkdir()
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.manifest import local_fetcher
-
-    fetch, root_url, child_url = local_fetcher(str(empty))
-    m = manifest_from_tree(spark, fetch, root_url, child_url)
-    assert m.count() == 0
-    assert m.schema == MANIFEST_SCHEMA
-
-
 def test_observe_metrics_on_copy_result(spark, tmp_path):
     """O23 (success counter) the Spark-native way: df.observe attaches
     aggregate metrics to the copy-result materialization — no second pass
@@ -207,9 +238,6 @@ def test_plan_sync_actions(spark, tmp_path):
     """new / changed / unchanged / orphan classification from a full-outer
     manifest compare."""
     from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.copy_plan import plan_sync
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.manifest import (
-        manifest_from_local_dir,
-    )
 
     src = tmp_path / "src"
     dst = tmp_path / "dst"

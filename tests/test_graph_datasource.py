@@ -1,21 +1,23 @@
 """Python Data Source for the tree listing: size-packed directory
-partitions, row parity with the driver-walk manifest, and filter pushdown
-semantics."""
+partitions, row parity with Spark's binaryFile listing, the Graph page
+fixture served over http, and filter pushdown semantics."""
 
 import os
 from collections import Counter
 
 from pyspark.sql import functions as F
 
+from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.copy_plan import (
+    manifest_from_local_dir,
+    plan_copy,
+)
 from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.graph_datasource import (
+    MANIFEST_SCHEMA,
     MAX_PARTITION_BYTES,
     OPEN_COST_BYTES,
     GraphManifestDataSource,
     GraphManifestPushdownReader,
     GraphManifestReader,
-)
-from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.manifest import (
-    manifest_from_local_dir,
 )
 
 
@@ -182,7 +184,7 @@ def listing_base(serve):
     return serve(_TREE)
 
 
-def test_http_paged_listing_full_manifest(spark, listing_base):
+def test_http_paged_listing_full_manifest(spark, listing_base, serve):
     _register(spark)
     rows = {
         (r["rel_path"], r["size"], r["download_url"])
@@ -201,6 +203,41 @@ def test_http_paged_listing_full_manifest(spark, listing_base):
     # pagination was REAL: both directories were fetched page by page
     assert ("/list/root", 2) in _ListingHandler.hits
     assert ("/list/docs", 2) in _ListingHandler.hits
+    # an empty drive lists no rows, with the declared schema
+    empty = spark.read.format("graph_manifest").load(serve({"/list/root": []}) + "/list/root")
+    assert empty.schema == MANIFEST_SCHEMA
+    assert empty.count() == 0
+
+
+def _tree_from_pages(pages):
+    """The listing tree that serves Graph cursor pages keyed by id: each
+    cursor chain becomes one listing (PAGE_SIZE re-splits it into pages),
+    `root#1` → `/list/root`, and a folder item lists `/list/children/<id>`."""
+    linked = {page["@odata.nextLink"] for page in pages.values()}
+    tree = {}
+    for first in pages.keys() - linked:
+        items, key = [], first
+        while key:
+            for it in pages[key]["value"]:
+                items.append(dict(it, childrenUrl=f"/list/children/{it['id']}") if "folder" in it else it)
+            key = pages[key]["@odata.nextLink"]
+        tree["/list/" + first.split("#")[0]] = items
+    return tree
+
+
+def test_http_listing_of_graph_pages_plans_files_with_urls(spark, serve):
+    """FIXTURES.md B2 over http: a two-page root, a nested folder, a name
+    with a space, a file without downloadUrl and a `package` item (neither
+    facet). The copy plan holds exactly the two files it can fetch."""
+    from test_copy import PAGES
+
+    _register(spark)
+    base = serve(_tree_from_pages(PAGES))
+    manifest = spark.read.format("graph_manifest").load(f"{base}/list/root")
+    assert manifest.schema == MANIFEST_SCHEMA
+    todo = {(r["name"], r["rel_path"], r["download_url"]) for r in plan_copy(manifest, None).collect()}
+    assert todo == {("a.csv", "a.csv", "u/a.csv"), ("b bin.dat", "sub1/b bin.dat", "u/b%20bin.dat")}
+    assert ("/list/root", 2) in _ListingHandler.hits  # both root pages were read
 
 
 def test_http_mode_pushdown_filters_at_source(spark, listing_base):

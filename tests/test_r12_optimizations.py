@@ -50,10 +50,8 @@ def test_cosine_kernel_norms_precomputed_below_join(spark, sf_dir):
 def test_execute_copy_respects_natural_partitioning(spark, tmp_path):
     from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.copy_plan import (
         execute_copy,
-        plan_copy,
-    )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.manifest import (
         manifest_from_local_dir,
+        plan_copy,
     )
 
     src = tmp_path / "src"
