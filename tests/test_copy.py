@@ -204,6 +204,20 @@ def test_plan_grants_idempotent(spark):
     assert [(r["app_id"], r["roles"]) for r in todo] == [("app-a", ["write"])]
 
 
+def test_manifest_from_tree_empty(spark, tmp_path):
+    """An empty drive lists no rows, with the declared schema; nothing to copy."""
+    empty = tmp_path / "nothing"
+    empty.mkdir()
+    try:
+        spark.dataSource.register(GraphManifestDataSource)
+    except Exception:
+        pass  # already registered in this session
+    m = spark.read.format("graph_manifest").load(str(empty))
+    assert m.count() == 0
+    assert m.schema == MANIFEST_SCHEMA
+    assert plan_copy(m, None).count() == 0
+
+
 def test_manifest_from_local_dir_rel_paths(spark, tmp_path):
     src = str(tmp_path / "src")
     _build_tree(src)
