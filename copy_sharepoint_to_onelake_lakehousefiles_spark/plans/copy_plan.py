@@ -27,7 +27,6 @@ import contextlib
 import hashlib
 import os
 import time
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -37,7 +36,7 @@ from pyspark.sql import types as T
 
 from ..functions.paths import join_path
 from ..registry import query
-from ..sources.graph_datasource import FetchClientError, _http_fetch
+from ..sources.graph_datasource import FetchClientError, _http_fetch, publish_temp_name
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -94,7 +93,7 @@ def _publish(raw: bytes, dest_path: str) -> None:
     as landed.)"""
     d, name = os.path.split(dest_path)
     os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+    tmp = os.path.join(d, publish_temp_name(name))
     try:
         with open(tmp, "xb") as f:
             f.write(raw)

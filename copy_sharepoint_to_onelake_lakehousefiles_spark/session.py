@@ -9,6 +9,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _workers_can_import_package() -> bool:
+    parent = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    roots = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return any(os.path.realpath(r) == parent for r in roots)
+
+
 def get_spark(app_name: str = "sharepoint_onelake_spark", cpus: str | None = None) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     # r12: shuffle partitions DERIVED from the session's core count instead
@@ -35,6 +41,15 @@ def get_spark(app_name: str = "sharepoint_onelake_spark", cpus: str | None = Non
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
     )
+    # Every Python task re-read the central directories of the 16 zip
+    # archives on the worker's path, about 170 ms of CPU before its first
+    # row (README design rule 7); worker_daemon re-reads an archive only
+    # when its stat changed. Workers import it through their working
+    # directory (the JVM's, inherited from here) or PYTHONPATH, so the
+    # conf is set only when one of them holds this package; otherwise
+    # Spark's own daemon runs.
+    if _workers_can_import_package():
+        builder = builder.config("spark.python.daemon.module", f"{__package__}.worker_daemon")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

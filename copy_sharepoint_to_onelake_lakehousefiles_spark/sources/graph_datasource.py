@@ -45,6 +45,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import types as T
@@ -79,6 +81,16 @@ _TIMEOUT_S = 60.0
 # spark.sql.files.maxPartitionBytes.
 OPEN_COST_BYTES = 4 * 1024 * 1024
 MAX_PARTITION_BYTES = 128 * 1024 * 1024
+
+# `plans/copy_plan._publish` writes each file under a hidden temp name in
+# its destination directory and renames it into place. A task killed
+# mid-write leaves the temp behind; it is not a copied file, so the local
+# listing skips exactly this pattern.
+_PUBLISH_TEMP = re.compile(r"\..+\.[0-9a-f]{32}\.tmp")
+
+
+def publish_temp_name(name: str) -> str:
+    return f".{name}.{uuid.uuid4().hex}.tmp"
 
 
 @dataclass
@@ -279,7 +291,7 @@ class GraphManifestReader(DataSourceReader):
             for e in sorted(os.scandir(d), key=lambda e: e.name):
                 if e.is_dir():
                     yield e.name, e.path, 0
-                elif e.is_file():
+                elif e.is_file() and not _PUBLISH_TEMP.fullmatch(e.name):
                     yield e.name, None, e.stat().st_size
 
     def read(self, partition: DirsPartition):
@@ -305,7 +317,7 @@ class GraphManifestReader(DataSourceReader):
                 )
             return
         for e in sorted(os.scandir(d), key=lambda e: e.name):
-            if not e.is_file():
+            if not e.is_file() or _PUBLISH_TEMP.fullmatch(e.name):
                 continue
             size = e.stat().st_size
             if not keep(e.name, size):

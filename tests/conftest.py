@@ -147,6 +147,9 @@ SLOW_TESTS = {
     ("test_txtable.py", "test_txtable_lite_source_data_metadata_and_pruning"),
     ("test_txtable.py", "test_vacuum_keeps_oldest_retained_resolvable"),
     ("test_txtable.py", "test_vacuum_removes_only_expired_and_orphan_files"),
+    # each starts its own Spark session in a subprocess (15-17 s)
+    ("test_worker_daemon.py", "test_session_from_foreign_cwd_falls_back_to_spark_daemon"),
+    ("test_worker_daemon.py", "test_session_with_package_on_pythonpath_runs_the_guarded_daemon"),
 }
 
 

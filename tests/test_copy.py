@@ -5,6 +5,7 @@ Graph page fixture below is served over http in test_graph_datasource.py."""
 
 import errno
 import os
+import uuid
 from types import SimpleNamespace
 
 from pyspark.sql import functions as F
@@ -180,6 +181,32 @@ def test_failed_write_publishes_nothing_and_is_replanned(spark, tmp_path, monkey
     assert [(r["status"], r["bytes"]) for r in rows] == [("ok", len(payload))]
     assert (dst / "a.bin").read_bytes() == payload
     assert _hidden(dst) == []
+
+
+def test_leftover_publish_temp_is_not_listed(spark, tmp_path):
+    """A task killed mid-write leaves `_publish`'s hidden temp in the
+    destination. The destination listing does not report it as a file, so
+    the plan is the same as without it; any other dotfile is still listed."""
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    _build_tree(str(src))
+    assert all(r["status"] == "ok" for r in copy_tree(spark, str(src), str(dst)).collect())
+    (dst / "a.csv").unlink()
+    (dst / f".a.csv.{uuid.uuid4().hex}.tmp").write_bytes(b"x,y\n")
+    (dst / "sub1" / f".b.bin.{uuid.uuid4().hex}.tmp").write_bytes(b"\x01")
+    (dst / ".notes.tmp").write_bytes(b"kept")
+
+    try:
+        spark.dataSource.register(GraphManifestDataSource)
+    except Exception:
+        pass  # already registered in this session
+    listed = spark.read.format("graph_manifest").load(str(dst))
+    assert sorted(r["rel_path"] for r in listed.collect()) == [
+        ".notes.tmp",
+        "sub1/b.bin",
+        "sub1/sub2/c.txt",
+    ]
+    todo = plan_copy(spark.read.format("graph_manifest").load(str(src)), listed)
+    assert [r["rel_path"] for r in todo.collect()] == ["a.csv"]
 
 
 # --- grant planner (FIXTURES.md B3, NB:110-144) ------------------------------
