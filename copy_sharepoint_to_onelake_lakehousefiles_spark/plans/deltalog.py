@@ -3857,10 +3857,7 @@ def q130_delta_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.delta_stream_source import DeltaCdcDataSource
 
-    try:
-        spark.dataSource.register(DeltaCdcDataSource)
-    except Exception:
-        pass  # already registered this session
+    spark.dataSource.register(DeltaCdcDataSource)
     t = _demo_delta_table(spark, sf_dir)
     base = tempfile.mkdtemp(prefix="deltacdc_q130_")
     stream = (
@@ -3916,12 +3913,9 @@ def q131_delta_sql_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered, mounted as a temp view, and queried with plain spark.sql —
     proving interop reaches the SQL front door, not just a bespoke reader
     API. Oracle = the relational twin of the latest snapshot."""
-    from ..sources.delta_datasource import DeltaLiteDataSource
+    from ..sources.lite_source import DeltaLiteDataSource
 
-    try:
-        spark.dataSource.register(DeltaLiteDataSource)
-    except Exception:
-        pass  # already registered this session
+    spark.dataSource.register(DeltaLiteDataSource)
     t = _demo_delta_table(spark, sf_dir)
     view = f"delta_lite_demo_{uuid.uuid4().hex[:8]}"
     spark.read.format("delta_lite").load(t.root).createOrReplaceTempView(view)

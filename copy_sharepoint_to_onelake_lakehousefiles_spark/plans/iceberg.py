@@ -5991,12 +5991,9 @@ def q138_iceberg_sql_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     executors) mounted as a temp view and queried with plain spark.sql, at
     the APPEND snapshot via chronological time travel. The SQL twin of the
     Delta-side q131 — both formats reach the SQL front door."""
-    from ..sources.iceberg_datasource import IcebergLiteDataSource
+    from ..sources.lite_source import IcebergLiteDataSource
 
-    try:
-        spark.dataSource.register(IcebergLiteDataSource)
-    except Exception:
-        pass  # already registered this session
+    spark.dataSource.register(IcebergLiteDataSource)
     t = _demo_iceberg_table(spark, sf_dir)
     view = f"iceberg_lite_demo_{uuid.uuid4().hex[:8]}"
     (
@@ -6492,10 +6489,7 @@ def q140_iceberg_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.iceberg_stream_source import IcebergCdcDataSource
 
-    try:
-        spark.dataSource.register(IcebergCdcDataSource)
-    except Exception:
-        pass  # already registered this session
+    spark.dataSource.register(IcebergCdcDataSource)
     t = _demo_iceberg_table(spark, sf_dir)
     base = tempfile.mkdtemp(prefix="icecdc_q140_")
     stream = (
@@ -6574,16 +6568,12 @@ def q142_federated_lakehouse_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     format (EUROPE's delta total is 0: the overwrite dropped it). The
     oracle recomputes everything relationally, so any reader divergence
     across the stacks is a wrong answer in one hashed contract."""
-    from ..sources.delta_datasource import DeltaLiteDataSource
-    from ..sources.iceberg_datasource import IcebergLiteDataSource
+    from ..sources.lite_source import DeltaLiteDataSource, IcebergLiteDataSource
     from .deltalog import _demo_delta_table
     from .txtable import _merged_nation_table
 
-    for ds in (DeltaLiteDataSource, IcebergLiteDataSource):
-        try:
-            spark.dataSource.register(ds)
-        except Exception:
-            pass  # already registered this session
+    spark.dataSource.register(DeltaLiteDataSource)
+    spark.dataSource.register(IcebergLiteDataSource)
     sfx = uuid.uuid4().hex[:8]
     tx = _merged_nation_table(spark, sf_dir)
     dl = _demo_delta_table(spark, sf_dir)
@@ -7265,10 +7255,7 @@ def q187_iceberg_lineage_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.iceberg_stream_source import IcebergCdcDataSource
 
-    try:
-        spark.dataSource.register(IcebergCdcDataSource)
-    except Exception:
-        pass  # already registered this session
+    spark.dataSource.register(IcebergCdcDataSource)
     t = _lineage_cdc_demo_table(spark, sf_dir)
     base = tempfile.mkdtemp(prefix="icecdc_q187_")
     stream = (
@@ -7826,8 +7813,7 @@ def q220_variant_lite_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     Iceberg demo (auto-shredded writes + equality delete) and the Delta
     demo (explicit shred_variants layout) — exceptAll in both directions,
     distributed, never a driver diff."""
-    from ..sources.delta_datasource import DeltaLiteDataSource
-    from ..sources.iceberg_datasource import IcebergLiteDataSource
+    from ..sources.lite_source import DeltaLiteDataSource, IcebergLiteDataSource
     from .deltalog import _shredded_variant_demo_table
 
     spark.dataSource.register(IcebergLiteDataSource)
@@ -8090,7 +8076,7 @@ def q203_iceberg_partitions_table(spark: SparkSession, sf_dir: str) -> DataFrame
     ``lite_sql_agrees`` pins the SQL surface: ``iceberg_lite
     option("table","partitions")`` returns the identical rows through the
     executor-side pure-Python row builder."""
-    from ..sources.iceberg_datasource import IcebergLiteDataSource
+    from ..sources.lite_source import IcebergLiteDataSource
 
     t = _partitions_demo_table(spark, sf_dir)
     spark.dataSource.register(IcebergLiteDataSource)

@@ -697,8 +697,8 @@ def register_stats_view(
     CROSS-FORMAT. TxTable is key-clustered, never partitioned — a
     partition_filter on a TxTable side refuses. ``source="native"`` reads through
     ``table.read`` (Spark-native replay scan, applies
-    ``partition_filter``); ``source="lite"`` reads through the matching
-    ``iceberg_lite``/``delta_lite`` DSv2 source (registered on demand),
+    ``partition_filter``); ``source="lite"`` reads through the table's
+    lite DSv2 source (``lite_source_for``, registered on demand),
     with ``partition_filter`` applied as row-level equality predicates —
     the DSv2 pushdown flavor can additionally file-prune them when the
     session enables python filter pushdown. Returns the decision record
@@ -724,21 +724,11 @@ def register_stats_view(
                 " filters row-level)"
             )
     if source == "lite":
-        if _is_txtable(table):
-            from ..sources.txtable_datasource import TxTableLiteDataSource
+        from ..sources.lite_source import lite_source_for
 
-            spark.dataSource.register(TxTableLiteDataSource)
-            df = spark.read.format("txtable_lite").load(table.root)
-        elif _is_delta(table):
-            from ..sources.delta_datasource import DeltaLiteDataSource
-
-            spark.dataSource.register(DeltaLiteDataSource)
-            df = spark.read.format("delta_lite").load(table.root)
-        else:
-            from ..sources.iceberg_datasource import IcebergLiteDataSource
-
-            spark.dataSource.register(IcebergLiteDataSource)
-            df = spark.read.format("iceberg_lite").load(table.root)
+        ds = lite_source_for(table)
+        spark.dataSource.register(ds)
+        df = spark.read.format(ds.name()).load(table.root)
         for col, val in (partition_filter or {}).items():
             df = df.where(F.col(col) == F.lit(val))
     elif source == "native":
@@ -885,7 +875,7 @@ def q218_stats_sql_broadcast_flip(spark: SparkSession, sf_dir: str) -> DataFrame
     (flag 3), and both plans' grouped results equal (flag 4; the oracle
     hash additionally pins the values)."""
     ot, ct = _demo_join_tables(spark, sf_dir)
-    from ..sources.iceberg_datasource import IcebergLiteDataSource
+    from ..sources.lite_source import IcebergLiteDataSource
 
     spark.dataSource.register(IcebergLiteDataSource)
     sql = """
@@ -984,7 +974,7 @@ def q223_txtable_stats_broadcast_flip(
     contract as q218, third table format (Iceberg and Delta sides were
     already covered; TxTable completes the engine's lakehouse trio)."""
     ot, ct = _demo_txtable_join(spark, sf_dir)
-    from ..sources.txtable_datasource import TxTableLiteDataSource
+    from ..sources.lite_source import TxTableLiteDataSource
 
     spark.dataSource.register(TxTableLiteDataSource)
     sql = """

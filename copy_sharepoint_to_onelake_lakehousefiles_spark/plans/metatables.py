@@ -373,7 +373,7 @@ def q169_sql_metadata_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     them (per-commit deltas × live-file totals). The oracle reconstructs
     both surfaces from the same ``_delta_log`` JSON — so the SQL-facing
     metadata path is format-checked end to end, not just the Python API."""
-    from ..sources.delta_datasource import DeltaLiteDataSource
+    from ..sources.lite_source import DeltaLiteDataSource
 
     _build_delta(spark, sf_dir)
     spark.dataSource.register(DeltaLiteDataSource)
@@ -416,7 +416,7 @@ def q170_sql_iceberg_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (iceberg_lite ``option("table", "snapshots")``) queried with
     plain spark.sql; the oracle unnests the same snapshots array out of
     the engine's metadata JSON — the q169 proof for the Iceberg stack."""
-    from ..sources.iceberg_datasource import IcebergLiteDataSource
+    from ..sources.lite_source import IcebergLiteDataSource
 
     _build_iceberg(spark, sf_dir)
     spark.dataSource.register(IcebergLiteDataSource)
@@ -460,7 +460,7 @@ def q171_txtable_sql_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete). The oracle recomputes the expected live content relationally,
     so snapshot resolution + additive-evolution null-fill through the
     source path are hash-checked like q131/q138 are for Delta/Iceberg."""
-    from ..sources.txtable_datasource import TxTableLiteDataSource
+    from ..sources.lite_source import TxTableLiteDataSource
 
     _build_txtable(spark, sf_dir)
     spark.dataSource.register(TxTableLiteDataSource)

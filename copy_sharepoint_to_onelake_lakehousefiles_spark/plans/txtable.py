@@ -1013,10 +1013,7 @@ def q127_txtable_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.txtable_cdc_source import TxTableCdcDataSource
 
-    try:
-        spark.dataSource.register(TxTableCdcDataSource)
-    except Exception:
-        pass  # already registered this session
+    spark.dataSource.register(TxTableCdcDataSource)
     t = _merged_nation_table(spark, sf_dir)
     base = tempfile.mkdtemp(prefix="txcdc_q127_")
     q = (

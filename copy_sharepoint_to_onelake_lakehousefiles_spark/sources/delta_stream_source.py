@@ -32,17 +32,7 @@ import os
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-
-def _cast_partition_value(raw: str | None, type_name: str):
-    if raw is None:
-        return None
-    if type_name in ("byte", "short", "integer", "long"):
-        return int(raw)
-    if type_name in ("float", "double"):
-        return float(raw)
-    if type_name == "boolean":
-        return raw == "true"
-    return raw
+from .lite_source import cast_partition_value
 
 
 class DeltaCdcReader(SimpleDataSourceStreamReader):
@@ -162,7 +152,7 @@ class DeltaCdcReader(SimpleDataSourceStreamReader):
                 # column (drop + re-add must not resurface old data)
                 cols.append([None] * n)
             elif name in part_cols:
-                v = _cast_partition_value(pvals.get(pname), type_name)
+                v = cast_partition_value(pvals.get(pname), type_name)
                 cols.append([v] * n)
             elif pname in names:
                 cols.append(tbl.column(pname).to_pylist())

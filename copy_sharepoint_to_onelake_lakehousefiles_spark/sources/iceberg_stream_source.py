@@ -30,17 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-
-def _cast_pv(raw, type_name: str):
-    if raw is None:
-        return None
-    if type_name in ("int", "long"):
-        return int(raw)
-    if type_name in ("float", "double"):
-        return float(raw)
-    if type_name == "boolean":
-        return raw is True or raw == "true"
-    return raw
+from .lite_source import cast_partition_value
 
 
 class IcebergCdcReader(SimpleDataSourceStreamReader):
@@ -155,7 +145,7 @@ class IcebergCdcReader(SimpleDataSourceStreamReader):
             if name in pvals:
                 # overlay from THIS entry's partition tuple (keyed by the
                 # spec the file was written under — partition evolution)
-                cols.append([_cast_pv(pvals.get(name), type_name)] * n)
+                cols.append([cast_partition_value(pvals.get(name), type_name)] * n)
             elif wname is not None and wname in names:
                 cols.append(tbl.column(wname).to_pylist())
             else:

@@ -118,7 +118,7 @@ def test_merge_delete_and_dvs_compose_with_renames(spark, root):
 
 
 def test_cdc_and_lite_source_resolve_physical_names(spark, root, tmp_path):
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         DeltaLiteDataSource,
     )
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_stream_source import (

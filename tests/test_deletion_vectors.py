@@ -139,7 +139,7 @@ def test_dv_vacuum_liveness(spark, root):
 
 
 def test_dv_delta_lite_source_agrees(spark, root):
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         DeltaLiteDataSource,
     )
 

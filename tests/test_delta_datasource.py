@@ -1,4 +1,4 @@
-"""delta_lite pluggable batch source (sources/delta_datasource.py): read
+"""delta_lite pluggable batch source (sources/lite_source.py): read
 parity with DeltaTable.read, time travel via option, partition/stats
 pruning at planning time, schema-evolution nulls, SQL-front-door usage."""
 
@@ -11,9 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.deltalog import DeltaTable
-from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_datasource import (
+from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
     DeltaLiteDataSource,
-    DeltaLitePushdownReader,
 )
 
 
@@ -55,7 +54,7 @@ def test_partition_filter_prunes_planned_files(spark, root):
     # plan directly through the reader: partition EqualTo accepted → 1 file
     from pyspark.sql.datasource import EqualTo
 
-    r = DeltaLitePushdownReader({"path": root})
+    r = DeltaLiteDataSource({"path": root, "pushdown": "true"}).reader(None)
     residual = list(r.pushFilters([EqualTo(("part",), "p2")]))
     assert residual == []  # exact at file level: fully consumed
     assert len(r.partitions()) == 1
@@ -79,7 +78,7 @@ def test_stats_bounds_prune_but_are_reapplied(spark, root):
     DeltaTable.create(spark, root, df.repartitionByRange(4, "k"))
     from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
 
-    r = DeltaLitePushdownReader({"path": root})
+    r = DeltaLiteDataSource({"path": root, "pushdown": "true"}).reader(None)
     fs = [GreaterThanOrEqual(("k",), 150), LessThanOrEqual(("k",), 160)]
     residual = list(r.pushFilters(fs))
     assert residual == fs  # file-level pruning only: rows re-checked by Spark
@@ -136,7 +135,7 @@ def test_row_group_pruning_and_dv_ordinal_alignment(spark, tmp_path):
         serialize_rba,
         write_dv_file,
     )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         select_row_groups,
     )
 
@@ -214,10 +213,10 @@ def test_lite_sources_handle_empty_snapshots(spark, tmp_path):
         IcebergTable,
     )
     from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.txtable import TxTable
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.txtable_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         TxTableLiteDataSource,
     )
 
@@ -237,3 +236,41 @@ def test_lite_sources_handle_empty_snapshots(spark, tmp_path):
         got = spark.read.format(fmt).load(root)
         assert got.columns == ["k", "v"], fmt
         assert got.count() == 0, fmt
+
+
+@pytest.mark.parametrize(
+    "value_sql",
+    [
+        "DATE'2020-01-02'",
+        "CAST(12.34 AS DECIMAL(10,2))",
+        "TIMESTAMP'2020-01-02 03:04:05.5'",
+    ],
+    ids=["date", "decimal", "timestamp"],
+)
+def test_typed_partition_values_read_natively(spark, root, value_sql):
+    """Delta serializes partition values as strings; delta_lite and
+    delta_cdc parse them back to the column's type (date, decimal and
+    timestamp, not only numbers/booleans) and return the native rows."""
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_stream_source import (
+        DeltaCdcDataSource,
+    )
+
+    df = spark.sql(f"SELECT id AS k, {value_sql} AS d FROM range(3)")
+    t = DeltaTable.create(spark, root, df, partition_by=["d"])
+    native = _rows(t.read().select("k", "d"))
+    _register(spark)
+    assert _rows(spark.read.format("delta_lite").load(root).select("k", "d")) == native
+    spark.dataSource.register(DeltaCdcDataSource)
+    sink = os.path.join(root, "_cdc_sink")
+    q = (
+        spark.readStream.format("delta_cdc")
+        .load(root)
+        .select("k", "d")
+        .writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", os.path.join(root, "_cdc_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert _rows(spark.read.parquet(sink)) == native

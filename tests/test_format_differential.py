@@ -567,7 +567,7 @@ def test_reads_foreign_inline_and_u_deletion_vectors(spark):
         )
         assert got == want
         # the lite SQL source must agree flavor-for-flavor
-        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_datasource import (
+        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
             DeltaLiteDataSource,
         )
 
@@ -742,7 +742,7 @@ def test_iceberg_v3_puffin_deletion_vector_reads(spark):
         assert dv[0]["data_file"]["referenced_data_file"] == victim
         # the pluggable iceberg_lite source decodes the SAME Puffin DV
         # executor-side and agrees with the native reader
-        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
             IcebergLiteDataSource,
         )
 
@@ -852,7 +852,7 @@ def test_iceberg_v3_column_defaults_read_write_and_lite(spark):
         first = sorted(t.snapshots(), key=lambda s: s["sequence-number"])[0]
         assert t.read(snapshot_id=first["snapshot-id"]).columns == ["k", "v"]
         # iceberg_lite agrees (executor-side Arrow default fill)
-        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
             IcebergLiteDataSource,
         )
 

@@ -106,13 +106,13 @@ def test_random_op_sequences_agree_across_formats(spark, init, ops):
         # the PLUGGABLE sources must agree with the native readers on the
         # same final state — MoR deletes (DVs, position/equality files) and
         # checkpoint resolution all flow through the executor-side paths
-        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_datasource import (
+        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
             DeltaLiteDataSource,
         )
-        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
             IcebergLiteDataSource,
         )
-        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.txtable_datasource import (
+        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
             TxTableLiteDataSource,
         )
 
@@ -350,7 +350,7 @@ def test_random_iceberg_default_sequences_agree_with_model(spark, init, ops):
             (tuple(t[c] for c in cols) for t in model),
             key=lambda t: tuple((v is None, v) for v in t),
         )
-        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
             IcebergLiteDataSource,
         )
 

@@ -318,9 +318,8 @@ def test_expire_snapshots_keeps_current_and_reclaims(spark, root):
 
 
 def test_iceberg_lite_datasource(spark, root):
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
-        IcebergLitePushdownReader,
     )
 
     df = spark.createDataFrame([(i, f"p{i % 4}") for i in range(40)], "k long, part string")
@@ -337,7 +336,7 @@ def test_iceberg_lite_datasource(spark, root):
     # planning-level pruning via the reader
     from pyspark.sql.datasource import EqualTo
 
-    r = IcebergLitePushdownReader({"path": root})
+    r = IcebergLiteDataSource({"path": root, "pushdown": "true"}).reader(None)
     residual = list(r.pushFilters([EqualTo(("part",), "p2")]))
     assert residual == []
     assert len(r.partitions()) == 1
@@ -376,7 +375,7 @@ def test_equality_delete_merge_on_read(spark, root):
     assert got3.count() == 7
     assert got3.where(F.col("k").isin(0, 3)).count() == 0
     # the pluggable source applies MoR deletes executor-side and agrees
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
 
@@ -513,7 +512,7 @@ def test_position_delete_partitioned_overlay(spark, root):
 
 
 def test_position_and_equality_deletes_compose_and_lite_source_agrees(spark, root):
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
 
@@ -702,7 +701,7 @@ def test_stream_append_exactly_once(spark, root, tmp_path):
 
 
 def test_lite_source_and_cdc_resolve_renames_by_field_id(spark, root, tmp_path):
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_stream_source import (
@@ -809,7 +808,7 @@ def test_upsert_single_snapshot_merge_on_read(spark, root):
     assert _rows(t.read().where("k = 2").select("v")) == [(2222,)]
     assert t.read(index=0).count() == 6  # time travel unaffected
     # the lite source agrees with the table reader
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
 
@@ -893,9 +892,8 @@ def test_partition_evolution_mixed_specs(spark, root):
 def test_partition_evolution_through_lite_source(spark, root):
     from pyspark.sql.datasource import EqualTo
 
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
-        IcebergLitePushdownReader,
     )
 
     df = spark.createDataFrame(
@@ -912,7 +910,7 @@ def test_partition_evolution_through_lite_source(spark, root):
     assert sorted(tuple(r) for r in via.collect()) == _rows(t.read())
     # pushdown: under MIXED specs the partition EqualTo is handed back for
     # row re-application (old-spec files can't be tuple-pruned)
-    r = IcebergLitePushdownReader({"path": root})
+    r = IcebergLiteDataSource({"path": root, "pushdown": "true"}).reader(None)
     residual = list(r.pushFilters([EqualTo(("part",), "p0")]))
     assert len(residual) == 1
     # ... yet planning still prunes the new-spec side
@@ -1127,7 +1125,7 @@ def test_bucket_table_through_lite_source(spark, root):
     from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.iceberg import (
         bucket_value,
     )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
 
@@ -1363,7 +1361,7 @@ def test_lite_row_group_pruning_with_position_deletes(spark, root):
     pq.write_table(tbl, path, row_group_size=100)
     t.position_delete(F.col("k").between(250, 279))
 
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
 
@@ -1438,7 +1436,7 @@ def test_delete_vectors_v3_writer_semantics(spark, root, tmp_path):
     keep their original sequence numbers; (d) time travel below the DVs
     sees all rows; (e) position_delete refuses on the upgraded table;
     (f) iceberg_lite and the CDC feed agree with the native reader."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_stream_source import (

@@ -122,7 +122,7 @@ def test_refs_metadata_table_and_lite_view(spark, root):
     rows = {r["ref_name"]: r["is_current"] for r in t.refs_df().collect()}
     assert rows == {"audit": 1, "v1": 0}
     # same rows from plain SQL via the lite source's refs view
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
 

@@ -191,7 +191,7 @@ def test_foreign_v2_metadata_with_ns_type_refused(spark, root):
 
 
 def test_lite_source_reads_ns_and_unknown(spark, root):
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
 

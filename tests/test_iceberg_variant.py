@@ -69,7 +69,7 @@ def test_lite_source_reads_variant_files(spark, root):
     pyarrow STILL cannot open these files — pinned in
     tests/test_variant_codec.py — which is exactly why the patch
     exists.)"""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
 

@@ -758,7 +758,7 @@ def test_register_stats_view_flips_smj_to_bhj(spark, sf_dir, root):
         estimate_table_size,
         stats_sql,
     )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
 
@@ -1022,7 +1022,7 @@ def test_register_stats_view_flips_smj_to_bhj_txtable(spark, sf_dir, root):
     from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.txtable import (
         TxTable,
     )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.txtable_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         TxTableLiteDataSource,
     )
 

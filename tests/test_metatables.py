@@ -209,7 +209,7 @@ def test_iceberg_history_df_rollback_divergence(spark, root):
 def test_iceberg_lite_files_metadata_view(spark, root):
     """iceberg_lite option(table, files): the files metadata table through
     spark.sql, agreeing with the Python API row for row."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
 

@@ -199,7 +199,7 @@ def test_row_group_bloom_selection_and_lite_read(spark, tmp_path):
     from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.deltalog import (
         DeltaTable,
     )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         select_row_groups_bloom,
     )
 
@@ -236,7 +236,7 @@ def test_row_group_bloom_selection_and_lite_read(spark, tmp_path):
     # end-to-end through the lite source: equality pushdown stays correct
     spark.dataSource.register(
         __import__(
-            "copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_datasource",
+            "copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source",
             fromlist=["DeltaLiteDataSource"],
         ).DeltaLiteDataSource
     )
@@ -276,7 +276,7 @@ def test_float_double_columns_give_no_bloom_verdict(spark, tmp_path):
     """ADVICE r9: IEEE signed zero (+0.0 vs -0.0) hashes differently under
     plain bit-encoding, so FLOAT/DOUBLE eq probes are unsound — both the
     file tier and the row-group tier must return 'maybe present' always."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         select_row_groups_bloom,
     )
 

@@ -631,7 +631,7 @@ def test_txtable_lite_source_data_metadata_and_pruning(spark, tmp_path):
     reader (incl. additive evolution null-fill and time travel), pushdown
     prunes files via manifest key bounds, and option(table, history|files)
     exposes the metadata tables to plain spark.sql."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.txtable_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         TxTableLiteDataSource,
     )
 

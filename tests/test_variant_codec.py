@@ -194,10 +194,10 @@ def test_lite_reads_match_native_for_both_formats(spark, sf_dir):
     from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.iceberg import (
         _iceberg_variant_demo,
     )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         DeltaLiteDataSource,
     )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_datasource import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
 
