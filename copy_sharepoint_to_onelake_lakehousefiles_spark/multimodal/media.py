@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import hashlib
 import io
+import os
 import struct
 import zlib
 from collections.abc import Iterator
@@ -1657,7 +1658,12 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(run, schema)
 
 
-_MEDIA_ORACLE_DIR = "/root/repo/tests/fixtures"
+# the checkout's tests/fixtures, beside the package directory
+_MEDIA_ORACLE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "tests",
+    "fixtures",
+)
 
 _Q60_ORACLE = f"""
 SELECT mime, CAST(n_media AS BIGINT) AS n_media,

@@ -3182,23 +3182,8 @@ class DeltaTable:
         phys = self._phys_map(meta)
         rt = self._rt_cols(meta)
         parts: list[DataFrame] = []
-        for v in range(v_from + 1, v_to + 1):
-            if v not in self.versions():
-                continue  # expired below a checkpoint: no replayable delta
-            adds: list[dict] = []
-            removes: list[dict] = []
-            cdcs: list[dict] = []
-            for action in self._commit_actions(v):
-                if "cdc" in action:
-                    cdcs.append(action["cdc"])
-                elif "add" in action and action["add"].get("dataChange", True):
-                    adds.append(action["add"])
-                elif "remove" in action and action["remove"].get("dataChange", True):
-                    removes.append(action["remove"])
+        for v, _eff, cdcs, adds, removes in self.change_commits(v_from, v_to):
             if cdcs:
-                # spec: when a commit carries cdc actions, CDF readers use
-                # them EXCLUSIVELY — the add/remove pairs of the same
-                # commit describe file churn, not row-level changes
                 cdc_schema = T.StructType(
                     [
                         T.StructField(phys.get(f.name, f.name), f.dataType, True)
@@ -3269,6 +3254,43 @@ class DeltaTable:
                 "_commit_timestamp", F.timestamp_millis(F.col("_commit_timestamp"))
             )
         return out
+
+    def change_commits(self, v_from: int, v_to: int):
+        """The change feed's commits in (v_from, v_to] as ``(version,
+        (version of the metaData in effect, that metaData), cdcs, adds,
+        removes)`` — the rules batch ``table_changes`` and the
+        ``delta_cdc`` stream share, over ONE listing of the log:
+
+        - a version expired below a checkpoint has no replayable delta
+          and is skipped;
+        - a commit carrying ``cdc`` actions (a CDF-enabled MERGE) is read
+          from them EXCLUSIVELY: its add/remove pairs describe file churn,
+          not row-level changes (the spec's CDF rule);
+        - ``dataChange=false`` adds/removes (OPTIMIZE, compaction) change
+          no row and are skipped.
+
+        Tracking the metaData in effect reads every commit at or below
+        ``v_to`` once."""
+        vs = [v for v in self.versions() if v <= v_to]
+        effective = None
+        for v in vs:
+            actions = self._commit_actions(v)
+            meta = next(
+                (a["metaData"] for a in actions if "metaData" in a and a["metaData"].get("id")),
+                None,
+            )
+            if meta is not None:
+                effective = (v, meta)
+            elif effective is None:  # first listed version has no metaData
+                effective = (v, self.snapshot(v)[1])
+            if v <= v_from:
+                continue
+            cdcs = [a["cdc"] for a in actions if "cdc" in a]
+            adds, removes = (
+                [a[k] for a in actions if not cdcs and k in a and a[k].get("dataChange", True)]
+                for k in ("add", "remove")
+            )
+            yield v, effective, cdcs, adds, removes
 
     def compact(self, target_files: int = 1, zorder_by: list[str] | None = None) -> dict:
         """OPTIMIZE: small-file compaction, optionally with ZORDER BY.
@@ -3852,34 +3874,17 @@ def q130_delta_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Partition columns are reconstructed from the log's partitionValues inside
     the STREAM (files don't store them), so the feed is usable downstream
     without consulting the log again."""
-    import shutil
-    import tempfile
+    from ..sources.change_feed import DeltaCdcDataSource, drain_feed
 
-    from ..sources.delta_stream_source import DeltaCdcDataSource
-
-    spark.dataSource.register(DeltaCdcDataSource)
-    t = _demo_delta_table(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="deltacdc_q130_")
-    stream = (
-        spark.readStream.format("delta_cdc")
-        .load(t.root)
-        .writeStream.format("parquet")
-        .option("path", os.path.join(base, "sink"))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    stream.awaitTermination()
-    feed = spark.read.parquet(os.path.join(base, "sink"))
-    out = materialize(
-        feed.groupBy("commit_version", "change_type").agg(
+    return drain_feed(
+        spark,
+        DeltaCdcDataSource,
+        _demo_delta_table(spark, sf_dir).root,
+        lambda feed: feed.groupBy("commit_version", "change_type").agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("metric_value").cast("bigint").alias("total"),
-        )
+        ),
     )
-    shutil.rmtree(base, ignore_errors=True)
-    return out
 
 
 _Q131_ORACLE = """

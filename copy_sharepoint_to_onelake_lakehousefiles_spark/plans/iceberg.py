@@ -56,6 +56,7 @@ support time travel by snapshot id or chronological index.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import re
@@ -70,6 +71,7 @@ from pyspark.sql import types as T
 
 from ..registry import materialize, query, session_memo
 from ..sources.avro_ocf import read_ocf, write_ocf
+from ..sources.lite_source import cast_partition_value
 from ..tables import load
 from .deltalog import _decoded_file_path
 
@@ -343,21 +345,46 @@ def _parse_partition_term(term: str) -> tuple[str, int | None, str]:
 
 
 def _typed_partition_values(pvals: dict, part_fields: list[dict]) -> dict:
-    """Hive-dir partition strings → typed Iceberg partition tuple values."""
-    partition = {}
-    for pf2 in part_fields:
-        raw = pvals.get(pf2["name"])
-        if raw is None:
-            partition[pf2["name"]] = None
-        elif pf2["ice_type"] in ("long", "int"):
-            partition[pf2["name"]] = int(raw)
-        elif pf2["ice_type"] in ("double", "float"):
-            partition[pf2["name"]] = float(raw)
-        elif pf2["ice_type"] == "boolean":
-            partition[pf2["name"]] = raw == "true"
-        else:
-            partition[pf2["name"]] = raw
-    return partition
+    """Hive-dir / Delta-log partition strings → the Iceberg partition
+    tuple: each parsed as its type by ``cast_partition_value``, then stored
+    as its Appendix-A physical value."""
+    out = {}
+    for pf in part_fields:
+        st = _ICE_TO_SPARK.get(pf["ice_type"])
+        typed = cast_partition_value(
+            pvals.get(pf["name"]), st.simpleString() if st else pf["ice_type"]
+        )
+        out[pf["name"]] = partition_physical_value(typed)
+    return out
+
+
+_EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+# partition-tuple value types whose physical form differs (Appendix A)
+_PARTITION_PHYSICAL = {"date": "int", "timestamp": "long", "timestamptz": "long"}
+
+
+def partition_physical_value(v):
+    """A partition value as the manifest stores it (spec Appendix A): a
+    date as days and a timestamp as microseconds from the epoch (a
+    zone-less one read as UTC); any other value unchanged."""
+    if isinstance(v, datetime.datetime):
+        if v.tzinfo is None:
+            v = v.replace(tzinfo=datetime.timezone.utc)
+        return (v - _EPOCH) // datetime.timedelta(microseconds=1)
+    if isinstance(v, datetime.date):
+        return (v - _EPOCH.date()).days
+    return v
+
+
+def partition_python_value(ice_type: str, v):
+    """The Python value of a manifest partition-tuple value of Iceberg type
+    ``ice_type``: the inverse of ``partition_physical_value``."""
+    if v is None or ice_type not in _PARTITION_PHYSICAL:
+        return v
+    if ice_type == "date":
+        return _EPOCH.date() + datetime.timedelta(days=v)
+    ts = _EPOCH + datetime.timedelta(microseconds=v)
+    return ts if ice_type == "timestamptz" else ts.replace(tzinfo=None)
 
 
 def _file_entry(
@@ -1165,7 +1192,7 @@ class IcebergTable:
             "files_total": 0,
             "files_kept": 0,
         }
-        want = dict(partition_filter or {})
+        want = {k: partition_physical_value(v) for k, v in (partition_filter or {}).items()}
 
         def _trunc(v, pf):
             """Apply a truncate[W] transform to a filter endpoint: the
@@ -1215,8 +1242,9 @@ class IcebergTable:
                     if pf["name"] not in want:
                         continue
                     v = want[pf["name"]]
-                    lo = _single_value_parse(pf["ice_type"], summ.get("lower_bound"))
-                    hi = _single_value_parse(pf["ice_type"], summ.get("upper_bound"))
+                    pt = _PARTITION_PHYSICAL.get(pf["ice_type"], pf["ice_type"])
+                    lo = _single_value_parse(pt, summ.get("lower_bound"))
+                    hi = _single_value_parse(pt, summ.get("upper_bound"))
                     if lo is not None and hi is not None and not (lo <= v <= hi):
                         skip = True
                         break
@@ -1639,11 +1667,13 @@ class IcebergTable:
         groups: dict[tuple, list[str]] = {}
         for e in entries:
             spec_id = e.get("__spec", 0)
-            part_names = [pf["name"] for pf in _ident(spec_id)]
             key = (
                 effective_sid(e),
                 spec_id,
-                tuple(e["partition"].get(n) for n in part_names),
+                tuple(
+                    partition_python_value(pf["ice_type"], e["partition"].get(pf["name"]))
+                    for pf in _ident(spec_id)
+                ),
             )
             groups.setdefault(key, []).append(e["file_path"].replace("file:", ""))
         out_cols = list(schema.fieldNames())
@@ -1878,16 +1908,13 @@ class IcebergTable:
         for pf in part_fields:
             vals = [d["partition"].get(pf["name"]) for d in data_files]
             non_null = [v for v in vals if v is not None]
+            pt = _PARTITION_PHYSICAL.get(pf["ice_type"], pf["ice_type"])
             summaries.append(
                 {
                     "contains_null": any(v is None for v in vals),
                     "contains_nan": None,
-                    "lower_bound": _single_value_bytes(pf["ice_type"], min(non_null))
-                    if non_null
-                    else None,
-                    "upper_bound": _single_value_bytes(pf["ice_type"], max(non_null))
-                    if non_null
-                    else None,
+                    "lower_bound": _single_value_bytes(pt, min(non_null)) if non_null else None,
+                    "upper_bound": _single_value_bytes(pt, max(non_null)) if non_null else None,
                 }
             )
         n_rows = sum(d["record_count"] for d in data_files)
@@ -5663,19 +5690,10 @@ def delta_to_iceberg_uniform(delta, ice_root: str | None = None) -> IcebergTable
             if c in ice_types:
                 ubs[str(name_to_id[c])] = _single_value_bytes(ice_types[c], v)
         pv = a.get("partitionValues") or {}
-        partition = {}
-        for pf in part_fields:
-            rawv = pv.get(phys.get(pf["name"], pf["name"]))
-            if rawv is None:
-                partition[pf["name"]] = None
-            elif pf["ice_type"] in ("long", "int"):
-                partition[pf["name"]] = int(rawv)
-            elif pf["ice_type"] in ("double", "float"):
-                partition[pf["name"]] = float(rawv)
-            elif pf["ice_type"] == "boolean":
-                partition[pf["name"]] = rawv == "true"
-            else:
-                partition[pf["name"]] = rawv
+        partition = _typed_partition_values(
+            {pf["name"]: pv.get(phys.get(pf["name"], pf["name"])) for pf in part_fields},
+            part_fields,
+        )
         return {
             "content": 0,
             "file_path": path,
@@ -6484,34 +6502,17 @@ def q140_iceberg_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx-1 batch ships ONLY the customers manifest's files — the incremental
     read is O(changed files) because prior manifests are reused, which the
     hashed counts verify."""
-    import shutil
-    import tempfile
+    from ..sources.change_feed import IcebergCdcDataSource, drain_feed
 
-    from ..sources.iceberg_stream_source import IcebergCdcDataSource
-
-    spark.dataSource.register(IcebergCdcDataSource)
-    t = _demo_iceberg_table(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="icecdc_q140_")
-    stream = (
-        spark.readStream.format("iceberg_cdc")
-        .load(t.root)
-        .writeStream.format("parquet")
-        .option("path", os.path.join(base, "sink"))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    stream.awaitTermination()
-    feed = spark.read.parquet(os.path.join(base, "sink"))
-    out = materialize(
-        feed.groupBy("snapshot_idx", "change_type").agg(
+    return drain_feed(
+        spark,
+        IcebergCdcDataSource,
+        _demo_iceberg_table(spark, sf_dir).root,
+        lambda feed: feed.groupBy("snapshot_idx", "change_type").agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("metric_value").cast("bigint").alias("total"),
-        )
+        ),
     )
-    shutil.rmtree(base, ignore_errors=True)
-    return out
 
 
 _Q142_ORACLE = """
@@ -7250,37 +7251,20 @@ def q187_iceberg_lineage_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same O(changed files) snapshot-diff planning as q140; the id
     resolution adds one first_row_id lookup per emitted file — metadata
     already in hand."""
-    import shutil
-    import tempfile
+    from ..sources.change_feed import IcebergCdcDataSource, drain_feed
 
-    from ..sources.iceberg_stream_source import IcebergCdcDataSource
-
-    spark.dataSource.register(IcebergCdcDataSource)
-    t = _lineage_cdc_demo_table(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="icecdc_q187_")
-    stream = (
-        spark.readStream.format("iceberg_cdc")
-        .load(t.root)
-        .writeStream.format("parquet")
-        .option("path", os.path.join(base, "sink"))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    stream.awaitTermination()
-    feed = spark.read.parquet(os.path.join(base, "sink"))
-    out = materialize(
-        feed.select(
+    return drain_feed(
+        spark,
+        IcebergCdcDataSource,
+        _lineage_cdc_demo_table(spark, sf_dir).root,
+        lambda feed: feed.select(
             F.col("n_nationkey").cast("long"),
             "n_name",
             F.col("snapshot_idx").cast("long"),
             "change_type",
             F.col("_row_id").cast("long").alias("row_id"),
-        )
+        ),
     )
-    shutil.rmtree(base, ignore_errors=True)
-    return out
 
 
 @session_memo

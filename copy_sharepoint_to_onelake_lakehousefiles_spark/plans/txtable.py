@@ -1006,44 +1006,27 @@ def q127_txtable_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the source ships file-diff batches per commit (O(changed files));
     reconciliation is one window + one aggregate keyed by the table key —
     the standard CDF-consumer shape."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window as W
 
-    from ..sources.txtable_cdc_source import TxTableCdcDataSource
+    from ..sources.change_feed import TxTableCdcDataSource, drain_feed
 
-    spark.dataSource.register(TxTableCdcDataSource)
+    def reconcile(feed: DataFrame) -> DataFrame:
+        adds = feed.where(F.col("cdc_type") == "add")
+        w = W.partitionBy("n_nationkey").orderBy(F.col("cdc_version").desc())
+        last_add = adds.withColumn("__rk", F.row_number().over(w)).where(F.col("__rk") == 1)
+        last_rm = (
+            feed.where(F.col("cdc_type") == "remove")
+            .groupBy("n_nationkey")
+            .agg(F.max("cdc_version").alias("__rm_v"))
+        )
+        return (
+            last_add.join(F.broadcast(last_rm), "n_nationkey", "left")
+            .where(F.col("__rm_v").isNull() | (F.col("cdc_version") >= F.col("__rm_v")))
+            .select("n_nationkey", "n_name", "n_regionkey")
+        )
+
     t = _merged_nation_table(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="txcdc_q127_")
-    q = (
-        spark.readStream.format("txtable_cdc")
-        .load(t.root)
-        .writeStream.format("parquet")
-        .option("path", os.path.join(base, "sink"))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    feed = spark.read.parquet(os.path.join(base, "sink"))
-    adds = feed.where(F.col("cdc_type") == "add")
-    w = W.partitionBy("n_nationkey").orderBy(F.col("cdc_version").desc())
-    last_add = adds.withColumn("__rk", F.row_number().over(w)).where(F.col("__rk") == 1)
-    last_rm = (
-        feed.where(F.col("cdc_type") == "remove")
-        .groupBy("n_nationkey")
-        .agg(F.max("cdc_version").alias("__rm_v"))
-    )
-    final = (
-        last_add.join(F.broadcast(last_rm), "n_nationkey", "left")
-        .where(F.col("__rm_v").isNull() | (F.col("cdc_version") >= F.col("__rm_v")))
-        .select("n_nationkey", "n_name", "n_regionkey")
-    )
-    out = materialize(final)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+    return drain_feed(spark, TxTableCdcDataSource, t.root, reconcile)
 
 
 @query(

@@ -81,6 +81,11 @@ def cast_partition_value(raw: Any, type_name: str) -> Any:
     return raw
 
 
+def schema_ddl(st) -> str:
+    """A StructType as the DDL string a DataSource ``schema`` returns."""
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in st.fields)
+
+
 @dataclass
 class ScanTask(InputPartition):
     """One data file's read, planned on the driver. Every field but
@@ -105,6 +110,11 @@ class ScanTask(InputPartition):
     pos_deletes: list | None = None
     # equality-delete files [(path, [key column, ...])]
     eq_deletes: list | None = None
+    # ordinals of the ORIGINAL file to emit (a change feed's delete_row)
+    keep: list | None = None
+    # (materialized row-id column, base row id): appends a trailing
+    # ``_row_id``, the materialized value else base + original ordinal
+    row_id: tuple | None = None
 
 
 @dataclass
@@ -221,6 +231,103 @@ def _deleted_ordinals(path: str, specs: list) -> set:
     return dead
 
 
+def read_task(task: ScanTask):
+    """The executor pipeline of one ``ScanTask`` as a pyarrow Table in the
+    task's schema (plus a trailing ``_row_id`` when ``row_id`` is set), or
+    None when there is nothing to read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructType
+
+    # compat open: VARIANT-bearing files carry a logical type this
+    # container's pyarrow cannot parse (plans/variant.py)
+    from ..plans.variant import open_parquet_compat, variant_to_arrow
+
+    if task.path is None:  # empty-snapshot sentinel
+        return None
+    pf = open_parquet_compat(task.path)
+    meta = pf.metadata
+    groups = list(range(meta.num_row_groups))
+    if task.bounds:
+        groups = select_row_groups(meta, task.bounds)
+    if task.equalities and groups:
+        groups = select_row_groups_bloom(task.path, meta.num_row_groups, groups, task.equalities)
+    if not groups:
+        return None
+    tbl = pf.read_row_groups(groups)
+    rids = None
+
+    def apply(mask: list) -> None:
+        nonlocal tbl, rids
+        tbl = tbl.filter(pa.array(mask))
+        if rids is not None:
+            rids = [r for r, k in zip(rids, mask) if k]
+
+    # merge-on-read step 1: the ordinals of the ORIGINAL file — with row
+    # groups skipped each kept group's rows re-base by its start offset.
+    # Row ids resolve on them before any row is masked away.
+    if task.pos_deletes or task.keep is not None or task.row_id:
+        sizes = [meta.row_group(g).num_rows for g in range(meta.num_row_groups)]
+        starts = [0, *accumulate(sizes)]
+        ords = [starts[g] + i for g in groups for i in range(sizes[g])]
+        if task.row_id:
+            col, base = task.row_id
+            mat = tbl.column(col).to_pylist() if col in tbl.column_names else [None] * len(ords)
+            rids = [
+                m if m is not None else (None if base is None else base + o)
+                for m, o in zip(mat, ords)
+            ]
+        dead = _deleted_ordinals(task.path, task.pos_deletes) if task.pos_deletes else set()
+        keep = None if task.keep is None else set(task.keep)
+        if dead or keep is not None:
+            apply([o not in dead and (keep is None or o in keep) for o in ords])
+    # merge-on-read step 2: equality deletes as a local anti-join per
+    # delete key-set (delete files are metadata-sized next to data)
+    for dpath, keys in task.eq_deletes or ():
+        if tbl.num_rows == 0:
+            break
+        if not all(c in tbl.column_names for c in keys):
+            continue  # key column absent: equality can never match
+        dt = pq.read_table(dpath, columns=keys)
+        dead_keys = set(zip(*[dt.column(c).to_pylist() for c in keys]))
+        if dead_keys:
+            rows = zip(*[tbl.column(c).to_pylist() for c in keys])
+            apply([r not in dead_keys for r in rows])
+    n = tbl.num_rows
+    have = set(tbl.column_names)
+    pvals = task.partition_values or {}
+    names = task.names or {}
+    defaults = task.defaults or {}
+    st = StructType.fromJson(json.loads(task.schema_json))
+    arrays = []
+    for f in st.fields:
+        at = to_arrow_type(f.dataType)
+        w = names.get(f.name, f.name)
+        if f.name in pvals:
+            # constant per file by definition: overlay from the log
+            arrays.append(pa.array([pvals[f.name]] * n, type=at))
+        elif w is not None and w in have:
+            col = tbl.column(w).combine_chunks()
+            if type(f.dataType).__name__ == "VariantType":
+                # shredded/unshredded variant → Spark's (value,
+                # metadata) binaries, reconstructed per spec
+                arrays.append(variant_to_arrow(col, at))
+            else:
+                arrays.append(col if col.type == at else col.cast(at))
+        elif w is None and f.name in defaults:
+            # absent from this file's write schema → the v3
+            # initial-default, not null (Iceberg spec §Default values)
+            arrays.append(pa.array([defaults[f.name]] * n, type=at))
+        else:  # the file predates the column: all-null
+            arrays.append(pa.nulls(n, type=at))
+    out_names = st.fieldNames()
+    if rids is not None:
+        arrays.append(pa.array(rids, type=pa.int64()))
+        out_names.append("_row_id")
+    return pa.Table.from_arrays(arrays, names=out_names)
+
+
 class LiteReader(DataSourceReader):
     """Plans through the format's ``plan`` and reads every ``ScanTask``
     with the one executor pipeline below."""
@@ -239,79 +346,9 @@ class LiteReader(DataSourceReader):
         return self.fmt.plan(self) or [ScanTask()]
 
     def read(self, task: ScanTask):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_type
-        from pyspark.sql.types import StructType
-
-        # compat open: VARIANT-bearing files carry a logical type this
-        # container's pyarrow cannot parse (plans/variant.py)
-        from ..plans.variant import open_parquet_compat, variant_to_arrow
-
-        if task.path is None:  # empty-snapshot sentinel
-            return
-        pf = open_parquet_compat(task.path)
-        meta = pf.metadata
-        groups = list(range(meta.num_row_groups))
-        if task.bounds:
-            groups = select_row_groups(meta, task.bounds)
-        if task.equalities and groups:
-            groups = select_row_groups_bloom(
-                task.path, meta.num_row_groups, groups, task.equalities
-            )
-        if not groups:
-            return
-        tbl = pf.read_row_groups(groups)
-        # merge-on-read step 1: deleted ordinals FIRST — they number the
-        # rows of the ORIGINAL file, so with row groups skipped each kept
-        # group's rows re-base by its cumulative start offset
-        if task.pos_deletes and tbl.num_rows:
-            dead = _deleted_ordinals(task.path, task.pos_deletes)
-            if dead:
-                sizes = [meta.row_group(g).num_rows for g in range(meta.num_row_groups)]
-                starts = [0, *accumulate(sizes)]
-                keep = [starts[g] + i not in dead for g in groups for i in range(sizes[g])]
-                tbl = tbl.filter(pa.array(keep))
-        # merge-on-read step 2: equality deletes as a local anti-join per
-        # delete key-set (delete files are metadata-sized next to data)
-        for dpath, keys in task.eq_deletes or ():
-            if tbl.num_rows == 0:
-                break
-            if not all(c in tbl.column_names for c in keys):
-                continue  # key column absent: equality can never match
-            dt = pq.read_table(dpath, columns=keys)
-            dead_keys = set(zip(*[dt.column(c).to_pylist() for c in keys]))
-            if dead_keys:
-                rows = zip(*[tbl.column(c).to_pylist() for c in keys])
-                tbl = tbl.filter(pa.array([r not in dead_keys for r in rows]))
-        n = tbl.num_rows
-        have = set(tbl.column_names)
-        pvals = task.partition_values or {}
-        names = task.names or {}
-        defaults = task.defaults or {}
-        st = StructType.fromJson(json.loads(task.schema_json))
-        arrays = []
-        for f in st.fields:
-            at = to_arrow_type(f.dataType)
-            w = names.get(f.name, f.name)
-            if f.name in pvals:
-                # constant per file by definition: overlay from the log
-                arrays.append(pa.array([pvals[f.name]] * n, type=at))
-            elif w is not None and w in have:
-                col = tbl.column(w).combine_chunks()
-                if type(f.dataType).__name__ == "VariantType":
-                    # shredded/unshredded variant → Spark's (value,
-                    # metadata) binaries, reconstructed per spec
-                    arrays.append(variant_to_arrow(col, at))
-                else:
-                    arrays.append(col if col.type == at else col.cast(at))
-            elif w is None and f.name in defaults:
-                # absent from this file's write schema → the v3
-                # initial-default, not null (Iceberg spec §Default values)
-                arrays.append(pa.array([defaults[f.name]] * n, type=at))
-            else:  # the file predates the column: all-null
-                arrays.append(pa.nulls(n, type=at))
-        yield from pa.Table.from_arrays(arrays, names=st.fieldNames()).to_batches()
+        tbl = read_task(task)
+        if tbl is not None:
+            yield from tbl.to_batches()
 
 
 _CMP = (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual)
@@ -400,8 +437,7 @@ class LiteDataSource(DataSource):
             if meta_table not in self.META:
                 raise ValueError(f"unknown metadata table {meta_table!r}")
             return getattr(t, self.META[meta_table][0])
-        st = self.schema_of(t, self.version())
-        return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in st.fields)
+        return schema_ddl(self.schema_of(t, self.version()))
 
     def reader(self, schema) -> DataSourceReader:
         if self.options.get("table") is not None:
@@ -441,11 +477,8 @@ class DeltaLiteDataSource(LiteDataSource):
 
     @staticmethod
     def plan(r) -> list[ScanTask]:
-        from pyspark.sql.types import StructType
-
         t = r.table
         adds, meta = t.snapshot(r.version)
-        schema_json = meta["schemaString"]
         part = set(meta.get("partitionColumns") or [])
         phys = t._phys_map(meta)
         if r.partition_filter:
@@ -462,29 +495,42 @@ class DeltaLiteDataSource(LiteDataSource):
         # constant per file and not stored in it
         rg_bounds = {phys.get(c, c): b for c, b in r.bounds.items() if c not in part}
         rg_eq = [(phys.get(c, c), v) for c, v in r.equalities if c not in part]
-        pfields = [f for f in StructType.fromJson(json.loads(schema_json)).fields if f.name in part]
-        names = {c: p for c, p in phys.items() if c != p} or None
-        tasks = []
-        for a in adds:
-            pv = a.get("partitionValues") or {}
-            dv = a.get("deletionVector")
-            tasks.append(
-                ScanTask(
-                    t._abs_path(a["path"]),
-                    schema_json,
-                    partition_values={
-                        f.name: cast_partition_value(
-                            pv.get(phys.get(f.name, f.name)), f.dataType.simpleString()
-                        )
-                        for f in pfields
-                    },
-                    names=names,
-                    bounds=rg_bounds or None,
-                    equalities=rg_eq or None,
-                    pos_deletes=[("dv", dv, t.root)] if dv else None,
-                )
-            )
-        return tasks
+        task = delta_task_factory(t, meta)
+        return [task(a, bounds=rg_bounds or None, equalities=rg_eq or None) for a in adds]
+
+
+def delta_task_factory(t, meta: dict):
+    """``task(action, **fields)``: the ScanTask reading the data or
+    ``_change_data`` file of a Delta add/remove/cdc action under ``meta``'s
+    schema — physical names, its partition values cast from the log's
+    strings, and its deletion vector."""
+    from pyspark.sql.types import StructType
+
+    schema_json = meta["schemaString"]
+    part = set(meta.get("partitionColumns") or [])
+    phys = t._phys_map(meta)
+    pfields = [
+        (f.name, phys.get(f.name, f.name), f.dataType.simpleString())
+        for f in StructType.fromJson(json.loads(schema_json)).fields
+        if f.name in part
+    ]
+    names = {c: p for c, p in phys.items() if c != p} or None
+
+    def task(a: dict, **fields) -> ScanTask:
+        pv = a.get("partitionValues") or {}
+        dv = a.get("deletionVector")
+        return ScanTask(
+            t._abs_path(a["path"]),
+            schema_json,
+            # a key absent from partitionValues leaves the column to the
+            # file (a _change_data file stores every column)
+            partition_values={c: cast_partition_value(pv[p], ty) for c, p, ty in pfields if p in pv},
+            names=names,
+            pos_deletes=[("dv", dv, t.root)] if dv else None,
+            **fields,
+        )
+
+    return task
 
 
 def _add_ranges(a: dict) -> dict:
@@ -530,44 +576,11 @@ class IcebergLiteDataSource(LiteDataSource):
 
     @staticmethod
     def plan(r) -> list[ScanTask]:
-        from ..plans.iceberg import default_python_value
-
         t, index = r.table, r.version
         entries, _audit = t.files(
             index=index, partition_filter=r.partition_filter or None, bounds=r.bounds or None
         )
-        schema_json = t.schema(index=index).json()
         md = t.metadata()
-        # identity fields only: bucket/truncate tuple values are derived,
-        # never overlaid — the source columns are in the file
-        identity = {
-            sp["spec-id"]: [
-                pf["name"] for pf in t.partition_fields(sp["spec-id"])
-                if pf["transform"] == "identity"
-            ]
-            for sp in md["partition-specs"]
-        }
-        # id-based evolution: recover each file's write-time schema from its
-        # sequence number and map target → write-time names when they
-        # diverge (rename/drop) — mirrors IcebergTable._read_data_entries
-        tgt_sid = t._schema_id_for(index=index)
-        schemas = {s["schema-id"]: s for s in md["schemas"]}
-        tgt_fields = schemas[tgt_sid]["fields"]
-        seq_to_sid = {s["sequence-number"]: s.get("schema-id", tgt_sid) for s in md["snapshots"]}
-
-        def names_for(e: dict) -> dict | None:
-            wsid = seq_to_sid.get(e.get("__seq"), tgt_sid)
-            if wsid == tgt_sid or wsid not in schemas:
-                return None
-            w_by_id = {f["id"]: f["name"] for f in schemas[wsid]["fields"]}
-            m = {f["name"]: w_by_id.get(f["id"]) for f in tgt_fields}
-            return None if all(k == v for k, v in m.items()) else m
-
-        defaults = {
-            f["name"]: default_python_value(f["type"], f["initial-default"])
-            for f in tgt_fields
-            if f.get("initial-default") is not None
-        } or None
         # merge-on-read: ship each data file's APPLICABLE delete files so
         # the executor applies them locally — equality deletes with a
         # strictly newer sequence number, position deletes with >=
@@ -579,45 +592,94 @@ class IcebergLiteDataSource(LiteDataSource):
             for d in dels
             if d.get("content") == 2
         ]
-        pos_dels = []
-        for d in dels:
-            if d.get("content") != 1:
-                continue
-            dfm = d["data_file"]
-            if (dfm.get("file_format") or "").upper() == "PUFFIN":
-                # v3 deletion vector: the executor decodes the Roaring
-                # bitmap (plans/puffin.py) iff it references THIS file
-                spec = ("puffin", _strip_file_scheme(dfm["file_path"]),
-                        int(dfm["content_offset"]), int(dfm["content_size_in_bytes"]),
-                        _strip_file_scheme(dfm["referenced_data_file"]))
-            else:
-                spec = ("parquet", _strip_file_scheme(dfm["file_path"]))
-            pos_dels.append((d["seq"], spec))
+        pos_dels = [(d["seq"], _position_delete_spec(d)) for d in dels if d.get("content") == 1]
+        task_for = iceberg_task_factory(t, index)
         tasks = []
         for e in entries:
-            # the file's OWN spec's partition columns: under partition
-            # evolution, columns outside it come straight from the file
-            cols = identity.get(e.get("__spec", 0), [])
-            pv = dict(e["partition"])
-            names = names_for(e)
+            task = task_for(
+                e,
+                pos_deletes=[s for seq, s in pos_dels if seq >= e["__seq"]],
+                eq_deletes=[(p, k) for seq, p, k in eq_dels if seq > e["__seq"]],
+            )
             # bounds are keyed by TARGET names; row-group stats carry the
             # file's write-time names. Identity-partition columns are
             # constant per file and renamed-away fields have no stats.
-            wnames = {c: (names or {}).get(c, c) for c in r.bounds if c not in cols}
-            wb = {w: r.bounds[c] for c, w in wnames.items() if w is not None}
-            tasks.append(
-                ScanTask(
-                    _strip_file_scheme(e["file_path"]),
-                    schema_json,
-                    partition_values={c: pv.get(c) for c in cols},
-                    names=names,
-                    defaults=defaults,
-                    bounds=wb or None,
-                    pos_deletes=[s for seq, s in pos_dels if seq >= e["__seq"]],
-                    eq_deletes=[(p, k) for seq, p, k in eq_dels if seq > e["__seq"]],
-                )
-            )
+            wnames = {
+                c: (task.names or {}).get(c, c) for c in r.bounds if c not in task.partition_values
+            }
+            task.bounds = {w: r.bounds[c] for c, w in wnames.items() if w is not None} or None
+            tasks.append(task)
         return tasks
+
+
+def _position_delete_spec(d: dict) -> tuple:
+    """The ``pos_deletes`` spec of an Iceberg position-delete entry."""
+    dfm = d["data_file"]
+    if (dfm.get("file_format") or "").upper() == "PUFFIN":
+        # v3 deletion vector: the executor decodes the Roaring bitmap
+        # (plans/puffin.py) iff it references THIS file
+        return ("puffin", _strip_file_scheme(dfm["file_path"]),
+                int(dfm["content_offset"]), int(dfm["content_size_in_bytes"]),
+                _strip_file_scheme(dfm["referenced_data_file"]))
+    return ("parquet", _strip_file_scheme(dfm["file_path"]))
+
+
+def iceberg_task_factory(t, index: int | None = None):
+    """``task(entry, **fields)``: the ScanTask reading an Iceberg data-file
+    entry under the schema of snapshot ``index`` (default current) — its
+    identity-partition values decoded from the manifest tuple, its
+    write-time column names, and the v3 initial-defaults."""
+    from ..plans.iceberg import default_python_value, partition_python_value
+
+    md = t.metadata()
+    schema_json = t.schema(index=index).json()
+    # identity fields only: bucket/truncate tuple values are derived,
+    # never overlaid — the source columns are in the file
+    identity = {
+        sp["spec-id"]: [
+            (pf["name"], pf["ice_type"]) for pf in t.partition_fields(sp["spec-id"])
+            if pf["transform"] == "identity"
+        ]
+        for sp in md["partition-specs"]
+    }
+    # id-based evolution: recover each file's write-time schema from its
+    # sequence number and map target → write-time names when they
+    # diverge (rename/drop) — mirrors IcebergTable._read_data_entries
+    tgt_sid = t._schema_id_for(index=index)
+    schemas = {s["schema-id"]: s for s in md["schemas"]}
+    tgt_fields = schemas[tgt_sid]["fields"]
+    seq_to_sid = {s["sequence-number"]: s.get("schema-id", tgt_sid) for s in md["snapshots"]}
+
+    def names_for(e: dict) -> dict | None:
+        wsid = seq_to_sid.get(e.get("__seq"), tgt_sid)
+        if wsid == tgt_sid or wsid not in schemas:
+            return None
+        w_by_id = {f["id"]: f["name"] for f in schemas[wsid]["fields"]}
+        m = {f["name"]: w_by_id.get(f["id"]) for f in tgt_fields}
+        return None if all(k == v for k, v in m.items()) else m
+
+    defaults = {
+        f["name"]: default_python_value(f["type"], f["initial-default"])
+        for f in tgt_fields
+        if f.get("initial-default") is not None
+    } or None
+
+    def task(e: dict, **fields) -> ScanTask:
+        # the file's OWN spec's partition columns: under partition
+        # evolution, columns outside it come straight from the file
+        pv = e["partition"]
+        return ScanTask(
+            _strip_file_scheme(e["file_path"]),
+            schema_json,
+            partition_values={
+                c: partition_python_value(ty, pv.get(c)) for c, ty in identity.get(e.get("__spec", 0), [])
+            },
+            names=names_for(e),
+            defaults=defaults,
+            **fields,
+        )
+
+    return task
 
 
 class TxTableLiteDataSource(LiteDataSource):

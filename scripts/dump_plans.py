@@ -15,7 +15,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # Plan-pin artifacts must be host-independent (ADVICE r12 #3):
 # spark.sql.shuffle.partitions derives from SPARK_GRAFT_CPUS, so a dump on a
@@ -51,7 +52,7 @@ def main() -> None:
         )
         out.append(f"\n## {name}\n\n```\n{plan}\n```\n")
         print(name, flush=True)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("".join(out))
     print(f"wrote PLANS.md ({len(qs)} plans)")
 

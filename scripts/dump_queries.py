@@ -4,9 +4,11 @@ tier, and the first line of its docstring. Auto-generated; regenerate with
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -28,7 +30,7 @@ def main() -> None:
         first = doc[0].strip() if doc else ""
         tier = "oracle" if name in oracles else "rows-only"
         lines.append(f"| {name} | {tier} | {first} |")
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote QUERIES.md ({len(qs)} queries)")
 

@@ -3,7 +3,8 @@ from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -43,6 +44,7 @@ SLOW_FILES = {
     "test_asof_property.py",       # hypothesis as-of properties
     "test_rangejoin_property.py",  # hypothesis range-join properties
     "test_format_differential.py", # three-format upsert/restore agreement
+    "test_change_feed.py",         # drained feeds vs snapshot reads
 }
 
 # (file, test function) pairs measured >= 3 s (call+setup+teardown) in the

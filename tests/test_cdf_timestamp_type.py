@@ -69,7 +69,7 @@ def test_delta_cdc_stream_timestamp_type(spark, root):
     """The delta_cdc STREAM source mirrors the batch option:
     option("timestampType", "true") renders _commit_timestamp as a
     TimestampType carrying the same instants as the bigint default."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         DeltaCdcDataSource,
     )
 

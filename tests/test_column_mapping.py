@@ -121,7 +121,7 @@ def test_cdc_and_lite_source_resolve_physical_names(spark, root, tmp_path):
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         DeltaLiteDataSource,
     )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         DeltaCdcDataSource,
     )
 
@@ -213,7 +213,7 @@ def test_cdc_emits_per_version_schema(spark, root, tmp_path):
     that did not exist at that version — replaying from version 0 no longer
     presents old rows under the new schema silently. Sequence = q145's
     (rename + drop + evolving append)."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         DeltaCdcDataSource,
     )
 

@@ -155,7 +155,7 @@ def test_dv_delta_lite_source_agrees(spark, root):
 
 
 def test_dv_cdc_nets_to_deleted_rows(spark, root, tmp_path):
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         DeltaCdcDataSource,
     )
 

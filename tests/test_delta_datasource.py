@@ -251,7 +251,7 @@ def test_typed_partition_values_read_natively(spark, root, value_sql):
     """Delta serializes partition values as strings; delta_lite and
     delta_cdc parse them back to the column's type (date, decimal and
     timestamp, not only numbers/booleans) and return the native rows."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         DeltaCdcDataSource,
     )
 

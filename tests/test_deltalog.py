@@ -273,7 +273,7 @@ def test_vacuum_guards_and_reclaim(spark, root):
 
 
 def test_delta_cdc_stream_source(spark, root):
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         DeltaCdcDataSource,
     )
 
@@ -323,7 +323,7 @@ def test_row_tracking_cdf_composition(spark, root):
     DELETE's 'delete' rows carry the dead rows' ids (remove actions carry
     baseRowId per spec); cdc 'insert' rows ride null (id assigned by the
     add action)."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         DeltaCdcDataSource,
     )
 
@@ -478,7 +478,7 @@ def test_cdf_carries_commit_timestamp(spark, root):
     ``_commit_timestamp`` (epoch millis) — the commitInfo's authoritative
     inCommitTimestamp when ICT is on (strictly monotonic across commits),
     else the commit file's mtime per the read rule."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         DeltaCdcDataSource,
     )
 
@@ -632,7 +632,7 @@ def test_delete_rewrites_only_matching_files(spark, root):
 
 
 def test_compact_datachange_false_and_cdc_skips_it(spark, root, tmp_path):
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.delta_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         DeltaCdcDataSource,
     )
 

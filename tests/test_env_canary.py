@@ -80,3 +80,17 @@ def test_stream_loader_matches_batch_exactly(spark, sf_dir):
     want = summarize(load(spark, sf_dir, "events")).first()
     assert (got["n"], got["lo"], got["hi"]) == (want["n"], want["lo"], want["hi"])
     assert got["lo"][:4] not in ("1970", "1969"), "stream loader unit-scaling bug"
+
+
+def test_package_imports_from_this_checkout():
+    """conftest puts its own checkout first on sys.path, so the suite (and
+    the media oracles' fixture dir) resolve inside that checkout, never in
+    another copy of the repository."""
+    from pathlib import Path
+
+    import copy_sharepoint_to_onelake_lakehousefiles_spark as pkg
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.multimodal import media
+
+    root = Path(__file__).resolve().parent.parent
+    assert Path(pkg.__file__).resolve().is_relative_to(root)
+    assert Path(media._MEDIA_ORACLE_DIR).resolve() == root / "tests" / "fixtures"

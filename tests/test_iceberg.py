@@ -390,7 +390,7 @@ def test_equality_delete_merge_on_read(spark, root):
 
 
 def test_iceberg_cdc_stream_with_delete_keys(spark, root, tmp_path):
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         IcebergCdcDataSource,
     )
 
@@ -545,7 +545,7 @@ def test_position_and_equality_deletes_compose_and_lite_source_agrees(spark, roo
 
 
 def test_iceberg_cdc_position_delete_emits_full_rows(spark, root, tmp_path):
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         IcebergCdcDataSource,
     )
 
@@ -704,7 +704,7 @@ def test_lite_source_and_cdc_resolve_renames_by_field_id(spark, root, tmp_path):
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         IcebergCdcDataSource,
     )
 
@@ -919,7 +919,7 @@ def test_partition_evolution_through_lite_source(spark, root):
 
 
 def test_partition_evolution_with_deletes_and_cdc(spark, root, tmp_path):
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         IcebergCdcDataSource,
     )
 
@@ -1387,7 +1387,7 @@ def test_iceberg_cdc_emits_per_snapshot_schema(spark, root, tmp_path):
     schema-id, and current columns whose FIELD ID is absent from that
     snapshot's schema arrive null — a replay never backfills a
     later-evolved column into an old snapshot's batch."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         IcebergCdcDataSource,
     )
 
@@ -1439,7 +1439,7 @@ def test_delete_vectors_v3_writer_semantics(spark, root, tmp_path):
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         IcebergCdcDataSource,
     )
 
@@ -1637,7 +1637,7 @@ def test_iceberg_cdc_row_lineage(spark, root, tmp_path):
     delete_row rows carry the dead rows' ids, equality delete_key rows
     ride null (the spec: lineage cannot be carried through an equality
     delete), and pre-enable snapshots honestly ride null."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.iceberg_stream_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         IcebergCdcDataSource,
     )
 

@@ -251,7 +251,7 @@ def test_concurrent_gate_runs_do_not_race_on_scratch_root():
     env = dict(os.environ, VANILLA="1", SPARK_GRAFT_CPUS="4")
     procs = [
         subprocess.Popen(
-            cmd, cwd="/root/repo", env=env,
+            cmd, cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))), env=env,
             stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
         )
         for _ in range(2)

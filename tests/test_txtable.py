@@ -561,7 +561,7 @@ def test_cdc_stream_feed_and_exactly_once_restart(spark, sf_dir, tmp_path):
     added/removed rows tagged with its version; a restart from the same
     checkpoint emits nothing until a NEW commit lands (version offsets =
     exactly-once)."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.txtable_cdc_source import (
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         TxTableCdcDataSource,
     )
 
