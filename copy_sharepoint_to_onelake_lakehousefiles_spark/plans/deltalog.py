@@ -88,6 +88,13 @@ def _fmt_commit(v: int) -> str:
     return f"{v:020d}.json"
 
 
+def _commit_meta(actions: list[dict]) -> dict | None:
+    """The metaData action of one commit's actions, if it carries one."""
+    return next(
+        (a["metaData"] for a in actions if "metaData" in a and a["metaData"].get("id")), None
+    )
+
+
 def _fmt_checkpoint(v: int) -> str:
     return f"{v:020d}.checkpoint.parquet"
 
@@ -3182,7 +3189,7 @@ class DeltaTable:
         phys = self._phys_map(meta)
         rt = self._rt_cols(meta)
         parts: list[DataFrame] = []
-        for v, _eff, cdcs, adds, removes in self.change_commits(v_from, v_to):
+        for v, _meta, cdcs, adds, removes in self.change_commits(v_from, v_to):
             if cdcs:
                 cdc_schema = T.StructType(
                     [
@@ -3256,10 +3263,10 @@ class DeltaTable:
         return out
 
     def change_commits(self, v_from: int, v_to: int):
-        """The change feed's commits in (v_from, v_to] as ``(version,
-        (version of the metaData in effect, that metaData), cdcs, adds,
-        removes)`` — the rules batch ``table_changes`` and the
-        ``delta_cdc`` stream share, over ONE listing of the log:
+        """The change feed's commits in (v_from, v_to] as ``(version, the
+        commit's own metaData or None, cdcs, adds, removes)`` — the rules
+        batch ``table_changes`` and the ``delta_cdc`` stream share, over
+        ONE listing of the log, reading only the commits in the range:
 
         - a version expired below a checkpoint has no replayable delta
           and is skipped;
@@ -3267,30 +3274,31 @@ class DeltaTable:
           from them EXCLUSIVELY: its add/remove pairs describe file churn,
           not row-level changes (the spec's CDF rule);
         - ``dataChange=false`` adds/removes (OPTIMIZE, compaction) change
-          no row and are skipped.
-
-        Tracking the metaData in effect reads every commit at or below
-        ``v_to`` once."""
-        vs = [v for v in self.versions() if v <= v_to]
-        effective = None
-        for v in vs:
-            actions = self._commit_actions(v)
-            meta = next(
-                (a["metaData"] for a in actions if "metaData" in a and a["metaData"].get("id")),
-                None,
-            )
-            if meta is not None:
-                effective = (v, meta)
-            elif effective is None:  # first listed version has no metaData
-                effective = (v, self.snapshot(v)[1])
-            if v <= v_from:
+          no row and are skipped."""
+        for v in self.versions():
+            if not v_from < v <= v_to:
                 continue
+            actions = self._commit_actions(v)
             cdcs = [a["cdc"] for a in actions if "cdc" in a]
             adds, removes = (
                 [a[k] for a in actions if not cdcs and k in a and a[k].get("dataChange", True)]
                 for k in ("add", "remove")
             )
-            yield v, effective, cdcs, adds, removes
+            yield v, _commit_meta(actions), cdcs, adds, removes
+
+    def meta_in_effect(self, version: int) -> tuple[int, dict]:
+        """(version, metaData) in effect at ``version``: the last listed
+        commit at or below it that carries a metaData action, else the
+        first listed commit with the metaData of its snapshot (replayed
+        from a checkpoint when older commits are expired). Reads commits
+        backwards from ``version`` only until one carries metaData."""
+        vs = self.versions()
+        for u in reversed(vs[1:]):
+            if u <= version:
+                meta = _commit_meta(self._commit_actions(u))
+                if meta is not None:
+                    return u, meta
+        return vs[0], self.snapshot(vs[0])[1]
 
     def compact(self, target_files: int = 1, zorder_by: list[str] | None = None) -> dict:
         """OPTIMIZE: small-file compaction, optionally with ZORDER BY.

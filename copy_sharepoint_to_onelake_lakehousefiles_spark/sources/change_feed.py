@@ -39,7 +39,9 @@ and planning logic carry over to a partition-planned reader unchanged.
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
+import itertools
 import json
 import os
 import shutil
@@ -56,6 +58,7 @@ from .lite_source import (
     _strip_file_scheme,
     delta_task_factory,
     iceberg_task_factory,
+    position_deletes,
     read_task,
     schema_ddl,
 )
@@ -80,6 +83,7 @@ class ChangeFeedReader(SimpleDataSourceStreamReader):
         self.table = source.open()
         self.key = self.fmt.OFFSET_KEY
         self.row_ids = self.fmt.row_ids(self.table)
+        self.state: dict = {}  # the planner's memo across micro-batches
 
     def initialOffset(self) -> dict:
         return {self.key: -1}  # before the first commit: it is included
@@ -106,12 +110,17 @@ class ChangeFeedReader(SimpleDataSourceStreamReader):
                 tbl = read_task(task)
                 if tbl is None:
                     continue
-                n = tbl.num_columns - (task.row_id is not None)
+                cols = [c.to_pylist() for c in tbl.columns]
+                n = len(cols) - (task.row_id is not None)
+                types = itertools.repeat(change_type)
+                if change_type is None:  # per row: the task's last column
+                    n -= 1
+                    types = cols.pop(n)
                 # a task without row ids still fills the column on a table
                 # that has them (an equality delete's rows are never read)
                 fill = (None,) if self.row_ids and task.row_id is None else ()
-                for row in zip(*(c.to_pylist() for c in tbl.columns)):
-                    out.append((*row[:n], version, change_type, *tags, *row[n:], *fill))
+                for row, ct in zip(zip(*cols), types):
+                    out.append((*row[:n], version, ct, *tags, *row[n:], *fill))
         return out
 
 
@@ -120,7 +129,8 @@ class ChangeFeedSource(DataSource):
     its table format, its offset key and its tag columns, and supplies
     ``latest`` and ``changes``; ``changes(reader, lo, hi)`` yields
     ``(version, tags after change_type, live columns or None, [(ScanTask,
-    change_type)])`` per version in (lo, hi]."""
+    change_type)])`` per version in (lo, hi]. A None change_type takes
+    each row's type from the task's last column."""
 
     FORMAT = ""
     LITE: type  # the *_lite source of the same table format
@@ -158,16 +168,6 @@ def _as_timestamp(options) -> bool:
     return str(options.get("timestampType", "")).lower() == "true"
 
 
-def _change_types(path: str) -> list[tuple[str, list[int]]]:
-    """(change type, row ordinals) of a ``_change_data`` file, per type."""
-    import pyarrow.parquet as pq
-
-    by_type: dict[str, list[int]] = {}
-    for i, ct in enumerate(pq.read_table(path, columns=["_change_type"]).column(0).to_pylist()):
-        by_type.setdefault(ct, []).append(i)
-    return list(by_type.items())
-
-
 class DeltaCdcDataSource(ChangeFeedSource):
     """Tags: commit_version, change_type, schema_version (the commit whose
     metaData governs the row) and ``_commit_timestamp`` (the commit's
@@ -197,56 +197,57 @@ class DeltaCdcDataSource(ChangeFeedSource):
     @staticmethod
     def changes(r, lo: int, hi: int):
         t = r.table
-        meta = t.snapshot()[1]
-        # files and partitionValues are keyed by physical names, stable
-        # across renames, so the current map covers every replayed version
-        phys = t._phys_map(meta)
-        rt = t._rt_cols(meta)
-        task_for = delta_task_factory(t, meta)
+        if "plan" not in r.state:  # the stream's schema: the current one
+            meta = t.snapshot()[1]
+            # a _change_data file also stores each row's _change_type
+            cdc = json.loads(meta["schemaString"])
+            cdc["fields"].append(
+                {"name": "_change_type", "type": "string", "nullable": True, "metadata": {}}
+            )
+            # files and partitionValues are keyed by physical names, stable
+            # across renames, so the current map covers every replayed version
+            r.state["plan"] = (
+                t._phys_map(meta), t._rt_cols(meta), delta_task_factory(t, meta), json.dumps(cdc)
+            )
+        phys, rt, task_for, cdc_json = r.state["plan"]
 
-        def task(a: dict, **fields) -> ScanTask:
-            return task_for(a, row_id=(rt[0], a.get("baseRowId")) if rt else None, **fields)
+        def task(a: dict) -> ScanTask:
+            return task_for(a, row_id=(rt[0], a.get("baseRowId")) if rt else None)
 
-        for v, (eff_v, eff_meta), cdcs, adds, removes in t.change_commits(lo, hi):
-            live_phys = set(t._phys_map(eff_meta).values())
+        # the metaData in effect: carried over from the previous batch
+        at, eff = r.state.get("meta", (None, None))
+        if at != lo:
+            eff = t.meta_in_effect(lo) if lo >= 0 else None
+        for v, meta, cdcs, adds, removes in t.change_commits(lo, hi):
+            eff = (v, meta) if meta is not None else eff or t.meta_in_effect(v)
+            live_phys = set(t._phys_map(eff[1]).values())
             ts = t._commit_timestamp(v)
             if _as_timestamp(r.options) and ts is not None:
                 ts = datetime.datetime.fromtimestamp(ts / 1000.0, tz=datetime.timezone.utc)
             pairs = [
-                (task(c, keep=ords), ct)
+                (dataclasses.replace(task(c), schema_json=cdc_json), None)
                 for c in sorted(cdcs, key=lambda x: x["path"])
-                for ct, ords in _change_types(t._abs_path(c["path"]))
             ]
             for acts, ct in ((adds, "add"), (removes, "remove")):
                 pairs += [(task(a), ct) for a in sorted(acts, key=lambda x: x["path"])]
-            yield v, (eff_v, ts), {c for c, p in phys.items() if p in live_phys}, pairs
+            live = {c for c, p in phys.items() if p in live_phys} | {"_change_type"}
+            yield v, (eff[0], ts), live, pairs
+        r.state["meta"] = (hi, eff)
 
 
 def _snapshot_files(t, idx: int) -> tuple[dict, dict]:
-    """({data file: entry}, {delete file: entry}) live in snapshot ``idx``."""
+    """({data file: entry}, {(delete file, blob offset): entry}) live in
+    snapshot ``idx``: one Puffin file may hold several DV blobs, each its
+    own entry."""
     if idx < 0:
         return {}, {}
     return (
         {_strip_file_scheme(e["file_path"]): e for e in t.files(index=idx)[0]},
-        {_strip_file_scheme(d["data_file"]["file_path"]): d for d in t.delete_entries(index=idx)},
+        {
+            (_strip_file_scheme(d["data_file"]["file_path"]), d["data_file"].get("content_offset")):
+            d for d in t.delete_entries(index=idx)
+        },
     )
-
-
-def _deleted_positions(d: dict) -> dict[str, list[int]]:
-    """{data file: deleted ordinals} of an Iceberg position-delete entry."""
-    spec = _position_delete_spec(d)
-    if spec[0] == "puffin":
-        from ..plans.puffin import read_dv_positions
-
-        _kind, path, offset, size, ref = spec
-        return {ref: list(read_dv_positions(path, offset, size))}
-    import pyarrow.parquet as pq
-
-    dt = pq.read_table(spec[1], columns=["file_path", "pos"])
-    out: dict[str, list[int]] = {}
-    for fp, p in zip(dt.column("file_path").to_pylist(), dt.column("pos").to_pylist()):
-        out.setdefault(_strip_file_scheme(fp), []).append(p)
-    return out
 
 
 class IcebergCdcDataSource(ChangeFeedSource):
@@ -297,15 +298,16 @@ class IcebergCdcDataSource(ChangeFeedSource):
             # a superseding DV holds the union of the old and new dead rows
             old_dv: dict[str, set] = {}
             for d in prev_dels.values():
-                if _position_delete_spec(d)[0] == "puffin":
-                    for fp, ords in _deleted_positions(d).items():
+                spec = _position_delete_spec(d)
+                if spec[0] == "puffin":
+                    for fp, ords in position_deletes(spec).items():
                         old_dv.setdefault(fp, set()).update(ords)
-            for path in sorted(dels.keys() - prev_dels.keys()):
-                d = dels[path]
+            for key in sorted(dels.keys() - prev_dels.keys()):
+                d = dels[key]
                 if d.get("content") != 1:
-                    pairs.append((ScanTask(path, schema_json), "delete_key"))
+                    pairs.append((ScanTask(key[0], schema_json), "delete_key"))
                     continue
-                for fp, ords in sorted(_deleted_positions(d).items()):
+                for fp, ords in sorted(position_deletes(_position_delete_spec(d)).items()):
                     if fp in cur:  # else the file left in the same commit
                         keep = [o for o in ords if o not in old_dv.get(fp, ())]
                         pairs.append((task(cur[fp], keep=keep), "delete_row"))

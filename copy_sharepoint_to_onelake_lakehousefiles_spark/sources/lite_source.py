@@ -204,30 +204,36 @@ def _strip_file_scheme(p: str) -> str:
     return p
 
 
-def _deleted_ordinals(path: str, specs: list) -> set:
-    """Row ordinals of the ORIGINAL file at ``path`` that ``specs`` delete."""
+def position_deletes(spec: tuple) -> dict[str, list[int]]:
+    """{data file: deleted ordinals} of one Iceberg position-delete spec
+    (``("parquet", path)`` or ``("puffin", path, offset, size, referenced
+    file)``, as ``ScanTask.pos_deletes`` holds them)."""
+    kind, path, *blob = spec
+    if kind == "puffin":
+        from ..plans.puffin import read_dv_positions
+
+        offset, size, ref = blob
+        return {ref: list(read_dv_positions(path, offset, size))}
     import pyarrow.parquet as pq
 
+    dt = pq.read_table(path, columns=["file_path", "pos"])
+    out: dict[str, list[int]] = {}
+    for fp, p in zip(dt.column("file_path").to_pylist(), dt.column("pos").to_pylist()):
+        out.setdefault(_strip_file_scheme(fp), []).append(p)
+    return out
+
+
+def _deleted_ordinals(path: str, specs: list) -> set:
+    """Row ordinals of the ORIGINAL file at ``path`` that ``specs`` delete."""
     me = _strip_file_scheme(path)
     dead: set = set()
-    for kind, *spec in specs:
-        if kind == "dv":
+    for spec in specs:
+        if spec[0] == "dv":
             from ..plans.roaring import deserialize_rba, read_dv_descriptor
 
-            dead.update(deserialize_rba(read_dv_descriptor(*spec)))
-        elif kind == "puffin":
-            dpath, off, size, ref = spec
-            if _strip_file_scheme(ref) == me:
-                from ..plans.puffin import read_dv_positions
-
-                dead.update(read_dv_positions(dpath, off, size))
-        else:
-            dt = pq.read_table(spec[0], columns=["file_path", "pos"])
-            dead.update(
-                p
-                for fp, p in zip(dt.column("file_path").to_pylist(), dt.column("pos").to_pylist())
-                if _strip_file_scheme(fp) == me
-            )
+            dead.update(deserialize_rba(read_dv_descriptor(*spec[1:])))
+        elif spec[0] != "puffin" or spec[-1] == me:  # a DV names its one file
+            dead.update(position_deletes(spec).get(me, ()))
     return dead
 
 

@@ -181,6 +181,44 @@ def test_reads_foreign_written_log(spark, root):
     assert _rows(t.read()) == [(1, "x"), (2, "y")]
 
 
+def test_change_commits_read_only_their_range(root, monkeypatch):
+    """``change_commits`` reads only the commits in (v_from, v_to]; the
+    metaData in effect is found by reading backwards from the version to
+    the last commit that carries one."""
+    os.makedirs(os.path.join(root, "_delta_log"))
+
+    def meta(i):
+        cols = [{"name": "k", "type": "long", "nullable": True, "metadata": {}}]
+        return {"metaData": {"id": "t", "format": {"provider": "parquet", "options": {}},
+                             "schemaString": json.dumps({"type": "struct", "fields": cols}),
+                             "partitionColumns": [], "configuration": {"n": str(i)}}}
+
+    for v in range(40):
+        acts = [{"commitInfo": {"operation": "WRITE"}}]
+        if v == 0:
+            acts += [{"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}, meta(0)]
+        if v == 25:
+            acts.append(meta(25))
+        acts.append({"add": {"path": f"f{v}.parquet", "partitionValues": {}, "size": 1,
+                             "modificationTime": 0, "dataChange": v != 30}})
+        with open(os.path.join(root, "_delta_log", _fmt_commit(v)), "w") as f:
+            f.write("".join(json.dumps(a) + "\n" for a in acts))
+    t = DeltaTable(None, root)
+    read = []
+    orig = DeltaTable._commit_actions
+    monkeypatch.setattr(
+        DeltaTable, "_commit_actions", lambda self, v: read.append(v) or orig(self, v)
+    )
+    got = [(v, m is not None, len(a)) for v, m, _c, a, _r in t.change_commits(24, 30)]
+    assert got == [(25, True, 1), (26, False, 1), (27, False, 1), (28, False, 1),
+                   (29, False, 1), (30, False, 0)]
+    assert read == [25, 26, 27, 28, 29, 30]
+    read.clear()
+    v, m = t.meta_in_effect(39)
+    assert (v, m["configuration"]) == (25, {"n": "25"}) and read == list(range(39, 24, -1))
+    assert t.meta_in_effect(24)[0] == 0
+
+
 def test_commit_conflict_raises(spark, root):
     t = DeltaTable.create(spark, root, spark.range(3).select(F.col("id").alias("k")))
     with pytest.raises(FileExistsError):
