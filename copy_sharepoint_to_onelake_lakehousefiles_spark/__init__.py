@@ -48,7 +48,6 @@ def _load_all_operator_modules() -> None:
         iceberg,
         joinplan,
         metatables,
-        txtable,
     )
     from .sources import formats  # noqa: F401
     from .streaming import tws, windows  # noqa: F401

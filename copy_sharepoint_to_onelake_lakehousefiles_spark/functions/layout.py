@@ -13,9 +13,9 @@ Scale: the clustering write is one range shuffle (sampled range
 boundaries); reads then skip via footer stats with no index structure to
 maintain.
 
-See also plans/txtable.TxTable.cluster_by — the table-format flavor of the
-same primitive (n numeric columns, equi-depth quantile bucketing, skipping
-via commit-log manifest stats instead of parquet footers).
+See also ``DeltaTable.compact(zorder_by=...)`` — the table-format flavor of
+the same primitive (2-4 columns, skipping via the log's per-file stats
+instead of parquet footers).
 """
 
 from __future__ import annotations
@@ -181,28 +181,34 @@ def _minmax_scaled(
     df: DataFrame, cols: tuple[str, ...], bits: int
 ) -> tuple[DataFrame, list[str], list[str]]:
     """Broadcast-join the columns' global min/max and add ``__s{i}``
-    columns scaled to [0, 2^bits) by exact integer arithmetic. Returns
-    (df, scaled column names, helper columns to drop)."""
+    columns scaled to [0, 2^bits) — by exact integer arithmetic for
+    integral columns, floored double arithmetic for fractional ones.
+    Returns (df, scaled column names, helper columns to drop)."""
     top = (1 << bits) - 1
+    fractional = {
+        c for c, t in df.dtypes if t in ("float", "double") or t.startswith("decimal")
+    }
     mm = df.agg(
         *[
             a
             for i, c in enumerate(cols)
             for a in (
-                F.min(c).cast("bigint").alias(f"__mn{i}"),
-                F.max(c).cast("bigint").alias(f"__mx{i}"),
+                F.min(c).cast("double" if c in fractional else "bigint").alias(f"__mn{i}"),
+                F.max(c).cast("double" if c in fractional else "bigint").alias(f"__mx{i}"),
             )
         ]
     )
     out = df.crossJoin(F.broadcast(mm))
     scaled = []
     for i, c in enumerate(cols):
-        out = out.withColumn(
-            f"__s{i}",
-            F.expr(
-                f"(({c} - __mn{i}) * {top}) div greatest(__mx{i} - __mn{i}, 1)"
-            ),
+        mn, mx = f"__mn{i}", f"__mx{i}"
+        expr = (
+            f"CAST(CASE WHEN {mx} > {mn} THEN floor(({c} - {mn}) * {top} / ({mx} - {mn}))"
+            " ELSE 0 END AS BIGINT)"
+            if c in fractional
+            else f"(({c} - {mn}) * {top}) div greatest({mx} - {mn}, 1)"
         )
+        out = out.withColumn(f"__s{i}", F.expr(expr))
         scaled.append(f"__s{i}")
     drop = (
         [f"__mn{i}" for i in range(len(cols))]

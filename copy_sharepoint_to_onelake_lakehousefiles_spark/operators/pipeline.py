@@ -778,9 +778,7 @@ def q124_equidepth_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the global rank is the two-pass partition-offset ranking
     (operators/ranking.py — no single-partition sort); n is a 1-row
-    broadcast. This is the exact counterpart to the sketch-based bucketing
-    used by TxTable.cluster_by — exact when bins feed a model contract,
-    sketched when they only guide layout."""
+    broadcast."""
     from .ranking import global_row_number
 
     o = load(spark, sf_dir, "orders").select("o_totalprice", "o_orderkey")

@@ -1628,7 +1628,7 @@ def q90_scd2_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (high-balance customers move to PREMIUM) by closing the old version
     (is_current=0) and appending version 2 — the union-based SCD2 pattern
     that a MERGE with WHEN MATCHED/NOT MATCHED executes on a real lakehouse
-    table (plans/merge.py holds the write-path twin)."""
+    table (``DeltaTable.merge`` is the atomic write-path twin)."""
     c = load(spark, sf_dir, "customer")
     updates = c.where(F.col("c_acctbal") > 9000).select(
         "c_custkey", F.lit("PREMIUM").alias("new_segment")

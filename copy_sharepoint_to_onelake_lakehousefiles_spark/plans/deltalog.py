@@ -1,9 +1,8 @@
 """Delta Lake transaction-log interop: read and write real ``_delta_log``
 tables with zero extra libraries.
 
-``plans/txtable.py`` gives the engine lakehouse semantics with a private log
-format; a real user's first interop ask (VERDICT r3, missing #3) is "can it
-read the Delta table my other jobs write, and can they read mine?". The Delta
+A real user's first lakehouse ask (VERDICT r3, missing #3) is "can it read
+the Delta table my other jobs write, and can they read mine?". The Delta
 transaction log is an open, published protocol (delta.io PROTOCOL.md): data
 files are plain parquet, commits are newline-delimited JSON action files named
 ``_delta_log/%020d.json``, and checkpoints are parquet — every piece readable
@@ -32,9 +31,6 @@ Implemented surface
   concurrency, same rule Delta requires of its LogStore), classic
   parquet checkpoints every ``CHECKPOINT_INTERVAL`` commits plus
   ``_last_checkpoint``, and ``txn`` actions for idempotent writers.
-- **Export**: ``txtable_to_delta`` replays a TxTable's commit history into a
-  Delta log version-for-version (hardlinking the immutable data files), so
-  time travel survives the format hop.
 
 Scale posture (100 TB): snapshot resolution reads one checkpoint plus at most
 ``CHECKPOINT_INTERVAL`` JSON deltas (O(changed files), not O(history));
@@ -371,14 +367,17 @@ class DeltaTable:
     def snapshot(self, version: int | None = None) -> tuple[list[dict], dict]:
         """Resolve (live add-actions, metaData) at ``version`` (default
         latest). Reads one checkpoint + at most the JSON deltas after it."""
-        v = self.latest_version() if version is None else version
-        if version is not None and version not in self.versions():
-            known = self.versions()
-            ck = self._checkpoint_version_at_or_before(version)
+        listed = self.versions()  # the one log listing of this call
+        if version is None and not listed:
+            raise FileNotFoundError(f"no Delta log at {self.log_dir}")
+        v = listed[-1] if version is None else version
+        known = set(listed)
+        if v not in known:
+            ck = self._checkpoint_version_at_or_before(v)
             # commits may have been expired below a checkpoint; only fail
             # when neither a commit nor covering checkpoint chain exists
-            if ck is None or any(u not in known for u in range(ck + 1, version + 1)):
-                raise ValueError(f"version {version} not in Delta log (have {known})")
+            if ck is None or any(u not in known for u in range(ck + 1, v + 1)):
+                raise ValueError(f"version {v} not in Delta log (have {listed})")
         adds: dict[str, dict] = {}
         meta: dict | None = None
         ck = self._checkpoint_version_at_or_before(v)
@@ -387,7 +386,7 @@ class DeltaTable:
             adds, meta = self._read_checkpoint(ck)
             start = ck + 1
         for u in range(start, v + 1):
-            if u not in self.versions():
+            if u not in known:
                 continue
             for action in self._commit_actions(u):
                 if "add" in action:
@@ -1517,8 +1516,9 @@ class DeltaTable:
                     if p and p.get("minReaderVersion") is not None:
                         proto = {k: v2 for k, v2 in p.items() if v2 is not None}
             start = ck + 1
+        known = set(self.versions())
         for u in range(start, v + 1):
-            if u not in self.versions():
+            if u not in known:
                 continue
             for action in self._commit_actions(u):
                 if "protocol" in action:
@@ -1608,8 +1608,9 @@ class DeltaTable:
                 for r in pq.read_table(path, columns=["domainMetadata"]).to_pylist():
                     absorb(r.get("domainMetadata"))
             start = ck + 1
+        known = set(self.versions())
         for u in range(start, v + 1):
-            if u not in self.versions():
+            if u not in known:
                 continue
             for action in self._commit_actions(u):
                 if "domainMetadata" in action:
@@ -2659,8 +2660,7 @@ class DeltaTable:
         overlapping files are rewritten with matched keys replaced; inserts
         land with the rewrite. One atomic commit of remove+add actions —
         Delta's data-skipping MERGE shape, driven by the add-action stats
-        this writer already records (mirrors plans/txtable._merge_once,
-        minus the bloom tier: Delta's stats schema has no bloom field)."""
+        this writer already records."""
         _, meta = self.snapshot()
         phys = self._phys_map(meta)
         schema = self.schema()
@@ -3419,12 +3419,11 @@ class DeltaTable:
         return {"files_rewritten": rewritten}
 
     def vacuum(self, retain_versions: int = 2, min_age_seconds: float = 3600.0) -> dict:
-        """Delete data files referenced by NO retained version. Guards (the
-        TxTable ADVICE r3 lessons, applied from day one here): at least one
-        version is always retained; files younger than ``min_age_seconds``
-        survive regardless (a concurrent writer's staged-but-uncommitted
-        files must not be reaped — Delta's retention-check default is 7
-        days for the same reason); the log itself is never deleted by
+        """Delete data files referenced by NO retained version. Guards
+        (ADVICE r3): at least one version is always retained; files
+        younger than ``min_age_seconds`` survive regardless (a concurrent
+        writer's staged-but-uncommitted files must not be reaped — Delta's
+        retention-check default is 7 days for the same reason); the log itself is never deleted by
         vacuum (snapshots older than the horizon become unreadable only in
         their FILE references, history metadata stays auditable)."""
         if retain_versions < 1:
@@ -3581,81 +3580,6 @@ def convert_parquet_to_delta(spark, root: str) -> DeltaTable:
     return t
 
 
-def txtable_to_delta(t, dest: str) -> DeltaTable:
-    """Replay a TxTable's commit history into a Delta log version-for-version
-    so time travel survives the format hop. Data files are HARDLINKED (both
-    formats use immutable parquet), so the export moves no data — it writes
-    one JSON commit per source version plus link(2) per changed file."""
-    from .txtable import TxTable  # local import to avoid a cycle
-
-    assert isinstance(t, TxTable)
-    spark = t.spark
-    d = DeltaTable(spark, dest)
-    if d.versions():
-        raise FileExistsError(f"Delta table already exists at {dest}")
-    os.makedirs(dest, exist_ok=True)
-    table_id = uuid.uuid4().hex
-    prev: dict[str, dict] = {}
-    schema_json = t.read().schema.json()
-    for out_v, src_v in enumerate(t.versions()):
-        cur: dict[str, dict] = {}
-        for fe in t._files(src_v):
-            cur[fe["path"]] = fe
-        actions: list[dict] = [d._commit_info("TXTABLE EXPORT")]
-        if out_v == 0:
-            actions.append({"protocol": dict(PROTOCOL)})
-            sj = t._schema_json(src_v) or schema_json
-            actions.append(
-                {
-                    "metaData": {
-                        "id": table_id,
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": sj,
-                        "partitionColumns": [],
-                        "configuration": {},
-                        "createdTime": int(time.time() * 1000),
-                    }
-                }
-            )
-        now_ms = int(time.time() * 1000)
-        for path in prev:
-            if path not in cur:
-                actions.append(
-                    {
-                        "remove": {
-                            "path": quote(path),
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                            "partitionValues": {},
-                        }
-                    }
-                )
-        data_cols = list(T.StructType.fromJson(json.loads(schema_json)).fieldNames())
-        for path, fe in cur.items():
-            if path in prev:
-                continue
-            src = os.path.join(t.root, path)
-            dst = os.path.join(dest, path)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            if not os.path.exists(dst):
-                os.link(src, dst)
-            actions.append(
-                {
-                    "add": {
-                        "path": quote(path),
-                        "partitionValues": {},
-                        "size": os.path.getsize(dst),
-                        "modificationTime": int(os.path.getmtime(dst) * 1000),
-                        "dataChange": True,
-                        "stats": json.dumps(_stats_for_file(dst, data_cols)),
-                    }
-                }
-            )
-        d._publish(out_v, actions)
-        prev = cur
-    return d
-
-
 def stream_append(table: DeltaTable, stream_df: DataFrame, stream_id: str, checkpoint: str):
     """Exactly-once streaming append into a Delta table: each micro-batch
     commits under a SetTransaction action (appId=stream_id,
@@ -3690,8 +3614,8 @@ def _demo_delta_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
     """Per-nation supplier counts, written through a partitioned Delta table
     in three commits: v0 CREATE (partitioned by region name), v1 APPEND of
     per-nation customer counts, v2 OVERWRITE dropping one region. Memoized
-    per (session, sf_dir) like the TxTable demo (rebuild costs seconds of
-    tiny jobs per query otherwise)."""
+    per (session, sf_dir) (rebuild costs seconds of tiny jobs per query
+    otherwise)."""
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"delta_{uuid.uuid4().hex[:8]}")
@@ -3949,15 +3873,32 @@ _MERGE_DDL = "n_nationkey int, n_name string, n_regionkey int"
 _MERGE_VALUES_SQL = "VALUES (0, 'RENAMED', 9), (7, 'PATCHED', 2), (999, 'NEWLAND', 1)"
 
 
-@session_memo
-def _merged_delta_nation(spark: SparkSession, sf_dir: str) -> DeltaTable:
+def _merge_nation(spark: SparkSession, sf_dir: str, cdf: bool) -> DeltaTable:
+    """nation → Delta (range-partitioned into 4 files, so the merge's
+    stats pruning carries untouched files), then one MERGE of the three
+    update rows as the latest commit; ``cdf`` enables the change data feed
+    first, so the merge also writes its ``_change_data`` file."""
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(), f"delta_merge_{uuid.uuid4().hex[:8]}")
     nation = load(spark, sf_dir, "nation").repartitionByRange(4, "n_nationkey")
     t = DeltaTable.create(spark, root, nation)
+    if cdf:
+        t.enable_change_data_feed()
     t.merge(spark.createDataFrame(_MERGE_ROWS, _MERGE_DDL), key="n_nationkey")
     return t
+
+
+@session_memo
+def _merged_delta_nation(spark: SparkSession, sf_dir: str) -> DeltaTable:
+    """v0 CREATE, v1 MERGE (q118, q119, q127, q135, q142)."""
+    return _merge_nation(spark, sf_dir, cdf=False)
+
+
+@session_memo
+def _merged_delta_nation_cdf(spark: SparkSession, sf_dir: str) -> DeltaTable:
+    """v0 CREATE, v1 enable CDF, v2 MERGE (q120)."""
+    return _merge_nation(spark, sf_dir, cdf=True)
 
 
 @session_memo
@@ -4068,25 +4009,161 @@ def q149_delta_batch_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialize(out)
 
 
-@query(
-    "q135_delta_merge",
-    oracle=f"""
+_MERGED_NATION_ORACLE = f"""
 WITH updates(n_nationkey, n_name, n_regionkey) AS ({_MERGE_VALUES_SQL})
 SELECT coalesce(u.n_nationkey, t.n_nationkey) AS n_nationkey,
        coalesce(u.n_name, t.n_name)           AS n_name,
        coalesce(u.n_regionkey, t.n_regionkey) AS n_regionkey
 FROM nation t FULL OUTER JOIN updates u ON t.n_nationkey = u.n_nationkey
-""",
-)
+"""
+
+
+@query("q135_delta_merge", oracle=_MERGED_NATION_ORACLE)
 def q135_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Copy-on-write MERGE through a real Delta log, same oracle contract as
-    the TxTable twin q118: matched keys replaced, unmatched inserted,
-    non-overlapping files carried by reference via add-action stats pruning
-    (per-file key-range probe against the sorted update keys). The driver
-    verifies the transactional Delta path equals the declarative
-    full-outer-join merge."""
+    """Copy-on-write MERGE through a real Delta log: matched keys replaced,
+    unmatched inserted, non-overlapping files carried by reference via
+    add-action stats pruning (per-file key-range probe against the sorted
+    update keys). The driver verifies the transactional Delta path equals
+    the declarative full-outer-join merge."""
     t = _merged_delta_nation(spark, sf_dir)
     return materialize(t.read())
+
+
+@query("q118_txtable_merge", oracle=_MERGED_NATION_ORACLE)
+def q118_txtable_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Transactional MERGE (upsert), read back from the merge commit of the
+    Delta nation table. The oracle is the declarative merge twin — a FULL
+    OUTER JOIN with update precedence — so the driver verifies the
+    transactional path produces exactly the relational-merge result."""
+    return materialize(_merged_delta_nation(spark, sf_dir).read())
+
+
+@query(
+    "q119_txtable_time_travel",
+    oracle=f"""
+WITH updates(n_nationkey, n_name, n_regionkey) AS ({_MERGE_VALUES_SQL}),
+merged AS (
+  SELECT coalesce(u.n_nationkey, t.n_nationkey) AS n_nationkey
+  FROM nation t FULL OUTER JOIN updates u ON t.n_nationkey = u.n_nationkey
+)
+SELECT 0 AS version,
+       CAST(count(*) AS BIGINT)          AS n_rows,
+       CAST(sum(n_nationkey) AS BIGINT)  AS key_sum
+FROM nation
+UNION ALL
+SELECT 1, CAST(count(*) AS BIGINT), CAST(sum(n_nationkey) AS BIGINT) FROM merged
+""",
+)
+def q119_txtable_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time travel: after the MERGE commit, version 0 still reads the
+    pre-merge snapshot (immutable files + commit log = snapshot isolation).
+    Emits per-version row count and key sum; the oracle recomputes both
+    snapshots relationally."""
+    t = _merged_delta_nation(spark, sf_dir)
+
+    def summarize(version: int) -> DataFrame:
+        return t.read(version).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("n_nationkey").alias("key_sum"),
+        ).select(F.lit(version).alias("version"), "n_rows", "key_sum")
+
+    return materialize(summarize(0).unionByName(summarize(1)))
+
+
+@query(
+    "q120_txtable_changes",
+    oracle=f"""
+WITH updates(n_nationkey, n_name, n_regionkey) AS ({_MERGE_VALUES_SQL})
+SELECT u.n_nationkey, u.n_name, u.n_regionkey,
+       CASE WHEN t.n_nationkey IS NULL THEN 'insert'
+            ELSE 'update_postimage' END AS change_type
+FROM updates u LEFT JOIN nation t ON t.n_nationkey = u.n_nationkey
+UNION ALL
+SELECT t.n_nationkey, t.n_name, t.n_regionkey, 'update_preimage'
+FROM nation t JOIN updates u ON t.n_nationkey = u.n_nationkey
+""",
+)
+def q120_txtable_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Change data feed of the merge commit: exactly the update
+    pre/post-images plus the insert, read from the commit's
+    ``_change_data`` file — rewritten-but-unchanged rows of the
+    copy-on-write files must NOT appear. The oracle derives the same feed
+    relationally from the update batch."""
+    t = _merged_delta_nation_cdf(spark, sf_dir)
+    mv = t.latest_version()
+    return materialize(
+        t.table_changes(mv - 1, mv).select(
+            "n_nationkey", "n_name", "n_regionkey", F.col("_change_type").alias("change_type")
+        )
+    )
+
+
+@query(
+    "q121_txtable_zorder_scan",
+    oracle="""
+SELECT event_id, user_id, value
+FROM events
+WHERE user_id BETWEEN 1 AND 3 AND value BETWEEN 0.0 AND 60.0
+""",
+)
+def q121_txtable_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Z-order clustering + log data skipping on a (int, double) pair: the
+    events table is rewritten Morton-clustered on (user_id, value) and
+    scanned with a 2-D box predicate through the add actions' min/max
+    stats — files outside the box are never opened, and the surviving rows
+    must equal the plain relational filter (the oracle). The query also
+    asserts skipping actually happened, so a stats regression fails
+    loudly."""
+    import shutil
+    import tempfile
+
+    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
+    root = os.path.join(tempfile.gettempdir(), f"dlz_{uuid.uuid4().hex[:8]}")
+    t = DeltaTable.create(spark, root, ev)
+    t.compact(target_files=8, zorder_by=["user_id", "value"])
+    box = {"user_id": (1, 3), "value": (0.0, 60.0)}
+    n_all, n_kept = len(t.files()), len(t.files(bounds=box))
+    assert n_kept < n_all, f"z-order produced no skipping: {n_kept} of {n_all} files kept"
+    df = t.read(bounds=box).where("user_id BETWEEN 1 AND 3 AND value BETWEEN 0.0 AND 60.0")
+    out = materialize(df)  # executor-side; selected rows never hit the driver
+    shutil.rmtree(root, ignore_errors=True)
+    return out
+
+
+@query("q127_txtable_cdc_stream", oracle=_MERGED_NATION_ORACLE)
+def q127_txtable_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming CDC over the merged nation table, verified end-to-end: the
+    delta_cdc stream (version offsets, exactly-once) drains the create +
+    merge history with Trigger.availableNow, and the raw add/remove feed is
+    reconciled back to a snapshot — a key's last 'add' wins unless a
+    strictly-later 'remove' dropped it. The reconciled state must equal the
+    relational merge (the q118 oracle), proving the feed carries exactly
+    the information a downstream materializer needs.
+
+    Scale: the source ships file-diff batches per commit (O(changed files));
+    reconciliation is one window + one aggregate keyed by the table key —
+    the standard CDF-consumer shape."""
+    from pyspark.sql import Window as W
+
+    from ..sources.change_feed import DeltaCdcDataSource, drain_feed
+
+    def reconcile(feed: DataFrame) -> DataFrame:
+        adds = feed.where(F.col("change_type") == "add")
+        w = W.partitionBy("n_nationkey").orderBy(F.col("commit_version").desc())
+        last_add = adds.withColumn("__rk", F.row_number().over(w)).where(F.col("__rk") == 1)
+        last_rm = (
+            feed.where(F.col("change_type") == "remove")
+            .groupBy("n_nationkey")
+            .agg(F.max("commit_version").alias("__rm_v"))
+        )
+        return (
+            last_add.join(F.broadcast(last_rm), "n_nationkey", "left")
+            .where(F.col("__rm_v").isNull() | (F.col("commit_version") >= F.col("__rm_v")))
+            .select("n_nationkey", "n_name", "n_regionkey")
+        )
+
+    t = _merged_delta_nation(spark, sf_dir)
+    return drain_feed(spark, DeltaCdcDataSource, t.root, reconcile)
 
 
 @query(
@@ -4099,10 +4176,10 @@ WHERE user_id BETWEEN 1 AND 3 AND event_id BETWEEN 0 AND 2000
 )
 def q158_delta_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPTIMIZE ZORDER BY through a real Delta log, verified end-to-end
-    (the Delta twin of q121): events is rewritten Morton-clustered on
-    (event_id, user_id), a 2-D box predicate prunes files from the LOG's
-    per-file stats alone, and the surviving rows must equal the plain
-    relational filter (the oracle). The query asserts skipping actually
+    (q121 clusters an (int, double) pair the same way): events is
+    rewritten Morton-clustered on (event_id, user_id), a 2-D box predicate
+    prunes files from the LOG's per-file stats alone, and the surviving
+    rows must equal the plain relational filter (the oracle). The query asserts skipping actually
     happened and that the optimize commit was dataChange=false, so a
     stats or flag regression fails loudly."""
     import shutil

@@ -50,7 +50,7 @@ delete's). ``upsert`` commits an equality delete plus the batch's data
 files as ONE snapshot (the Flink upsert-mode shape);
 ``rewrite_position_deletes`` compacts delete files;
 ``stream_append``/``stream_upsert`` are exactly-once via a snapshot-summary
-batch ledger. Copy-on-write row mutation lives in TxTable/Delta. Snapshots
+batch ledger. Copy-on-write row mutation lives in Delta. Snapshots
 support time travel by snapshot id or chronological index.
 """
 
@@ -71,7 +71,7 @@ from pyspark.sql import types as T
 
 from ..registry import materialize, query, session_memo
 from ..sources.avro_ocf import read_ocf, write_ocf
-from ..sources.lite_source import cast_partition_value
+from ..sources.lite_source import _overlaps, cast_partition_value
 from ..tables import load
 from .deltalog import _decoded_file_path
 
@@ -196,7 +196,15 @@ _ICE_TO_AVRO = {
 
 def _single_value_bytes(ice_type: str, v) -> bytes:
     """Iceberg single-value binary serialization (Appendix D): little-endian
-    numerics, UTF-8 strings — used for lower/upper bounds in manifests."""
+    numerics, UTF-8 strings — used for lower/upper bounds in manifests. A
+    date is its 4-byte day count and a timestamp its 8-byte microsecond
+    count; ``v`` may be the Python value, a Delta-stats ISO string or the
+    Appendix-A number already."""
+    if ice_type in ("date", "timestamp", "timestamptz"):
+        v = partition_physical_value(
+            cast_partition_value(v, _ICE_TO_SPARK[ice_type].simpleString())
+        )
+        return struct.pack("<i" if ice_type == "date" else "<q", int(v))
     if ice_type in ("long", "timestamp_ns", "timestamptz_ns"):
         # ns timestamps serialize as their epoch-nano long (Appendix D:
         # timestamp types store the long count from epoch)
@@ -219,6 +227,9 @@ def _single_value_bytes(ice_type: str, v) -> bytes:
 def _single_value_parse(ice_type: str, b: bytes):
     if b is None:
         return None
+    if ice_type in ("date", "timestamp", "timestamptz"):  # days / micros
+        n = struct.unpack("<i" if ice_type == "date" else "<q", b)[0]
+        return partition_python_value(ice_type, n)
     if ice_type in ("long", "timestamp_ns", "timestamptz_ns"):
         return struct.unpack("<q", b)[0]
     if ice_type == "int":
@@ -424,8 +435,9 @@ def _file_entry(
             ice_t = ice_types.get(cname)
             mn, mx = st["min"], st["max"]
             # physical decode matches the logical value only for the
-            # plain scalar types; anything else stays unprunable
-            if ice_t not in ("int", "long", "float", "double", "string", "boolean"):
+            # plain scalar types and dates (int32 days); anything else,
+            # timestamps of unknown unit included, stays unprunable
+            if ice_t not in ("int", "long", "float", "double", "string", "boolean", "date"):
                 continue
             try:
                 flbs[str(fid)] = _single_value_bytes(ice_t, mn)
@@ -1292,18 +1304,15 @@ class IcebergTable:
                 if bounds:
                     lbs = df_.get("lower_bounds") or {}
                     ubs = df_.get("upper_bounds") or {}
-                    keep = True
-                    for c, (lo, hi) in bounds.items():
-                        fid = name_to_id.get(c)
-                        if fid is None or fid not in lbs or fid not in ubs:
-                            continue
-                        t_ = ice_types_by_id[fid]
-                        fmin = _single_value_parse(t_, lbs[fid])
-                        fmax = _single_value_parse(t_, ubs[fid])
-                        if (hi is not None and fmin > hi) or (lo is not None and fmax < lo):
-                            keep = False
-                            break
-                    if not keep:
+                    ranges = {
+                        c: tuple(
+                            _single_value_parse(ice_types_by_id[fid], b[fid])
+                            for b in (lbs, ubs)
+                        )
+                        for c in bounds
+                        if (fid := name_to_id.get(c)) is not None and fid in lbs and fid in ubs
+                    }
+                    if not _overlaps(ranges, bounds):
                         continue
                 audit["files_kept"] += 1
                 df_ = dict(df_)
@@ -2601,8 +2610,7 @@ class IcebergTable:
 
     def rewrite_data_files(self, target_files: int = 1) -> dict:
         """Bin-pack data-file compaction (the spec's ``rewrite_data_files``
-        maintenance action, completing the compaction story across all
-        three table stacks — TxTable ``compact``, Delta ``optimize``):
+        maintenance action, the twin of Delta's ``compact``):
         reads the current snapshot's LIVE rows (merge-on-read position and
         equality deletes applied during the rewrite, exactly as the real
         action does), re-stages them under the default partition spec, and
@@ -2735,7 +2743,7 @@ class IcebergTable:
         equality_ids = the key columns' field ids). No data file is
         rewritten — readers anti-join data files with a strictly smaller
         sequence number against the delete keys (the Flink-CDC write shape;
-        compare TxTable/Delta's copy-on-write ``delete``).
+        compare Delta's copy-on-write ``delete``).
 
         V3 NOTE (checked against the published v3 spec, §Row-level Deletes
         / §Delete Formats): v3 bans POSITION delete files (deletion
@@ -3378,7 +3386,7 @@ class IcebergTable:
         the pairs name concrete files, the delete's sequence number scopes
         to data files with seq <= delete seq (spec §scan-planning): rows
         appended AFTER the delete survive even if they match the predicate.
-        No data file is rewritten (compare TxTable/Delta copy-on-write
+        No data file is rewritten (compare Delta's copy-on-write
         ``delete``; equality_delete is the key-oriented MoR twin)."""
         md = self.metadata()
         if md.get("format-version") == 3:
@@ -3451,7 +3459,7 @@ class IcebergTable:
         STRICTLY SMALLER sequence number, so the batch's own files survive
         while every older row with a matching key dies. This is exactly how
         Flink's upsert-mode Iceberg sink commits a checkpoint — no data
-        file is read or rewritten (compare TxTable/Delta's copy-on-write
+        file is read or rewritten (compare Delta's copy-on-write
         ``merge``).
 
         ROW LINEAGE (spec §Row Lineage): lineage cannot be carried through
@@ -3785,7 +3793,7 @@ class IcebergTable:
     def expire_snapshots(self, retain_last: int = 2) -> dict:
         """Drop all but the last ``retain_last`` snapshots from the metadata
         and delete metadata/data files referenced by NO retained snapshot.
-        Guards mirror vacuum's (TxTable ADVICE r3): at least one snapshot is
+        Guards mirror Delta vacuum's (ADVICE r3): at least one snapshot is
         always retained, and the current snapshot can never be expired."""
         if retain_last < 1:
             raise ValueError("retain_last must be >= 1")
@@ -5688,6 +5696,10 @@ def delta_to_iceberg_uniform(delta, ice_root: str | None = None) -> IcebergTable
         for c, v in (stats.get("maxValues") or {}).items():
             c = log_by_phys.get(c, c)
             if c in ice_types:
+                if ice_types[c] in ("timestamp", "timestamptz"):
+                    # a Delta writer may truncate timestamp stats to
+                    # milliseconds: widen the upper bound over the rest
+                    v = struct.unpack("<q", _single_value_bytes(ice_types[c], v))[0] + 999
                 ubs[str(name_to_id[c])] = _single_value_bytes(ice_types[c], v)
         pv = a.get("partitionValues") or {}
         partition = _typed_partition_values(
@@ -6561,25 +6573,25 @@ GROUP BY v.r_name
 @query("q142_federated_lakehouse_sql", oracle=_Q142_ORACLE)
 def q142_federated_lakehouse_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The capstone federation query: ONE spark.sql statement joins four
-    table technologies — a TxTable snapshot (post-MERGE), a Delta table via
-    the delta_lite source (post-OVERWRITE), an Iceberg snapshot via the
-    iceberg_lite source (time-traveled to the append snapshot), and a raw
-    parquet dimension — through ordinary temp views. Per region: nation
-    count from the transactional table, metric totals from each open
-    format (EUROPE's delta total is 0: the overwrite dropped it). The
-    oracle recomputes everything relationally, so any reader divergence
-    across the stacks is a wrong answer in one hashed contract."""
+    tables over three readers — a Delta snapshot read natively
+    (post-MERGE), a Delta table via the delta_lite source
+    (post-OVERWRITE), an Iceberg snapshot via the iceberg_lite source
+    (time-traveled to the append snapshot), and a raw parquet dimension —
+    through ordinary temp views. Per region: nation count from the merged
+    table, metric totals from each open format (EUROPE's delta total is 0:
+    the overwrite dropped it). The oracle recomputes everything
+    relationally, so any reader divergence across the stacks is a wrong
+    answer in one hashed contract."""
     from ..sources.lite_source import DeltaLiteDataSource, IcebergLiteDataSource
-    from .deltalog import _demo_delta_table
-    from .txtable import _merged_nation_table
+    from .deltalog import _demo_delta_table, _merged_delta_nation
 
     spark.dataSource.register(DeltaLiteDataSource)
     spark.dataSource.register(IcebergLiteDataSource)
     sfx = uuid.uuid4().hex[:8]
-    tx = _merged_nation_table(spark, sf_dir)
+    merged = _merged_delta_nation(spark, sf_dir)
     dl = _demo_delta_table(spark, sf_dir)
     ice = _demo_iceberg_table(spark, sf_dir)
-    tx.read().createOrReplaceTempView(f"tx_{sfx}")
+    merged.read().createOrReplaceTempView(f"merged_{sfx}")
     spark.read.format("delta_lite").load(dl.root).createOrReplaceTempView(f"dl_{sfx}")
     (
         spark.read.format("iceberg_lite")
@@ -6592,7 +6604,7 @@ def q142_federated_lakehouse_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         WITH nations_per_region AS (
           SELECT r.r_name, CAST(count(DISTINCT t.n_nationkey) AS BIGINT) AS n_nations
-          FROM tx_{sfx} t JOIN region_{sfx} r ON t.n_regionkey = r.r_regionkey
+          FROM merged_{sfx} t JOIN region_{sfx} r ON t.n_regionkey = r.r_regionkey
           GROUP BY r.r_name
         ),
         delta_totals AS (

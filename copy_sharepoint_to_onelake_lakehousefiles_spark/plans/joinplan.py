@@ -546,16 +546,10 @@ def planned_join(
     )
 
 
-def _is_txtable(table) -> bool:
-    # duck-typed: TxTable carries BOTH log_dir (_log/) and data_dir
-    # (data/); DeltaTable has log_dir only, IcebergTable data_dir only
-    return hasattr(table, "log_dir") and hasattr(table, "data_dir")
-
-
 def _is_delta(table) -> bool:
     # duck-typed dispatch: DeltaTable carries log_dir, IcebergTable
     # meta_dir — no import-time coupling between the two modules
-    return hasattr(table, "log_dir") and not _is_txtable(table)
+    return hasattr(table, "log_dir")
 
 
 def _validate_partition_keys(table, partition_filter: dict) -> None:
@@ -601,30 +595,7 @@ def estimate_table_size(
     estimate_side — for Delta a typo'd key would match NOTHING and a
     zero estimate would broadcast an actually-big table."""
     import json as _json
-    import os as _os
 
-    if _is_txtable(table):
-        # TxTable (r12, VERDICT r11 #7): key-clustered, never partitioned
-        # — manifest entries carry rows; bytes come from one stat call per
-        # live file (still O(metadata), no data read)
-        if partition_filter:
-            raise ValueError(
-                "TxTable is key-clustered, not partitioned —"
-                " partition_filter is not supported for txtable sides"
-            )
-        fes = table._files(table.latest_version())
-        rows = sum(int(fe.get("rows") or 0) for fe in fes)
-        nbytes = sum(
-            _os.path.getsize(_os.path.join(table.root, fe["path"]))
-            for fe in fes
-        )
-        return {
-            "rows": rows,
-            "bytes": nbytes,
-            "est_mem_bytes": int(nbytes * inflation),
-            "files": len(fes),
-            "files_total": len(fes),
-        }
     if partition_filter:
         _validate_partition_keys(table, partition_filter)
     if _is_delta(table):
@@ -691,11 +662,9 @@ def register_stats_view(
     tests/test_joinplan.py; q218 pins the sort-merge→broadcast flip with
     hash-identical results).
 
-    Accepts IcebergTable, DeltaTable AND TxTable sides (duck-typed; sizes
-    fold from manifest entries, add-actions, or commit-log file entries +
-    stat calls respectively), so a stats-planned SQL join can even be
-    CROSS-FORMAT. TxTable is key-clustered, never partitioned — a
-    partition_filter on a TxTable side refuses. ``source="native"`` reads through
+    Accepts IcebergTable and DeltaTable sides (duck-typed; sizes fold from
+    manifest entries or add-actions respectively), so a stats-planned SQL
+    join can even be CROSS-FORMAT. ``source="native"`` reads through
     ``table.read`` (Spark-native replay scan, applies
     ``partition_filter``); ``source="lite"`` reads through the table's
     lite DSv2 source (``lite_source_for``, registered on demand),
@@ -732,13 +701,7 @@ def register_stats_view(
         for col, val in (partition_filter or {}).items():
             df = df.where(F.col(col) == F.lit(val))
     elif source == "native":
-        # TxTable.read takes no partition_filter (never partitioned; a
-        # filter was already refused in estimate_table_size above)
-        df = (
-            table.read()
-            if _is_txtable(table)
-            else table.read(partition_filter=partition_filter)
-        )
+        df = table.read(partition_filter=partition_filter)
     else:
         raise ValueError(f"unknown source {source!r} — 'native' or 'lite'")
     # an empty pruned side (0 bytes) broadcasts trivially
@@ -874,22 +837,24 @@ def q218_stats_sql_broadcast_flip(spark: SparkSession, sf_dir: str) -> DataFrame
     (flag 2), with the dimension and only the dimension as the build side
     (flag 3), and both plans' grouped results equal (flag 4; the oracle
     hash additionally pins the values)."""
-    ot, ct = _demo_join_tables(spark, sf_dir)
-    from ..sources.lite_source import IcebergLiteDataSource
+    return _stats_broadcast_flip(spark, *_demo_join_tables(spark, sf_dir))
 
-    spark.dataSource.register(IcebergLiteDataSource)
+
+def _stats_broadcast_flip(spark: SparkSession, ot, ct) -> DataFrame:
+    """The q218/q223 pin over an orders (fact) / customer (dim) pair of
+    one table format, both read through that format's lite source."""
+    from ..sources.lite_source import lite_source_for
+
+    ds = lite_source_for(ot)
+    spark.dataSource.register(ds)
     sql = """
         SELECT c_mktsegment, count(*) AS n_orders
         FROM fact_orders JOIN dim_customer ON o_custkey = c_custkey
         GROUP BY c_mktsegment
     """
     # unassisted: plain lite views — Spark cannot size them
-    spark.read.format("iceberg_lite").load(ot.root).createOrReplaceTempView(
-        "fact_orders"
-    )
-    spark.read.format("iceberg_lite").load(ct.root).createOrReplaceTempView(
-        "dim_customer"
-    )
+    spark.read.format(ds.name()).load(ot.root).createOrReplaceTempView("fact_orders")
+    spark.read.format(ds.name()).load(ct.root).createOrReplaceTempView("dim_customer")
     plain = spark.sql(sql)
     p1 = plain._jdf.queryExecution().executedPlan().toString()
     smj_without = int(
@@ -934,96 +899,34 @@ def q218_stats_sql_broadcast_flip(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 @session_memo
-def _demo_txtable_join(spark: SparkSession, sf_dir: str):
-    """TxTable fact/dim pair for the stats-view pin, memoized per
-    (session, sf_dir)."""
+def _demo_delta_join(spark: SparkSession, sf_dir: str):
+    """Delta orders/customer pair for the q223 stats-view pin, memoized
+    per (session, sf_dir)."""
     import os
     import tempfile
     import uuid
 
-    from .txtable import TxTable
+    from .deltalog import DeltaTable
 
-    base = os.path.join(tempfile.gettempdir(), f"txjoin_{uuid.uuid4().hex[:8]}")
+    base = os.path.join(tempfile.gettempdir(), f"deltajoin_{uuid.uuid4().hex[:8]}")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    ot = TxTable.create(spark, os.path.join(base, "o"), o, key="o_orderkey")
-    ct = TxTable.create(spark, os.path.join(base, "c"), c, key="c_custkey")
-    return ot, ct
+    return (
+        DeltaTable.create(spark, os.path.join(base, "o"), o),
+        DeltaTable.create(spark, os.path.join(base, "c"), c),
+    )
 
 
-_Q223_ORACLE = """
-SELECT c_mktsegment,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       1 AS smj_without_stats, 1 AS bhj_with_stats,
-       1 AS dim_broadcast_fact_not, 1 AS results_identical
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment
-"""
-
-
-@query("q223_txtable_stats_broadcast_flip", oracle=_Q223_ORACLE)
+@query("q223_txtable_stats_broadcast_flip", oracle=_Q218_ORACLE)
 def q223_txtable_stats_broadcast_flip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """STATS-VIEW PLANNING OVER TXTABLE SCANS (VERDICT r11 #7): the same
-    ad-hoc SQL join over ``txtable_lite`` DSv2 scans plans SortMergeJoin
-    unassisted (Spark sizes Python data sources at defaultSizeInBytes)
-    and BroadcastHashJoin once ``stats_sql`` folds each side's
-    commit-log file entries — rows from the manifest, bytes from one
-    stat call per live file — results hash-identical either way. Same
-    contract as q218, third table format (Iceberg and Delta sides were
-    already covered; TxTable completes the engine's lakehouse trio)."""
-    ot, ct = _demo_txtable_join(spark, sf_dir)
-    from ..sources.lite_source import TxTableLiteDataSource
-
-    spark.dataSource.register(TxTableLiteDataSource)
-    sql = """
-        SELECT c_mktsegment, count(*) AS n_orders
-        FROM tx_fact JOIN tx_dim ON o_custkey = c_custkey
-        GROUP BY c_mktsegment
-    """
-    spark.read.format("txtable_lite").load(ot.root).createOrReplaceTempView(
-        "tx_fact"
-    )
-    spark.read.format("txtable_lite").load(ct.root).createOrReplaceTempView(
-        "tx_dim"
-    )
-    plain = spark.sql(sql)
-    p1 = plain._jdf.queryExecution().executedPlan().toString()
-    smj_without = int(
-        "SortMergeJoin" in p1 and "BroadcastHashJoin" not in p1
-    )
-    # bounded: 5 market segments
-    plain_rows = {(r[0], r[1]) for r in plain.collect()}
-    mid = (
-        estimate_table_size(ot)["est_mem_bytes"]
-        + estimate_table_size(ct)["est_mem_bytes"]
-    ) // 2
-    planned, decisions = stats_sql(
-        spark,
-        sql,
-        {"tx_fact": ot, "tx_dim": ct},
-        source="lite",
-        broadcast_bytes=mid,
-    )
-    p2 = planned._jdf.queryExecution().executedPlan().toString()
-    bhj_with = int("BroadcastHashJoin" in p2 and "SortMergeJoin" not in p2)
-    dim_only = int(
-        decisions["tx_dim"]["broadcast"]
-        and not decisions["tx_fact"]["broadcast"]
-    )
-    # bounded: 5 market segments
-    planned_rows = {(r[0], r[1]) for r in planned.collect()}
-    same = int(planned_rows == plain_rows)
-    out = planned.select(
-        "c_mktsegment",
-        "n_orders",
-        F.lit(smj_without).alias("smj_without_stats"),
-        F.lit(bhj_with).alias("bhj_with_stats"),
-        F.lit(dim_only).alias("dim_broadcast_fact_not"),
-        F.lit(same).alias("results_identical"),
-    )
-    return materialize(out)
+    """The q218 pin over ``delta_lite`` scans: the same ad-hoc SQL join
+    plans SortMergeJoin unassisted (Spark sizes Python data sources at
+    defaultSizeInBytes) and BroadcastHashJoin once ``stats_sql`` folds
+    each side's add actions — rows from ``stats.numRecords``, bytes from
+    ``size`` — results hash-identical either way."""
+    return _stats_broadcast_flip(spark, *_demo_delta_join(spark, sf_dir))
 
 
 _Q215_ORACLE = """
@@ -1366,7 +1269,7 @@ def plan_join_tree(
                 continue
             a = node["table"]
             # skew is read from identity-partition row counts in the
-            # manifests — an Iceberg-only surface; Delta/TxTable sides
+            # manifests — an Iceberg-only surface; Delta sides
             # (no partition_fields / different files() contract) simply
             # carry no advisory, they are never an error
             if not hasattr(tables[a], "partition_fields"):
@@ -1497,14 +1400,7 @@ def planned_join_tree(
         tables, predicates, partition_filters=partition_filters, **kwargs
     )
     pfs = partition_filters or {}
-    dfs = {
-        a: (
-            t.read()
-            if _is_txtable(t)
-            else t.read(partition_filter=pfs.get(a))
-        )
-        for a, t in tables.items()
-    }
+    dfs = {a: t.read(partition_filter=pfs.get(a)) for a, t in tables.items()}
     return execute_join_tree(plan, dfs, n_salts=n_salts), plan
 
 

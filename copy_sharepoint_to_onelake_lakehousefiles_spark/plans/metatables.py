@@ -7,13 +7,13 @@ post-write ask — is a QUERYABLE metadata surface: ``history()`` /
 ``snapshots()`` / ``files()`` tables over the commit log, like Delta's
 ``DESCRIBE HISTORY`` and Iceberg's metadata tables. The engine already
 persists every input (JSON commit logs, snapshot summaries, Avro manifests);
-this module exposes them as DataFrames on all three stacks
-(``TxTable.history_df/files_df``, ``DeltaTable.history_df/files_df``,
-``IcebergTable.snapshots_df/files_df``) and registers gate queries whose
-DuckDB oracles read the ENGINE'S OWN on-disk metadata artifacts — the Delta
-``_delta_log`` JSON and the Iceberg/TxTable metadata JSON — via
-``read_json``. Two independent readers of the same committed artifact must
-agree, so the gate verifies the log format itself, not just the query.
+this module exposes them as DataFrames on both formats
+(``DeltaTable.history_df/files_df``, ``IcebergTable.snapshots_df/files_df``)
+and registers gate queries whose DuckDB oracles read the ENGINE'S OWN
+on-disk metadata artifacts — the Delta ``_delta_log`` JSON and the Iceberg
+metadata JSON — via ``read_json``. Two independent readers of the same
+committed artifact must agree, so the gate verifies the log format itself,
+not just the query.
 
 The demo tables are built from ``nation`` × ``region`` ONLY (25 and 5 rows
 at EVERY scale factor), so the metadata content is sf-independent and the
@@ -32,11 +32,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import materialize, query, session_memo
 from ..tables import load
 from .deltalog import DeltaTable
 from .iceberg import IcebergTable
-from .txtable import TxTable
 
 # Per-PROCESS scratch root (VERDICT r5 #2): the demo tables and their
 # oracle SQL both derive from this module-level constant, and the oracle
@@ -126,26 +125,6 @@ def _build_iceberg(spark: SparkSession, sf_dir: str) -> IcebergTable:
     return t
 
 
-def _build_txtable(spark: SparkSession, sf_dir: str) -> TxTable:
-    """Three-commit TxTable demo at a FIXED root: create / append / delete.
-    The oracle replays the same ``_log`` JSON manifests."""
-    root = os.path.join(ROOT, "tx")
-    key = (id(spark), "tx")
-    if key in _BUILT and os.path.isdir(os.path.join(root, "_log")):
-        return TxTable(spark, root)
-    shutil.rmtree(root, ignore_errors=True)
-    dim = _nation_dim(spark, sf_dir)
-    t = TxTable.create(spark, root, dim, key="n_nationkey")
-    t.append(
-        dim.where(F.col("n_nationkey") >= 15).withColumn(
-            "n_name", F.concat(F.col("n_name"), F.lit("_V1"))
-        )
-    )
-    t.delete("n_nationkey % 5 = 2")
-    _BUILT.add(key)
-    return t
-
-
 _Q160_ORACLE = f"""
 WITH acts AS (
   SELECT CAST(regexp_extract(filename, '(\\d+)\\.json$', 1) AS BIGINT) AS version,
@@ -216,64 +195,6 @@ def q161_iceberg_snapshots_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total_data_files",
         "total_records",
     )
-
-
-_Q162_ORACLE = f"""
-WITH m AS (
-  SELECT CAST(regexp_extract(filename, '(\\d+)\\.json$', 1) AS BIGINT) AS version,
-         op, "add", "remove"
-  FROM read_json_auto('{ROOT}/tx/_log/*.json', filename=true)
-  WHERE regexp_matches(filename, '/\\d+\\.json$')
-),
-adds AS (
-  SELECT m.version, a.path AS path, CAST(a.rows AS BIGINT) AS rows
-  FROM m, unnest(coalesce(m."add", [])) AS u(a)
-),
-rms AS (
-  SELECT m.version, r AS path
-  FROM m, unnest(coalesce(m."remove", [])) AS u(r)
-),
-per_commit AS (
-  SELECT m.version, max(m.op) AS op,
-         CAST(coalesce((SELECT count(*) FROM adds a WHERE a.version = m.version), 0) AS BIGINT)
-           AS num_added_files,
-         CAST(coalesce((SELECT sum(a.rows) FROM adds a WHERE a.version = m.version), 0) AS BIGINT)
-           AS num_added_rows,
-         CAST(coalesce((SELECT count(*) FROM rms r WHERE r.version = m.version), 0) AS BIGINT)
-           AS num_removed_files
-  FROM m GROUP BY m.version
-),
-live AS (
-  -- cumulative replay: a file added at av is live at version V iff
-  -- av <= V and no remove of the same path at version <= V (paths are
-  -- unique per write, never re-added)
-  SELECT v.version AS at_version,
-         CAST(count(*) AS BIGINT) AS n_files,
-         CAST(coalesce(sum(a.rows), 0) AS BIGINT) AS n_rows
-  FROM (SELECT DISTINCT version FROM m) v
-  JOIN adds a ON a.version <= v.version
-  WHERE NOT EXISTS (
-    SELECT 1 FROM rms r
-    WHERE r.path = a.path AND r.version <= v.version
-  )
-  GROUP BY v.version
-)
-SELECT p.version, p.op, p.num_added_files, p.num_added_rows,
-       p.num_removed_files,
-       coalesce(l.n_files, 0) AS n_files,
-       coalesce(l.n_rows, 0) AS n_rows
-FROM per_commit p LEFT JOIN live l ON l.at_version = p.version
-"""
-
-
-@query("q162_txtable_history_table", oracle=_Q162_ORACLE)
-def q162_txtable_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TxTable ``history_df``: per-commit add/remove deltas plus cumulative
-    live file/row totals. The oracle replays the same ``_log`` JSON delta
-    manifests relationally (adds ≤ V anti-joined against removes ≤ V), so
-    the engine's log-replay bookkeeping is checked against an independent
-    SQL reconstruction of the identical artifact."""
-    return _build_txtable(spark, sf_dir).history_df()
 
 
 _Q163_ORACLE = f"""
@@ -451,31 +372,47 @@ GROUP BY r_name
 """
 
 
+@session_memo
+def _crud_delta_table(spark: SparkSession, sf_dir: str) -> DeltaTable:
+    """Three-commit Delta demo: create / append / copy-on-write delete."""
+    import tempfile
+    import uuid
+
+    root = os.path.join(tempfile.gettempdir(), f"delta_crud_{uuid.uuid4().hex[:8]}")
+    dim = _nation_dim(spark, sf_dir)
+    t = DeltaTable.create(spark, root, dim)
+    t.append(
+        dim.where(F.col("n_nationkey") >= 15).withColumn(
+            "n_name", F.concat(F.col("n_name"), F.lit("_V1"))
+        )
+    )
+    t.delete("n_nationkey % 5 = 2")
+    return t
+
+
 @query("q171_txtable_sql_source", oracle=_Q171_ORACLE)
 def q171_txtable_sql_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TxTable through Spark's OWN source contract: the ``txtable_lite``
-    pluggable source (r5 — completing the lite matrix: every table stack
-    the engine writes is reachable from plain ``spark.sql``) registered as
-    a temp view over the three-commit demo (create / evolved append /
-    delete). The oracle recomputes the expected live content relationally,
-    so snapshot resolution + additive-evolution null-fill through the
-    source path are hash-checked like q131/q138 are for Delta/Iceberg."""
-    from ..sources.lite_source import TxTableLiteDataSource
+    """A create / append / delete history through Spark's OWN source
+    contract: the ``delta_lite`` pluggable source registered as a temp
+    view over the three-commit demo. The oracle recomputes the expected
+    live content relationally, so snapshot resolution of a copy-on-write
+    delete through the source path is hash-checked."""
+    from ..sources.lite_source import DeltaLiteDataSource
 
-    _build_txtable(spark, sf_dir)
-    spark.dataSource.register(TxTableLiteDataSource)
-    spark.read.format("txtable_lite").load(
-        os.path.join(ROOT, "tx")
-    ).createOrReplaceTempView("q171_tx")
-    return spark.sql(
-        """
-        SELECT r_name,
-               CAST(count(*) AS BIGINT) AS n_rows,
-               CAST(count(DISTINCT n_name) AS BIGINT) AS n_names,
-               CAST(sum(n_nationkey) AS BIGINT) AS key_sum
-        FROM q171_tx
-        GROUP BY r_name
-        """
+    t = _crud_delta_table(spark, sf_dir)
+    spark.dataSource.register(DeltaLiteDataSource)
+    spark.read.format("delta_lite").load(t.root).createOrReplaceTempView("q171_crud")
+    return materialize(
+        spark.sql(
+            """
+            SELECT r_name,
+                   CAST(count(*) AS BIGINT) AS n_rows,
+                   CAST(count(DISTINCT n_name) AS BIGINT) AS n_names,
+                   CAST(sum(n_nationkey) AS BIGINT) AS key_sum
+            FROM q171_crud
+            GROUP BY r_name
+            """
+        )
     )
 
 

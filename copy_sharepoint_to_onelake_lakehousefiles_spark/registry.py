@@ -32,7 +32,7 @@ def materialize(df):
     parquet directory and return a LAZY re-read of it.
 
     This replaces the collect()+createDataFrame pattern for queries that
-    build their result over per-query temp inputs (txtable demos, streaming
+    build their result over per-query temp inputs (lakehouse demos, streaming
     sinks, format round-trips): those must hand back a result that survives
     cleaning up the inputs, but collect() funnels every selected row through
     the driver — fine for a 25-row demo, a bottleneck at 100× (VERDICT r3,
@@ -102,7 +102,7 @@ def release_caches(keep_generations: int | None = None) -> None:
 # aliased by a new one that reuses its id().
 _SESSION_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 # The directory whose presence proves a memoized table is still on disk:
-# DeltaTable/TxTable log, IcebergTable metadata, else the table root.
+# DeltaTable log, IcebergTable metadata, else the table root.
 _TABLE_DIR_ATTRS = ("log_dir", "meta_dir", "root")
 
 

@@ -1,10 +1,10 @@
-"""Streaming change feeds ``delta_cdc``, ``iceberg_cdc`` and ``txtable_cdc``:
+"""Streaming change feeds ``delta_cdc`` and ``iceberg_cdc``:
 ``spark.dataSource.register(DeltaCdcDataSource)`` then
 ``spark.readStream.format("delta_cdc").load(<table root>)`` emits one row
-per table row that each commit (Delta, TxTable) or snapshot (Iceberg) adds
-or removes, so a pipeline SUBSCRIBES to a table other engines write instead
+per table row that each commit (Delta) or snapshot (Iceberg) adds or
+removes, so a pipeline SUBSCRIBES to a table other engines write instead
 of rescanning it (the reference's only incremental story is a scheduled
-full re-run, RM:154-159). The three formats share one core:
+full re-run, RM:154-159). The two formats share one core:
 
 - a small per-format planner turns each commit/snapshot of an offset range
   into ``(ScanTask, change_type)`` pairs;
@@ -16,7 +16,7 @@ full re-run, RM:154-159). The three formats share one core:
 - a row is the table's current columns, then the format's tags, then (on a
   table with row ids) ``_row_id``.
 
-Offsets are Delta/TxTable versions (``{"version": v}``) or chronological
+Offsets are Delta versions (``{"version": v}``) or chronological
 Iceberg snapshot indexes (``{"index": i}``): a committed micro-batch covers
 an exact range, so restart and replay are exactly-once.
 
@@ -30,8 +30,7 @@ Change types per format:
 - Iceberg: ``add``/``remove`` from the adjacent-snapshot file diff;
   ``delete_key`` rows (key columns, the rest null) from new equality-delete
   files; ``delete_row`` rows (the full rows) from new position deletes and
-  deletion vectors — of a superseding DV only the newly dead rows;
-- TxTable: ``add``/``remove`` from the adjacent-version file diff.
+  deletion vectors — of a superseding DV only the newly dead rows.
 
 The SimpleDataSourceStreamReader reads driver-side by design; the offset
 and planning logic carry over to a partition-planned reader unchanged.
@@ -53,7 +52,6 @@ from .lite_source import (
     DeltaLiteDataSource,
     IcebergLiteDataSource,
     ScanTask,
-    TxTableLiteDataSource,
     _position_delete_spec,
     _strip_file_scheme,
     delta_task_factory,
@@ -125,7 +123,7 @@ class ChangeFeedReader(SimpleDataSourceStreamReader):
 
 
 class ChangeFeedSource(DataSource):
-    """Shared front of the three feeds. A subclass names the lite source of
+    """Shared front of the feeds. A subclass names the lite source of
     its table format, its offset key and its tag columns, and supplies
     ``latest`` and ``changes``; ``changes(reader, lo, hi)`` yields
     ``(version, tags after change_type, live columns or None, [(ScanTask,
@@ -313,34 +311,6 @@ class IcebergCdcDataSource(ChangeFeedSource):
                         pairs.append((task(cur[fp], keep=keep), "delete_row"))
             yield idx, (sid,), live, pairs
             prev, prev_dels = cur, dels
-
-
-class TxTableCdcDataSource(ChangeFeedSource):
-    """Tags: cdc_version, cdc_type. Downstream consumers reconcile the
-    add/remove pairs as ``TxTable.changes`` does."""
-
-    FORMAT = "txtable_cdc"
-    LITE = TxTableLiteDataSource
-    TAGS = "cdc_version bigint, cdc_type string"
-
-    @staticmethod
-    def latest(t) -> int:
-        return t.latest_version()
-
-    @staticmethod
-    def changes(r, lo: int, hi: int):
-        t = r.table
-        schema_json = t._schema_json(t.latest_version())
-        before = {fe["path"] for fe in t._files(lo)} if lo >= 0 else set()
-        for v in range(lo + 1, hi + 1):
-            after = {fe["path"] for fe in t._files(v)}
-            pairs = [
-                (ScanTask(os.path.join(t.root, p), schema_json), ct)
-                for paths, ct in ((after - before, "add"), (before - after, "remove"))
-                for p in sorted(paths)
-            ]
-            yield v, (), None, pairs
-            before = after
 
 
 def drain_feed(spark, source: type[ChangeFeedSource], root: str, finish):

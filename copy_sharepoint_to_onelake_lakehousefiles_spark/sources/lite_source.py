@@ -1,8 +1,8 @@
-"""Pluggable BATCH sources ``delta_lite``, ``iceberg_lite`` and
-``txtable_lite``: ``spark.dataSource.register(DeltaLiteDataSource)`` then
+"""Pluggable BATCH sources ``delta_lite`` and ``iceberg_lite``:
+``spark.dataSource.register(DeltaLiteDataSource)`` then
 ``spark.read.format("delta_lite").load(root)`` puts a table of
-``plans/deltalog``, ``plans/iceberg`` or ``plans/txtable`` behind temp
-views and plain ``spark.sql``. The three formats share one core:
+``plans/deltalog`` or ``plans/iceberg`` behind temp views and plain
+``spark.sql``. The two formats share one core:
 
 - the DRIVER resolves the snapshot from the log/metadata only and a small
   per-format planner turns each live data file into one ``ScanTask``;
@@ -18,7 +18,7 @@ views and plain ``spark.sql``. The three formats share one core:
   via stats and are handed back for row-level re-application;
 - ``option("table", ...)`` selects a METADATA table instead of data.
 
-Options: ``version`` (Delta/TxTable time travel), ``snapshot_index``
+Options: ``version`` (Delta time travel), ``snapshot_index``
 (Iceberg chronological time travel), ``pushdown``, ``table``.
 """
 
@@ -28,7 +28,6 @@ import datetime
 import decimal
 import importlib
 import json
-import os
 from dataclasses import dataclass
 from itertools import accumulate
 from typing import Any
@@ -405,7 +404,7 @@ class LiteMetaReader(DataSourceReader):
 
 
 class LiteDataSource(DataSource):
-    """Shared front of the three lite sources. A subclass names its table
+    """Shared front of the lite sources. A subclass names its table
     class, its time-travel option, its metadata tables ``{table: (DDL
     attribute, row builder)}``, and supplies ``schema_of`` and ``plan``."""
 
@@ -688,49 +687,11 @@ def iceberg_task_factory(t, index: int | None = None):
     return task
 
 
-class TxTableLiteDataSource(LiteDataSource):
-    """``spark.read.format("txtable_lite").option("version", 2).load(root)``;
-    ``option("table", "history"|"files")`` selects a metadata table."""
-
-    FORMAT = "txtable_lite"
-    TABLE = ("txtable", "TxTable")
-    META = {
-        "history": ("HISTORY_DF_DDL", lambda t, v: t._history_rows()),
-        "files": ("FILES_DF_DDL", lambda t, v: t._files_rows(v)),
-    }
-
-    @staticmethod
-    def schema_of(t, version):
-        from pyspark.sql.types import StructType
-
-        sj = t._schema_json(t.latest_version() if version is None else version)
-        if sj is None:
-            raise ValueError(f"no schema recorded at {t.root}")
-        return StructType.fromJson(json.loads(sj))
-
-    @staticmethod
-    def plan(r) -> list[ScanTask]:
-        t = r.table
-        v = t.latest_version() if r.version is None else r.version
-        files, schema_json = t._files(v), t._schema_json(v)
-        if r.bounds:
-            # manifest-stat pruning: the table key uses min_key/max_key,
-            # other columns their col_stats [lo, hi]
-            def ranges(fe: dict) -> dict:
-                out = dict(fe.get("col_stats") or {})
-                if t.key and fe.get("min_key") is not None:
-                    out[t.key] = (fe["min_key"], fe["max_key"])
-                return out
-
-            files = [fe for fe in files if _overlaps(ranges(fe), r.bounds)]
-        return [ScanTask(os.path.join(t.root, fe["path"]), schema_json) for fe in files]
-
-
-LITE_SOURCES = (DeltaLiteDataSource, IcebergLiteDataSource, TxTableLiteDataSource)
+LITE_SOURCES = (DeltaLiteDataSource, IcebergLiteDataSource)
 
 
 def lite_source_for(table) -> type[LiteDataSource]:
-    """The lite source that reads ``table`` (a DeltaTable, IcebergTable or
-    TxTable), matched by class name so no table module is imported."""
+    """The lite source that reads ``table`` (a DeltaTable or IcebergTable),
+    matched by class name so no table module is imported."""
     names = {c.__name__ for c in type(table).__mro__}
     return next(ds for ds in LITE_SOURCES if ds.TABLE[1] in names)

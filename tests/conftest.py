@@ -36,14 +36,14 @@ def sf_dir():
 # auditable table instead of decorators scattered over 80 files.
 
 SLOW_FILES = {
-    "test_plan_audit.py",          # lints all 225 queries' physical plans
+    "test_plan_audit.py",          # lints all 224 queries' physical plans
     "test_format_fuzz.py",         # cross-format randomized differential
     "test_stats_fuzz.py",          # randomized stats-model differential
     "test_scale_smoke.py",         # 10x/flood scale smokes
     "test_dedup_property.py",      # hypothesis corpus properties
     "test_asof_property.py",       # hypothesis as-of properties
     "test_rangejoin_property.py",  # hypothesis range-join properties
-    "test_format_differential.py", # three-format upsert/restore agreement
+    "test_format_differential.py", # cross-format upsert/restore agreement
     "test_change_feed.py",         # drained feeds vs snapshot reads
 }
 
@@ -88,7 +88,6 @@ SLOW_TESTS = {
     ("test_deltalog.py", "test_row_tracking_composes_with_column_mapping"),
     ("test_deltalog.py", "test_row_tracking_end_to_end"),
     ("test_deltalog.py", "test_shallow_clone_shares_files_and_diverges"),
-    ("test_deltalog.py", "test_txtable_export_preserves_history"),
     ("test_deltalog.py", "test_type_widening_reads_old_files_upcast"),
     ("test_deltalog.py", "test_v2_checkpoint_sidecars_roundtrip"),
     ("test_events_stream_source.py", "test_stream_agg_through_custom_source_equals_batch"),
@@ -127,8 +126,6 @@ SLOW_TESTS = {
     ("test_incremental_neardup.py", "test_three_run_chaining"),
     ("test_joinplan.py", "test_join_tree_dp_orders_dims_first"),
     ("test_joinplan.py", "test_register_stats_view_flips_smj_to_bhj"),
-    ("test_joinplan.py", "test_register_stats_view_flips_smj_to_bhj_txtable"),
-    ("test_merge.py", "test_merge_is_idempotent_for_same_updates"),
     ("test_metatables.py", "test_concurrent_gate_runs_do_not_race_on_scratch_root"),
     ("test_metatables.py", "test_iceberg_snapshots_df_summary_metrics"),
     ("test_metatables.py", "test_metatables_queries_are_sf_independent"),
@@ -137,18 +134,6 @@ SLOW_TESTS = {
     ("test_pq.py", "test_pq_recall_after_rerank"),
     ("test_similarity.py", "test_ann_recall_flags_assert_true"),
     ("test_text.py", "test_bpe_20_merges_matches_unrolled_oracle"),
-    ("test_txtable.py", "test_bloom_prunes_scattered_key_merge"),
-    ("test_txtable.py", "test_cdc_stream_feed_and_exactly_once_restart"),
-    ("test_txtable.py", "test_changes_after_delete_reports_deletes"),
-    ("test_txtable.py", "test_changes_emits_only_logical_changes"),
-    ("test_txtable.py", "test_checkpointed_log_end_to_end_reads"),
-    ("test_txtable.py", "test_compact_bin_packs_small_files"),
-    ("test_txtable.py", "test_merge_after_schema_evolution_touching_old_files"),
-    ("test_txtable.py", "test_merge_model_based_random_batches"),
-    ("test_txtable.py", "test_stream_upsert_exactly_once"),
-    ("test_txtable.py", "test_txtable_lite_source_data_metadata_and_pruning"),
-    ("test_txtable.py", "test_vacuum_keeps_oldest_retained_resolvable"),
-    ("test_txtable.py", "test_vacuum_removes_only_expired_and_orphan_files"),
     # each starts its own Spark session in a subprocess (15-17 s)
     ("test_worker_daemon.py", "test_session_from_foreign_cwd_falls_back_to_spark_daemon"),
     ("test_worker_daemon.py", "test_session_with_package_on_pythonpath_runs_the_guarded_daemon"),

@@ -9,11 +9,9 @@ import pytest
 
 from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.deltalog import DeltaTable
 from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.iceberg import IcebergTable
-from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.txtable import TxTable
 from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
     DeltaCdcDataSource,
     IcebergCdcDataSource,
-    TxTableCdcDataSource,
     drain_feed,
 )
 from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
@@ -103,23 +101,25 @@ def test_iceberg_feed_reconciles_to_lite_read(spark, tmp_path):
     ]
 
 
-def test_txtable_feed_reconciles_to_lite_read(spark, tmp_path):
-    """A merge rewrites a file: its old rows leave and the updated and
-    carried rows re-enter in the same version."""
-    root = str(tmp_path / "tx")
-    t = TxTable.create(
+def test_delta_merge_feed_reconciles_to_lite_read(spark, tmp_path):
+    """A copy-on-write merge rewrites a file: its old rows leave and the
+    updated and carried rows re-enter in the same version."""
+    root = str(tmp_path / "dm")
+    t = DeltaTable.create(
         spark,
         root,
         spark.createDataFrame(
             [(i, f"n{i}", i % 3) for i in range(8)], "k int, name string, r int"
         ).repartitionByRange(2, "k"),
+    )
+    t.merge(
+        spark.createDataFrame([(1, "UPD", 9), (20, "NEW", 1)], "k int, name string, r int"),
         key="k",
     )
-    t.merge(spark.createDataFrame([(1, "UPD", 9), (20, "NEW", 1)], "k int, name string, r int"))
     cols = ["k", "name", "r"]
-    feed = _drain(spark, TxTableCdcDataSource, root)
-    got = _reconcile(feed, "k", "cdc_version", "cdc_type", cols)
-    want = _lite(spark, "txtable_lite", root, cols)
+    feed = _drain(spark, DeltaCdcDataSource, root)
+    got = _reconcile(feed, "k", "commit_version", "change_type", cols)
+    want = _lite(spark, "delta_lite", root, cols)
     assert got == want and (1, "UPD", 9) in want and (20, "NEW", 1) in want
 
 

@@ -212,27 +212,18 @@ def test_lite_sources_handle_empty_snapshots(spark, tmp_path):
     from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.iceberg import (
         IcebergTable,
     )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.txtable import TxTable
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
-    )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
-        TxTableLiteDataSource,
     )
 
     df = spark.createDataFrame([(1, 2)], "k long, v long")
     dl = DeltaTable.create(spark, str(tmp_path / "d"), df)
     dl.delete("k = 1")
-    tx = TxTable.create(spark, str(tmp_path / "t"), df, key="k")
-    tx.delete("k = 1")
     ic = IcebergTable.create(spark, str(tmp_path / "i"), df)
     ic.equality_delete(spark.createDataFrame([(1,)], "k long"))
     spark.dataSource.register(DeltaLiteDataSource)
-    spark.dataSource.register(TxTableLiteDataSource)
     spark.dataSource.register(IcebergLiteDataSource)
-    for fmt, root in (
-        ("delta_lite", dl.root), ("txtable_lite", tx.root), ("iceberg_lite", ic.root)
-    ):
+    for fmt, root in (("delta_lite", dl.root), ("iceberg_lite", ic.root)):
         got = spark.read.format(fmt).load(root)
         assert got.columns == ["k", "v"], fmt
         assert got.count() == 0, fmt

@@ -1,7 +1,7 @@
 """Delta transaction-log interop (plans/deltalog.py): round-trip, time
 travel, partition reconstruction + pruning, checkpointing, spec-structure
-fidelity, reading a log written by a foreign writer, optimistic concurrency,
-and TxTable export."""
+fidelity, reading a log written by a foreign writer, and optimistic
+concurrency."""
 
 import json
 import os
@@ -16,7 +16,6 @@ from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.deltalog import (
     PROTOCOL,
     DeltaTable,
     _fmt_commit,
-    txtable_to_delta,
 )
 
 
@@ -219,6 +218,116 @@ def test_change_commits_read_only_their_range(root, monkeypatch):
     assert t.meta_in_effect(24)[0] == 0
 
 
+def test_snapshot_lists_the_log_once(root, monkeypatch):
+    """Replaying k commits with no checkpoint below lists ``_delta_log``
+    once per ``snapshot`` call, not once per replayed commit."""
+    os.makedirs(os.path.join(root, "_delta_log"))
+    cols = [{"name": "k", "type": "long", "nullable": True, "metadata": {}}]
+    for v in range(32):
+        acts = [{"commitInfo": {"operation": "WRITE"}}]
+        if v == 0:
+            acts += [
+                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+                {"metaData": {"id": "t", "format": {"provider": "parquet", "options": {}},
+                              "schemaString": json.dumps({"type": "struct", "fields": cols}),
+                              "partitionColumns": [], "configuration": {}}},
+            ]
+        acts.append({"add": {"path": f"f{v}.parquet", "partitionValues": {}, "size": 1,
+                             "modificationTime": 0, "dataChange": True}})
+        with open(os.path.join(root, "_delta_log", _fmt_commit(v)), "w") as f:
+            f.write("".join(json.dumps(a) + "\n" for a in acts))
+    t = DeltaTable(None, root)
+    calls = []
+    orig = DeltaTable.versions
+    monkeypatch.setattr(DeltaTable, "versions", lambda self: calls.append(1) or orig(self))
+    adds, _ = t.snapshot(30)
+    assert len(adds) == 31 and len(calls) == 1
+    calls.clear()
+    assert len(t.snapshot()[0]) == 32 and len(calls) == 1
+
+
+def test_zorder_on_a_double_column_prunes(spark, root):
+    """``compact(zorder_by=)`` scales a fractional column in double
+    arithmetic (integer ``div`` does not apply to it), and the clustered
+    files prune a box on it from the log stats."""
+    df = spark.range(4000).select(
+        (F.col("id") % 20).alias("u"), ((F.col("id") * 7919) % 1000 / 10.0).alias("x")
+    )
+    t = DeltaTable.create(spark, root, df.repartition(4))
+    t.compact(target_files=8, zorder_by=["u", "x"])
+    box = {"u": (1, 3), "x": (0.0, 20.0)}
+    assert len(t.files(bounds=box)) < len(t.files())
+    want = _rows(df.where("u BETWEEN 1 AND 3 AND x BETWEEN 0.0 AND 20.0"))
+    assert _rows(t.read(bounds=box).where("u BETWEEN 1 AND 3 AND x BETWEEN 0.0 AND 20.0")) == want
+
+
+def _nation_delta(spark, sf_dir, root):
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.tables import load
+
+    nation = load(spark, sf_dir, "nation").repartitionByRange(4, "n_nationkey")
+    return DeltaTable.create(spark, root, nation)
+
+
+def test_uncommitted_data_files_are_invisible(spark, sf_dir, root):
+    """Data files a crashed writer left in the table directory, never
+    committed, are in no snapshot: reads resolve the log only."""
+    t = _nation_delta(spark, sf_dir, root)
+    spark.createDataFrame(
+        [(777, "ORPHAN", 0)], "n_nationkey int, n_name string, n_regionkey int"
+    ).write.mode("append").parquet(root)
+    keys = [r["n_nationkey"] for r in t.read().collect()]
+    assert len(keys) == 25 and 777 not in keys
+
+
+def test_merge_widened_key_batch_keeps_keys_unique(spark, sf_dir, root):
+    """A BIGINT-keyed update batch against an INT-keyed table updates the
+    matched rows in place: no duplicate keys, stored key type unchanged."""
+    t = _nation_delta(spark, sf_dir, root)
+    t.merge(
+        spark.createDataFrame(
+            [(3, "WIDE", 1), (7, "WIDE", 1)],
+            "n_nationkey bigint, n_name string, n_regionkey int",
+        ),
+        key="n_nationkey",
+    )
+    rows = t.read().collect()
+    keys = [r["n_nationkey"] for r in rows]
+    assert len(rows) == 25 and len(set(keys)) == 25
+    by_key = {r["n_nationkey"]: r["n_name"] for r in rows}
+    assert by_key[3] == "WIDE" and by_key[7] == "WIDE"
+    assert dict(t.read().dtypes)["n_nationkey"] == "int"
+
+
+def test_merge_after_schema_evolution_touching_old_files(spark, sf_dir, root):
+    """Evolve the schema via append, then merge a batch whose touched files
+    all predate the evolution: the rewritten rows read null for the added
+    column."""
+    ddl = "n_nationkey int, n_name string, n_regionkey int, comment string"
+    t = _nation_delta(spark, sf_dir, root)
+    t.append(spark.createDataFrame([(100, "EVOLVED", 1, "note")], ddl), allow_evolution=True)
+    t.merge(spark.createDataFrame([(3, "PATCHED", 1, None)], ddl), key="n_nationkey")
+    after = {r["n_nationkey"]: (r["n_name"], r["comment"]) for r in t.read().collect()}
+    assert after[3] == ("PATCHED", None)
+    assert after[100] == ("EVOLVED", "note")
+    assert len(after) == 26
+
+
+def test_delete_everything_then_again_stays_readable(spark, sf_dir, root):
+    """A delete matching every row leaves an empty, readable table; a
+    second delete on it is a no-op; a merge re-inserts into it."""
+    t = _nation_delta(spark, sf_dir, root)
+    t.delete("n_nationkey >= 0")
+    t.delete("n_nationkey >= 0")
+    empty = t.read()
+    assert empty.count() == 0
+    assert empty.columns == ["n_nationkey", "n_name", "n_regionkey"]
+    t.merge(
+        spark.createDataFrame([(1, "BACK", 1)], "n_nationkey int, n_name string, n_regionkey int"),
+        key="n_nationkey",
+    )
+    assert [tuple(r) for r in t.read().collect()] == [(1, "BACK", 1)]
+
+
 def test_commit_conflict_raises(spark, root):
     t = DeltaTable.create(spark, root, spark.range(3).select(F.col("id").alias("k")))
     with pytest.raises(FileExistsError):
@@ -230,30 +339,6 @@ def test_txn_action_recorded(spark, root):
     t.append(spark.range(2).select(F.col("id").alias("k")), txn=("app-1", 7))
     assert t.seen_txn("app-1") == 7
     assert t.seen_txn("other") is None
-
-
-def test_txtable_export_preserves_history(spark, sf_dir, root):
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.txtable import TxTable
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.tables import load
-
-    src_root = os.path.join(tempfile.gettempdir(), f"tx_{uuid.uuid4().hex[:8]}")
-    try:
-        nation = load(spark, sf_dir, "nation").repartitionByRange(2, "n_nationkey")
-        t = TxTable.create(spark, src_root, nation, key="n_nationkey")
-        upd = spark.createDataFrame(
-            [(0, "ZZZ", 0), (99, "NEW", 1)], "n_nationkey int, n_name string, n_regionkey int"
-        )
-        t.merge(upd)
-        d = txtable_to_delta(t, root)
-        assert len(d.versions()) == len(t.versions())
-        for dv, sv in zip(d.versions(), t.versions()):
-            assert _rows(d.read(dv)) == _rows(t.read(sv))
-        # hardlink export: no duplicated bytes
-        a = d.files()[0]
-        st = os.stat(d._abs_path(a["path"]))
-        assert st.st_nlink >= 2
-    finally:
-        shutil.rmtree(src_root, ignore_errors=True)
 
 
 def test_empty_snapshot_after_overwrite_with_empty(spark, root):

@@ -1,8 +1,7 @@
 """Cross-format differential: the SAME operation sequence applied through
-all three table stacks (TxTable private log, Delta _delta_log, Iceberg v2
-metadata) must produce identical rows at every version/snapshot — the
-formats differ in metadata layout, never in answers. TxTable has no
-overwrite op, so the overwrite step is compared Delta-vs-Iceberg only."""
+both table formats (Delta _delta_log, Iceberg v2 metadata) must produce
+identical rows at every version/snapshot — the formats differ in metadata
+layout, never in answers."""
 
 import os
 import shutil
@@ -14,7 +13,6 @@ from pyspark.sql import functions as F
 
 from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.deltalog import DeltaTable
 from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.iceberg import IcebergTable
-from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.txtable import TxTable
 
 
 def _rows(df):
@@ -48,26 +46,23 @@ SCENARIOS = [
 
 
 @pytest.mark.parametrize("name,create,append,over", SCENARIOS)
-def test_three_formats_agree(spark, name, create, append, over):
+def test_formats_agree(spark, name, create, append, over):
     ddl = "k long, tag string, v double"
     base = os.path.join(tempfile.gettempdir(), f"diff_{name}_{uuid.uuid4().hex[:6]}")
     try:
         c_df = spark.createDataFrame(create, ddl)
         a_df = spark.createDataFrame(append, ddl)
         o_df = spark.createDataFrame(over, ddl)
-        tx = TxTable.create(spark, os.path.join(base, "tx"), c_df, key="k")
         dl = DeltaTable.create(spark, os.path.join(base, "dl"), c_df)
         ic = IcebergTable.create(spark, os.path.join(base, "ic"), c_df)
-        tx.append(a_df)
         dl.append(a_df)
         ic.append(a_df)
         dl.overwrite(o_df)
         ic.overwrite(o_df)
         for v in (0, 1):
-            r_tx = _rows(tx.read(v))
             r_dl = _rows(dl.read(v))
             r_ic = _rows(ic.read(index=v))
-            assert r_tx == r_dl == r_ic, f"{name} v{v} diverges"
+            assert r_dl == r_ic, f"{name} v{v} diverges"
         assert _rows(dl.read(2)) == _rows(ic.read(index=2)) == _rows(o_df), name
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -90,39 +85,33 @@ def test_partitioned_differential(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_three_delete_paths_agree(spark):
-    """The same logical delete through three different mechanisms — TxTable
-    copy-on-write predicate delete, Delta copy-on-write predicate delete,
-    Iceberg merge-on-read equality delete — must leave identical tables."""
+def test_delete_paths_agree(spark):
+    """The same logical delete through two different mechanisms — Delta
+    copy-on-write predicate delete, Iceberg merge-on-read equality delete —
+    must leave identical tables."""
     ddl = "k long, tag string, v long"
     rows = [(i, f"t{i % 3}", i * 10) for i in range(30)]
     kill = [(k,) for k in (3, 7, 11, 25)]
     base = os.path.join(tempfile.gettempdir(), f"diffdel_{uuid.uuid4().hex[:6]}")
     try:
         df = spark.createDataFrame(rows, ddl)
-        tx = TxTable.create(spark, os.path.join(base, "tx"), df, key="k")
         dl = DeltaTable.create(spark, os.path.join(base, "dl"), df)
         ic = IcebergTable.create(spark, os.path.join(base, "ic"), df)
         pred = "k IN (3, 7, 11, 25)"
-        tx.delete(pred)
         dl.delete(pred)
         ic.equality_delete(spark.createDataFrame(kill, "k long"))
-        r_tx = _rows(tx.read())
         r_dl = _rows(dl.read())
         r_ic = _rows(ic.read())
-        assert r_tx == r_dl == r_ic
-        assert len(r_tx) == 26
+        assert r_dl == r_ic
+        assert len(r_dl) == 26
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_export_chain_txtable_to_delta_to_iceberg(spark):
-    """The full export chain: a TxTable's history replays into a Delta log
-    (hardlinked data), and UniForm then overlays Iceberg metadata on the
-    SAME files — one data copy, three formats, every version agreeing."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.deltalog import (
-        txtable_to_delta,
-    )
+def test_export_chain_delta_to_iceberg(spark):
+    """The export chain: a Delta table's history (create, append, merge)
+    gets Iceberg metadata overlaid by UniForm on the SAME files — one data
+    copy, two formats, every version agreeing with the expected rows."""
     from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.iceberg import (
         delta_to_iceberg_uniform,
     )
@@ -130,22 +119,23 @@ def test_export_chain_txtable_to_delta_to_iceberg(spark):
     base = os.path.join(tempfile.gettempdir(), f"chain_{uuid.uuid4().hex[:6]}")
     try:
         ddl = "k long, tag string, v double"
-        tx = TxTable.create(
+        dl = DeltaTable.create(
             spark,
-            os.path.join(base, "tx"),
+            os.path.join(base, "dl"),
             spark.createDataFrame([(1, "a", 1.5), (2, "b", -2.0)], ddl),
-            key="k",
         )
-        tx.append(spark.createDataFrame([(3, "c", 9.0)], ddl))
-        tx.merge(spark.createDataFrame([(2, "B", 7.5), (4, "d", 0.5)], ddl))
-        dl = txtable_to_delta(tx, os.path.join(base, "dl"))
+        dl.append(spark.createDataFrame([(3, "c", 9.0)], ddl))
+        dl.merge(spark.createDataFrame([(2, "B", 7.5), (4, "d", 0.5)], ddl), key="k")
         ic = delta_to_iceberg_uniform(dl)
+        want = [
+            [(1, "a", 1.5), (2, "b", -2.0)],
+            [(1, "a", 1.5), (2, "b", -2.0), (3, "c", 9.0)],
+            [(1, "a", 1.5), (2, "B", 7.5), (3, "c", 9.0), (4, "d", 0.5)],
+        ]
         for v in (0, 1, 2):
-            r_tx = _rows(tx.read(v))
-            assert r_tx == _rows(dl.read(v)), f"delta v{v}"
-            assert r_tx == _rows(ic.read(index=v)), f"iceberg v{v}"
-        # one physical copy: delta files are hardlinks, iceberg references
-        # the delta files in place
+            assert _rows(dl.read(v)) == want[v], f"delta v{v}"
+            assert _rows(ic.read(index=v)) == want[v], f"iceberg v{v}"
+        # one physical copy: iceberg references the delta files in place
         entries, _ = ic.files()
         dl_paths = {os.path.realpath(dl._abs_path(a["path"])) for a in dl.files()}
         assert {os.path.realpath(e["file_path"]) for e in entries} == dl_paths
@@ -153,10 +143,10 @@ def test_export_chain_txtable_to_delta_to_iceberg(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_three_upsert_paths_agree(spark):
-    """The same logical upsert through three mechanisms — TxTable CoW merge,
-    Delta CoW merge, Iceberg single-snapshot MoR upsert (equality delete +
-    data at one sequence number) — must leave identical tables."""
+def test_upsert_paths_agree(spark):
+    """The same logical upsert through two mechanisms — Delta CoW merge,
+    Iceberg single-snapshot MoR upsert (equality delete + data at one
+    sequence number) — must leave identical tables."""
     ddl = "k long, tag string, v long"
     rows = [(i, f"t{i % 3}", i * 10) for i in range(20)]
     ups = [(3, "U3", 333), (7, "U7", 777), (50, "NEW", 500)]
@@ -164,22 +154,20 @@ def test_three_upsert_paths_agree(spark):
     try:
         df = spark.createDataFrame(rows, ddl)
         u_df = spark.createDataFrame(ups, ddl)
-        tx = TxTable.create(spark, os.path.join(base, "tx"), df, key="k")
         dl = DeltaTable.create(spark, os.path.join(base, "dl"), df)
         ic = IcebergTable.create(spark, os.path.join(base, "ic"), df)
-        tx.merge(u_df)
         dl.merge(u_df, key="k")
         ic.upsert(u_df, key="k")
-        r_tx, r_dl, r_ic = _rows(tx.read()), _rows(dl.read()), _rows(ic.read())
-        assert r_tx == r_dl == r_ic
-        assert len(r_tx) == 21
+        r_dl, r_ic = _rows(dl.read()), _rows(ic.read())
+        assert r_dl == r_ic
+        assert len(r_dl) == 21
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
 
 def test_restore_and_rollback_agree_across_formats(spark):
-    """RESTORE/rollback parity: after create → append → delete, winding all
-    three stacks back to the post-append state must agree with that state;
+    """RESTORE/rollback parity: after create → append → delete, winding
+    both formats back to the post-append state must agree with that state;
     the restored-over history stays time-travelable; new writes continue
     on top of the restore."""
     ddl = "k long, tag string, v long"
@@ -188,35 +176,31 @@ def test_restore_and_rollback_agree_across_formats(spark):
     try:
         df = spark.createDataFrame(rows, ddl)
         extra = spark.createDataFrame([(50, "x", 500)], ddl)
-        tx = TxTable.create(spark, os.path.join(base, "tx"), df, key="k")
         dl = DeltaTable.create(spark, os.path.join(base, "dl"), df)
         ic = IcebergTable.create(spark, os.path.join(base, "ic"), df)
-        for t_ in (tx, dl, ic):
+        for t_ in (dl, ic):
             t_.append(extra)
-        tx.delete("k >= 5")
         dl.delete_vectors("k >= 5")
         ic.position_delete("k >= 5")
         want = _rows(spark.createDataFrame(rows, ddl).unionByName(extra))
         # wind back to the post-append state
-        tx.restore(1)
         dl.restore(1)
         ic.rollback(index=1)
-        assert _rows(tx.read()) == want
         assert _rows(dl.read()) == want
         assert _rows(ic.read()) == want
-        # restored-over history remains readable (TxTable/Delta commit the
+        # restored-over history remains readable (Delta commits the
         # restore as a NEW version; Iceberg keeps the snapshot): version 2
         # is the post-delete state (k 0-4)
-        assert tx.read(2).count() == dl.read(2).count() == 5
+        assert dl.read(2).count() == 5
         # writes continue on top of the restore in every stack
         more = spark.createDataFrame([(60, "y", 600)], ddl)
-        for t_ in (tx, dl, ic):
+        for t_ in (dl, ic):
             t_.append(more)
         want2 = sorted(
             want + [(60, "y", 600)],
             key=lambda t: tuple((v is None, str(v)) for v in t),
         )
-        assert _rows(tx.read()) == _rows(dl.read()) == _rows(ic.read()) == want2
+        assert _rows(dl.read()) == _rows(ic.read()) == want2
     finally:
         shutil.rmtree(base, ignore_errors=True)
 

@@ -1,6 +1,6 @@
 """Property-based cross-format fuzz: a RANDOM sequence of append /
-delete-by-key-predicate operations applied through all three table stacks
-(TxTable private log, Delta _delta_log, Iceberg v2 metadata) must agree
+delete-by-key-predicate operations applied through both table formats
+(Delta _delta_log, Iceberg v2 metadata) must agree
 with a pure-Python list model at the end, and the create snapshot must
 stay intact under time travel. Iceberg alternates its two merge-on-read
 delete flavors (position deletes and equality deletes) and Delta
@@ -18,7 +18,6 @@ from hypothesis import given, settings, strategies as st
 
 from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.deltalog import DeltaTable
 from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.iceberg import IcebergTable
-from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.txtable import TxTable
 
 DDL = "k long, v long"
 
@@ -46,7 +45,6 @@ def test_random_op_sequences_agree_across_formats(spark, init, ops):
     base = os.path.join(tempfile.gettempdir(), f"fuzz_{uuid.uuid4().hex[:8]}")
     try:
         c_df = spark.createDataFrame(init, DDL)
-        tx = TxTable.create(spark, os.path.join(base, "tx"), c_df, key="k")
         # the Delta leg declares BLOOM FILTERS (r9): semantics-neutral, but
         # every random op sequence (CoW deletes, DVs of both storage
         # flavors, checkpoints) must keep writing probeable blooms
@@ -59,7 +57,6 @@ def test_random_op_sequences_agree_across_formats(spark, init, ops):
             if op[0] == "append":
                 _, rows = op
                 a_df = spark.createDataFrame(rows, DDL)
-                tx.append(a_df)
                 dl.append(a_df)
                 ic.append(a_df)
                 model.extend(rows)
@@ -76,7 +73,6 @@ def test_random_op_sequences_agree_across_formats(spark, init, ops):
                 _, m, r = op
                 r = r % m
                 pred = f"k % {m} = {r}"
-                tx.delete(pred)
                 if i % 2 == 0:  # alternate Delta CoW delete vs deletion vectors
                     # ... and alternate the DV STORAGE flavor: inline ("i",
                     # Base85 in the descriptor) on one delete, DV file ("p")
@@ -100,7 +96,6 @@ def test_random_op_sequences_agree_across_formats(spark, init, ops):
                     ic.equality_delete(spark.createDataFrame(keys, "k long"))
                 model = [t for t in model if t[0] % m != r]
         expected = sorted(model)
-        assert _rows(tx.read()) == expected, "TxTable diverges from model"
         assert _rows(dl.read()) == expected, "Delta diverges from model"
         assert _rows(ic.read()) == expected, "Iceberg diverges from model"
         # the PLUGGABLE sources must agree with the native readers on the
@@ -112,15 +107,10 @@ def test_random_op_sequences_agree_across_formats(spark, init, ops):
         from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
             IcebergLiteDataSource,
         )
-        from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
-            TxTableLiteDataSource,
-        )
 
         spark.dataSource.register(DeltaLiteDataSource)
         spark.dataSource.register(IcebergLiteDataSource)
-        spark.dataSource.register(TxTableLiteDataSource)
         for fmt, troot in (
-            ("txtable_lite", tx.root),
             ("delta_lite", dl.root),
             ("iceberg_lite", ic.root),
         ):
@@ -176,7 +166,7 @@ def test_random_op_sequences_agree_across_formats(spark, init, ops):
         )
         # the create snapshot is immutable under every stack
         first = sorted(init)
-        assert _rows(tx.read(0)) == _rows(dl.read(0)) == first
+        assert _rows(dl.read(0)) == first
         assert _rows(ic.read(index=0)) == first
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -199,7 +189,7 @@ def test_random_evolution_sequences_agree_delta_vs_iceberg(spark, init, ops):
     (column mapping) and Iceberg (field ids) against a pure-Python model:
     renames must carry historical data, drops must hide it permanently,
     added columns must read null for pre-existing rows, and deletes keep
-    composing with all of it. (TxTable sits out: no rename/drop surface.)"""
+    composing with all of it."""
     base = os.path.join(tempfile.gettempdir(), f"efuzz_{uuid.uuid4().hex[:8]}")
     try:
         init_rows = [(k, v, v * 2) for k, v in init]

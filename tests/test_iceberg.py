@@ -302,6 +302,46 @@ def test_uniform_over_delta_shares_files_and_time_travels(spark, root):
     assert len(keptp) == 1
 
 
+def test_uniform_carries_date_and_timestamp_bounds(spark, root):
+    """Delta stats hold dates and timestamps as ISO strings; UniForm
+    encodes them as Appendix-D bounds (4-byte days, 8-byte micros), so the
+    Iceberg files prune on a date or timestamp filter."""
+    import datetime as dt
+
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.deltalog import (
+        DeltaTable,
+    )
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.iceberg import (
+        _single_value_parse,
+        delta_to_iceberg_uniform,
+    )
+
+    ddl = "k long, d date, ts timestamp_ntz"
+    t0 = dt.datetime(2020, 1, 1, 12, 0, 0, 123456)
+    d = DeltaTable.create(
+        spark, root, spark.createDataFrame([(1, dt.date(2020, 1, 1), t0)], ddl).coalesce(1)
+    )
+    d.append(
+        spark.createDataFrame(
+            [(2, dt.date(2020, 3, 1), t0 + dt.timedelta(days=60))], ddl
+        ).coalesce(1)
+    )
+    assert json.loads(d.files()[0]["stats"])["minValues"]["d"] in ("2020-01-01", "2020-03-01")
+    ice = delta_to_iceberg_uniform(d)
+    ids = {f["name"]: f["id"] for f in ice.metadata()["schemas"][-1]["fields"]}
+    entries, _ = ice.files()
+    got = sorted(
+        _single_value_parse("date", e["lower_bounds"][str(ids["d"])]) for e in entries
+    )
+    assert got == [dt.date(2020, 1, 1), dt.date(2020, 3, 1)]
+    assert all(len(e["upper_bounds"][str(ids["ts"])]) == 8 for e in entries)
+    kept, audit = ice.files(bounds={"d": (dt.date(2020, 2, 1), None)})
+    assert audit["files_total"] == 2 and len(kept) == 1
+    kept, _ = ice.files(bounds={"ts": (dt.datetime(2020, 2, 1), None)})
+    assert len(kept) == 1
+    assert sorted(r.k for r in ice.read().where("d >= DATE'2020-02-01'").collect()) == [2]
+
+
 def test_expire_snapshots_keeps_current_and_reclaims(spark, root):
     t = IcebergTable.create(spark, root, spark.range(4).select(F.col("id").alias("k")).coalesce(1))
     t.append(spark.range(4, 6).select(F.col("id").alias("k")).coalesce(1))

@@ -1010,68 +1010,6 @@ def test_analyze_partitions_refuses_nul_partition_value(spark, root):
     assert res["partitions"] == 2
 
 
-def test_register_stats_view_flips_smj_to_bhj_txtable(spark, sf_dir, root):
-    """VERDICT r11 #7: the stats-view hint path extended to TxTable — the
-    same ad-hoc SQL over txtable_lite DSv2 scans plans SortMergeJoin
-    unassisted and BroadcastHashJoin once register_stats_view folds the
-    commit-log file entries' bytes, results identical either way."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.joinplan import (
-        estimate_table_size,
-        stats_sql,
-    )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.txtable import (
-        TxTable,
-    )
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
-        TxTableLiteDataSource,
-    )
-
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    t = TxTable.create(spark, os.path.join(root, "o"), o, key="o_orderkey")
-    ct = TxTable.create(spark, os.path.join(root, "c"), c, key="c_custkey")
-    spark.dataSource.register(TxTableLiteDataSource)
-    sql = (
-        "SELECT c_mktsegment, count(*) AS n FROM f JOIN d"
-        " ON o_custkey = c_custkey GROUP BY c_mktsegment"
-    )
-    spark.read.format("txtable_lite").load(t.root).createOrReplaceTempView("f")
-    spark.read.format("txtable_lite").load(ct.root).createOrReplaceTempView("d")
-    plain = spark.sql(sql)
-    p1 = plain._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in p1 and "BroadcastHashJoin" not in p1
-    expected = {tuple(r) for r in plain.collect()}
-    eo, ec = estimate_table_size(t), estimate_table_size(ct)
-    assert eo["rows"] == o.count() and ec["rows"] == c.count()
-    assert eo["bytes"] > 0 and ec["bytes"] > 0
-    mid = (eo["est_mem_bytes"] + ec["est_mem_bytes"]) // 2
-    planned, dec = stats_sql(
-        spark, sql, {"f": t, "d": ct}, source="lite", broadcast_bytes=mid
-    )
-    p2 = planned._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in p2 and "SortMergeJoin" not in p2
-    assert dec["d"]["broadcast"] is True and dec["f"]["broadcast"] is False
-    assert {tuple(r) for r in planned.collect()} == expected
-    # the native path works too, and cross-format (tx + iceberg) plans
-    it = IcebergTable.create(
-        spark, os.path.join(root, "ic"), c.withColumnRenamed("c_custkey", "k")
-    )
-    planned2, dec2 = stats_sql(
-        spark,
-        "SELECT count(*) AS n FROM f JOIN d2 ON o_custkey = k",
-        {"f": t, "d2": it},
-        source="native",
-        broadcast_bytes=mid,
-    )
-    assert dec2["d2"]["broadcast"] is True
-    assert "BroadcastHashJoin" in (
-        planned2._jdf.queryExecution().executedPlan().toString()
-    )
-    # partition_filter on a TxTable side refuses loudly
-    with pytest.raises(ValueError, match="key-clustered"):
-        estimate_table_size(t, partition_filter={"x": 1})
-
-
 # --- multi-way join ordering (r12: plan_join_tree subset DP) -------------
 
 

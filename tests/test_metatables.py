@@ -1,6 +1,6 @@
 """Queryable metadata tables (plans/metatables.py + the *_df methods):
-DESCRIBE HISTORY / snapshots / files surfaces on TxTable, Delta, and
-Iceberg, cross-checked against the read path they describe."""
+DESCRIBE HISTORY / snapshots / files surfaces on Delta and Iceberg,
+cross-checked against the read path they describe."""
 
 import os
 import shutil
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.deltalog import DeltaTable
 from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.iceberg import IcebergTable
-from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.txtable import TxTable
 
 
 @pytest.fixture()
@@ -100,28 +99,6 @@ def test_iceberg_files_df_partition_values_and_counts(spark, root):
     assert all(not os.path.isabs(r["path"]) for r in f)
 
 
-def test_txtable_history_df_cumulative_replay(spark, root):
-    t = TxTable.create(spark, root, _df(spark), key="k")
-    t.append(_df(spark, 4))
-    t.delete("k >= 10")
-    h = {r["version"]: r for r in t.history_df().collect()}
-    assert h[0]["op"] == "create" and h[0]["num_added_rows"] == 12
-    assert h[1]["op"] == "append" and h[1]["num_added_rows"] == 4
-    assert h[2]["op"] == "delete" and h[2]["num_removed_files"] > 0
-    # cumulative totals equal the read path at every version
-    for v in (0, 1, 2):
-        assert t.read(v).count() == h[v]["n_rows"]
-    assert h[2]["n_files"] == len(t._files(2))
-
-
-def test_txtable_files_df_surfaces_prune_bounds(spark, root):
-    t = TxTable.create(spark, root, _df(spark).repartition(3, "k"), key="k")
-    f = t.files_df().collect()
-    assert sum(r["rows"] for r in f) == 12
-    assert all(r["min_key"] is not None and r["max_key"] is not None for r in f)
-    assert all(int(r["min_key"]) <= int(r["max_key"]) for r in f)
-
-
 def test_metatables_queries_are_sf_independent(spark):
     """The gate queries build from nation×region only, so the result is
     byte-identical across scale factors — the property that lets a static
@@ -134,7 +111,6 @@ def test_metatables_queries_are_sf_independent(spark):
     for q in (
         metatables.q160_delta_describe_history,
         metatables.q161_iceberg_snapshots_table,
-        metatables.q162_txtable_history_table,
     ):
         a = rows(q, "/root/testdata/sf0.001")
         metatables._BUILT.clear()  # force rebuild at the other sf
@@ -271,5 +247,5 @@ def test_scratch_root_is_process_scoped():
     from __spark_entry__ import oracle_sql
 
     for name in ("q160_delta_describe_history", "q161_iceberg_snapshots_table",
-                 "q162_txtable_history_table", "q163_delta_files_table"):
+                 "q163_delta_files_table"):
         assert metatables.ROOT in oracle_sql()[name]

@@ -14,11 +14,11 @@ from copy_sharepoint_to_onelake_lakehousefiles_spark.operators.similarity import
     N_CELLS,
     ivf_centroids_memo,
 )
-from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.joinplan import (
-    _demo_txtable_join,
+from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.deltalog import (
+    _merged_delta_nation,
 )
-from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.txtable import (
-    _merged_nation_table,
+from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.joinplan import (
+    _demo_delta_join,
 )
 from copy_sharepoint_to_onelake_lakehousefiles_spark.registry import release_caches
 
@@ -51,12 +51,12 @@ def test_rewritten_input_table_invalidates_memo(spark, tmp_sf):
 
 
 def test_deleted_table_directory_rebuilds(spark, tmp_sf):
-    t = _merged_nation_table(spark, tmp_sf)
+    t = _merged_delta_nation(spark, tmp_sf)
     shutil.rmtree(t.root)
-    t2 = _merged_nation_table(spark, tmp_sf)
+    t2 = _merged_delta_nation(spark, tmp_sf)
     assert t2.root != t.root and os.path.isdir(t2.log_dir)
     # every table in a tuple counts, not only the first
-    ot, ct = _demo_txtable_join(spark, tmp_sf)
+    ot, ct = _demo_delta_join(spark, tmp_sf)
     shutil.rmtree(ct.root)
-    ot2, ct2 = _demo_txtable_join(spark, tmp_sf)
+    ot2, ct2 = _demo_delta_join(spark, tmp_sf)
     assert ct2.root != ct.root and os.path.isdir(ct2.log_dir)
