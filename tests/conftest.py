@@ -82,6 +82,8 @@ SLOW_TESTS = {
     ("test_deltalog.py", "test_convert_parquet_to_delta_in_place"),
     ("test_deltalog.py", "test_delta_cdc_stream_source"),
     ("test_deltalog.py", "test_generated_columns"),
+    ("test_deltalog.py", "test_merge_after_schema_evolution_touching_old_files"),
+    ("test_deltalog.py", "test_merge_model_based_random_batches"),
     ("test_deltalog.py", "test_merge_null_keys_are_pure_inserts"),
     ("test_deltalog.py", "test_merge_partitioned_table"),
     ("test_deltalog.py", "test_row_tracking_cdf_composition"),
