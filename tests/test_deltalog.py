@@ -338,20 +338,37 @@ def test_merge_model_based_random_batches(spark, sf_dir, root):
     assert counts == sorted(counts)
 
 
-def test_delete_everything_then_again_stays_readable(spark, sf_dir, root):
-    """A delete matching every row leaves an empty, readable table; a
-    second delete on it is a no-op; a merge re-inserts into it."""
+def test_delete_all_rows_leaves_readable_empty_table(spark, sf_dir, root):
+    """A delete matching every row leaves an EMPTY table, not an unreadable
+    one: the log keeps the schema, a bounded read prunes to nothing, and a
+    merge into the empty table re-inserts."""
     t = _nation_delta(spark, sf_dir, root)
-    t.delete("n_nationkey >= 0")
-    t.delete("n_nationkey >= 0")
+    stats = t.delete("n_nationkey >= 0")
+    assert stats["deleted"] == 25
     empty = t.read()
     assert empty.count() == 0
     assert empty.columns == ["n_nationkey", "n_name", "n_regionkey"]
-    t.merge(
+    assert t.read(bounds={"n_nationkey": (0, 5)}).count() == 0
+    stats = t.merge(
         spark.createDataFrame([(1, "BACK", 1)], "n_nationkey int, n_name string, n_regionkey int"),
         key="n_nationkey",
     )
+    assert stats["inserted"] == 1
     assert [tuple(r) for r in t.read().collect()] == [(1, "BACK", 1)]
+
+
+def test_delete_on_empty_table_is_a_readable_noop(spark, sf_dir, root):
+    """A DELETE against a version whose previous delete removed every row
+    commits a no-op version instead of reading zero files."""
+    t = _nation_delta(spark, sf_dir, root)
+    t.delete("n_nationkey >= 0")
+    v = t.latest_version()
+    stats = t.delete("n_nationkey >= 0")  # table is already empty
+    assert stats["deleted"] == 0
+    assert t.latest_version() == v + 1
+    empty = t.read()
+    assert empty.count() == 0
+    assert empty.columns == ["n_nationkey", "n_name", "n_regionkey"]
 
 
 def test_commit_conflict_raises(spark, root):
