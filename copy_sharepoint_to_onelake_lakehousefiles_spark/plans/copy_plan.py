@@ -26,7 +26,6 @@ from __future__ import annotations
 import contextlib
 import hashlib
 import os
-import time
 from collections.abc import Iterator
 
 import pandas as pd
@@ -36,7 +35,7 @@ from pyspark.sql import types as T
 
 from ..functions.paths import join_path
 from ..registry import query
-from ..sources.graph_datasource import FetchClientError, _http_fetch, publish_temp_name
+from ..sources.graph_datasource import _http_fetch, publish_temp_name, with_retry
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -107,24 +106,23 @@ def _publish(raw: bytes, dest_path: str) -> None:
 def _copy_file(row, auth, max_attempts: int, backoff_s: float) -> tuple:
     """Copy one planned file (file_id, src_path, dest_path) and return its
     RESULT_SCHEMA row. Transient errors back off exponentially up to
-    `max_attempts`; a definitive 4xx is recorded at once."""
-    err = None
-    for attempt in range(1, max_attempts + 1):
-        try:
-            raw = _read_src(row.src_path, auth)
-            _publish(raw, row.dest_path)
-            checksum = hashlib.md5(raw).hexdigest()
-            return (row.file_id, row.src_path, row.dest_path, len(raw), checksum, attempt, "ok", None)
-        except FetchClientError as exc:
-            # definitive 4xx: the reference skips these files (NB:294-296)
-            # — record and move on, no backoff
-            err = str(exc)
-            break
-        except Exception as exc:  # noqa: BLE001 — audit row, task keeps going
-            err = str(exc)
-            if attempt < max_attempts:
-                time.sleep(backoff_s * (2 ** (attempt - 1)))
-    return (row.file_id, row.src_path, row.dest_path, 0, None, attempt, "error", err)
+    `max_attempts` (`with_retry`, the listing's policy too); a definitive
+    4xx is recorded at once, as the reference skips it (NB:294-296)."""
+    attempts = 0
+
+    def fetch_and_publish() -> bytes:
+        nonlocal attempts
+        attempts += 1
+        raw = _read_src(row.src_path, auth)
+        _publish(raw, row.dest_path)
+        return raw
+
+    try:
+        raw = with_retry(fetch_and_publish, max_attempts, backoff_s)
+    except Exception as exc:  # noqa: BLE001 — audit row, task keeps going
+        return (row.file_id, row.src_path, row.dest_path, 0, None, attempts, "error", str(exc))
+    checksum = hashlib.md5(raw).hexdigest()
+    return (row.file_id, row.src_path, row.dest_path, len(raw), checksum, attempts, "ok", None)
 
 
 def execute_copy(
@@ -154,8 +152,12 @@ def execute_copy(
         F.col("download_url").alias("src_path"),
         dest_path_col(dest_root, site_folder).alias("dest_path"),
     )
-    if parallelism:
-        planned = planned.repartition(parallelism)
+    # The copy gets its own stage: a Python listing scan (graph_manifest)
+    # fused with the mapInPandas would hold two Python workers per task,
+    # and the input's partitioning (one packed directory run per task)
+    # would set the copy's parallelism. One exchange sizes the copy from
+    # the session's task slots instead, whatever the input is.
+    planned = planned.repartition(parallelism or todo.sparkSession.sparkContext.defaultParallelism)
 
     def copy_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

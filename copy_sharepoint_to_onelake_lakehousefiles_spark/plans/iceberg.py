@@ -7428,6 +7428,8 @@ def iceberg_to_delta_uniform(ic: IcebergTable, delta_root: str | None = None):
                     v = _single_value_parse(f["type"], raw)
                 except Exception:  # noqa: BLE001 — bound type we can't parse
                     continue
+                if isinstance(v, datetime.date):  # date, timestamp(tz)
+                    v = str(v)  # ISO, as deltalog._stats_for_file writes them
                 if isinstance(v, (int, float, str, bool)):
                     tgt[f["name"]] = v
         if mins:

@@ -36,16 +36,18 @@ Two backends behind the same planning:
   executors following each directory's cursor chain in parallel.
 
 Every Graph GET — listing pages here, file downloads in
-`plans/copy_plan.execute_copy` — goes through `_http_fetch`, so the
-status policy (401 refresh, definitive 4xx, transient 429/5xx) and the
-timeout live in one place.
+`plans/copy_plan.execute_copy` — goes through `_http_fetch` inside
+`with_retry`, so the status policy (401 refresh, definitive 4xx,
+transient 429/5xx), the bounded backoff and the timeout live in one place.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
+import time
 import uuid
 from dataclasses import dataclass
 
@@ -137,8 +139,8 @@ def _http_fetch(url: str, auth=None) -> bytes:
     file, NB:293), or urllib when requests is not installed.
 
     Status policy: 429 and 5xx/transport errors raise generic exceptions,
-    which the copy loop's backoff retries (429 is throttling, not a verdict
-    on the file); every other 4xx raises FetchClientError. `auth` is an O3
+    which `with_retry` backs off and retries (429 is throttling, not a
+    verdict on the file); every other 4xx raises FetchClientError. `auth` is an O3
     token provider (sources/auth.py): its bearer header rides on every
     request, and a 401 triggers ONE invalidate+refresh retry before it is
     treated as definitive (token expired server-side — the reference would
@@ -191,14 +193,34 @@ def _http_get_once(url: str, auth) -> bytes | None:
     return resp.content
 
 
+def with_retry(call, max_attempts: int = 3, backoff_s: float = 0.05):
+    """Return `call()`, retrying a transient failure — HTTP 429, 5xx, a
+    transport or local I/O error — after `backoff_s * 2**(k-1)` seconds, up
+    to `max_attempts` calls in all; the last failure propagates. A
+    FetchClientError (a definitive 4xx) propagates at once: retrying
+    cannot change the answer. The reference retries nothing (NB:204-211,
+    NB:294-296)."""
+    for attempt in range(1, max_attempts + 1):
+        try:
+            return call()
+        except FetchClientError:
+            raise
+        except Exception:
+            if attempt == max_attempts:
+                raise
+            time.sleep(backoff_s * 2 ** (attempt - 1))
+
+
 def _iter_pages(url: str, auth=None):
     """Follow a cursor-paged listing: GET url → {"value": [...],
     "@odata.nextLink": next_url?} until no nextLink remains (the
-    reference's list_children_paged loop, NB:204-211). `auth` is an O3
-    token provider (sources/auth.py) supplying the bearer header the
-    reference sends on every Graph call (NB:53-59)."""
+    reference's list_children_paged loop, NB:204-211). Each page GET is
+    retried like a file download, so one throttled or failed page neither
+    stops the driver walk nor fails a read task. `auth` is an O3 token
+    provider (sources/auth.py) supplying the bearer header the reference
+    sends on every Graph call (NB:53-59)."""
     while url:
-        page = json.loads(_http_fetch(url, auth=auth))
+        page = json.loads(with_retry(functools.partial(_http_fetch, url, auth=auth)))
         yield from page.get("value", [])
         url = page.get("@odata.nextLink")
 

@@ -377,3 +377,98 @@ def test_verify_copy_with_relative_dest_root(spark, tmp_path):
         for r in verify_copy(spark, result, rel_dest).collect()
     }
     assert verdict == {"one.bin": "verified", "two.bin": "verified"}
+
+
+# --- the copy's own stage ------------------------------------------------------
+
+
+def _register_graph_manifest(spark):
+    try:
+        spark.dataSource.register(GraphManifestDataSource)
+    except Exception:
+        pass  # already registered in this session
+
+
+def _flat_drive(root, n):
+    """One directory of `n` small files: the listing packs it into a
+    single partition, since a directory is never split."""
+    os.makedirs(root)
+    for i in range(n):
+        with open(os.path.join(root, f"f{i:02d}.bin"), "wb") as f:
+            f.write(b"x" * (64 + i))
+
+
+def _plan_lines(df) -> list[str]:
+    return df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+
+def _exchange_between(lines, upper: str, lower: str) -> bool:
+    idx = lambda s: next(i for i, line in enumerate(lines) if s in line)  # noqa: E731
+    return idx(upper) < idx("Exchange") < idx(lower)
+
+
+def test_copy_stage_is_separated_from_its_listing_scan(spark, tmp_path):
+    """One exchange sits between the listing scan and the copy's
+    MapInPandas, for the Python graph_manifest scan and for the binaryFile
+    listing alike, so a copy task never shares its stage (and a second
+    Python worker) with a Python scan."""
+    src = str(tmp_path / "src")
+    _build_tree(src)
+    _register_graph_manifest(spark)
+    graph = execute_copy(
+        plan_copy(spark.read.format("graph_manifest").load(src), None), str(tmp_path / "d1")
+    )
+    lines = _plan_lines(graph)
+    assert any("BatchScan graph_manifest" in line and "(Python)" in line for line in lines)
+    assert _exchange_between(lines, "MapInPandas", "BatchScan graph_manifest")
+    local = execute_copy(plan_copy(manifest_from_local_dir(spark, src), None), str(tmp_path / "d2"))
+    assert _exchange_between(_plan_lines(local), "MapInPandas", "FileScan binaryFile")
+
+
+def test_one_directory_drive_is_copied_by_every_task_slot(spark, tmp_path):
+    """A flat 16-file folder is one listing partition; the copy still runs
+    on min(16, defaultParallelism) tasks instead of inheriting that one."""
+    src = str(tmp_path / "src")
+    _flat_drive(src, 16)
+    _register_graph_manifest(spark)
+    manifest = spark.read.format("graph_manifest").load(src)
+    assert manifest.rdd.getNumPartitions() == 1
+    result = (
+        execute_copy(plan_copy(manifest, None), str(tmp_path / "dst"))
+        .withColumn("task", F.spark_partition_id())
+        .persist()
+    )
+    try:
+        assert result.where(F.col("status") == "ok").count() == 16
+        tasks = result.select("task").distinct().count()
+        assert tasks == min(16, spark.sparkContext.defaultParallelism) > 1
+    finally:
+        result.unpersist()
+
+
+def test_explicit_parallelism_sets_copy_task_count(spark, tmp_path):
+    src = str(tmp_path / "src")
+    _flat_drive(src, 16)
+    _register_graph_manifest(spark)
+    manifest = spark.read.format("graph_manifest").load(src)
+    result = (
+        execute_copy(plan_copy(manifest, None), str(tmp_path / "dst"), parallelism=3)
+        .withColumn("task", F.spark_partition_id())
+        .persist()
+    )
+    try:
+        assert result.count() == 16
+        assert result.select("task").distinct().count() == 3
+    finally:
+        result.unpersist()
+
+
+def test_empty_plan_copies_nothing_through_the_exchange(spark, tmp_path):
+    """q50's second run: every file already landed, so the plan is empty and
+    the repartitioned copy returns no rows."""
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    _build_tree(src)
+    assert copy_tree(spark, src, dst).count() == 3
+    again = copy_tree(spark, src, dst)
+    assert again.count() == 0
+    assert again.schema == copy_plan.RESULT_SCHEMA

@@ -17,6 +17,7 @@ from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.graph_datasource im
     OPEN_COST_BYTES,
     GraphManifestDataSource,
     GraphManifestPushdownReader,
+    FetchClientError,
     GraphManifestReader,
 )
 
@@ -129,15 +130,19 @@ class _ListingHandler(BaseHTTPRequestHandler):
     base = ""  # filled by fixture
     tree = _TREE  # listing path → items; `_serve` swaps in other trees
     hits = []  # every (path, skip) request seen — asserts real pagination
+    fail = {}  # (path, skip) → statuses to answer, one per request, first
 
     def do_GET(self):  # noqa: N802
         u = urlparse(self.path)
+        skip = int(parse_qs(u.query).get("skip", ["0"])[0])
+        type(self).hits.append((u.path, skip))
+        if type(self).fail.get((u.path, skip)):
+            self.send_error(type(self).fail[(u.path, skip)].pop(0))
+            return
         items = type(self).tree.get(u.path)
         if items is None:
             self.send_error(404)
             return
-        skip = int(parse_qs(u.query).get("skip", ["0"])[0])
-        type(self).hits.append((u.path, skip))
         window = items[skip : skip + PAGE_SIZE]
         page = {"value": []}
         for it in window:
@@ -166,6 +171,7 @@ def serve():
     def _serve(tree):
         _ListingHandler.tree = tree
         _ListingHandler.hits = []
+        _ListingHandler.fail = {}
         srv = ThreadingHTTPServer(("127.0.0.1", 0), _ListingHandler)
         _ListingHandler.base = f"http://127.0.0.1:{srv.server_address[1]}"
         threading.Thread(target=srv.serve_forever, daemon=True).start()
@@ -383,3 +389,28 @@ def test_packing_adds_no_listing_requests(spark, listing_base, pin_cores):
     assert [[b for _, b in p.dirs] for p in parts] == [["", "docs"]]
     assert len([row for p in parts for row in reader.read(p)]) == 6
     assert Counter(_ListingHandler.hits) == per_page
+
+
+def test_transient_listing_page_errors_are_retried(spark, listing_base):
+    """A 503 on a second cursor page, met by the driver walk, and a 429,
+    met by a read task, are each retried with the file downloads' backoff:
+    the manifest is complete and each failed page was requested once more.
+    A 404 is definitive and fails at once."""
+    _register(spark)
+    _ListingHandler.fail = {("/list/docs", 2): [503]}
+    rows = spark.read.format("graph_manifest").load(f"{listing_base}/list/root").collect()
+    assert len(rows) == 6
+    # the walk's 503 and its retry, then the read task's page
+    assert _ListingHandler.hits.count(("/list/docs", 2)) == 3
+
+    reader = GraphManifestReader({"path": f"{listing_base}/list/root"})
+    parts = reader.partitions()
+    _ListingHandler.hits = []
+    _ListingHandler.fail = {("/list/root", 2): [429]}
+    assert len([row for p in parts for row in reader.read(p)]) == 6
+    assert _ListingHandler.hits.count(("/list/root", 2)) == 2
+
+    _ListingHandler.hits = []
+    with pytest.raises(FetchClientError, match="404"):
+        list(GraphManifestReader({"path": f"{listing_base}/list/missing"}).partitions())
+    assert _ListingHandler.hits == [("/list/missing", 0)]

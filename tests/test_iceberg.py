@@ -1865,3 +1865,35 @@ def test_v3_wide_delete_driver_traffic_is_per_file(spark, root, monkeypatch):
         )
         total += len(poss)
     assert total == 2000
+
+
+def test_uniform_to_delta_keeps_date_bounds(spark, root):
+    """Iceberg→Delta UniForm carries date bounds into the add-action stats
+    as ISO strings (deltalog._stats_for_file's convention), so
+    files(bounds=) skips on a date column."""
+    import datetime as dt
+
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.iceberg import (
+        iceberg_to_delta_uniform,
+    )
+
+    def rows(k0, day0):
+        return spark.createDataFrame(
+            [(k0 + i, dt.date(2024, 1, day0 + i)) for i in range(3)], "k long, d date"
+        ).coalesce(1)
+
+    t = IcebergTable.create(spark, root, rows(0, 1))
+    t.append(rows(10, 20))
+    dl = iceberg_to_delta_uniform(IcebergTable(spark, root), root + "_d")
+    try:
+        stats = sorted(
+            (json.loads(a["stats"]) for a in dl.files()), key=lambda s: s["minValues"]["k"]
+        )
+        assert [(s["minValues"], s["maxValues"]) for s in stats] == [
+            ({"k": 0, "d": "2024-01-01"}, {"k": 2, "d": "2024-01-03"}),
+            ({"k": 10, "d": "2024-01-20"}, {"k": 12, "d": "2024-01-22"}),
+        ]
+        assert len(dl.files(bounds={"d": ("2024-01-15", "2024-01-31")})) == 1
+        assert _rows(dl.read()) == _rows(t.read())
+    finally:
+        shutil.rmtree(root + "_d", ignore_errors=True)

@@ -6,8 +6,6 @@ so a refactor can't silently reintroduce the removed work:
   postings self-join that broadcast the corpus-sized table);
 - the exact-cosine kernel divides by norms computed once per vector below
   the join (not per pair);
-- execute_copy only repartitions when explicitly asked (q54 inherits the
-  listing scan's size-based splits);
 - _recall_flags caches the ANN answer ids so the ANN pipeline is not a
   duplicated subtree.
 """
@@ -45,27 +43,6 @@ def test_cosine_kernel_norms_precomputed_below_join(spark, sf_dir):
             "per-pair cosine projection recomputes a norm — norms must be "
             "projected once per vector below the join (r12 §1)"
         )
-
-
-def test_execute_copy_respects_natural_partitioning(spark, tmp_path):
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.copy_plan import (
-        execute_copy,
-        manifest_from_local_dir,
-        plan_copy,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    for i in range(4):
-        (src / f"f{i}.bin").write_bytes(b"x" * 64)
-    todo = plan_copy(manifest_from_local_dir(spark, str(src)), None)
-    lazy_default = execute_copy(todo, str(tmp_path / "d1"))
-    assert "Exchange" not in _executed_plan(lazy_default), (
-        "execute_copy without parallelism must inherit the scan's "
-        "size-based splits, not repartition (r12 §4)"
-    )
-    lazy_forced = execute_copy(todo, str(tmp_path / "d2"), parallelism=3)
-    assert "Exchange" in _executed_plan(lazy_forced)
 
 
 def test_recall_flags_cache_ann_ids(spark, sf_dir):
