@@ -16,9 +16,13 @@ Reference semantics being generalized:
 - destination path construction (lakehouse_dest_path, NB:254-263) and
   '//'→'/' normalization (NB:242/263/290) as column expressions.
 
-Scale: the manifest is a DataFrame; `repartition(parallelism)` bounds
-per-task fan-out; task retry supersedes the reference's skip-on-error;
-a 100 TB copy is just more partitions.
+Scale: the manifest is a DataFrame. `execute_copy` repartitions it to
+`parallelism` or the session's defaultParallelism, so the copy is a stage
+of its own: one Python worker per task (not a second one beside a Python
+listing scan), and a task count set by the task slots, not by how the
+listing happened to split (one flat folder still spreads over every
+slot). Task retry supersedes the reference's skip-on-error; a 100 TB copy
+is just more partitions.
 """
 
 from __future__ import annotations
@@ -412,12 +416,14 @@ def q54_copy_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     single aggregate over the copy manifest computes n_rows, n_ok and
     total_bytes together (it was cache + count + filtered count + sum =
     three actions, the copy materialized into the block store first).
-    The copy inherits the listing scan's size-based splits instead of a
-    round-robin repartition(32): 256 × 16 KB files are bounded per task
-    by maxPartitionBytes/openCostInBytes already, and 32 Python tasks of
-    8 tiny files each were pure per-task overhead at ANY scale — a real
-    100 TB manifest gets its parallelism from the same size-based
-    splitting. Result columns are unchanged."""
+    Its fixed round-robin repartition(32) is gone: 32 Python tasks of 8
+    tiny files each were pure per-task overhead on a small host. The copy
+    now takes `execute_copy`'s default, one exchange to the session's
+    defaultParallelism (README design rule 10). At 32 cores the
+    binaryFile scan already splits the 256 files into about 32
+    partitions, so the task count there does not change; at 4 cores the
+    copy runs 4 tasks where the scan's splits gave about 9. Result
+    columns are unchanged."""
     global LAST_COPY_WALL_SEC
     import shutil
     import tempfile

@@ -140,10 +140,10 @@ def _http_fetch(url: str, auth=None) -> bytes:
 
     Status policy: 429 and 5xx/transport errors raise generic exceptions,
     which `with_retry` backs off and retries (429 is throttling, not a
-    verdict on the file); every other 4xx raises FetchClientError. `auth` is an O3
-    token provider (sources/auth.py): its bearer header rides on every
-    request, and a 401 triggers ONE invalidate+refresh retry before it is
-    treated as definitive (token expired server-side — the reference would
+    verdict on the file); every other 4xx raises FetchClientError. `auth`
+    is an O3 token provider (sources/auth.py): its bearer header rides on
+    every request, and a 401 triggers ONE invalidate+refresh retry before
+    it is treated as definitive (token expired server-side — the reference would
     simply crash, NB:141-143)."""
     raw = _http_get_once(url, auth)
     if raw is None:  # 401 with an auth provider → refresh once
