@@ -36,6 +36,13 @@ def _build_tree(root):
         f.write("hello\n")
 
 
+def _register_graph_manifest(spark):
+    try:
+        spark.dataSource.register(GraphManifestDataSource)
+    except Exception:
+        pass  # already registered in this session
+
+
 # --- Graph-shaped paged listing (FIXTURES.md B2) ----------------------------
 
 PAGES = {
@@ -235,10 +242,7 @@ def test_manifest_from_tree_empty(spark, tmp_path):
     """An empty drive lists no rows, with the declared schema; nothing to copy."""
     empty = tmp_path / "nothing"
     empty.mkdir()
-    try:
-        spark.dataSource.register(GraphManifestDataSource)
-    except Exception:
-        pass  # already registered in this session
+    _register_graph_manifest(spark)
     m = spark.read.format("graph_manifest").load(str(empty))
     assert m.count() == 0
     assert m.schema == MANIFEST_SCHEMA
@@ -382,13 +386,6 @@ def test_verify_copy_with_relative_dest_root(spark, tmp_path):
 # --- the copy's own stage ------------------------------------------------------
 
 
-def _register_graph_manifest(spark):
-    try:
-        spark.dataSource.register(GraphManifestDataSource)
-    except Exception:
-        pass  # already registered in this session
-
-
 def _flat_drive(root, n):
     """One directory of `n` small files: the listing packs it into a
     single partition, since a directory is never split."""
@@ -403,8 +400,8 @@ def _plan_lines(df) -> list[str]:
 
 
 def _exchange_between(lines, upper: str, lower: str) -> bool:
-    idx = lambda s: next(i for i, line in enumerate(lines) if s in line)  # noqa: E731
-    return idx(upper) < idx("Exchange") < idx(lower)
+    pos = {s: next(i for i, line in enumerate(lines) if s in line) for s in (upper, "Exchange", lower)}
+    return pos[upper] < pos["Exchange"] < pos[lower]
 
 
 def test_copy_stage_is_separated_from_its_listing_scan(spark, tmp_path):
