@@ -15,9 +15,9 @@ from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.graph_datasource im
     MANIFEST_SCHEMA,
     MAX_PARTITION_BYTES,
     OPEN_COST_BYTES,
+    FetchClientError,
     GraphManifestDataSource,
     GraphManifestPushdownReader,
-    FetchClientError,
     GraphManifestReader,
 )
 
@@ -393,14 +393,14 @@ def test_packing_adds_no_listing_requests(spark, listing_base, pin_cores):
 
 def test_transient_listing_page_errors_are_retried(spark, listing_base):
     """A 503 on a second cursor page, met by the driver walk, and a 429,
-    met by a read task, are each retried with the file downloads' backoff:
+    met by the reader's read(), are each retried with the file downloads' backoff:
     the manifest is complete and each failed page was requested once more.
     A 404 is definitive and fails at once."""
     _register(spark)
     _ListingHandler.fail = {("/list/docs", 2): [503]}
     rows = spark.read.format("graph_manifest").load(f"{listing_base}/list/root").collect()
     assert len(rows) == 6
-    # the walk's 503 and its retry, then the read task's page
+    # the walk's 503 and its retry, then the read task's request
     assert _ListingHandler.hits.count(("/list/docs", 2)) == 3
 
     reader = GraphManifestReader({"path": f"{listing_base}/list/root"})
