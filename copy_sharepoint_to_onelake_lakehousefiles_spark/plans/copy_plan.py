@@ -15,6 +15,13 @@ Reference semantics being generalized:
   killed write is simply planned again by the next run.
 - destination path construction (lakehouse_dest_path, NB:254-263) and
   '//'→'/' normalization (NB:242/263/290) as column expressions.
+- no check that a copied file arrived intact (the reference prints a
+  line per file, NB:299) → here: `verify_copy` re-hashes exactly the files
+  a pass wrote, O(written files), never a scan of the destination tree.
+
+Both trees are listed by one source, `graph_manifest`
+(sources/graph_datasource.py), which keeps every name, `_`- and
+`.`-prefixed ones included.
 
 Scale: the manifest is a DataFrame. `execute_copy` repartitions it to
 `parallelism` or the session's defaultParallelism, so the copy is a stage
@@ -39,7 +46,12 @@ from pyspark.sql import types as T
 
 from ..functions.paths import join_path
 from ..registry import query
-from ..sources.graph_datasource import _http_fetch, publish_temp_name, with_retry
+from ..sources.graph_datasource import (
+    GraphManifestDataSource,
+    _http_fetch,
+    publish_temp_name,
+    with_retry,
+)
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -174,98 +186,40 @@ def execute_copy(
     return planned.mapInPandas(copy_partition, RESULT_SCHEMA)
 
 
-def plan_sync(manifest: DataFrame, existing: DataFrame) -> DataFrame:
-    """Incremental-sync plan: full-outer compare of source manifest vs
-    destination state on rel_path → one action per path:
-
-      new        in source only                     → copy
-      changed    both sides, size differs           → re-copy
-      unchanged  both sides, same size              → skip
-      orphan     in destination only                → candidate delete
-
-    The reference re-downloads the whole tree every scheduled run
-    (RM:154-159, NB:283-305); `plan_copy` fixed 'new'; this adds
-    change detection and orphan discovery. One shuffle keyed by rel_path
-    (or zero if both manifests are bucketed by rel_path at the lake)."""
-    src = manifest.select(
-        "rel_path", F.col("file_id"), F.col("download_url"), F.col("size").alias("src_size")
-    )
-    dst = existing.select("rel_path", F.col("size").alias("dst_size"))
-    j = src.join(dst, "rel_path", "full_outer")
-    action = (
-        F.when(F.col("dst_size").isNull(), "new")
-        .when(F.col("src_size").isNull(), "orphan")
-        .when(F.col("src_size") != F.col("dst_size"), "changed")
-        .otherwise("unchanged")
-    )
-    return j.select("rel_path", "file_id", "download_url", "src_size", "dst_size", action.alias("action"))
+def _verify_status(dest_path: str, expected: str) -> str:
+    """Hash the file at `dest_path` in 1 MiB chunks against the md5 the
+    copy recorded: verified, mismatch, or missing (no readable file)."""
+    md5 = hashlib.md5()
+    try:
+        with open(dest_path, "rb") as f:
+            while chunk := f.read(1 << 20):
+                md5.update(chunk)
+    except OSError:
+        return "missing"
+    return "verified" if md5.hexdigest() == expected else "mismatch"
 
 
 def verify_copy(spark: SparkSession, result: DataFrame, dest_root: str) -> DataFrame:
-    """Post-copy verification: re-read the destination tree through the
-    binaryFile source, md5 it JVM-side, and join against the checksum the
-    copy recorded → (dest_path, verify_status ∈ verified|mismatch|missing).
+    """Post-copy verification: re-read each file the copy wrote (its `ok`
+    rows' dest_path, read as the copy wrote it) and compare its md5 with
+    the recorded checksum → (dest_path, verify_status ∈
+    verified|mismatch|missing).
 
-    Distributed end-to-end: the dest scan is a parallel binaryFile read, the
-    comparison one equi-join on dest_path — no driver collect of content.
-    (At the lake, run it as a sampled audit rather than a full second pass.)"""
-    # Anchor both sides on the same absolute form: binaryFile returns
-    # file:-scheme absolute URIs, while the recorded dest_path is whatever
-    # dest_root the caller passed (possibly relative). Strip ONLY the
-    # scheme prefix (anchored regex — a path merely containing 'file:'
-    # must survive) and abspath the recorded side before joining.
-    abs_root = os.path.abspath(dest_root)
-    # mirror join_path's slash collapsing, then drop any trailing slash, so
-    # the prefix length matches the recorded dest_path exactly
-    import re as _re
+    O(written files): the destination tree is not listed, so its other
+    files cost nothing and every name is checked, `_`/`.`-prefixed ones
+    too. Runs in executors over `result`'s partitions — no driver collect
+    of content. `spark` and `dest_root` are not needed: the paths come
+    from `result`."""
 
-    norm_root = _re.sub("/{2,}", "/", dest_root).rstrip("/")
-    copied = result.where(F.col("status") == "ok").select(
-        F.concat(
-            F.lit(abs_root),
-            F.expr(f"substring(dest_path, {len(norm_root) + 1})"),
-        ).alias("dest_path"),
-        F.col("checksum").alias("expected"),
-    )
-    dest = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(abs_root)
-        .select(
-            F.regexp_replace(F.col("path"), r"^file:(//)?", "").alias("dest_path"),
-            F.md5("content").alias("actual"),
-        )
-    )
-    j = copied.join(dest, "dest_path", "left")
-    return j.select(
-        "dest_path",
-        F.when(F.col("actual").isNull(), "missing")
-        .when(F.col("actual") == F.col("expected"), "verified")
-        .otherwise("mismatch")
-        .alias("verify_status"),
-    )
+    def verify_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            status = [_verify_status(p, c) for p, c in zip(pdf["dest_path"], pdf["checksum"])]
+            yield pd.DataFrame({"dest_path": pdf["dest_path"], "verify_status": status})
 
-
-def manifest_from_local_dir(spark: SparkSession, root: str) -> DataFrame:
-    """Filesystem flavor of the listing: Spark's own distributed recursive
-    listing (binaryFile + recursiveFileLookup) — no driver walk at all.
-    Only file STATUS is read here (content deferred; pathGlobFilter and
-    pushdown apply). Rows follow `MANIFEST_SCHEMA`'s columns."""
-    root = os.path.abspath(root)
-    listing = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path", "length")
-    )
-    prefix = "file:" + root.rstrip("/") + "/"
-    rel = F.replace(F.col("path"), F.lit(prefix), F.lit(""))
-    return listing.select(
-        F.md5("path").alias("file_id"),
-        F.element_at(F.split(F.col("path"), "/"), -1).alias("name"),
-        rel.alias("rel_path"),
-        F.col("path").alias("download_url"),
-        F.col("length").alias("size"),
+    return (
+        result.where(F.col("status") == "ok")
+        .select("dest_path", "checksum")
+        .mapInPandas(verify_partition, "dest_path string, verify_status string")
     )
 
 
@@ -275,12 +229,14 @@ def copy_tree(
     dest_root: str,
     parallelism: int | None = None,
 ) -> DataFrame:
-    """End-to-end: enumerate src_root → anti-join against dest state →
-    distributed copy → result manifest."""
-    manifest = manifest_from_local_dir(spark, src_root)
+    """End-to-end: list src_root (and dest_root, when it holds anything)
+    through `graph_manifest` → anti-join against dest state → distributed
+    copy → result manifest."""
+    spark.dataSource.register(GraphManifestDataSource)
+    manifest = spark.read.format("graph_manifest").load(src_root)
     existing = None
     if os.path.isdir(dest_root) and any(os.scandir(dest_root)):
-        existing = manifest_from_local_dir(spark, dest_root)
+        existing = spark.read.format("graph_manifest").load(dest_root)
     todo = plan_copy(manifest, existing)
     return execute_copy(todo, dest_root, parallelism=parallelism)
 
@@ -419,11 +375,11 @@ def q54_copy_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     Its fixed round-robin repartition(32) is gone: 32 Python tasks of 8
     tiny files each were pure per-task overhead on a small host. The copy
     now takes `execute_copy`'s default, one exchange to the session's
-    defaultParallelism (README design rule 10). At 32 cores the
-    binaryFile scan already splits the 256 files into about 32
-    partitions, so the task count there does not change; at 4 cores the
-    copy runs 4 tasks where the scan's splits gave about 9. Result
-    columns are unchanged."""
+    defaultParallelism (README design rule 10). The listing is
+    `copy_tree`'s `graph_manifest` scan, whose 8 directories of 32 files
+    each cost more than one split and so list as 8 partitions; the copy
+    runs defaultParallelism tasks whatever that count is. Result columns
+    are unchanged."""
     global LAST_COPY_WALL_SEC
     import shutil
     import tempfile

@@ -292,7 +292,7 @@ class GraphManifestReader(DataSourceReader):
             nxt = []
             for d, base in frontier:
                 cost = 0
-                for name, child, size in self._entries(d):
+                for name, child, size, _, _ in self._entries(d, base):
                     if child is None:
                         cost += size + OPEN_COST_BYTES
                     else:
@@ -301,51 +301,32 @@ class GraphManifestReader(DataSourceReader):
             frontier = nxt
         return _pack_dirs(dirs, len(os.sched_getaffinity(0)))
 
-    def _entries(self, d: str):
-        """(name, subdir path or None, file size) per listed entry."""
+    def _entries(self, d: str, base: str):
+        """(name, subdir path or None, size, file_id, download_url) per
+        listed entry of directory `d` (rel_base `base`); a subdirectory
+        has size 0 and no file_id or download_url."""
         if self.http:
             for item in _iter_pages(d, auth=self.auth):
+                name = item["name"]
                 if "folder" not in item:
-                    yield item["name"], None, int(item.get("size", 0))
+                    rel = f"{base}/{name}" if base else name
+                    url = item.get("@microsoft.graph.downloadUrl") or item.get("downloadUrl")
+                    yield name, None, int(item.get("size", 0)), item.get("id", rel), url
                 elif item.get("childrenUrl"):
-                    yield item["name"], item["childrenUrl"], 0
-        else:
-            for e in sorted(os.scandir(d), key=lambda e: e.name):
-                if e.is_dir():
-                    yield e.name, e.path, 0
-                elif e.is_file() and not _PUBLISH_TEMP.fullmatch(e.name):
-                    yield e.name, None, e.stat().st_size
+                    yield name, item["childrenUrl"], 0, None, None
+            return
+        for e in sorted(os.scandir(d), key=lambda e: e.name):
+            if e.is_dir():
+                yield e.name, e.path, 0, None, None
+            elif e.is_file() and not _PUBLISH_TEMP.fullmatch(e.name):
+                yield e.name, None, e.stat().st_size, d + "/" + e.name, e.path
 
     def read(self, partition: DirsPartition):
         keep = _row_filter(self.pushed)
         for d, base in partition.dirs:
-            yield from self._read_dir(d, base, keep)
-
-    def _read_dir(self, d: str, base: str, keep):
-        if self.http:
-            for item in _iter_pages(d, auth=self.auth):
-                if "folder" in item:
-                    continue
-                name, size = item["name"], int(item.get("size", 0))
-                if not keep(name, size):
-                    continue
-                rel = f"{base}/{name}" if base else name
-                yield (
-                    item.get("id", rel),
-                    name,
-                    rel,
-                    item.get("@microsoft.graph.downloadUrl") or item.get("downloadUrl"),
-                    size,
-                )
-            return
-        for e in sorted(os.scandir(d), key=lambda e: e.name):
-            if not e.is_file() or _PUBLISH_TEMP.fullmatch(e.name):
-                continue
-            size = e.stat().st_size
-            if not keep(e.name, size):
-                continue
-            rel = f"{base}/{e.name}" if base else e.name
-            yield (d + "/" + e.name, e.name, rel, e.path, size)
+            for name, child, size, file_id, url in self._entries(d, base):
+                if child is None and keep(name, size):
+                    yield file_id, name, f"{base}/{name}" if base else name, url, size
 
 
 class GraphManifestPushdownReader(GraphManifestReader):

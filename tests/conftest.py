@@ -52,7 +52,6 @@ SLOW_FILES = {
 # named function are all marked.
 SLOW_TESTS = {
     ("test_analytics_ops.py", "test_stream_left_outer_covers_every_click"),
-    ("test_audit_stream_sink.py", "test_stream_writes_ledgered_jsonl"),
     ("test_cdf_timestamp_type.py", "test_delta_cdc_stream_timestamp_type"),
     ("test_column_defaults.py", "test_overwrite_and_merge_fill_defaults"),
     ("test_column_mapping.py", "test_cdc_and_lite_source_resolve_physical_names"),
@@ -92,7 +91,6 @@ SLOW_TESTS = {
     ("test_deltalog.py", "test_shallow_clone_shares_files_and_diverges"),
     ("test_deltalog.py", "test_type_widening_reads_old_files_upcast"),
     ("test_deltalog.py", "test_v2_checkpoint_sidecars_roundtrip"),
-    ("test_events_stream_source.py", "test_stream_agg_through_custom_source_equals_batch"),
     ("test_file_stats.py", "test_incremental_maintains_file_blobs"),
     ("test_file_stats.py", "test_unified_incremental_maintains_partition_blobs"),
     ("test_file_stats.py", "test_unified_incremental_survives_stream_append"),

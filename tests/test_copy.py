@@ -15,7 +15,6 @@ from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.copy_plan import (
     PERMISSIONS_SCHEMA,
     copy_tree,
     execute_copy,
-    manifest_from_local_dir,
     plan_copy,
     plan_grants,
 )
@@ -249,16 +248,6 @@ def test_manifest_from_tree_empty(spark, tmp_path):
     assert plan_copy(m, None).count() == 0
 
 
-def test_manifest_from_local_dir_rel_paths(spark, tmp_path):
-    src = str(tmp_path / "src")
-    _build_tree(src)
-    m = manifest_from_local_dir(spark, src)
-    rels = {r["rel_path"] for r in m.collect()}
-    assert rels == {"a.csv", "sub1/b.bin", "sub1/sub2/c.txt"}
-    sizes = {r["rel_path"]: r["size"] for r in m.collect()}
-    assert sizes["sub1/b.bin"] == 200
-
-
 def test_observe_metrics_on_copy_result(spark, tmp_path):
     """O23 (success counter) the Spark-native way: df.observe attaches
     aggregate metrics to the copy-result materialization — no second pass
@@ -277,34 +266,6 @@ def test_observe_metrics_on_copy_result(spark, tmp_path):
     result.collect()
     got = obs.get
     assert got["n_files"] == 3 and got["n_ok"] == 3 and got["total_bytes"] > 0
-
-
-def test_plan_sync_actions(spark, tmp_path):
-    """new / changed / unchanged / orphan classification from a full-outer
-    manifest compare."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.copy_plan import plan_sync
-
-    src = tmp_path / "src"
-    dst = tmp_path / "dst"
-    for d in (src, dst):
-        d.mkdir()
-    (src / "same.txt").write_bytes(b"identical")
-    (dst / "same.txt").write_bytes(b"identical")
-    (src / "changed.txt").write_bytes(b"new content longer")
-    (dst / "changed.txt").write_bytes(b"old")
-    (src / "fresh.txt").write_bytes(b"brand new")
-    (dst / "stale.txt").write_bytes(b"only in dest")
-
-    plan = plan_sync(
-        manifest_from_local_dir(spark, str(src)), manifest_from_local_dir(spark, str(dst))
-    )
-    actions = {r["rel_path"]: r["action"] for r in plan.collect()}
-    assert actions == {
-        "same.txt": "unchanged",
-        "changed.txt": "changed",
-        "fresh.txt": "new",
-        "stale.txt": "orphan",
-    }
 
 
 def test_copy_retry_and_checksum(spark, tmp_path):
@@ -335,7 +296,8 @@ def test_copy_retry_and_checksum(spark, tmp_path):
 
 def test_verify_copy_detects_corruption(spark, tmp_path):
     """verify_copy: clean copies verify; a post-copy corruption and a deleted
-    file surface as mismatch / missing."""
+    file surface as mismatch / missing. `_`- and `.`-prefixed names, files
+    and folders alike, are listed, copied and verified like any other."""
     from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.copy_plan import (
         copy_tree,
         verify_copy,
@@ -345,23 +307,30 @@ def test_verify_copy_detects_corruption(spark, tmp_path):
     src.mkdir()
     for i in range(4):
         (src / f"f{i}.bin").write_bytes(b"x" * (i + 1) * 10)
+    hidden = ["_under.bin", ".dot.bin", "_folder/inner.bin"]
+    (src / "_folder").mkdir()
+    for name in hidden:
+        (src / name).write_bytes(name.encode())
     dest = tmp_path / "dst"
     result = copy_tree(spark, str(src), str(dest)).cache()
-    assert result.where("status = 'ok'").count() == 4
+    assert result.where("status = 'ok'").count() == 7
+    assert all((dest / name).read_bytes() == name.encode() for name in hidden)
 
     (dest / "f0.bin").write_bytes(b"corrupted!")
     (dest / "f1.bin").unlink()
-    verdict = {r["dest_path"].split("/")[-1]: r["verify_status"]
+    verdict = {os.path.relpath(r["dest_path"], dest): r["verify_status"]
                for r in verify_copy(spark, result, str(dest)).collect()}
     assert verdict["f0.bin"] == "mismatch"
     assert verdict["f1.bin"] == "missing"
     assert verdict["f2.bin"] == "verified" and verdict["f3.bin"] == "verified"
+    assert all(verdict[name] == "verified" for name in hidden)
 
 
 def test_verify_copy_with_relative_dest_root(spark, tmp_path):
-    """verify_copy must anchor the recorded dest_path and the binaryFile
-    scan on the same absolute form — a relative dest_root used to mis-join
-    and report every file as missing."""
+    """A relative dest_root verifies: verify_copy re-reads each recorded
+    dest_path as the copy wrote it (it once mis-joined a relative root
+    against an absolute destination scan and reported every file as
+    missing)."""
     import os
 
     from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.copy_plan import (
@@ -405,10 +374,9 @@ def _exchange_between(lines, upper: str, lower: str) -> bool:
 
 
 def test_copy_stage_is_separated_from_its_listing_scan(spark, tmp_path):
-    """One exchange sits between the listing scan and the copy's
-    MapInPandas, for the Python graph_manifest scan and for the binaryFile
-    listing alike, so a copy task never shares its stage (and a second
-    Python worker) with a Python scan."""
+    """One exchange sits between the Python graph_manifest scan and the
+    copy's MapInPandas, so a copy task never shares its stage (and a
+    second Python worker) with a Python scan."""
     src = str(tmp_path / "src")
     _build_tree(src)
     _register_graph_manifest(spark)
@@ -418,8 +386,6 @@ def test_copy_stage_is_separated_from_its_listing_scan(spark, tmp_path):
     lines = _plan_lines(graph)
     assert any("BatchScan graph_manifest" in line and "(Python)" in line for line in lines)
     assert _exchange_between(lines, "MapInPandas", "BatchScan graph_manifest")
-    local = execute_copy(plan_copy(manifest_from_local_dir(spark, src), None), str(tmp_path / "d2"))
-    assert _exchange_between(_plan_lines(local), "MapInPandas", "FileScan binaryFile")
 
 
 def test_one_directory_drive_is_copied_by_every_task_slot(spark, tmp_path):

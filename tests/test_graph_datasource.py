@@ -1,5 +1,5 @@
 """Python Data Source for the tree listing: size-packed directory
-partitions, row parity with Spark's binaryFile listing, the Graph page
+partitions, row parity with an os.walk of the tree, the Graph page
 fixture served over http, and filter pushdown semantics."""
 
 import os
@@ -7,10 +7,7 @@ from collections import Counter
 
 from pyspark.sql import functions as F
 
-from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.copy_plan import (
-    manifest_from_local_dir,
-    plan_copy,
-)
+from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.copy_plan import plan_copy
 from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.graph_datasource import (
     MANIFEST_SCHEMA,
     MAX_PARTITION_BYTES,
@@ -33,6 +30,15 @@ def _build_tree(root):
         f.write("hello\n")
 
 
+def _walk_manifest(root):
+    """(rel_path, size) of every file under `root`, by os.walk."""
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), root), os.path.getsize(os.path.join(d, f)))
+        for d, _, files in os.walk(root)
+        for f in files
+    )
+
+
 def _register(spark):
     try:
         spark.dataSource.register(GraphManifestDataSource)
@@ -44,16 +50,16 @@ def test_source_matches_driver_walk_manifest(spark, tmp_path):
     root = str(tmp_path / "tree")
     os.makedirs(root)
     _build_tree(root)
+    with open(os.path.join(root, "sub1", "_hidden.txt"), "w") as f:
+        f.write("kept\n")
     _register(spark)
-    via_source = {
+    via_source = sorted(
         (r["rel_path"], r["size"])
         for r in spark.read.format("graph_manifest").load(root).collect()
-    }
-    via_walk = {
-        (r["rel_path"], r["size"]) for r in manifest_from_local_dir(spark, root).collect()
-    }
-    assert via_source == via_walk
+    )
+    assert via_source == _walk_manifest(root)
     assert ("sub1/sub2/c.txt", 6) in via_source
+    assert ("sub1/_hidden.txt", 5) in via_source
 
 
 def test_filter_pushdown_applies_in_reader(spark, tmp_path):
@@ -360,6 +366,8 @@ def test_packed_partitions_hold_whole_directories(tmp_path, serve, pin_cores, mo
 def test_small_directories_share_partitions(spark, tmp_path, serve, pin_cores, mode):
     root = str(tmp_path / "tree")
     _wide_tree(root)
+    with open(os.path.join(root, "c2", ".hidden.bin"), "wb") as f:
+        f.write(b"z" * 9)
     src = _source(mode, root, serve)
     pin_cores(4)
     parts = GraphManifestReader({"path": src}).partitions()
@@ -368,11 +376,8 @@ def test_small_directories_share_partitions(spark, tmp_path, serve, pin_cores, m
     via_source = sorted(
         (r["rel_path"], r["size"]) for r in spark.read.format("graph_manifest").load(src).collect()
     )
-    via_walk = sorted(
-        (r["rel_path"], r["size"]) for r in manifest_from_local_dir(spark, root).collect()
-    )
-    assert via_source == via_walk
-    assert len(via_source) == 48
+    assert via_source == _walk_manifest(root)
+    assert len(via_source) == 49
 
 
 def test_packing_adds_no_listing_requests(spark, listing_base, pin_cores):
