@@ -328,9 +328,7 @@ def test_verify_copy_detects_corruption(spark, tmp_path):
 
 def test_verify_copy_with_relative_dest_root(spark, tmp_path):
     """A relative dest_root verifies: verify_copy re-reads each recorded
-    dest_path as the copy wrote it (it once mis-joined a relative root
-    against an absolute destination scan and reported every file as
-    missing)."""
+    dest_path as the copy wrote it."""
     import os
 
     from copy_sharepoint_to_onelake_lakehousefiles_spark.plans.copy_plan import (
