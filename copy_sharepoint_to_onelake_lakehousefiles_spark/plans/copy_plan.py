@@ -375,7 +375,7 @@ def q54_copy_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     Its fixed round-robin repartition(32) is gone: 32 Python tasks of 8
     tiny files each were pure per-task overhead on a small host. The copy
     now takes `execute_copy`'s default, one exchange to the session's
-    defaultParallelism (README design rule 10). The listing is
+    defaultParallelism (README design rule 11). The listing is
     `copy_tree`'s `graph_manifest` scan, whose 8 directories of 32 files
     each cost more than one split and so list as 8 partitions; the copy
     runs defaultParallelism tasks whatever that count is. Result columns

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import materialize, query, session_memo
+from ..sources.lite_source import _overlaps
 from ..tables import load
 from .roaring import (
     deserialize_rba,
@@ -89,6 +90,19 @@ def _commit_meta(actions: list[dict]) -> dict | None:
     return next(
         (a["metaData"] for a in actions if "metaData" in a and a["metaData"].get("id")), None
     )
+
+
+def _add_stats(a: dict) -> dict:
+    """A Delta add action's parsed ``stats`` ({} when it records none)."""
+    raw = a.get("stats")
+    return json.loads(raw) if isinstance(raw, str) else (raw or {})
+
+
+def _add_ranges(a: dict) -> dict:
+    """{physical column: (min, max)} from a Delta add action's stats."""
+    st = _add_stats(a)
+    mins, maxs = st.get("minValues") or {}, st.get("maxValues") or {}
+    return {c: (mins[c], maxs[c]) for c in mins if c in maxs}
 
 
 def _fmt_checkpoint(v: int) -> str:
@@ -303,12 +317,6 @@ class DeltaTable:
             # a complete multi-part set wins over a same-version single
             out[v] = names
         return out
-
-    def _checkpoint_files(self) -> dict[int, str]:
-        """version → FIRST file of the usable checkpoint (back-compat shim
-        for single-file callers; multi-part-aware callers use
-        `_checkpoint_sets`)."""
-        return {v: names[0] for v, names in self._checkpoint_sets().items()}
 
     def _checkpoint_version_at_or_before(self, version: int) -> int | None:
         cands = [v for v in self._checkpoint_sets() if v <= version]
@@ -525,16 +533,13 @@ class DeltaTable:
     def _files_rows(self, version: int | None = None) -> list[tuple]:
         rows = []
         for a in self.files(version):
-            st = a.get("stats")
-            if isinstance(st, str):
-                st = json.loads(st)
             dv = a.get("deletionVector") or {}
             rows.append(
                 (
                     a["path"],
                     {k: v for k, v in (a.get("partitionValues") or {}).items()},
                     int(a.get("size") or 0),
-                    int((st or {}).get("numRecords") or 0),
+                    int(_add_stats(a).get("numRecords") or 0),
                     int(dv.get("cardinality") or 0),
                 )
             )
@@ -599,20 +604,18 @@ class DeltaTable:
             return p
         return os.path.join(self.root, p)
 
-    def files(
+    def _prune(
         self,
-        version: int | None = None,
+        adds: list[dict],
+        meta: dict,
         partition_filter: dict | None = None,
         bounds: dict | None = None,
     ) -> list[dict]:
-        """Live add-actions, optionally pruned by partition-value equality
-        and/or per-column [lo, hi] ``bounds`` against the add-action's stats
-        (minValues/maxValues) — all pruning happens on the LOG, before any
-        parquet footer is opened. Files without stats for a bounded column
-        are conservatively kept. Filter/bounds keys are LOGICAL names;
-        partitionValues and stats are keyed by PHYSICAL names under column
-        mapping, so both are translated before matching."""
-        adds, meta = self.snapshot(version)
+        """The add actions of one resolved snapshot kept by partition-value
+        equality and per-column [lo, hi] ``bounds`` against each action's
+        stats (``lite_source._overlaps``: a column without comparable stats
+        keeps the file). Keys are LOGICAL names; partitionValues and stats
+        are keyed by PHYSICAL names under column mapping."""
         phys = self._phys_map(meta)
         if partition_filter:
             want = {phys.get(k, k): str(v) for k, v in partition_filter.items()}
@@ -622,22 +625,50 @@ class DeltaTable:
                 if all((a.get("partitionValues") or {}).get(k) == v for k, v in want.items())
             ]
         if bounds:
-            def overlaps(a: dict) -> bool:
-                raw = a.get("stats")
-                if not raw:
-                    return True
-                st = json.loads(raw) if isinstance(raw, str) else raw
-                mins, maxs = st.get("minValues") or {}, st.get("maxValues") or {}
-                for c, (lo, hi) in bounds.items():
-                    pc = phys.get(c, c)
-                    if pc not in mins or pc not in maxs:
-                        continue
-                    if (hi is not None and mins[pc] > hi) or (lo is not None and maxs[pc] < lo):
-                        return False
-                return True
-
-            adds = [a for a in adds if overlaps(a)]
+            fb = {phys.get(c, c): b for c, b in bounds.items()}
+            adds = [a for a in adds if _overlaps(_add_ranges(a), fb)]
         return adds
+
+    def files(
+        self,
+        version: int | None = None,
+        partition_filter: dict | None = None,
+        bounds: dict | None = None,
+    ) -> list[dict]:
+        """Live add-actions, optionally pruned by partition-value equality
+        and/or per-column [lo, hi] ``bounds`` (``_prune``) — all pruning
+        happens on the LOG, before any parquet footer is opened."""
+        adds, meta = self.snapshot(version)
+        return self._prune(adds, meta, partition_filter, bounds)
+
+    def _validate_partition_filter(self, partition_filter: dict, meta: dict) -> None:
+        """Refuse partition_filter keys the snapshot of ``meta`` does not
+        partition by: ``files()`` matches nothing on an unknown key, so a
+        typo would size the table at zero — the twin of
+        ``IcebergTable._validate_partition_filter``."""
+        pcols = list(meta.get("partitionColumns") or [])
+        unknown = set(partition_filter) - set(pcols)
+        if unknown:
+            raise ValueError(
+                f"partition_filter key(s) {sorted(unknown)} are not"
+                f" partition columns of this table (known: {pcols})"
+            )
+
+    def pruned_size(self, partition_filter: dict | None = None) -> dict:
+        """{rows, bytes, files, files_total} of the live files a validated
+        ``partition_filter`` keeps, from one log replay: rows from the add
+        actions' ``stats.numRecords`` (0 without stats), bytes from
+        ``size``."""
+        adds, meta = self.snapshot()
+        if partition_filter:
+            self._validate_partition_filter(partition_filter, meta)
+        kept = self._prune(adds, meta, partition_filter)
+        return {
+            "rows": sum(int(_add_stats(a).get("numRecords") or 0) for a in kept),
+            "bytes": sum(int(a.get("size") or 0) for a in kept),
+            "files": len(kept),
+            "files_total": len(adds),
+        }
 
     def read(
         self,
@@ -651,13 +682,30 @@ class DeltaTable:
         combination (bounded by partition count), then unioned. ``bounds``
         skips files via log stats; callers still apply the row-level filter
         (skipping is a superset guarantee, same as Delta's)."""
-        _, meta = self.snapshot(version)
-        full_schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        part_cols = list(meta.get("partitionColumns") or [])
-        adds = self.files(version, partition_filter, bounds)
+        adds, meta = self.snapshot(version)
+        return self._read_snapshot(self._prune(adds, meta, partition_filter, bounds), meta)
+
+    def _read_snapshot(self, adds: list[dict], meta: dict) -> DataFrame:
+        """``_read_entries`` of ``adds`` under ``meta``'s schema."""
         return self._read_entries(
-            adds, full_schema, part_cols, phys=self._phys_map(meta)
+            adds,
+            T.StructType.fromJson(json.loads(meta["schemaString"])),
+            list(meta.get("partitionColumns") or []),
+            phys=self._phys_map(meta),
         )
+
+    def _files_point(self, adds: list[dict], meta: dict, column: str, value) -> list[dict]:
+        from .parquet_bloom import file_maybe_contains
+
+        cands = self._prune(adds, meta, bounds={column: (value, value)})
+        if not self._bloom_cols(meta):
+            return cands
+        pc = self._phys_map(meta).get(column, column)
+        return [
+            a
+            for a in cands
+            if file_maybe_contains(self._abs_path(a["path"]), pc, value)
+        ]
 
     def files_point(
         self, column: str, value, version: int | None = None
@@ -677,19 +725,8 @@ class DeltaTable:
         coordinator does during planning; cost is O(candidates), zero data
         I/O, and at 100 TB the stats tier has already bounded candidates
         to the key's range peers."""
-        from .parquet_bloom import file_maybe_contains
-
-        _, meta = self.snapshot(version)
-        phys = self._phys_map(meta)
-        cands = self.files(version, bounds={column: (value, value)})
-        if not self._bloom_cols(meta):
-            return cands
-        pc = phys.get(column, column)
-        return [
-            a
-            for a in cands
-            if file_maybe_contains(self._abs_path(a["path"]), pc, value)
-        ]
+        adds, meta = self.snapshot(version)
+        return self._files_point(adds, meta, column, value)
 
     def point_lookup(
         self, column: str, value, version: int | None = None
@@ -697,12 +734,9 @@ class DeltaTable:
         """``SELECT * WHERE column = value`` reading only the files that
         survive ``files_point`` (the row-level filter still applies — both
         pruning tiers are superset guarantees, same as Delta's)."""
-        _, meta = self.snapshot(version)
-        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        part_cols = list(meta.get("partitionColumns") or [])
-        adds = self.files_point(column, value, version)
-        return self._read_entries(
-            adds, schema, part_cols, phys=self._phys_map(meta)
+        adds, meta = self.snapshot(version)
+        return self._read_snapshot(
+            self._files_point(adds, meta, column, value), meta
         ).where(F.col(column) == F.lit(value))
 
     def _dv_dead_pairs(self, dv_adds: list[dict]) -> DataFrame:
@@ -2470,8 +2504,7 @@ class DeltaTable:
             descending = props["step"] < 0
             hi = props["hwm"]
             for a in new_adds:
-                raw = a.get("stats")
-                st = json.loads(raw) if isinstance(raw, str) else (raw or {})
+                st = _add_stats(a)
                 if (st.get("nullCount") or {}).get(pk, 0):
                     raise ValueError(
                         f"identity column {name!r} has NULL values in an "
@@ -3591,20 +3624,14 @@ def stream_append(table: DeltaTable, stream_df: DataFrame, stream_id: str, check
     default behaves the same way).
 
     Runs with Trigger.availableNow; returns after the drain completes."""
+    from ..sources.change_feed import drain_exactly_once
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        seen = table.seen_txn(stream_id)
-        if seen is not None and seen >= batch_id:
-            return  # replayed batch: this txn already committed
-        table.append(batch_df, txn=(stream_id, batch_id))
-
-    q = (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    drain_exactly_once(
+        stream_df,
+        checkpoint,
+        lambda: table.seen_txn(stream_id),
+        lambda df, batch_id: table.append(df, txn=(stream_id, batch_id)),
     )
-    q.awaitTermination()
 
 
 # ------------------------------------------------------------------ queries

@@ -1087,6 +1087,20 @@ class IcebergTable:
             )
         return out
 
+    def partition_columns(self) -> list[str]:
+        """The data columns this table partitions by: the IDENTITY fields
+        of every spec (a bucket/truncate field names a derived value that
+        no row carries)."""
+        md = self.metadata()
+        return sorted(
+            {
+                pf["name"]
+                for spec in md["partition-specs"]
+                for pf in self.partition_fields(spec["spec-id"])
+                if pf["transform"] == "identity"
+            }
+        )
+
     @staticmethod
     def _transform_col(pf: dict):
         """Column expression computing a partition field's value from its
@@ -1320,6 +1334,20 @@ class IcebergTable:
                 df_["__spec"] = spec_id
                 entries.append(df_)
         return entries, audit
+
+    def pruned_size(self, partition_filter: dict | None = None) -> dict:
+        """{rows, bytes, files, files_total} of the live data files a
+        validated ``partition_filter`` keeps, from the manifests alone
+        (``record_count`` / ``file_size_in_bytes``)."""
+        if partition_filter:
+            self._validate_partition_filter(partition_filter)
+        entries, audit = self.files(partition_filter=partition_filter)
+        return {
+            "rows": sum(int(e.get("record_count") or 0) for e in entries),
+            "bytes": sum(int(e.get("file_size_in_bytes") or 0) for e in entries),
+            "files": len(entries),
+            "files_total": audit["files_total"],
+        }
 
     def delete_entries(
         self, snapshot_id: int | None = None, index: int | None = None
@@ -5538,13 +5566,12 @@ def stream_append(
     folded to the top level if ANY batch reported it."""
     import logging
 
+    from ..sources.change_feed import drain_exactly_once
+
     stats_log: list[dict] = []
     committed = [0]
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        seen = table.seen_batch(stream_id)
-        if seen is not None and seen >= batch_id:
-            return  # replayed batch: this snapshot already committed
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         table.append(
             batch_df,
             summary_extra={"stream-id": stream_id, "batch-id": str(batch_id)},
@@ -5562,13 +5589,9 @@ def stream_append(
                 )
             stats_log.append({"batch_id": batch_id, **res})
 
-    q = (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    drain_exactly_once(
+        stream_df, checkpoint, lambda: table.seen_batch(stream_id), _commit
     )
-    q.awaitTermination()
     out = {"batches_committed": committed[0], "stats": stats_log}
     if any(s.get("partition_blobs_dropped") for s in stats_log):
         out["partition_blobs_dropped"] = True
@@ -5589,24 +5612,18 @@ def stream_upsert(
     batch is detected via ``seen_batch`` and skipped, and because the
     delete+insert pair is a single snapshot there is no torn half-applied
     state to recover from — the Flink upsert-mode commit shape."""
+    from ..sources.change_feed import drain_exactly_once
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        seen = table.seen_batch(stream_id)
-        if seen is not None and seen >= batch_id:
-            return  # replayed batch: this snapshot already committed
-        table.upsert(
-            batch_df,
+    drain_exactly_once(
+        stream_df,
+        checkpoint,
+        lambda: table.seen_batch(stream_id),
+        lambda df, batch_id: table.upsert(
+            df,
             key,
             summary_extra={"stream-id": stream_id, "batch-id": str(batch_id)},
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination()
 
 
 def delta_to_iceberg_uniform(delta, ice_root: str | None = None) -> IcebergTable:

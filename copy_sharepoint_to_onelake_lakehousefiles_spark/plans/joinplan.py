@@ -83,7 +83,7 @@ def estimate_side(
     them), but here a typo'd key would silently yield an unpruned
     estimate — the opposite of what the caller asked for."""
     if partition_filter:
-        _validate_partition_keys(table, partition_filter)
+        table._validate_partition_filter(partition_filter)
     entries, audit = table.files(
         partition_filter=partition_filter, bounds=bounds
     )
@@ -546,91 +546,19 @@ def planned_join(
     )
 
 
-def _is_delta(table) -> bool:
-    # duck-typed dispatch: DeltaTable carries log_dir, IcebergTable
-    # meta_dir — no import-time coupling between the two modules
-    return hasattr(table, "log_dir")
-
-
-def _validate_partition_keys(table, partition_filter: dict) -> None:
-    """Up-front refusal of partition_filter keys the table does not
-    partition by (ADVICE r10 bug class): ``files()`` tolerates unknown
-    keys by design (Iceberg row-filters them; Delta matches nothing), so
-    a typo here would silently yield an UNPRUNED (Iceberg) or EMPTY
-    (Delta) estimate. ONE copy of the check for every estimator."""
-    if _is_delta(table):
-        _, meta = table.snapshot()
-        pcols = list(meta.get("partitionColumns") or [])
-        unknown = set(partition_filter) - set(pcols)
-        if unknown:
-            raise ValueError(
-                f"partition_filter key(s) {sorted(unknown)} are not"
-                f" partition columns of this table (known: {pcols})"
-            )
-        return
-    md = table.metadata()
-    known: set = set()
-    for spec in md["partition-specs"]:
-        for pf in table.partition_fields(spec["spec-id"]):
-            known.add(pf["name"])
-            known.add(pf["source_name"])
-    unknown = set(partition_filter) - known
-    if unknown:
-        raise ValueError(
-            f"partition_filter key(s) {sorted(unknown)} are not"
-            f" partition fields of this table (known: {sorted(known)})"
-            " — a typo here would silently produce an UNPRUNED estimate"
-        )
-
-
 def estimate_table_size(
     table, partition_filter: dict | None = None, inflation: float = PARQUET_INFLATION
 ) -> dict:
     """Metadata-only size of a table AFTER partition pruning — the
     broadcast-decision inputs without requiring NDV statistics (sizing
     needs bytes, not distinctness, so an un-ANALYZEd table still gets a
-    correct broadcast call from its manifests). Accepts IcebergTable
-    (manifest entries) and DeltaTable (add-action ``size`` +
-    ``stats.numRecords``). partition_filter keys validate up front like
-    estimate_side — for Delta a typo'd key would match NOTHING and a
-    zero estimate would broadcast an actually-big table."""
-    import json as _json
-
-    if partition_filter:
-        _validate_partition_keys(table, partition_filter)
-    if _is_delta(table):
-        adds = table.files(partition_filter=partition_filter)
-        rows = 0
-        for a in adds:
-            raw = a.get("stats")
-            st = (
-                _json.loads(raw)
-                if isinstance(raw, str)
-                else (raw or {})
-            )
-            rows += int(st.get("numRecords") or 0)
-        nbytes = sum(int(a.get("size") or 0) for a in adds)
-        # unfiltered: adds IS the full live set — no second log replay
-        files_total = (
-            len(adds) if not partition_filter else len(table.files())
-        )
-        return {
-            "rows": rows,
-            "bytes": nbytes,
-            "est_mem_bytes": int(nbytes * inflation),
-            "files": len(adds),
-            "files_total": files_total,
-        }
-    entries, audit = table.files(partition_filter=partition_filter)
-    rows = sum(int(e.get("record_count") or 0) for e in entries)
-    nbytes = sum(int(e.get("file_size_in_bytes") or 0) for e in entries)
-    return {
-        "rows": rows,
-        "bytes": nbytes,
-        "est_mem_bytes": int(nbytes * inflation),
-        "files": len(entries),
-        "files_total": audit["files_total"],
-    }
+    correct broadcast call from its manifests). The table answers from
+    one snapshot (``pruned_size``: Iceberg manifest entries, Delta
+    add-action sizes and record counts) and refuses partition_filter keys
+    it does not partition by — for Delta a typo'd key would match NOTHING
+    and a zero estimate would broadcast an actually-big table."""
+    est = table.pruned_size(partition_filter)
+    return {**est, "est_mem_bytes": int(est["bytes"] * inflation)}
 
 
 def register_stats_view(
@@ -673,18 +601,11 @@ def register_stats_view(
     session enables python filter pushdown. Returns the decision record
     (rows/bytes/files plus ``broadcast``)."""
     est = estimate_table_size(table, partition_filter, inflation)
-    if source == "lite" and partition_filter and not _is_delta(table):
+    if source == "lite" and partition_filter:
         # the lite path applies the filter as row predicates on DATA
-        # columns — only IDENTITY partition fields are data columns; a
-        # bucket/truncate field NAME would reference a column that does
-        # not exist (or worse, silently filter the wrong thing)
-        identity = {
-            pf["name"]
-            for spec in table.metadata()["partition-specs"]
-            for pf in table.partition_fields(spec["spec-id"])
-            if pf["transform"] == "identity"
-        }
-        bad = set(partition_filter) - identity
+        # columns — a bucket/truncate field NAME would reference a column
+        # that does not exist (or worse, silently filter the wrong thing)
+        bad = set(partition_filter) - set(table.partition_columns())
         if bad:
             raise ValueError(
                 f"lite-source partition_filter supports IDENTITY partition"
@@ -924,8 +845,9 @@ def q223_txtable_stats_broadcast_flip(
     """The q218 pin over ``delta_lite`` scans: the same ad-hoc SQL join
     plans SortMergeJoin unassisted (Spark sizes Python data sources at
     defaultSizeInBytes) and BroadcastHashJoin once ``stats_sql`` folds
-    each side's add actions — rows from ``stats.numRecords``, bytes from
-    ``size`` — results hash-identical either way."""
+    each side's add actions (``DeltaTable.pruned_size``: rows from their
+    record-count stats, bytes from their sizes) — results hash-identical
+    either way."""
     return _stats_broadcast_flip(spark, *_demo_delta_join(spark, sf_dir))
 
 
@@ -1269,11 +1191,7 @@ def plan_join_tree(
                 continue
             a = node["table"]
             # skew is read from identity-partition row counts in the
-            # manifests — an Iceberg-only surface; Delta sides
-            # (no partition_fields / different files() contract) simply
-            # carry no advisory, they are never an error
-            if not hasattr(tables[a], "partition_fields"):
-                continue
+            # manifests (every table here carries .ndv, checked above)
             est = estimate_side(tables[a], col, pfs.get(a))
             if est["skewed"]:
                 salt = {

@@ -337,3 +337,26 @@ def drain_feed(spark, source: type[ChangeFeedSource], root: str, finish):
         return materialize(finish(spark.read.parquet(sink)))
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def drain_exactly_once(stream_df, checkpoint: str, seen, commit) -> None:
+    """Drain ``stream_df`` once (Trigger.availableNow) into a table sink
+    exactly once: each micro-batch runs ``commit(batch_df, batch_id)``,
+    which stamps the commit with the batch id, unless ``seen()`` (the last
+    id the table's log recorded for this stream, or None) shows the batch
+    already committed — a batch replayed after a crash-restart (same
+    checkpoint → same batchId) is skipped instead of applied twice."""
+
+    def _write(batch_df, batch_id: int) -> None:
+        last = seen()
+        if last is not None and last >= batch_id:
+            return  # replayed batch: already committed
+        commit(batch_df, batch_id)
+
+    (
+        stream_df.writeStream.foreachBatch(_write)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )

@@ -484,18 +484,9 @@ class DeltaLiteDataSource(LiteDataSource):
     def plan(r) -> list[ScanTask]:
         t = r.table
         adds, meta = t.snapshot(r.version)
+        adds = t._prune(adds, meta, r.partition_filter, r.bounds)
         part = set(meta.get("partitionColumns") or [])
         phys = t._phys_map(meta)
-        if r.partition_filter:
-            want = {phys.get(c, c): str(v) for c, v in r.partition_filter.items()}
-            adds = [
-                a
-                for a in adds
-                if all((a.get("partitionValues") or {}).get(k) == v for k, v in want.items())
-            ]
-        if r.bounds:
-            fb = {phys.get(c, c): b for c, b in r.bounds.items()}
-            adds = [a for a in adds if _overlaps(_add_ranges(a), fb)]
         # row-group pruning needs data columns: partition columns are
         # constant per file and not stored in it
         rg_bounds = {phys.get(c, c): b for c, b in r.bounds.items() if c not in part}
@@ -536,16 +527,6 @@ def delta_task_factory(t, meta: dict):
         )
 
     return task
-
-
-def _add_ranges(a: dict) -> dict:
-    """{physical column: (min, max)} from a Delta add action's stats."""
-    raw = a.get("stats")
-    if not raw:
-        return {}
-    st = json.loads(raw) if isinstance(raw, str) else raw
-    mins, maxs = st.get("minValues") or {}, st.get("maxValues") or {}
-    return {c: (mins[c], maxs[c]) for c in mins if c in maxs}
 
 
 class IcebergLiteDataSource(LiteDataSource):

@@ -126,12 +126,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if declared is not None and list(df.columns) != declared:
         raise ValueError(f"table {name}: expected columns {declared}, got {df.columns}")
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

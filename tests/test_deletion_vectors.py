@@ -154,31 +154,16 @@ def test_dv_delta_lite_source_agrees(spark, root):
     assert via.count() == 6
 
 
-def test_dv_cdc_nets_to_deleted_rows(spark, root, tmp_path):
+def test_dv_cdc_nets_to_deleted_rows(spark, root):
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         DeltaCdcDataSource,
+        drain_feed,
     )
 
     df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, tag string")
     t = DeltaTable.create(spark, root, df.coalesce(1))
     t.delete_vectors("k = 2")
-    try:
-        spark.dataSource.register(DeltaCdcDataSource)
-    except Exception:
-        pass
-    sink = os.path.join(str(tmp_path), "sink")
-    q = (
-        spark.readStream.format("delta_cdc")
-        .load(root)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    feed = spark.read.parquet(sink)
+    feed = drain_feed(spark, DeltaCdcDataSource, root, lambda f: f)
     got = sorted(
         (r["commit_version"], r["change_type"], r["k"]) for r in feed.collect()
     )

@@ -244,6 +244,7 @@ def test_typed_partition_values_read_natively(spark, root, value_sql):
     timestamp, not only numbers/booleans) and return the native rows."""
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         DeltaCdcDataSource,
+        drain_feed,
     )
 
     df = spark.sql(f"SELECT id AS k, {value_sql} AS d FROM range(3)")
@@ -251,17 +252,5 @@ def test_typed_partition_values_read_natively(spark, root, value_sql):
     native = _rows(t.read().select("k", "d"))
     _register(spark)
     assert _rows(spark.read.format("delta_lite").load(root).select("k", "d")) == native
-    spark.dataSource.register(DeltaCdcDataSource)
-    sink = os.path.join(root, "_cdc_sink")
-    q = (
-        spark.readStream.format("delta_cdc")
-        .load(root)
-        .select("k", "d")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(root, "_cdc_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert _rows(spark.read.parquet(sink)) == native
+    feed = drain_feed(spark, DeltaCdcDataSource, root, lambda f: f.select("k", "d"))
+    assert _rows(feed) == native

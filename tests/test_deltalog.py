@@ -246,6 +246,68 @@ def test_snapshot_lists_the_log_once(root, monkeypatch):
     assert len(t.snapshot()[0]) == 32 and len(calls) == 1
 
 
+def _hand_written_log(root, cols, adds):
+    """A one-commit ``_delta_log`` with schema ``cols`` ([(name, type)])
+    and the given add actions — no data files are written."""
+    os.makedirs(os.path.join(root, "_delta_log"))
+    fields = [{"name": n, "type": ty, "nullable": True, "metadata": {}} for n, ty in cols]
+    acts = [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {"metaData": {"id": "t", "format": {"provider": "parquet", "options": {}},
+                      "schemaString": json.dumps({"type": "struct", "fields": fields}),
+                      "partitionColumns": [], "configuration": {}}},
+        *({"add": {"partitionValues": {}, "size": 1, "modificationTime": 0,
+                   "dataChange": True, **a}} for a in adds),
+    ]
+    with open(os.path.join(root, "_delta_log", _fmt_commit(0)), "w") as f:
+        f.write("".join(json.dumps(a) + "\n" for a in acts))
+    return DeltaTable(None, root)
+
+
+def test_date_bounds_prune_like_the_lite_planner(root):
+    """A ``datetime.date`` bound against a date column's string stats is
+    incomparable: ``files(bounds=)`` keeps the file, as the ``delta_lite``
+    pushdown planner does, instead of raising ``TypeError``."""
+    import datetime
+
+    from pyspark.sql.datasource import GreaterThanOrEqual
+
+    from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
+        DeltaLiteDataSource,
+    )
+
+    def stats(d):
+        return json.dumps({"numRecords": 1, "minValues": {"k": 1, "d": d},
+                           "maxValues": {"k": 1, "d": d}})
+
+    t = _hand_written_log(root, [("k", "long"), ("d", "date")], [
+        {"path": "a.parquet", "stats": stats("2020-01-01")},
+        {"path": "b.parquet", "stats": stats("2020-01-05")},
+    ])
+    lo = datetime.date(2020, 1, 2)
+    kept = {t._abs_path(a["path"]) for a in t.files(bounds={"d": (lo, None)})}
+    r = DeltaLiteDataSource({"path": root, "pushdown": "true"}).reader(None)
+    list(r.pushFilters([GreaterThanOrEqual(("d",), lo)]))
+    assert kept == {task.path for task in r.partitions()}
+    assert len(kept) == 2
+
+
+def test_files_point_lists_the_log_once(root, monkeypatch):
+    """``files_point`` prunes one resolved snapshot: one ``_delta_log``
+    listing per call, with the stats tier applied."""
+    t = _hand_written_log(root, [("k", "long")], [
+        {"path": f"f{i}.parquet",
+         "stats": json.dumps({"numRecords": 10, "minValues": {"k": 10 * i},
+                              "maxValues": {"k": 10 * i + 9}})}
+        for i in range(4)
+    ])
+    calls = []
+    orig = DeltaTable.versions
+    monkeypatch.setattr(DeltaTable, "versions", lambda self: calls.append(1) or orig(self))
+    assert [a["path"] for a in t.files_point("k", 25)] == ["f2.parquet"]
+    assert len(calls) == 1
+
+
 def test_zorder_on_a_double_column_prunes(spark, root):
     """``compact(zorder_by=)`` scales a fractional column in double
     arithmetic (integer ``div`` does not apply to it), and the clustered

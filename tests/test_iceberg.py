@@ -429,31 +429,16 @@ def test_equality_delete_merge_on_read(spark, root):
     )
 
 
-def test_iceberg_cdc_stream_with_delete_keys(spark, root, tmp_path):
+def test_iceberg_cdc_stream_with_delete_keys(spark, root):
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         IcebergCdcDataSource,
+        drain_feed,
     )
 
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, tag string")
     t = IcebergTable.create(spark, root, df.coalesce(1))
     t.equality_delete(spark.createDataFrame([(2,)], "k long"))
-    try:
-        spark.dataSource.register(IcebergCdcDataSource)
-    except Exception:
-        pass
-    sink = os.path.join(str(tmp_path), "sink")
-    q = (
-        spark.readStream.format("iceberg_cdc")
-        .load(root)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    feed = spark.read.parquet(sink)
+    feed = drain_feed(spark, IcebergCdcDataSource, root, lambda f: f)
     got = sorted(
         (r["snapshot_idx"], r["change_type"], r["k"], r["tag"]) for r in feed.collect()
     )
@@ -584,31 +569,16 @@ def test_position_and_equality_deletes_compose_and_lite_source_agrees(spark, roo
     )
 
 
-def test_iceberg_cdc_position_delete_emits_full_rows(spark, root, tmp_path):
+def test_iceberg_cdc_position_delete_emits_full_rows(spark, root):
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         IcebergCdcDataSource,
+        drain_feed,
     )
 
     df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, tag string")
     t = IcebergTable.create(spark, root, df.coalesce(1))
     t.position_delete(F.col("k") == 2)
-    try:
-        spark.dataSource.register(IcebergCdcDataSource)
-    except Exception:
-        pass
-    sink = os.path.join(str(tmp_path), "sink")
-    q = (
-        spark.readStream.format("iceberg_cdc")
-        .load(root)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    feed = spark.read.parquet(sink)
+    feed = drain_feed(spark, IcebergCdcDataSource, root, lambda f: f)
     got = sorted(
         (r["snapshot_idx"], r["change_type"], r["k"], r["tag"]) for r in feed.collect()
     )
@@ -740,12 +710,13 @@ def test_stream_append_exactly_once(spark, root, tmp_path):
     assert t.seen_batch("other") is None
 
 
-def test_lite_source_and_cdc_resolve_renames_by_field_id(spark, root, tmp_path):
+def test_lite_source_and_cdc_resolve_renames_by_field_id(spark, root):
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.lite_source import (
         IcebergLiteDataSource,
     )
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         IcebergCdcDataSource,
+        drain_feed,
     )
 
     t = IcebergTable.create(
@@ -753,11 +724,10 @@ def test_lite_source_and_cdc_resolve_renames_by_field_id(spark, root, tmp_path):
     )
     t.rename_column("tag", "label")
     t.append(spark.createDataFrame([(3, "c")], "k long, label string"))
-    for ds in (IcebergLiteDataSource, IcebergCdcDataSource):
-        try:
-            spark.dataSource.register(ds)
-        except Exception:
-            pass
+    try:
+        spark.dataSource.register(IcebergLiteDataSource)
+    except Exception:
+        pass
     via = spark.read.format("iceberg_lite").load(root)
     assert [f.name for f in via.schema.fields] == ["k", "label"]
     # pre-rename file's values must surface under the NEW name via field id
@@ -766,19 +736,7 @@ def test_lite_source_and_cdc_resolve_renames_by_field_id(spark, root, tmp_path):
     v0 = spark.read.format("iceberg_lite").option("snapshot_index", "0").load(root)
     assert [f.name for f in v0.schema.fields] == ["k", "tag"]
     assert _rows(v0) == [(1, "a"), (2, "b")]
-    sink = os.path.join(str(tmp_path), "sink")
-    q = (
-        spark.readStream.format("iceberg_cdc")
-        .load(root)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    feed = spark.read.parquet(sink)
+    feed = drain_feed(spark, IcebergCdcDataSource, root, lambda f: f)
     got = sorted(
         (r["snapshot_idx"], r["change_type"], r["k"], r["label"]) for r in feed.collect()
     )
@@ -958,9 +916,10 @@ def test_partition_evolution_through_lite_source(spark, root):
     assert n_parts == 2  # the old unpartitioned file + the new p0 file
 
 
-def test_partition_evolution_with_deletes_and_cdc(spark, root, tmp_path):
+def test_partition_evolution_with_deletes_and_cdc(spark, root):
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         IcebergCdcDataSource,
+        drain_feed,
     )
 
     t = IcebergTable.create(
@@ -974,23 +933,7 @@ def test_partition_evolution_with_deletes_and_cdc(spark, root, tmp_path):
     t.equality_delete(spark.createDataFrame([(3,)], "k long"))
     got = t.read()
     assert _rows(got.select("k")) == [(1,), (4,)]
-    try:
-        spark.dataSource.register(IcebergCdcDataSource)
-    except Exception:
-        pass
-    sink = os.path.join(str(tmp_path), "sink")
-    q = (
-        spark.readStream.format("iceberg_cdc")
-        .load(root)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    feed = spark.read.parquet(sink)
+    feed = drain_feed(spark, IcebergCdcDataSource, root, lambda f: f)
     adds = sorted(
         (r["snapshot_idx"], r["k"], r["tag"])
         for r in feed.collect()
@@ -1422,13 +1365,14 @@ def test_lite_row_group_pruning_with_position_deletes(spark, root):
     assert all(r["v"] == r["k"] * 2 for r in got)
 
 
-def test_iceberg_cdc_emits_per_snapshot_schema(spark, root, tmp_path):
+def test_iceberg_cdc_emits_per_snapshot_schema(spark, root):
     """VERDICT r5 #4 (Iceberg side): every CDC row carries its snapshot's
     schema-id, and current columns whose FIELD ID is absent from that
     snapshot's schema arrive null — a replay never backfills a
     later-evolved column into an old snapshot's batch."""
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         IcebergCdcDataSource,
+        drain_feed,
     )
 
     t = IcebergTable.create(
@@ -1440,23 +1384,7 @@ def test_iceberg_cdc_emits_per_snapshot_schema(spark, root, tmp_path):
         spark.createDataFrame([(2, 20, 5)], "k long, val long, extra long").coalesce(1),
         allow_evolution=True,
     )
-    try:
-        spark.dataSource.register(IcebergCdcDataSource)
-    except Exception:
-        pass
-    sink = os.path.join(str(tmp_path), "sink")
-    q = (
-        spark.readStream.format("iceberg_cdc")
-        .load(root)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    feed = spark.read.parquet(sink)
+    feed = drain_feed(spark, IcebergCdcDataSource, root, lambda f: f)
     assert "schema_id" in feed.columns
     rows = {(r["snapshot_idx"], r["k"]): r for r in feed.collect()}
     r0 = rows[(0, 1)]
@@ -1469,7 +1397,7 @@ def test_iceberg_cdc_emits_per_snapshot_schema(spark, root, tmp_path):
     assert r1["extra"] == 5 and r1["val"] == 20
 
 
-def test_delete_vectors_v3_writer_semantics(spark, root, tmp_path):
+def test_delete_vectors_v3_writer_semantics(spark, root):
     """The v3 DV WRITER: (a) format-version upgrades to 3; (b) a second
     delete superseding a file's DV leaves exactly ONE DV per data file
     (union positions, consolidated deletes manifest); (c) kept entries
@@ -1481,6 +1409,7 @@ def test_delete_vectors_v3_writer_semantics(spark, root, tmp_path):
     )
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         IcebergCdcDataSource,
+        drain_feed,
     )
 
     t = IcebergTable.create(
@@ -1526,23 +1455,7 @@ def test_delete_vectors_v3_writer_semantics(spark, root, tmp_path):
     lite = spark.read.format("iceberg_lite").load(root)
     assert sorted(r.k for r in lite.collect()) == [0, 3, 5, 6, 8, 9, 21]
     # CDC: the superseding DV emits ONLY the newly-dead rows
-    try:
-        spark.dataSource.register(IcebergCdcDataSource)
-    except Exception:
-        pass
-    sink = os.path.join(str(tmp_path), "sink")
-    q = (
-        spark.readStream.format("iceberg_cdc")
-        .load(root)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    feed = spark.read.parquet(sink)
+    feed = drain_feed(spark, IcebergCdcDataSource, root, lambda f: f)
     dels = {
         (r["snapshot_idx"], r["k"])
         for r in feed.where("change_type = 'delete_row'").collect()
@@ -1669,7 +1582,7 @@ def test_merge_cow_across_partition_evolution_with_lineage(spark, root):
     assert sorted(rows) == [0, 1, 2, 3, 4, 5, 10, 11, 12, 100]
 
 
-def test_iceberg_cdc_row_lineage(spark, root, tmp_path):
+def test_iceberg_cdc_row_lineage(spark, root):
     """r8 (the Iceberg twin of delta's row-tracking × CDF composition):
     on a row-lineage table the iceberg_cdc feed carries a trailing
     ``_row_id`` — adds resolve first_row_id + position (or the
@@ -1679,6 +1592,7 @@ def test_iceberg_cdc_row_lineage(spark, root, tmp_path):
     delete), and pre-enable snapshots honestly ride null."""
     from copy_sharepoint_to_onelake_lakehousefiles_spark.sources.change_feed import (
         IcebergCdcDataSource,
+        drain_feed,
     )
 
     t = IcebergTable.create(
@@ -1694,23 +1608,7 @@ def test_iceberg_cdc_row_lineage(spark, root, tmp_path):
     t.delete_vectors_v3("k = 2")
     t.equality_delete(spark.createDataFrame([(3,)], "k long"))
     t.rewrite_data_files()  # materializes survivors' _row_id into new files
-    try:
-        spark.dataSource.register(IcebergCdcDataSource)
-    except Exception:
-        pass
-    sink = os.path.join(str(tmp_path), "rl_sink")
-    q = (
-        spark.readStream.format("iceberg_cdc")
-        .load(root)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(str(tmp_path), "rl_ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    feed = spark.read.parquet(sink)
+    feed = drain_feed(spark, IcebergCdcDataSource, root, lambda f: f)
     assert "_row_id" in feed.columns
     got = {
         (r["snapshot_idx"], r["change_type"], r["k"]): r["_row_id"]

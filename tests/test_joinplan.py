@@ -1166,16 +1166,23 @@ def test_join_tree_pruning_flips_order_and_uses_pruned_ndv(spark, sf_dir):
 
 class _FakeTable:
     """Duck-typed stand-in exposing exactly what plan_join_tree consumes:
-    manifest entries for sizing and a per-column NDV dict."""
+    an unpartitioned one-file table's pruned size and manifest entries,
+    and a per-column NDV dict."""
 
     def __init__(self, rows, ndvs, bytes_per_row=100):
         self._rows = rows
         self._ndvs = ndvs
         self._bytes = rows * bytes_per_row
 
+    def pruned_size(self, partition_filter=None):
+        return {"rows": self._rows, "bytes": self._bytes, "files": 1, "files_total": 1}
+
     def files(self, partition_filter=None, bounds=None):
         e = {"record_count": self._rows, "file_size_in_bytes": self._bytes}
         return [e], {"files_total": 1}
+
+    def partition_fields(self):
+        return []
 
     def ndv(self, col):
         return {"ndv": self._ndvs[col], "exact": True}
