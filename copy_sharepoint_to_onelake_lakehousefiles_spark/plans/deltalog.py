@@ -98,6 +98,12 @@ def _add_stats(a: dict) -> dict:
     return json.loads(raw) if isinstance(raw, str) else (raw or {})
 
 
+def _partition_string(v) -> str:
+    """A partition filter value as the log serializes partition values
+    (PROTOCOL.md: booleans as ``true``/``false``)."""
+    return str(v).lower() if isinstance(v, bool) else str(v)
+
+
 def _add_ranges(a: dict) -> dict:
     """{physical column: (min, max)} from a Delta add action's stats."""
     st = _add_stats(a)
@@ -618,7 +624,7 @@ class DeltaTable:
         are keyed by PHYSICAL names under column mapping."""
         phys = self._phys_map(meta)
         if partition_filter:
-            want = {phys.get(k, k): str(v) for k, v in partition_filter.items()}
+            want = {phys.get(k, k): _partition_string(v) for k, v in partition_filter.items()}
             adds = [
                 a
                 for a in adds

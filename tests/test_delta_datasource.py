@@ -73,6 +73,28 @@ def test_partition_filter_prunes_planned_files(spark, root):
         spark.conf.unset("spark.sql.python.filterPushdown.enabled")
 
 
+def test_boolean_partition_equality_keeps_its_files(spark, root):
+    """The log serializes a boolean partition value as ``true``/``false``:
+    a pushed ``b = true`` is consumed and keeps that partition's file, so
+    the query returns its rows (it matched no file, and returned 0 rows,
+    when the value was compared as ``str(True)``)."""
+    df = spark.range(10).selectExpr("id AS k", "id % 2 = 0 AS b")
+    t = DeltaTable.create(spark, root, df.coalesce(1), partition_by=["b"])
+    assert len(t.files(partition_filter={"b": True})) == 1
+    from pyspark.sql.datasource import EqualTo
+
+    r = DeltaLiteDataSource({"path": root, "pushdown": "true"}).reader(None)
+    assert list(r.pushFilters([EqualTo(("b",), True)])) == []
+    assert len(r.partitions()) == 1
+    _register(spark)
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    try:
+        got = spark.read.format("delta_lite").option("pushdown", "true").load(root)
+        assert got.where("b = true").count() == 5
+    finally:
+        spark.conf.unset("spark.sql.python.filterPushdown.enabled")
+
+
 def test_stats_bounds_prune_but_are_reapplied(spark, root):
     df = spark.range(400).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
     DeltaTable.create(spark, root, df.repartitionByRange(4, "k"))
