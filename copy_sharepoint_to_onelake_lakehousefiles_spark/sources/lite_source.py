@@ -477,7 +477,7 @@ class DeltaLiteDataSource(LiteDataSource):
 
     @staticmethod
     def partition_columns(r):
-        cols = set(r.table.snapshot(r.version)[1].get("partitionColumns") or [])
+        cols = set(r.table.partition_columns(r.version))
         return cols, cols
 
     @staticmethod
