@@ -47,6 +47,7 @@ import os
 import re
 import time
 import uuid
+from typing import NamedTuple
 from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -109,6 +110,46 @@ def _add_ranges(a: dict) -> dict:
     st = _add_stats(a)
     mins, maxs = st.get("minValues") or {}, st.get("maxValues") or {}
     return {c: (mins[c], maxs[c]) for c in mins if c in maxs}
+
+
+class _State(NamedTuple):
+    """One log replay: the table at ``version`` as its live add actions,
+    metaData, protocol, domain metadata (domain → configuration) and
+    SetTransaction ledger (appId → version)."""
+
+    version: int
+    adds: list[dict]
+    meta: dict
+    protocol: dict
+    domains: dict[str, dict]
+    txns: dict[str, int]
+
+
+def _checkpoint_action(r: dict) -> dict:
+    """One checkpoint parquet row in the JSON log's action form: parquet
+    MAP columns come back as [(k, v), ...] and the metaData fields the
+    checkpoint stores as JSON strings are parsed back; unset struct
+    fields are dropped."""
+    out = {}
+    if r.get("add") and r["add"].get("path"):
+        a = {k: v for k, v in r["add"].items() if v is not None}
+        if isinstance(a.get("partitionValues"), list):
+            a["partitionValues"] = dict(a["partitionValues"])
+        out["add"] = a
+    if r.get("remove") and r["remove"].get("path"):
+        out["remove"] = r["remove"]
+    if r.get("metaData") and r["metaData"].get("id"):
+        m = dict(r["metaData"])
+        for k in ("partitionColumns", "format", "configuration"):
+            if isinstance(m.get(k), str):
+                m[k] = json.loads(m[k])
+        out["metaData"] = m
+    if r.get("protocol") and r["protocol"].get("minReaderVersion") is not None:
+        out["protocol"] = {k: v for k, v in r["protocol"].items() if v is not None}
+    for k in ("domainMetadata", "txn"):
+        if r.get(k):
+            out[k] = r[k]
+    return out
 
 
 def _fmt_checkpoint(v: int) -> str:
@@ -328,92 +369,85 @@ class DeltaTable:
         cands = [v for v in self._checkpoint_sets() if v <= version]
         return max(cands) if cands else None
 
-    def _read_checkpoint(self, version: int) -> tuple[dict, dict | None]:
-        """Checkpoint parquet → ({path: add_action}, metaData|None). A v2
-        checkpoint's adds live in SIDECAR parquet files referenced by
+    def _checkpoint_actions(self, names: list[str]) -> list[dict]:
+        """The actions of one checkpoint (``_checkpoint_sets`` names). A
+        v2 checkpoint's adds live in SIDECAR parquet files referenced by
         ``sidecar`` actions in the main file (spec: V2 Checkpoints) — the
         layout that lets a 100 TB table's checkpoint be written and read
-        in parallel parts; removes in either layout are tombstones and
-        drop the path. A classic MULTI-PART checkpoint's rows are the
-        concatenation of all its parts (each action lives in exactly one
-        part, so part order never changes the net state)."""
+        in parallel parts; removes in either layout are tombstones. A
+        classic MULTI-PART checkpoint's rows are the concatenation of all
+        its parts (each action lives in exactly one part, so part order
+        never changes the net state)."""
         import pyarrow.parquet as pq
 
-        names = self._checkpoint_sets().get(version)
-        if not names:
-            raise FileNotFoundError(f"no checkpoint for version {version}")
         rows: list[dict] = []
         for name in names:
             rows.extend(pq.read_table(os.path.join(self.log_dir, name)).to_pylist())
-        adds: dict = {}
-        meta = None
-
-        def absorb(rows: list[dict]) -> None:
-            nonlocal meta
-            for r in rows:
-                if r.get("add") and r["add"].get("path"):
-                    a = {k: v for k, v in r["add"].items() if v is not None}
-                    # parquet MAP columns come back as [(k, v), ...]; the
-                    # JSON log carries dicts — normalize to dicts
-                    if isinstance(a.get("partitionValues"), list):
-                        a["partitionValues"] = dict(a["partitionValues"])
-                    adds[a["path"]] = a
-                if r.get("remove") and r["remove"].get("path"):
-                    adds.pop(r["remove"]["path"], None)
-                if r.get("metaData") and r["metaData"].get("id"):
-                    m = dict(r["metaData"])
-                    if isinstance(m.get("partitionColumns"), str):
-                        m["partitionColumns"] = json.loads(m["partitionColumns"])
-                    if isinstance(m.get("format"), str):
-                        m["format"] = json.loads(m["format"])
-                    if isinstance(m.get("configuration"), str):
-                        m["configuration"] = json.loads(m["configuration"])
-                    meta = m
-
-        absorb(rows)
-        for r in rows:
+        for r in list(rows):
             sc = r.get("sidecar")
             if sc and sc.get("path"):
                 sc_path = os.path.join(self.log_dir, "_sidecars", sc["path"])
-                absorb(pq.read_table(sc_path).to_pylist())
-        return adds, meta
+                rows.extend(pq.read_table(sc_path).to_pylist())
+        return [_checkpoint_action(r) for r in rows]
 
-    def snapshot(self, version: int | None = None) -> tuple[list[dict], dict]:
-        """Resolve (live add-actions, metaData) at ``version`` (default
-        latest). Reads one checkpoint + at most the JSON deltas after it."""
-        listed = self.versions()  # the one log listing of this call
+    def _state(self, version: int | None = None) -> _State:
+        """Resolve the table at ``version`` (default latest) in ONE replay:
+        one listing of the log, one checkpoint, and the JSON commits after
+        it. Every operation reads one state and commits at its
+        ``version + 1``, so ``_publish``'s put-if-absent link refuses a
+        plan built on a version another writer has since superseded."""
+        listed = self.versions()  # the one log listing of this state
         if version is None and not listed:
             raise FileNotFoundError(f"no Delta log at {self.log_dir}")
         v = listed[-1] if version is None else version
         known = set(listed)
-        if v not in known:
-            ck = self._checkpoint_version_at_or_before(v)
-            # commits may have been expired below a checkpoint; only fail
-            # when neither a commit nor covering checkpoint chain exists
-            if ck is None or any(u not in known for u in range(ck + 1, v + 1)):
-                raise ValueError(f"version {v} not in Delta log (have {listed})")
+        ckpts = self._checkpoint_sets()
+        ck = max((c for c in ckpts if c <= v), default=None)
+        # commits may have been expired below a checkpoint; only fail when
+        # neither a commit nor a covering checkpoint chain exists
+        if v not in known and (ck is None or any(u not in known for u in range(ck + 1, v + 1))):
+            raise ValueError(f"version {v} not in Delta log (have {listed})")
         adds: dict[str, dict] = {}
         meta: dict | None = None
-        ck = self._checkpoint_version_at_or_before(v)
-        start = 0
-        if ck is not None:
-            adds, meta = self._read_checkpoint(ck)
-            start = ck + 1
-        for u in range(start, v + 1):
-            if u not in known:
-                continue
-            for action in self._commit_actions(u):
-                if "add" in action:
-                    adds[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    adds.pop(action["remove"]["path"], None)
-                elif "metaData" in action:
-                    meta = action["metaData"]
+        proto = dict(PROTOCOL)
+        domains: dict[str, dict] = {}
+        txns: dict[str, int] = {}
+        actions = self._checkpoint_actions(ckpts[ck]) if ck is not None else []
+        for u in range(0 if ck is None else ck + 1, v + 1):
+            if u in known:
+                actions.extend(self._commit_actions(u))
+        for a in actions:
+            if "add" in a:
+                adds[a["add"]["path"]] = a["add"]
+            if "remove" in a:
+                adds.pop(a["remove"]["path"], None)
+            if "metaData" in a:
+                meta = a["metaData"]
+            if "protocol" in a:
+                proto = a["protocol"]
+            d = a.get("domainMetadata")
+            if d and d.get("domain"):
+                # latest configuration per domain wins; removed tombstones
+                if d.get("removed"):
+                    domains.pop(d["domain"], None)
+                else:
+                    cfg = d.get("configuration")
+                    domains[d["domain"]] = (
+                        json.loads(cfg) if isinstance(cfg, str) else dict(cfg or {})
+                    )
+            tx = a.get("txn")
+            if tx and tx.get("appId"):
+                txns[tx["appId"]] = max(txns.get(tx["appId"], tx["version"]), tx["version"])
         if meta is None:
             raise ValueError(f"Delta log at {self.root} has no metaData action")
-        out = list(adds.values())
-        self._validate_version_checksum(v, out)
-        return out, meta
+        live = list(adds.values())
+        self._validate_version_checksum(v, live)
+        return _State(v, live, meta, proto, domains, txns)
+
+    def snapshot(self, version: int | None = None) -> tuple[list[dict], dict]:
+        """(live add-actions, metaData) at ``version`` (default latest)."""
+        state = self._state(version)
+        return state.adds, state.meta
 
     def _validate_version_checksum(self, v: int, adds: list[dict]) -> None:
         """Snapshot validation against the VERSION CHECKSUM file (public
@@ -451,20 +485,19 @@ class DeltaTable:
         against its own replay, plus the snapshot's protocol and metaData
         for single-file snapshot bootstraps and O(1) table-size answers.
         Computed by the same log replay snapshot planning performs."""
-        v = self.latest_version() if version is None else version
-        adds, meta = self.snapshot(v)
-        dvs = [a["deletionVector"] for a in adds if a.get("deletionVector")]
+        state = self._state(version)
+        dvs = [a["deletionVector"] for a in state.adds if a.get("deletionVector")]
         return {
-            "tableSizeBytes": sum(int(a.get("size") or 0) for a in adds),
-            "numFiles": len(adds),
+            "tableSizeBytes": sum(int(a.get("size") or 0) for a in state.adds),
+            "numFiles": len(state.adds),
             "numMetadata": 1,
             "numProtocol": 1,
             "numDeletedRecordsOpt": sum(
                 int(d.get("cardinality") or 0) for d in dvs
             ),
             "numDeletionVectorsOpt": len(dvs),
-            "metadata": meta,
-            "protocol": self.protocol(v),
+            "metadata": state.meta,
+            "protocol": state.protocol,
         }
 
     def _write_version_checksum(self, version: int) -> None:
@@ -483,16 +516,6 @@ class DeltaTable:
     def partition_columns(self, version: int | None = None) -> list[str]:
         _, meta = self.snapshot(version)
         return list(meta.get("partitionColumns") or [])
-
-    def history(self) -> list[dict]:
-        out = []
-        for v in self.versions():
-            info = {"version": v, "operation": None}
-            for action in self._commit_actions(v):
-                if "commitInfo" in action:
-                    info["operation"] = action["commitInfo"].get("operation")
-            out.append(info)
-        return out
 
     HISTORY_DF_DDL = (
         "version long, operation string, num_added_files long, "
@@ -566,16 +589,16 @@ class DeltaTable:
         file/byte totals, partition columns, protocol versions and feature
         lists — the at-a-glance audit a real operator runs after any
         write."""
-        adds, meta = self.snapshot()
-        proto = self.protocol()
+        state = self._state()
+        proto = state.protocol
         row = (
             "delta",
-            meta["id"],
+            state.meta["id"],
             self.root,
-            len(adds),
-            int(sum(int(a.get("size") or 0) for a in adds)),
-            list(meta.get("partitionColumns") or []),
-            int(self.latest_version()),
+            len(state.adds),
+            int(sum(int(a.get("size") or 0) for a in state.adds)),
+            list(state.meta.get("partitionColumns") or []),
+            state.version,
             int(proto.get("minReaderVersion", 1)),
             int(proto.get("minWriterVersion", 2)),
             sorted(proto.get("readerFeatures") or []),
@@ -591,14 +614,9 @@ class DeltaTable:
 
     def seen_txn(self, app_id: str) -> int | None:
         """Highest txn.version committed for ``app_id`` (idempotent-writer
-        check, Delta's SetTransaction action)."""
-        best = None
-        for v in self.versions():
-            for action in self._commit_actions(v):
-                tx = action.get("txn")
-                if tx and tx.get("appId") == app_id:
-                    best = tx["version"] if best is None else max(best, tx["version"])
-        return best
+        check, Delta's SetTransaction action), from the JSON commits and
+        the checkpoint that carries the expired ones' txn actions."""
+        return self._state().txns.get(app_id)
 
     # --------------------------------------------------------------- read
 
@@ -691,12 +709,15 @@ class DeltaTable:
         adds, meta = self.snapshot(version)
         return self._read_snapshot(self._prune(adds, meta, partition_filter, bounds), meta)
 
-    def _read_snapshot(self, adds: list[dict], meta: dict) -> DataFrame:
+    def _read_snapshot(
+        self, adds: list[dict], meta: dict, with_identity: bool = False
+    ) -> DataFrame:
         """``_read_entries`` of ``adds`` under ``meta``'s schema."""
         return self._read_entries(
             adds,
             T.StructType.fromJson(json.loads(meta["schemaString"])),
             list(meta.get("partitionColumns") or []),
+            with_identity=with_identity,
             phys=self._phys_map(meta),
         )
 
@@ -905,34 +926,36 @@ class DeltaTable:
                 break
         return int(os.path.getmtime(path) * 1000)
 
-    def _ict_enabled_for(self, actions: list[dict]) -> bool:
+    @staticmethod
+    def _ict_enabled_for(actions: list[dict], meta: dict | None) -> bool:
         """Whether the commit being built must carry an inCommitTimestamp:
-        the table property is already set, or THIS commit's metaData sets
-        it (the enablement commit itself is required to carry one)."""
+        the table property is set in ``meta`` (the metaData the commit
+        builds on), or THIS commit's metaData sets it (the enablement
+        commit itself is required to carry one)."""
         for a in actions:
             if "metaData" in a:
                 c = a["metaData"].get("configuration") or {}
                 if "delta.enableInCommitTimestamps" in c:
                     return c["delta.enableInCommitTimestamps"] == "true"
-        try:
-            _, meta = self.snapshot()
-        except (ValueError, FileNotFoundError):
-            return False
-        cfg = meta.get("configuration") or {}
+        cfg = (meta or {}).get("configuration") or {}
         return cfg.get("delta.enableInCommitTimestamps") == "true"
 
-    def _publish(self, version: int, actions: list[dict]) -> None:
+    def _publish(self, version: int, actions: list[dict], meta: dict | None = None) -> None:
         """Put-if-absent commit publish: write actions to a temp file, then
         ``os.link`` to the final version name — link(2) fails atomically if
         the version exists, which is exactly the mutual-exclusion rule the
-        Delta protocol requires of a LogStore.
+        Delta protocol requires of a LogStore. Writers publish at their
+        read state's ``version + 1`` (``meta`` is that state's metaData;
+        None for a table's first commit), so a plan built on a version
+        another writer has since superseded raises ``FileExistsError``
+        instead of committing over a snapshot it never saw.
 
         IN-COMMIT TIMESTAMPS (spec §In-Commit Timestamps): when the table
         property is on (or this very commit enables it), commitInfo must be
         the FIRST action and carry ``inCommitTimestamp`` — strictly greater
         than the previous commit's (max(now, prev + 1)), making the commit
         timeline monotonic regardless of file-mtime skew."""
-        if self._ict_enabled_for(actions):
+        if self._ict_enabled_for(actions, meta):
             prev = (
                 self._commit_timestamp(version - 1) if version > 0 else None
             )
@@ -996,19 +1019,80 @@ class DeltaTable:
         )
 
     @staticmethod
-    def _ckpt_dm_field():
+    def _ckpt_state_fields() -> list:
+        """Checkpoint columns of the table-level actions
+        (``_ckpt_state_rows``); metaData's map/list fields are stored as
+        JSON strings."""
         import pyarrow as pa
 
-        return pa.field(
-            "domainMetadata",
-            pa.struct(
-                [
-                    ("domain", pa.string()),
-                    ("configuration", pa.string()),
-                    ("removed", pa.bool_()),
-                ]
+        return [
+            pa.field(
+                "metaData",
+                pa.struct(
+                    [
+                        ("id", pa.string()),
+                        ("format", pa.string()),
+                        ("schemaString", pa.string()),
+                        ("partitionColumns", pa.string()),
+                        ("configuration", pa.string()),
+                    ]
+                ),
             ),
-        )
+            pa.field(
+                "protocol",
+                pa.struct(
+                    [
+                        ("minReaderVersion", pa.int32()),
+                        ("minWriterVersion", pa.int32()),
+                        ("readerFeatures", pa.list_(pa.string())),
+                        ("writerFeatures", pa.list_(pa.string())),
+                    ]
+                ),
+            ),
+            pa.field(
+                "domainMetadata",
+                pa.struct(
+                    [
+                        ("domain", pa.string()),
+                        ("configuration", pa.string()),
+                        ("removed", pa.bool_()),
+                    ]
+                ),
+            ),
+            pa.field("txn", pa.struct([("appId", pa.string()), ("version", pa.int64())])),
+        ]
+
+    @staticmethod
+    def _ckpt_state_rows(state: _State) -> list[dict]:
+        """A checkpoint's table-level action rows for ``state``: protocol,
+        metaData, and the domain metadata and txn actions, which survive
+        commit expiry only through checkpoints (spec §Domain Metadata,
+        §Transaction Identifiers) — row tracking's high-water mark and
+        ``stream_append``'s idempotency ledger ride here."""
+        meta = state.meta
+        return [
+            {"protocol": state.protocol},
+            {
+                "metaData": {
+                    "id": meta["id"],
+                    "format": json.dumps(meta.get("format") or {}),
+                    "schemaString": meta["schemaString"],
+                    "partitionColumns": json.dumps(meta.get("partitionColumns") or []),
+                    "configuration": json.dumps(meta.get("configuration") or {}),
+                }
+            },
+            *(
+                {
+                    "domainMetadata": {
+                        "domain": domain,
+                        "configuration": json.dumps(cfg),
+                        "removed": False,
+                    }
+                }
+                for domain, cfg in sorted(state.domains.items())
+            ),
+            *({"txn": {"appId": app, "version": v}} for app, v in sorted(state.txns.items())),
+        ]
 
     @staticmethod
     def _ckpt_add_row(a: dict) -> dict:
@@ -1030,28 +1114,29 @@ class DeltaTable:
         SIDECAR files under ``_delta_log/_sidecars/``, referenced from a
         UUID-named main checkpoint (``%020d.checkpoint.<unique>.parquet``)
         whose own rows are checkpointMetadata / protocol / metaData /
-        sidecar actions. This is the layout that lets a 100 TB table's
-        checkpoint be written AND planned in parallel parts instead of one
-        monolithic file. Upgrades the protocol with the ``v2Checkpoint``
-        feature (its own commit) when absent; updates ``_last_checkpoint``.
+        domainMetadata / txn / sidecar actions. This is the layout that
+        lets a 100 TB table's checkpoint be written AND planned in
+        parallel parts instead of one monolithic file. Upgrades the
+        protocol with the ``v2Checkpoint`` feature (its own commit) when
+        absent; updates ``_last_checkpoint``.
         """
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        up = self._feature_upgrade_action("v2Checkpoint")
+        state = self._state()
+        up = self._feature_upgrade_action(state.protocol, "v2Checkpoint")
         if up:
             self._publish(
-                self.latest_version() + 1,
-                [self._commit_info("UPGRADE PROTOCOL"), up],
+                state.version + 1, [self._commit_info("UPGRADE PROTOCOL"), up], state.meta
             )
-        version = self.latest_version()
-        adds, meta = self.snapshot(version)
+            state = self._state(state.version + 1)
+        version = state.version
         sidecar_dir = os.path.join(self.log_dir, "_sidecars")
         os.makedirs(sidecar_dir, exist_ok=True)
         side_schema = pa.schema([self._ckpt_add_field()])
         parts = max(1, sidecar_parts)
         groups: list[list[dict]] = [[] for _ in range(parts)]
-        for i, a in enumerate(sorted(adds, key=lambda a: a["path"])):
+        for i, a in enumerate(sorted(state.adds, key=lambda a: a["path"])):
             groups[i % parts].append(a)
         sidecars = []
         for g in groups:
@@ -1078,55 +1163,13 @@ class DeltaTable:
                         ]
                     ),
                 ),
-                pa.field(
-                    "metaData",
-                    pa.struct(
-                        [
-                            ("id", pa.string()),
-                            ("format", pa.string()),
-                            ("schemaString", pa.string()),
-                            ("partitionColumns", pa.string()),
-                            ("configuration", pa.string()),
-                        ]
-                    ),
-                ),
-                pa.field(
-                    "protocol",
-                    pa.struct(
-                        [
-                            ("minReaderVersion", pa.int32()),
-                            ("minWriterVersion", pa.int32()),
-                            ("readerFeatures", pa.list_(pa.string())),
-                            ("writerFeatures", pa.list_(pa.string())),
-                        ]
-                    ),
-                ),
-                self._ckpt_dm_field(),
+                *self._ckpt_state_fields(),
             ]
         )
         rows = [
             {"checkpointMetadata": {"version": version, "tags": []}},
-            {"protocol": self.protocol(version)},
-            {
-                "metaData": {
-                    "id": meta["id"],
-                    "format": json.dumps(meta.get("format") or {}),
-                    "schemaString": meta["schemaString"],
-                    "partitionColumns": json.dumps(meta.get("partitionColumns") or []),
-                    "configuration": json.dumps(meta.get("configuration") or {}),
-                }
-            },
-        ] + [
-            {
-                "domainMetadata": {
-                    "domain": domain,
-                    "configuration": json.dumps(cfg),
-                    "removed": False,
-                }
-            }
-            for domain, cfg in sorted(self.domain_metadata(version).items())
-        ] + [
-            {"sidecar": {**sc, "modificationTime": 0}} for sc in sidecars
+            *self._ckpt_state_rows(state),
+            *({"sidecar": {**sc, "modificationTime": 0}} for sc in sidecars),
         ]
         tbl = pa.Table.from_pylist(rows, schema=main_schema)
         name = f"{version:020d}.checkpoint.{uuid.uuid4().hex}.parquet"
@@ -1141,8 +1184,8 @@ class DeltaTable:
         return {"version": version, "file": name, "sidecars": len(sidecars)}
 
     def _write_checkpoint(self, version: int, parts: int | None = None) -> None:
-        """Classic checkpoint: the resolved snapshot as parquet action rows,
-        plus ``_last_checkpoint``. ``parts`` > 1 writes the spec's
+        """Classic checkpoint: the state at ``version`` as parquet action
+        rows, plus ``_last_checkpoint``. ``parts`` > 1 writes the spec's
         MULTI-PART layout (``%020d.checkpoint.%010d.%010d.parquet``, rows
         split round-robin, ``_last_checkpoint`` records ``parts``) — the
         shape a 100 TB table needs so the checkpoint can be written and
@@ -1151,62 +1194,11 @@ class DeltaTable:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        adds, meta = self.snapshot(version)
-        rows = [
-            {"protocol": self.protocol(version)},
-            {
-                "metaData": {
-                    "id": meta["id"],
-                    "format": json.dumps(meta.get("format") or {}),
-                    "schemaString": meta["schemaString"],
-                    "partitionColumns": json.dumps(meta.get("partitionColumns") or []),
-                    "configuration": json.dumps(meta.get("configuration") or {}),
-                },
-            },
+        state = self._state(version)
+        rows = self._ckpt_state_rows(state) + [
+            {"add": self._ckpt_add_row(a)} for a in state.adds
         ]
-        # domain metadata survives commit expiry only through checkpoints
-        # (spec §Domain Metadata) — row tracking's high-water mark rides here
-        for domain, cfg in sorted(self.domain_metadata(version).items()):
-            rows.append(
-                {
-                    "domainMetadata": {
-                        "domain": domain,
-                        "configuration": json.dumps(cfg),
-                        "removed": False,
-                    }
-                }
-            )
-        for a in adds:
-            rows.append({"add": self._ckpt_add_row(a)})
-        schema = pa.schema(
-            [
-                self._ckpt_add_field(),
-                pa.field(
-                    "metaData",
-                    pa.struct(
-                        [
-                            ("id", pa.string()),
-                            ("format", pa.string()),
-                            ("schemaString", pa.string()),
-                            ("partitionColumns", pa.string()),
-                            ("configuration", pa.string()),
-                        ]
-                    ),
-                ),
-                pa.field(
-                    "protocol",
-                    pa.struct(
-                        [
-                            ("minReaderVersion", pa.int32()),
-                            ("minWriterVersion", pa.int32()),
-                            ("readerFeatures", pa.list_(pa.string())),
-                            ("writerFeatures", pa.list_(pa.string())),
-                        ]
-                    ),
-                ),
-                self._ckpt_dm_field(),
-            ]
-        )
+        schema = pa.schema([self._ckpt_add_field(), *self._ckpt_state_fields()])
         if parts and parts > 1:
             n = min(parts, len(rows)) or 1
             groups: list[list[dict]] = [rows[i::n] for i in range(n)]
@@ -1250,7 +1242,8 @@ class DeltaTable:
         min(16, 63 // N)), so selective filters on the clustering columns
         prune by file stats alone. The 4-column cap matches the published
         Delta limit for clustered tables."""
-        st = self.schema()
+        state = self._state()
+        st = T.StructType.fromJson(json.loads(state.meta["schemaString"]))
         base_names = []
         for c in cols:
             if ":" in c:
@@ -1283,13 +1276,13 @@ class DeltaTable:
                 "beyond 4 the interleave dilutes every column's stats "
                 "locality)"
             )
-        if set(base_names) & set(self.partition_columns()):
+        if set(base_names) & set(state.meta.get("partitionColumns") or []):
             raise NotImplementedError(
                 "a partition column cannot also be a clustering column"
             )
-        v = self.latest_version() + 1
+        v = state.version + 1
         actions: list[dict] = [self._commit_info("CLUSTER BY")]
-        up = self._feature_upgrade_action("clustering", writer_only=True)
+        up = self._feature_upgrade_action(state.protocol, "clustering", writer_only=True)
         if up:
             wf = set(up["protocol"]["writerFeatures"]) | {"domainMetadata"}
             up["protocol"]["writerFeatures"] = sorted(wf)
@@ -1305,11 +1298,15 @@ class DeltaTable:
                 }
             }
         )
-        self._publish(v, actions)
+        self._publish(v, actions, state.meta)
         return {"version": v, "clustering_columns": cols}
 
     def clustering_columns(self) -> list[str]:
-        cfg = self.domain_metadata().get(self.CLUSTERING_DOMAIN) or {}
+        return self._clustering_terms(self._state().domains)
+
+    @classmethod
+    def _clustering_terms(cls, domains: dict[str, dict]) -> list[str]:
+        cfg = domains.get(cls.CLUSTERING_DOMAIN) or {}
         return [
             _clustering_term_from_path(p)
             for p in cfg.get("clusteringColumns") or []
@@ -1334,7 +1331,8 @@ class DeltaTable:
         records the change in ``delta.typeChanges`` (fromType/toType/
         tableVersion) so other engines know which files predate the widen.
         Narrowings and unsupported pairs refuse loudly."""
-        _, meta = self.snapshot()
+        state = self._state()
+        meta = state.meta
         st = T.StructType.fromJson(json.loads(meta["schemaString"]))
         if name not in st.fieldNames():
             raise ValueError(f"no column {name!r} (have {st.fieldNames()})")
@@ -1352,7 +1350,7 @@ class DeltaTable:
                 "are serialized strings typed by the schema — widening them "
                 "changes file-to-partition mapping semantics)"
             )
-        v = self.latest_version() + 1
+        v = state.version + 1
         fields = []
         for f in st.fields:
             if f.name != name:
@@ -1375,11 +1373,11 @@ class DeltaTable:
         new_meta["schemaString"] = T.StructType(fields).json()
         new_meta["configuration"] = cfg
         actions: list[dict] = [self._commit_info("ALTER TABLE (type widening)")]
-        up = self._feature_upgrade_action("typeWidening")
+        up = self._feature_upgrade_action(state.protocol, "typeWidening")
         if up:
             actions.append(up)
         actions.append({"metaData": new_meta})
-        self._publish(v, actions)
+        self._publish(v, actions, meta)
         return {"version": v, "column": name, "from": frm, "to": to}
 
     def enable_in_commit_timestamps(self) -> dict:
@@ -1393,11 +1391,12 @@ class DeltaTable:
         readers know where the ICT timeline begins; timestamp time travel
         (``version_at_timestamp``) uses ICT at/after that version and file
         mtimes before it."""
-        _, meta = self.snapshot()
+        state = self._state()
+        meta = state.meta
         cfg = dict(meta.get("configuration") or {})
         if cfg.get("delta.enableInCommitTimestamps") == "true":
             return {"already_enabled": True}
-        v = self.latest_version() + 1
+        v = state.version + 1
         prev = self._commit_timestamp(v - 1)
         ict = int(time.time() * 1000)
         if prev is not None:
@@ -1408,11 +1407,11 @@ class DeltaTable:
         new_meta = dict(meta)
         new_meta["configuration"] = cfg
         actions: list[dict] = [self._commit_info("ALTER TABLE (ICT)")]
-        up = self._feature_upgrade_action("inCommitTimestamp", writer_only=True)
+        up = self._feature_upgrade_action(state.protocol, "inCommitTimestamp", writer_only=True)
         if up:
             actions.append(up)
         actions.append({"metaData": new_meta})
-        self._publish(v, actions)
+        self._publish(v, actions, meta)
         return {"already_enabled": False, "version": v, "timestamp": ict}
 
     def version_at_timestamp(self, ts_ms: int) -> int:
@@ -1441,18 +1440,18 @@ class DeltaTable:
         EXCLUSIVELY when present (the spec's CDF read rule) and falls back
         to add/remove netting otherwise (insert/delete-only commits,
         pre-enable history, DV commits). Idempotent."""
-        _, meta = self.snapshot()
-        cfg = dict(meta.get("configuration") or {})
+        state = self._state()
+        cfg = dict(state.meta.get("configuration") or {})
         if cfg.get("delta.enableChangeDataFeed") == "true":
             return {"already_enabled": True}
         cfg["delta.enableChangeDataFeed"] = "true"
-        new_meta = dict(meta, configuration=cfg)
+        new_meta = dict(state.meta, configuration=cfg)
         actions = [self._commit_info("SET TBLPROPERTIES")]
-        up = self._feature_upgrade_action("changeDataFeed", writer_only=True)
+        up = self._feature_upgrade_action(state.protocol, "changeDataFeed", writer_only=True)
         if up:
             actions.append(up)
         actions.append({"metaData": new_meta})
-        self._publish(self.latest_version() + 1, actions)
+        self._publish(state.version + 1, actions, state.meta)
         return {"already_enabled": False}
 
     def _cdf_enabled(self, meta: dict) -> bool:
@@ -1503,30 +1502,34 @@ class DeltaTable:
         subsequent write (append/merge/overwrite) verifies the predicate
         over the incoming rows and refuses the commit on violation. The
         existing table must already satisfy it."""
-        n_bad = self.read().where(f"NOT coalesce(({expr}), false)").count()
+        state = self._state()
+        existing = self._read_snapshot(state.adds, state.meta)
+        n_bad = existing.where(f"NOT coalesce(({expr}), false)").count()
         if n_bad:
             raise ValueError(
                 f"cannot add constraint {name}: {n_bad} existing rows violate ({expr})"
             )
-        _, meta = self.snapshot()
-        new_meta = dict(meta)
+        new_meta = dict(state.meta)
         cfg = dict(new_meta.get("configuration") or {})
         cfg[f"delta.constraints.{name}"] = expr
         new_meta["configuration"] = cfg
-        v = self.latest_version() + 1
+        v = state.version + 1
         self._publish(
-            v, [self._commit_info("ADD CONSTRAINT"), {"metaData": new_meta}]
+            v, [self._commit_info("ADD CONSTRAINT"), {"metaData": new_meta}], state.meta
         )
         return {"version": v, "constraint": name}
 
     def constraints(self) -> dict[str, str]:
-        _, meta = self.snapshot()
+        return self._constraints(self.snapshot()[1])
+
+    @staticmethod
+    def _constraints(meta: dict) -> dict[str, str]:
         cfg = meta.get("configuration") or {}
         prefix = "delta.constraints."
         return {k[len(prefix):]: v for k, v in cfg.items() if k.startswith(prefix)}
 
-    def _check_constraints(self, df: DataFrame) -> None:
-        for name, expr in self.constraints().items():
+    def _check_constraints(self, df: DataFrame, meta: dict) -> None:
+        for name, expr in self._constraints(meta).items():
             n_bad = df.where(f"NOT coalesce(({expr}), false)").count()
             if n_bad:
                 raise ValueError(
@@ -1535,35 +1538,12 @@ class DeltaTable:
 
     def protocol(self, version: int | None = None) -> dict:
         """The table's protocol at ``version``: the last protocol action at
-        or before it (checkpoint row + JSON tail), defaulting to the base
-        PROTOCOL. Feature-gated capabilities (deletionVectors,
-        columnMapping) upgrade this lazily on first use — the spec's
-        table-features representation (minReaderVersion 3 /
-        minWriterVersion 7 with explicit feature lists)."""
-        v = self.latest_version() if version is None else version
-        proto = dict(PROTOCOL)
-        ck = self._checkpoint_version_at_or_before(v)
-        start = 0
-        if ck is not None:
-            import pyarrow.parquet as pq
-
-            for name in self._checkpoint_sets()[ck]:
-                tbl = pq.read_table(
-                    os.path.join(self.log_dir, name), columns=["protocol"]
-                )
-                for r in tbl.to_pylist():
-                    p = r.get("protocol")
-                    if p and p.get("minReaderVersion") is not None:
-                        proto = {k: v2 for k, v2 in p.items() if v2 is not None}
-            start = ck + 1
-        known = set(self.versions())
-        for u in range(start, v + 1):
-            if u not in known:
-                continue
-            for action in self._commit_actions(u):
-                if "protocol" in action:
-                    proto = action["protocol"]
-        return proto
+        or before it, defaulting to the base PROTOCOL. Feature-gated
+        capabilities (deletionVectors, columnMapping) upgrade this lazily
+        on first use — the spec's table-features representation
+        (minReaderVersion 3 / minWriterVersion 7 with explicit feature
+        lists)."""
+        return self._state(version).protocol
 
     # Legacy protocol versions imply feature sets (Delta PROTOCOL.md, table
     # features): an upgrade to reader 3 / writer 7 must carry them forward in
@@ -1578,26 +1558,26 @@ class DeltaTable:
     }
     _LEGACY_READER_FEATURES = {2: ["columnMapping"]}
 
+    @classmethod
     def _feature_upgrade_action(
-        self, feature: str, writer_only: bool = False
+        cls, cur: dict, feature: str, writer_only: bool = False
     ) -> dict | None:
-        """One protocol action upgrading the table to carry ``feature`` in
-        its feature lists (both, or writerFeatures only for writer-only
-        features like changeDataFeed), or None if already present. When
-        the current protocol is legacy (no feature lists), the lists are
+        """One protocol action upgrading protocol ``cur`` to carry
+        ``feature`` in its feature lists (both, or writerFeatures only for
+        writer-only features like changeDataFeed), or None if already
+        present. When ``cur`` is legacy (no feature lists), the lists are
         seeded with every feature the legacy minReader/minWriter versions
         implied, per the table-features upgrade rule."""
-        cur = self.protocol()
         rf = set(cur.get("readerFeatures") or [])
         wf = set(cur.get("writerFeatures") or [])
         if feature in wf and (writer_only or feature in rf):
             return None
         if cur.get("writerFeatures") is None:
-            for v2, feats in self._LEGACY_WRITER_FEATURES.items():
+            for v2, feats in cls._LEGACY_WRITER_FEATURES.items():
                 if cur.get("minWriterVersion", 0) >= v2:
                     wf.update(feats)
         if cur.get("readerFeatures") is None:
-            for v2, feats in self._LEGACY_READER_FEATURES.items():
+            for v2, feats in cls._LEGACY_READER_FEATURES.items():
                 if cur.get("minReaderVersion", 0) >= v2:
                     rf.update(feats)
         if not writer_only:
@@ -1619,43 +1599,8 @@ class DeltaTable:
     def domain_metadata(self, version: int | None = None) -> dict[str, dict]:
         """Resolved DOMAIN METADATA at ``version`` (spec §Domain Metadata):
         latest configuration per domain wins; ``removed: true`` tombstones
-        drop it. Reads the checkpoint's domainMetadata rows (when the
-        column exists — older checkpoints predate the feature) plus the
-        JSON tail, exactly like ``protocol()``."""
-        v = self.latest_version() if version is None else version
-        domains: dict[str, dict] = {}
-
-        def absorb(d: dict) -> None:
-            if not d or not d.get("domain"):
-                return
-            if d.get("removed"):
-                domains.pop(d["domain"], None)
-            else:
-                cfg = d.get("configuration")
-                domains[d["domain"]] = (
-                    json.loads(cfg) if isinstance(cfg, str) else dict(cfg or {})
-                )
-
-        ck = self._checkpoint_version_at_or_before(v)
-        start = 0
-        if ck is not None:
-            import pyarrow.parquet as pq
-
-            for name in self._checkpoint_sets()[ck]:
-                path = os.path.join(self.log_dir, name)
-                if "domainMetadata" not in pq.read_schema(path).names:
-                    continue
-                for r in pq.read_table(path, columns=["domainMetadata"]).to_pylist():
-                    absorb(r.get("domainMetadata"))
-            start = ck + 1
-        known = set(self.versions())
-        for u in range(start, v + 1):
-            if u not in known:
-                continue
-            for action in self._commit_actions(u):
-                if "domainMetadata" in action:
-                    absorb(action["domainMetadata"])
-        return domains
+        drop it."""
+        return self._state(version).domains
 
     @staticmethod
     def _rt_cols(meta: dict) -> tuple[str, str] | None:
@@ -1680,17 +1625,17 @@ class DeltaTable:
         st = json.loads(raw) if isinstance(raw, str) else raw
         return int(st["numRecords"])
 
-    def _rt_stamp(self, new_adds: list[dict], v: int) -> list[dict]:
+    def _rt_stamp(self, new_adds: list[dict], state: _State) -> list[dict]:
         """Assign fresh ``baseRowId`` / ``defaultRowCommitVersion`` to the
-        given add actions (spec §Row Tracking: every add in a commit gets a
-        base row id above the high-water mark; files are ordered by path so
-        assignment is deterministic) and return the domainMetadata action
-        carrying the advanced ``rowIdHighWaterMark``."""
-        dm = self.domain_metadata()
-        hwm = int((dm.get(self.RT_DOMAIN) or {}).get("rowIdHighWaterMark", -1))
+        add actions of the commit built on ``state`` (spec §Row Tracking:
+        every add in a commit gets a base row id above the high-water mark;
+        files are ordered by path so assignment is deterministic) and
+        return the domainMetadata action carrying the advanced
+        ``rowIdHighWaterMark``."""
+        hwm = int((state.domains.get(self.RT_DOMAIN) or {}).get("rowIdHighWaterMark", -1))
         for a in sorted(new_adds, key=lambda a: a["path"]):
             a["baseRowId"] = hwm + 1
-            a["defaultRowCommitVersion"] = v
+            a["defaultRowCommitVersion"] = state.version + 1
             hwm += self._add_num_records(a)
         return [
             {
@@ -1719,17 +1664,17 @@ class DeltaTable:
         the physical columns, where non-null materialized values win on
         read (``row_tracking_df``). DV deletes never move rows, so
         survivors keep ids for free."""
-        adds, meta = self.snapshot()
+        state = self._state()
+        adds, meta = state.adds, state.meta
         cfg = dict(meta.get("configuration") or {})
         if cfg.get("delta.enableRowTracking") == "true":
-            dm = self.domain_metadata()
             return {
                 "already_enabled": True,
                 "row_id_high_water_mark": int(
-                    (dm.get(self.RT_DOMAIN) or {}).get("rowIdHighWaterMark", -1)
+                    (state.domains.get(self.RT_DOMAIN) or {}).get("rowIdHighWaterMark", -1)
                 ),
             }
-        v = self.latest_version() + 1
+        v = state.version + 1
         tag = uuid.uuid4().hex[:8]
         cfg["delta.enableRowTracking"] = "true"
         cfg["delta.rowTracking.materializedRowIdColumnName"] = f"_row-id-col-{tag}"
@@ -1739,9 +1684,9 @@ class DeltaTable:
         new_meta = dict(meta)
         new_meta["configuration"] = cfg
         actions: list[dict] = [self._commit_info("ALTER TABLE (rowTracking)")]
-        up = self._feature_upgrade_action("rowTracking", writer_only=True)
+        up = self._feature_upgrade_action(state.protocol, "rowTracking", writer_only=True)
         if up is None:
-            up = self._feature_upgrade_action("domainMetadata", writer_only=True)
+            up = self._feature_upgrade_action(state.protocol, "domainMetadata", writer_only=True)
         else:
             wf = set(up["protocol"]["writerFeatures"]) | {"domainMetadata"}
             up["protocol"]["writerFeatures"] = sorted(wf)
@@ -1765,7 +1710,7 @@ class DeltaTable:
                 }
             }
         )
-        self._publish(v, actions)
+        self._publish(v, actions, meta)
         return {
             "already_enabled": False,
             "version": v,
@@ -1836,10 +1781,11 @@ class DeltaTable:
         NAME (so every already-written file, partitionValue, and stats key
         stays valid), after which rename/drop become metadata-only
         operations. Idempotent."""
-        _, meta = self.snapshot()
+        state = self._state()
+        meta = state.meta
         cfg = dict(meta.get("configuration") or {})
         if cfg.get("delta.columnMapping.mode") == "name":
-            return {"version": self.latest_version(), "already_enabled": True}
+            return {"version": state.version, "already_enabled": True}
         st = T.StructType.fromJson(json.loads(meta["schemaString"]))
         fields = []
         for i, f in enumerate(st.fields, start=1):
@@ -1852,13 +1798,13 @@ class DeltaTable:
         new_meta = dict(meta)
         new_meta["schemaString"] = T.StructType(fields).json()
         new_meta["configuration"] = cfg
-        v = self.latest_version() + 1
+        v = state.version + 1
         actions = [self._commit_info("UPGRADE COLUMN MAPPING")]
-        up = self._feature_upgrade_action("columnMapping")
+        up = self._feature_upgrade_action(state.protocol, "columnMapping")
         if up:
             actions.append(up)
         actions.append({"metaData": new_meta})
-        self._publish(v, actions)
+        self._publish(v, actions, meta)
         return {"version": v, "already_enabled": False}
 
     def _guard_renameable(self, name: str, op: str, meta: dict) -> None:
@@ -1866,7 +1812,7 @@ class DeltaTable:
             raise NotImplementedError(f"cannot drop partition column {name!r}")
         import re as _re
 
-        for cname, expr in self.constraints().items():
+        for cname, expr in self._constraints(meta).items():
             if _re.search(rf"\b{_re.escape(name)}\b", expr):
                 raise NotImplementedError(
                     f"cannot {op} column {name!r}: referenced by CHECK "
@@ -1879,7 +1825,8 @@ class DeltaTable:
         partitionValue, or stats key is touched, old versions time-travel
         under their own names. Partition columns may be renamed too (their
         hive directories are physical names)."""
-        _, meta = self.snapshot()
+        state = self._state()
+        meta = state.meta
         cfg = meta.get("configuration") or {}
         if cfg.get("delta.columnMapping.mode") != "name":
             raise ValueError("rename_column requires enable_column_mapping() first")
@@ -1899,9 +1846,9 @@ class DeltaTable:
         new_meta["partitionColumns"] = [
             new if c == old else c for c in (meta.get("partitionColumns") or [])
         ]
-        v = self.latest_version() + 1
+        v = state.version + 1
         self._publish(
-            v, [self._commit_info("RENAME COLUMN"), {"metaData": new_meta}]
+            v, [self._commit_info("RENAME COLUMN"), {"metaData": new_meta}], meta
         )
         return {"version": v}
 
@@ -1911,7 +1858,8 @@ class DeltaTable:
         but can never surface again — a column re-added with the same
         LOGICAL name gets a fresh physicalName, so reads select a column
         old files don't have (nulls), never the dropped values."""
-        _, meta = self.snapshot()
+        state = self._state()
+        meta = state.meta
         cfg = meta.get("configuration") or {}
         if cfg.get("delta.columnMapping.mode") != "name":
             raise ValueError("drop_column requires enable_column_mapping() first")
@@ -1925,8 +1873,8 @@ class DeltaTable:
         fields = [f for f in st.fields if f.name != name]
         new_meta = dict(meta)
         new_meta["schemaString"] = T.StructType(fields).json()
-        v = self.latest_version() + 1
-        self._publish(v, [self._commit_info("DROP COLUMN"), {"metaData": new_meta}])
+        v = state.version + 1
+        self._publish(v, [self._commit_info("DROP COLUMN"), {"metaData": new_meta}], meta)
         return {"version": v}
 
     @staticmethod
@@ -2345,7 +2293,8 @@ class DeltaTable:
         carry ``allowColumnDefaults`` (writer-only table feature). Applies
         to LATER writes only — existing rows are untouched (the spec's
         current-default, not a backfill)."""
-        _, meta = self.snapshot()
+        state = self._state()
+        meta = state.meta
         st = T.StructType.fromJson(json.loads(meta["schemaString"]))
         if name not in st.fieldNames():
             raise ValueError(f"no column {name!r} to set a default on")
@@ -2358,18 +2307,19 @@ class DeltaTable:
         new_meta = dict(meta)
         new_meta["schemaString"] = T.StructType(fields).json()
         actions: list[dict] = [self._commit_info("SET DEFAULT")]
-        up = self._feature_upgrade_action("allowColumnDefaults", writer_only=True)
+        up = self._feature_upgrade_action(state.protocol, "allowColumnDefaults", writer_only=True)
         if up is not None:
             actions.append(up)
         actions.append({"metaData": new_meta})
-        v = self.latest_version() + 1
-        self._publish(v, actions)
+        v = state.version + 1
+        self._publish(v, actions, meta)
         return {"version": v, "column": name, "default": expr}
 
     def drop_column_default(self, name: str) -> dict:
         """ALTER TABLE ALTER COLUMN DROP DEFAULT: later writes that omit
         the column null-fill again; history is untouched."""
-        _, meta = self.snapshot()
+        state = self._state()
+        meta = state.meta
         st = T.StructType.fromJson(json.loads(meta["schemaString"]))
         if name not in self._default_cols(meta):
             raise ValueError(f"no column {name!r} with a default")
@@ -2381,9 +2331,9 @@ class DeltaTable:
             fields.append(T.StructField(f.name, f.dataType, f.nullable, md))
         new_meta = dict(meta)
         new_meta["schemaString"] = T.StructType(fields).json()
-        v = self.latest_version() + 1
+        v = state.version + 1
         self._publish(
-            v, [self._commit_info("DROP DEFAULT"), {"metaData": new_meta}]
+            v, [self._commit_info("DROP DEFAULT"), {"metaData": new_meta}], meta
         )
         return {"version": v, "column": name}
 
@@ -2559,7 +2509,8 @@ class DeltaTable:
         schema with nulls (parquet-missing-column semantics), so old
         snapshots stay byte-identical."""
         adds_meta: list[dict] = []
-        _, meta = self.snapshot()
+        state = self._state()
+        meta = state.meta
         cur = T.StructType.fromJson(json.loads(meta["schemaString"]))
         part_cols = list(meta.get("partitionColumns") or [])
         new_cols = [f for f in df.schema.fields if f.name not in cur.fieldNames()]
@@ -2607,7 +2558,7 @@ class DeltaTable:
             if f.name not in aligned.columns:
                 aligned = aligned.withColumn(f.name, F.lit(None).cast(f.dataType))
         aligned = aligned.select(*cur.fieldNames())
-        self._check_constraints(aligned)
+        self._check_constraints(aligned, meta)
         adds = self._stage_files(
             aligned, part_cols, phys=self._phys_map(meta),
             shred=self._shred_cols(meta), bloom=self._bloom_cols(meta),
@@ -2622,24 +2573,25 @@ class DeltaTable:
             actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
         actions.extend(adds_meta)
         actions.extend({"add": a} for a in adds)
-        v = self.latest_version() + 1
         if self._rt_cols(meta):
-            actions.extend(self._rt_stamp(adds, v))
-        self._publish(v, actions)
+            actions.extend(self._rt_stamp(adds, state))
+        v = state.version + 1
+        self._publish(v, actions, state.meta)
         return {"version": v, "files_added": len(adds)}
 
     def overwrite(self, df: DataFrame) -> dict:
         """Full-table overwrite: remove every live file, add the new ones —
         one atomic commit, old snapshots still readable (time travel)."""
-        part_cols = self.partition_columns()
-        old, meta = self.snapshot()
+        state = self._state()
+        old, meta = state.adds, state.meta
+        part_cols = list(meta.get("partitionColumns") or [])
         # identity: replaced rows get FRESH values above the old watermark
         # (the spec's watermark never decreases, even on overwrite)
         df = self._apply_identity(
             self._apply_defaults(self._apply_generated(df, meta), meta), meta
         )
-        df = df.select(*self.schema().fieldNames())
-        self._check_constraints(df)
+        df = df.select(*T.StructType.fromJson(json.loads(meta["schemaString"])).fieldNames())
+        self._check_constraints(df, meta)
         adds = self._stage_files(
             df, part_cols, phys=self._phys_map(meta),
             shred=self._shred_cols(meta), bloom=self._bloom_cols(meta),
@@ -2661,12 +2613,12 @@ class DeltaTable:
             for a in old
         )
         actions.extend({"add": a} for a in adds)
-        v = self.latest_version() + 1
         if self._rt_cols(meta):
             # overwrite REPLACES logical rows: all ids are fresh (spec —
             # no carry-through semantics exist for replaced rows)
-            actions.extend(self._rt_stamp(adds, v))
-        self._publish(v, actions)
+            actions.extend(self._rt_stamp(adds, state))
+        v = state.version + 1
+        self._publish(v, actions, meta)
         return {"version": v, "files_added": len(adds), "files_removed": len(old)}
 
 
@@ -2700,10 +2652,11 @@ class DeltaTable:
         land with the rewrite. One atomic commit of remove+add actions —
         Delta's data-skipping MERGE shape, driven by the add-action stats
         this writer already records."""
-        _, meta = self.snapshot()
+        state = self._state()
+        adds, meta = state.adds, state.meta
         phys = self._phys_map(meta)
-        schema = self.schema()
-        part_cols = self.partition_columns()
+        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
+        part_cols = list(meta.get("partitionColumns") or [])
         updates = self._apply_generated(updates, meta)
         # identity columns (spec §Identity Columns): MERGE may not set an
         # identity value unless explicit inserts are allowed; an OMITTED
@@ -2737,18 +2690,17 @@ class DeltaTable:
         updates = updates.select(
             *[F.col(f.name).cast(f.dataType) for f in schema.fields]
         )
-        self._check_constraints(updates)
-        adds = self.files()
+        self._check_constraints(updates, meta)
         n_rows, ulo, uhi = updates.agg(
             F.count(F.lit(1)), F.min(key), F.max(key)
         ).first()
         now_ms = int(time.time() * 1000)
-        v = self.latest_version() + 1
+        v = state.version + 1
         actions: list[dict] = [self._commit_info("MERGE")]
         if txn is not None:
             actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
         if n_rows == 0:  # empty batch → no-op commit (idempotency ledger)
-            self._publish(v, actions)
+            self._publish(v, actions, meta)
             return {"updated": 0, "inserted": 0, "files_rewritten": 0,
                     "files_carried": len(adds)}
         if ulo is None:
@@ -2768,8 +2720,8 @@ class DeltaTable:
                 actions.append({"metaData": hwm_meta})
             actions.extend({"add": a} for a in new_adds)
             if self._rt_cols(meta):
-                actions.extend(self._rt_stamp(new_adds, v))
-            self._publish(v, actions)
+                actions.extend(self._rt_stamp(new_adds, state))
+            self._publish(v, actions, meta)
             return {"updated": 0, "inserted": n_rows, "files_rewritten": 0,
                     "files_carried": len(adds)}
 
@@ -2912,8 +2864,8 @@ class DeltaTable:
         actions.extend(self._remove_action(a, now_ms) for a in touched)
         actions.extend({"add": a} for a in new_adds)
         if rt:
-            actions.extend(self._rt_stamp(new_adds, v))
-        self._publish(v, actions)
+            actions.extend(self._rt_stamp(new_adds, state))
+        self._publish(v, actions, meta)
         n_updates = updates.count()
         return {
             "updated": matched,
@@ -2929,18 +2881,17 @@ class DeltaTable:
         deletion-vector anti-join, unlike input_file_name); everything else
         is carried by reference. Files with DVs are read merge-on-read, so
         the rewrite never resurrects DV-dead rows and drops the DV."""
-        _, meta = self.snapshot()
+        state = self._state()
+        adds, meta = state.adds, state.meta
         phys = self._phys_map(meta)
-        schema = self.schema()
-        part_cols = self.partition_columns()
-        adds = self.files()
+        part_cols = list(meta.get("partitionColumns") or [])
         by_abs = {os.path.abspath(self._abs_path(a["path"])): a for a in adds}
         now_ms = int(time.time() * 1000)
-        v = self.latest_version() + 1
+        v = state.version + 1
         actions: list[dict] = [self._commit_info("DELETE")]
         # per-partition-group scan so partition columns participate in the
         # predicate; __dv_fp is evaluated at the parquet source
-        full = self._read_entries(adds, schema, part_cols, with_identity=True, phys=phys)
+        full = self._read_snapshot(adds, meta, with_identity=True)
         hit_files = [
             r["__dv_fp"]
             # bounded: one distinct row per file containing matches
@@ -2952,7 +2903,7 @@ class DeltaTable:
             if p2 in by_abs:
                 hit.append(by_abs[p2])
         if not hit:
-            self._publish(v, actions)
+            self._publish(v, actions, meta)
             return {"deleted": 0, "files_rewritten": 0}
         rt = self._rt_cols(meta)
         if rt:
@@ -2961,7 +2912,7 @@ class DeltaTable:
             # files so ids survive the copy-on-write (spec §Row Tracking)
             hit_df = self._rt_resolved(hit, meta)
         else:
-            hit_df = self._read_entries(hit, schema, part_cols, phys=phys)
+            hit_df = self._read_snapshot(hit, meta)
         deleted = hit_df.where(predicate).count()
         kept = hit_df.where(f"NOT ({predicate}) OR ({predicate}) IS NULL")
         new_adds = self._stage_files(
@@ -2971,8 +2922,8 @@ class DeltaTable:
         actions.extend(self._remove_action(a, now_ms) for a in hit)
         actions.extend({"add": a} for a in new_adds)
         if rt:
-            actions.extend(self._rt_stamp(new_adds, v))
-        self._publish(v, actions)
+            actions.extend(self._rt_stamp(new_adds, state))
+        self._publish(v, actions, meta)
         return {"deleted": deleted, "files_rewritten": len(hit)}
 
     def delete_vectors(self, predicate: str) -> dict:
@@ -3007,15 +2958,11 @@ class DeltaTable:
         Copy-on-write paths (merge/delete/compact) read through
         ``_read_entries`` and therefore honor DVs; ``compact()`` rewrites
         purge them (the OPTIMIZE/PURGE behavior)."""
-        _, meta = self.snapshot()
-        schema = self.schema()
-        part_cols = self.partition_columns()
-        adds = self.files()
+        state = self._state()
+        adds, meta = state.adds, state.meta
         by_abs = {os.path.abspath(self._abs_path(a["path"])): a for a in adds}
-        v = self.latest_version() + 1
-        full = self._read_entries(
-            adds, schema, part_cols, with_identity=True, phys=self._phys_map(meta)
-        )
+        v = state.version + 1
+        full = self._read_snapshot(adds, meta, with_identity=True)
         matched = full.where(predicate).select(
             F.col("__dv_fp").alias("fp"), F.col("__dv_pos").alias("pos")
         )
@@ -3081,11 +3028,11 @@ class DeltaTable:
             key=lambda r: r["fp"],
         )
         if not res:
-            self._publish(v, [self._commit_info("DELETE")])
+            self._publish(v, [self._commit_info("DELETE")], meta)
             return {"deleted": 0, "files_updated": 0}
         now_ms = int(time.time() * 1000)
         actions: list[dict] = [self._commit_info("DELETE")]
-        up = self._feature_upgrade_action("deletionVectors")
+        up = self._feature_upgrade_action(state.protocol, "deletionVectors")
         if up:
             actions.append(up)
         for r in res:
@@ -3105,7 +3052,7 @@ class DeltaTable:
             na["dataChange"] = True
             na["deletionVector"] = dvd
             actions.append({"add": na})
-        self._publish(v, actions)
+        self._publish(v, actions, meta)
         return {
             "deleted": sum(r["new_dead"] for r in res),
             "files_updated": len(res),
@@ -3121,21 +3068,21 @@ class DeltaTable:
         ``vacuum`` on the clone never touches the source's files (it only
         walks the clone's root), while vacuuming the SOURCE can strand the
         clone — the documented shallow-clone caveat."""
-        adds, meta = self.snapshot()
+        state = self._state()
         t = DeltaTable(self.spark, dest)
         if t.versions():
             raise FileExistsError(f"Delta table already exists at {dest}")
         os.makedirs(dest, exist_ok=True)
-        new_meta = dict(meta)
+        new_meta = dict(state.meta)
         new_meta["id"] = uuid.uuid4().hex
         actions: list[dict] = [
             t._commit_info("CLONE"),
-            {"protocol": self.protocol()},
+            {"protocol": state.protocol},
             {"metaData": new_meta},
         ]
         # domain metadata carries over (row tracking's high-water mark —
         # without it the clone's next append would reuse row ids)
-        for domain, cfg in sorted(self.domain_metadata().items()):
+        for domain, cfg in sorted(state.domains.items()):
             actions.append(
                 {
                     "domainMetadata": {
@@ -3145,7 +3092,7 @@ class DeltaTable:
                     }
                 }
             )
-        for a in adds:
+        for a in state.adds:
             a2 = dict(a)
             a2["path"] = quote(os.path.abspath(self._abs_path(a["path"])))
             d = a2.get("deletionVector")
@@ -3172,10 +3119,9 @@ class DeltaTable:
         over versions stay time-travelable — and immutable files make this
         pure metadata. Restoring across a VACUUM horizon fails on read
         (files reclaimed), same as real Delta's RESTORE caveat."""
-        base = self.latest_version()
-        cur, _ = self.snapshot(base)
+        state = self._state()
         old_adds, _ = self.snapshot(version)
-        cur_by = {a["path"]: a for a in cur}
+        cur_by = {a["path"]: a for a in state.adds}
         old_by = {a["path"]: a for a in old_adds}
         adds = [a for p, a in old_by.items() if p not in cur_by or cur_by[p] != a]
         removes = [a for p, a in cur_by.items() if p not in old_by]
@@ -3183,8 +3129,8 @@ class DeltaTable:
         actions: list[dict] = [self._commit_info("RESTORE")]
         actions.extend(self._remove_action(a, now_ms) for a in removes)
         actions.extend({"add": dict(a, dataChange=True)} for a in adds)
-        v = base + 1
-        self._publish(v, actions)
+        v = state.version + 1
+        self._publish(v, actions, state.meta)
         return {"version": v, "files_added": len(adds), "files_removed": len(removes)}
 
     def table_changes(
@@ -3222,9 +3168,9 @@ class DeltaTable:
         spec's read rule. The default rendering is the raw epoch millis
         (bigint — stable for oracle hashing); ``timestamp_type=True``
         renders Delta proper's TimestampType, same instants."""
-        schema = self.schema(v_to)
-        part_cols = self.partition_columns(v_to)
         _, meta = self.snapshot(v_to)
+        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
+        part_cols = list(meta.get("partitionColumns") or [])
         phys = self._phys_map(meta)
         rt = self._rt_cols(meta)
         parts: list[DataFrame] = []
@@ -3356,10 +3302,10 @@ class DeltaTable:
         flag)."""
         if zorder_by is not None and not 2 <= len(zorder_by) <= 4:
             raise NotImplementedError("zorder_by takes 2-4 columns")
-        _, meta = self.snapshot()
+        state = self._state()
+        adds, meta = state.adds, state.meta
         phys = self._phys_map(meta)
-        schema = self.schema()
-        part_cols = self.partition_columns()
+        part_cols = list(meta.get("partitionColumns") or [])
         # LIQUID CLUSTERING: a clustered table's OPTIMIZE clusters by the
         # registered columns (domain metadata) unless the caller forces an
         # explicit zorder — 2-4 columns ride the N-way HILBERT curve
@@ -3372,12 +3318,11 @@ class DeltaTable:
         cluster_1d: str | None = None
         cluster_nd: list[str] | None = None
         if zorder_by is None:
-            cc = self.clustering_columns()
+            cc = self._clustering_terms(state.domains)
             if len(cc) >= 2:
                 cluster_nd = cc
             elif len(cc) == 1:
                 cluster_1d = cc[0]
-        adds = self.files()
         groups: dict[tuple, list[dict]] = {}
         for a in adds:
             pv = a.get("partitionValues") or {}
@@ -3405,7 +3350,7 @@ class DeltaTable:
                 # rewrite_data_files)
                 df = self._rt_resolved(group, meta)
             else:
-                df = self._read_entries(group, schema, part_cols, phys=phys)
+                df = self._read_snapshot(group, meta)
             if zorder_by is not None:
                 from ..functions.layout import cluster_by_morton
 
@@ -3451,10 +3396,9 @@ class DeltaTable:
             rewritten += len(group)
         if rewritten == 0:
             return {"files_rewritten": 0}
-        v = self.latest_version() + 1
         if rt:
-            actions.extend(self._rt_stamp(all_new, v))
-        self._publish(v, actions)
+            actions.extend(self._rt_stamp(all_new, state))
+        self._publish(state.version + 1, actions, meta)
         return {"files_rewritten": rewritten}
 
     def vacuum(self, retain_versions: int = 2, min_age_seconds: float = 3600.0) -> dict:
@@ -3625,9 +3569,9 @@ def stream_append(table: DeltaTable, stream_df: DataFrame, stream_id: str, check
     version=batchId), so a batch replayed after a crash-restart (same
     checkpoint → same batchId) is detected via ``seen_txn`` and skipped
     instead of double-appended — Delta's own idempotent-writes contract,
-    with the dedup ledger in the table's log. The idempotency window is the
-    retained JSON log (txn actions expire with their commits — Delta's
-    default behaves the same way).
+    with the dedup ledger in the table's log. Checkpoints carry every
+    appId's latest txn action, as Delta's do, so the ledger survives
+    ``cleanup_log`` expiring the commits that wrote it.
 
     Runs with Trigger.availableNow; returns after the drain completes."""
     from ..sources.change_feed import drain_exactly_once
@@ -5160,11 +5104,11 @@ def q179_delta_in_commit_timestamps(spark: SparkSession, sf_dir: str) -> DataFra
     hash. A writer that appends commitInfo last, reuses a timestamp, or
     forgets the enablement properties fails the gate."""
     t = _ict_demo_table(spark, sf_dir)
-    _, meta = t.snapshot()
-    cfg = meta["configuration"]
+    state = t._state()
+    cfg = state.meta["configuration"]
     ev = int(cfg["delta.inCommitTimestampEnablementVersion"])
     first_ok, icts = True, []
-    for v in range(ev, t.latest_version() + 1):
+    for v in range(ev, state.version + 1):
         acts = t._commit_actions(v)
         ci = acts[0].get("commitInfo") or {}
         if "inCommitTimestamp" not in ci:

@@ -48,7 +48,7 @@ def test_append_overwrite_time_travel(spark, root):
     assert t.read(0).count() == 10
     assert t.read(1).count() == 20
     assert t.read().count() == 5
-    ops = [h["operation"] for h in t.history()]
+    ops = [r[1] for r in t._history_rows()]
     assert ops[0].startswith("CREATE") and "Overwrite" in ops[2]
 
 
@@ -244,6 +244,94 @@ def test_snapshot_lists_the_log_once(root, monkeypatch):
     assert len(adds) == 31 and len(calls) == 1
     calls.clear()
     assert len(t.snapshot()[0]) == 32 and len(calls) == 1
+
+
+def test_txn_ledger_survives_log_cleanup(root):
+    """A txn action whose commit ``cleanup_log`` expires is still served
+    by ``seen_txn``: the checkpoint carries every appId's latest txn, so a
+    re-delivered ``stream_append`` batch is still recognized."""
+    os.makedirs(os.path.join(root, "_delta_log"))
+    cols = [{"name": "k", "type": "long", "nullable": True, "metadata": {}}]
+    for v in range(12):
+        acts = [{"commitInfo": {"operation": "WRITE"}}]
+        if v == 0:
+            acts += [
+                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+                {"metaData": {"id": "t", "format": {"provider": "parquet", "options": {}},
+                              "schemaString": json.dumps({"type": "struct", "fields": cols}),
+                              "partitionColumns": [], "configuration": {}}},
+            ]
+        if v == 1:
+            acts.append({"txn": {"appId": "s1", "version": 5}})
+        acts.append({"add": {"path": f"f{v}.parquet", "partitionValues": {}, "size": 1,
+                             "modificationTime": 0, "dataChange": True}})
+        with open(os.path.join(root, "_delta_log", _fmt_commit(v)), "w") as f:
+            f.write("".join(json.dumps(a) + "\n" for a in acts))
+    t = DeltaTable(None, root)
+    t._write_checkpoint(11)
+    assert t.cleanup_log(keep_versions=1)["commits_deleted"] == 11
+    assert t.seen_txn("s1") == 5
+    assert t.seen_txn("other") is None
+
+
+def _six_rows(spark, root):
+    return DeltaTable.create(
+        spark, root, spark.range(6).select(F.col("id").alias("k"), (F.col("id") * 10).alias("v")).coalesce(1)
+    )
+
+
+@pytest.mark.parametrize("op", ["merge", "delete"])
+def test_commit_on_a_superseded_version_is_refused(spark, root, monkeypatch, op):
+    """Another handle's commit that lands after an operation resolved its
+    state makes that operation raise instead of committing over a
+    snapshot it never saw; the table keeps exactly the other commit."""
+    t = _six_rows(spark, root)
+    orig = DeltaTable._phys_map
+    fired = []
+
+    def raced(meta):
+        # an operation's first _phys_map call comes right after it
+        # resolved its state: the concurrent delete lands there
+        if not fired:
+            fired.append(1)
+            DeltaTable(spark, root).delete("k = 3")
+        return orig(meta)
+
+    monkeypatch.setattr(DeltaTable, "_phys_map", staticmethod(raced))
+    with pytest.raises(FileExistsError):
+        if op == "merge":
+            t.merge(spark.createDataFrame([(4, 41)], "k long, v long"), key="k")
+        else:
+            t.delete("k = 4")
+    monkeypatch.setattr(DeltaTable, "_phys_map", staticmethod(orig))
+    assert fired and t.latest_version() == 1
+    assert _rows(t.read()) == [(k, k * 10) for k in (0, 1, 2, 4, 5)]
+
+
+def test_each_write_replays_the_log_once(spark, root, monkeypatch):
+    """A write lists ``_delta_log`` at most twice: once for the state it
+    plans on, once for the version checksum of the commit it made."""
+    t = DeltaTable.create(
+        spark, root, spark.range(10).select(F.col("id").alias("k"), F.col("id").alias("v")).coalesce(1)
+    )
+    calls = []
+    orig = DeltaTable.versions
+    monkeypatch.setattr(DeltaTable, "versions", lambda self: calls.append(1) or orig(self))
+    ops = {
+        "append": lambda: t.append(spark.createDataFrame([(10, 10)], "k long, v long")),
+        "delete": lambda: t.delete("k = 3"),
+        "merge": lambda: t.merge(spark.createDataFrame([(4, 40)], "k long, v long"), key="k"),
+        "delete_vectors": lambda: t.delete_vectors("k = 5"),
+        "compact": lambda: t.compact(),
+        "overwrite": lambda: t.overwrite(spark.createDataFrame([(1, 1)], "k long, v long")),
+    }
+    listings = {}
+    for name, run in ops.items():
+        calls.clear()
+        run()
+        listings[name] = len(calls)
+    assert t.latest_version() == len(ops)
+    assert all(n <= 2 for n in listings.values()), listings
 
 
 def _hand_written_log(root, cols, adds):
