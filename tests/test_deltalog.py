@@ -218,12 +218,12 @@ def test_change_commits_read_only_their_range(root, monkeypatch):
     assert t.meta_in_effect(24)[0] == 0
 
 
-def test_snapshot_lists_the_log_once(root, monkeypatch):
-    """Replaying k commits with no checkpoint below lists ``_delta_log``
-    once per ``snapshot`` call, not once per replayed commit."""
+def _one_file_per_commit_log(root, n, extra=None):
+    """A hand-written ``_delta_log`` of ``n`` commits, each adding one
+    (absent) data file; ``extra`` maps a version to more actions."""
     os.makedirs(os.path.join(root, "_delta_log"))
     cols = [{"name": "k", "type": "long", "nullable": True, "metadata": {}}]
-    for v in range(32):
+    for v in range(n):
         acts = [{"commitInfo": {"operation": "WRITE"}}]
         if v == 0:
             acts += [
@@ -232,11 +232,18 @@ def test_snapshot_lists_the_log_once(root, monkeypatch):
                               "schemaString": json.dumps({"type": "struct", "fields": cols}),
                               "partitionColumns": [], "configuration": {}}},
             ]
+        acts += (extra or {}).get(v, [])
         acts.append({"add": {"path": f"f{v}.parquet", "partitionValues": {}, "size": 1,
                              "modificationTime": 0, "dataChange": True}})
         with open(os.path.join(root, "_delta_log", _fmt_commit(v)), "w") as f:
             f.write("".join(json.dumps(a) + "\n" for a in acts))
-    t = DeltaTable(None, root)
+    return DeltaTable(None, root)
+
+
+def test_snapshot_lists_the_log_once(root, monkeypatch):
+    """Replaying k commits with no checkpoint below lists ``_delta_log``
+    once per ``snapshot`` call, not once per replayed commit."""
+    t = _one_file_per_commit_log(root, 32)
     calls = []
     orig = DeltaTable.versions
     monkeypatch.setattr(DeltaTable, "versions", lambda self: calls.append(1) or orig(self))
@@ -250,34 +257,11 @@ def test_txn_ledger_survives_log_cleanup(root):
     """A txn action whose commit ``cleanup_log`` expires is still served
     by ``seen_txn``: the checkpoint carries every appId's latest txn, so a
     re-delivered ``stream_append`` batch is still recognized."""
-    os.makedirs(os.path.join(root, "_delta_log"))
-    cols = [{"name": "k", "type": "long", "nullable": True, "metadata": {}}]
-    for v in range(12):
-        acts = [{"commitInfo": {"operation": "WRITE"}}]
-        if v == 0:
-            acts += [
-                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-                {"metaData": {"id": "t", "format": {"provider": "parquet", "options": {}},
-                              "schemaString": json.dumps({"type": "struct", "fields": cols}),
-                              "partitionColumns": [], "configuration": {}}},
-            ]
-        if v == 1:
-            acts.append({"txn": {"appId": "s1", "version": 5}})
-        acts.append({"add": {"path": f"f{v}.parquet", "partitionValues": {}, "size": 1,
-                             "modificationTime": 0, "dataChange": True}})
-        with open(os.path.join(root, "_delta_log", _fmt_commit(v)), "w") as f:
-            f.write("".join(json.dumps(a) + "\n" for a in acts))
-    t = DeltaTable(None, root)
+    t = _one_file_per_commit_log(root, 12, {1: [{"txn": {"appId": "s1", "version": 5}}]})
     t._write_checkpoint(11)
     assert t.cleanup_log(keep_versions=1)["commits_deleted"] == 11
     assert t.seen_txn("s1") == 5
     assert t.seen_txn("other") is None
-
-
-def _six_rows(spark, root):
-    return DeltaTable.create(
-        spark, root, spark.range(6).select(F.col("id").alias("k"), (F.col("id") * 10).alias("v")).coalesce(1)
-    )
 
 
 @pytest.mark.parametrize("op", ["merge", "delete"])
@@ -285,7 +269,8 @@ def test_commit_on_a_superseded_version_is_refused(spark, root, monkeypatch, op)
     """Another handle's commit that lands after an operation resolved its
     state makes that operation raise instead of committing over a
     snapshot it never saw; the table keeps exactly the other commit."""
-    t = _six_rows(spark, root)
+    rows = spark.range(6).select(F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
+    t = DeltaTable.create(spark, root, rows.coalesce(1))
     orig = DeltaTable._phys_map
     fired = []
 
