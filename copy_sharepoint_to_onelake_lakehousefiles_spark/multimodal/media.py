@@ -746,17 +746,6 @@ def decode_gif_frames(content: bytes) -> tuple[list[np.ndarray], list[int]]:
     return frames, delays
 
 
-def sample_gif_frames(content: bytes, n: int) -> list[np.ndarray]:
-    """Evenly-spaced frame sampling — the training-pipeline video op
-    (clip-level features come from k sampled frames, not every frame).
-    n ≥ frame count returns every frame once."""
-    frames, _ = decode_gif_frames(content)
-    if n >= len(frames):
-        return frames
-    idxs = [round(i * (len(frames) - 1) / (n - 1)) for i in range(n)] if n > 1 else [0]
-    return [frames[i] for i in idxs]
-
-
 def _decode_gif(content: bytes) -> np.ndarray:
     """Single-image GIF decode: the first composed frame (full canvas)."""
     frames, _ = decode_gif_frames(content)
@@ -1570,94 +1559,6 @@ def decode_audio(content: bytes) -> tuple[np.ndarray, int]:
     return samples, rate
 
 
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize: REAL nearest-neighbor resample for decodable payloads
-    (PIL / PPM / BMP → re-encoded as P6 PPM); undecodable payloads pass
-    through unchanged with the target dims recorded (the prior stub
-    behavior, kept so compressed formats without Pillow still flow)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            out = []
-            for content in pdf["content"]:
-                try:
-                    img = decode_image(bytes(content) if content is not None else b"")
-                    ys = (np.arange(height) * img.shape[0] // height).clip(0, img.shape[0] - 1)
-                    xs = (np.arange(width) * img.shape[1] // width).clip(0, img.shape[1] - 1)
-                    out.append(encode_ppm(img[ys][:, xs]))
-                except DECODE_ERRORS:  # undecodable → passthrough
-                    out.append(content)
-            pdf["content"] = out
-            pdf["width"] = width
-            pdf["height"] = height
-            yield pdf
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.StringType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]
-    )
-    return media.select("media_id", "content").mapInPandas(run, schema)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame/window sampling: one input row → N output rows through
-    mapInPandas (the UDTF shape). WAV audio gets REAL windows — one row per
-    every_ms of decoded samples with (rms, zcr, peak, mean) per window.
-    Video payloads remain the honest stub (no container parsers here):
-    fake frame timestamps + hash features derived from content length."""
-
-    def _audio_windows(content: bytes):
-        samples, rate = decode_audio(content)
-        step = max(1, int(rate * every_ms / 1000))
-        wins = []
-        for i, s in enumerate(range(0, max(len(samples), 1), step)):
-            w = samples[s : s + step]
-            if not len(w):
-                break
-            wins.append(
-                (
-                    i * every_ms,
-                    [
-                        float(np.sqrt(np.mean(w**2))),
-                        float(np.mean(np.abs(np.diff(np.sign(w))) > 0)) if len(w) > 1 else 0.0,
-                        float(np.max(np.abs(w))),
-                        float(np.mean(w)),
-                    ],
-                )
-            )
-        return wins
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                content = bytes(r.content) if r.content is not None else b""
-                try:
-                    for ts, feats in _audio_windows(content):
-                        rows.append((r.media_id, ts, feats))
-                    continue
-                except DECODE_ERRORS:  # not decodable audio → stub frames
-                    pass
-                n_frames = max(1, min(5, len(content) // 64))
-                for i in range(n_frames):
-                    rows.append((r.media_id, i * every_ms, _stub_decode(content, 4)))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_ts_ms", "frame_features"])
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.StringType()),
-            T.StructField("frame_ts_ms", T.LongType()),
-            T.StructField("frame_features", T.ArrayType(T.FloatType())),
-        ]
-    )
-    return media.select("media_id", "content").mapInPandas(run, schema)
-
-
 # the checkout's tests/fixtures, beside the package directory
 _MEDIA_ORACLE_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -1849,45 +1750,6 @@ def q61_media_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = materialize(top1)  # executor-side re-write; no driver collect
     shutil.rmtree(root, ignore_errors=True)
     return out
-
-
-def extract_features_arrow(media: DataFrame, dim: int = 8) -> DataFrame:
-    """Arrow-NATIVE feature extraction (mapInArrow): operates directly on
-    pyarrow RecordBatches — no pandas materialization of the binary column,
-    which matters when batches carry hundreds of MB of image/video bytes
-    (pandas would copy every blob into Python objects; Arrow keeps them as
-    zero-copy buffers until the digest loop touches them)."""
-    import pyarrow as pa
-
-    def run(batches):
-        for batch in batches:
-            media_ids = batch.column("media_id").to_pylist()
-            kinds = batch.column("kind").to_pylist()
-            contents = batch.column("content").to_pylist()
-            n_bytes, digests, feats = [], [], []
-            for c in contents:
-                c = c or b""
-                n_bytes.append(len(c))
-                digests.append(hashlib.sha256(c).hexdigest())
-                feats.append(_stub_decode(c, dim))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(media_ids, pa.string()),
-                    pa.array(kinds, pa.string()),
-                    pa.array(n_bytes, pa.int64()),
-                    pa.array(digests, pa.string()),
-                    pa.array(feats, pa.list_(pa.float32())),
-                    # this path is digest/stub-only BY DESIGN (zero-copy
-                    # pipeline, no codec invocation) — status says so
-                    pa.array(["stub:arrow-digest-path"] * len(contents), pa.string()),
-                ],
-                names=[
-                    "media_id", "kind", "n_bytes", "digest", "features",
-                    "decode_status",
-                ],
-            )
-
-    return media.select("media_id", "kind", "content").mapInArrow(run, FEATURE_SCHEMA)
 
 
 # ------------------------------------------------------------- video frames

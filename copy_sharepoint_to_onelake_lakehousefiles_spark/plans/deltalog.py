@@ -125,6 +125,21 @@ class _State(NamedTuple):
     txns: dict[str, int]
 
 
+def _checksum(state: _State) -> dict:
+    """The VERSION CHECKSUM payload (``<version>.crc``) of ``state``."""
+    dvs = [a["deletionVector"] for a in state.adds if a.get("deletionVector")]
+    return {
+        "tableSizeBytes": sum(int(a.get("size") or 0) for a in state.adds),
+        "numFiles": len(state.adds),
+        "numMetadata": 1,
+        "numProtocol": 1,
+        "numDeletedRecordsOpt": sum(int(d.get("cardinality") or 0) for d in dvs),
+        "numDeletionVectorsOpt": len(dvs),
+        "metadata": state.meta,
+        "protocol": state.protocol,
+    }
+
+
 def _checkpoint_action(r: dict) -> dict:
     """One checkpoint parquet row in the JSON log's action form: parquet
     MAP columns come back as [(k, v), ...] and the metaData fields the
@@ -407,15 +422,25 @@ class DeltaTable:
         # neither a commit nor a covering checkpoint chain exists
         if v not in known and (ck is None or any(u not in known for u in range(ck + 1, v + 1))):
             raise ValueError(f"version {v} not in Delta log (have {listed})")
-        adds: dict[str, dict] = {}
-        meta: dict | None = None
-        proto = dict(PROTOCOL)
-        domains: dict[str, dict] = {}
-        txns: dict[str, int] = {}
         actions = self._checkpoint_actions(ckpts[ck]) if ck is not None else []
         for u in range(0 if ck is None else ck + 1, v + 1):
             if u in known:
                 actions.extend(self._commit_actions(u))
+        state = self._fold(None, v, actions)
+        self._validate_version_checksum(v, state.adds)
+        return state
+
+    def _fold(self, base: _State | None, version: int, actions: list[dict]) -> _State:
+        """``base`` (None: no table yet) with ``actions`` applied in log
+        order, as the state at ``version``. A replay folds a checkpoint
+        and its JSON tail into nothing; a commit folds its own actions
+        into the state it planned on, so its checksum and checkpoint need
+        no second replay."""
+        adds = {a["path"]: a for a in base.adds} if base else {}
+        meta = base.meta if base else None
+        proto = base.protocol if base else dict(PROTOCOL)
+        domains = dict(base.domains) if base else {}
+        txns = dict(base.txns) if base else {}
         for a in actions:
             if "add" in a:
                 adds[a["add"]["path"]] = a["add"]
@@ -440,9 +465,7 @@ class DeltaTable:
                 txns[tx["appId"]] = max(txns.get(tx["appId"], tx["version"]), tx["version"])
         if meta is None:
             raise ValueError(f"Delta log at {self.root} has no metaData action")
-        live = list(adds.values())
-        self._validate_version_checksum(v, live)
-        return _State(v, live, meta, proto, domains, txns)
+        return _State(version, list(adds.values()), meta, proto, domains, txns)
 
     def snapshot(self, version: int | None = None) -> tuple[list[dict], dict]:
         """(live add-actions, metaData) at ``version`` (default latest)."""
@@ -485,29 +508,15 @@ class DeltaTable:
         against its own replay, plus the snapshot's protocol and metaData
         for single-file snapshot bootstraps and O(1) table-size answers.
         Computed by the same log replay snapshot planning performs."""
-        state = self._state(version)
-        dvs = [a["deletionVector"] for a in state.adds if a.get("deletionVector")]
-        return {
-            "tableSizeBytes": sum(int(a.get("size") or 0) for a in state.adds),
-            "numFiles": len(state.adds),
-            "numMetadata": 1,
-            "numProtocol": 1,
-            "numDeletedRecordsOpt": sum(
-                int(d.get("cardinality") or 0) for d in dvs
-            ),
-            "numDeletionVectorsOpt": len(dvs),
-            "metadata": state.meta,
-            "protocol": state.protocol,
-        }
+        return _checksum(self._state(version))
 
-    def _write_version_checksum(self, version: int) -> None:
-        crc = self.version_checksum(version)
+    def _write_version_checksum(self, state: _State) -> None:
         tmp = os.path.join(self.log_dir, f".tmpcrc_{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
-            f.write(json.dumps(crc))
+            f.write(json.dumps(_checksum(state)))
         # os.replace (not link): the crc is a derived artifact — losers of
         # the COMMIT race never get here, and recomputation is idempotent
-        os.replace(tmp, os.path.join(self.log_dir, _fmt_crc(version)))
+        os.replace(tmp, os.path.join(self.log_dir, _fmt_crc(state.version)))
 
     def schema(self, version: int | None = None) -> T.StructType:
         _, meta = self.snapshot(version)
@@ -940,22 +949,26 @@ class DeltaTable:
         cfg = (meta or {}).get("configuration") or {}
         return cfg.get("delta.enableInCommitTimestamps") == "true"
 
-    def _publish(self, version: int, actions: list[dict], meta: dict | None = None) -> None:
+    def _publish(self, state: _State | None, actions: list[dict]) -> _State:
         """Put-if-absent commit publish: write actions to a temp file, then
         ``os.link`` to the final version name — link(2) fails atomically if
         the version exists, which is exactly the mutual-exclusion rule the
-        Delta protocol requires of a LogStore. Writers publish at their
-        read state's ``version + 1`` (``meta`` is that state's metaData;
-        None for a table's first commit), so a plan built on a version
-        another writer has since superseded raises ``FileExistsError``
-        instead of committing over a snapshot it never saw.
+        Delta protocol requires of a LogStore. A writer publishes at its
+        read ``state``'s ``version + 1`` (version 0 when ``state`` is None,
+        a table's first commit), so a plan built on a version another
+        writer has since superseded raises ``FileExistsError`` instead of
+        committing over a snapshot it never saw. Returns the state after
+        the commit: ``state`` with ``actions`` folded in, from which the
+        version checksum (and every ``CHECKPOINT_INTERVAL`` commits the
+        checkpoint) is written.
 
         IN-COMMIT TIMESTAMPS (spec §In-Commit Timestamps): when the table
         property is on (or this very commit enables it), commitInfo must be
         the FIRST action and carry ``inCommitTimestamp`` — strictly greater
         than the previous commit's (max(now, prev + 1)), making the commit
         timeline monotonic regardless of file-mtime skew."""
-        if self._ict_enabled_for(actions, meta):
+        version = 0 if state is None else state.version + 1
+        if self._ict_enabled_for(actions, None if state is None else state.meta):
             prev = (
                 self._commit_timestamp(version - 1) if version > 0 else None
             )
@@ -980,9 +993,11 @@ class DeltaTable:
             os.unlink(tmp)
         # Version checksum file: written only AFTER the commit wins the
         # put-if-absent race (losers raised out of os.link above)
-        self._write_version_checksum(version)
+        new = self._fold(state, version, actions)
+        self._write_version_checksum(new)
         if version > 0 and version % self.CHECKPOINT_INTERVAL == 0:
-            self._write_checkpoint(version)
+            self._write_checkpoint(new)
+        return new
 
     @staticmethod
     def _ckpt_add_field():
@@ -1126,10 +1141,7 @@ class DeltaTable:
         state = self._state()
         up = self._feature_upgrade_action(state.protocol, "v2Checkpoint")
         if up:
-            self._publish(
-                state.version + 1, [self._commit_info("UPGRADE PROTOCOL"), up], state.meta
-            )
-            state = self._state(state.version + 1)
+            state = self._publish(state, [self._commit_info("UPGRADE PROTOCOL"), up])
         version = state.version
         sidecar_dir = os.path.join(self.log_dir, "_sidecars")
         os.makedirs(sidecar_dir, exist_ok=True)
@@ -1183,9 +1195,9 @@ class DeltaTable:
         os.replace(tmp2, os.path.join(self.log_dir, "_last_checkpoint"))
         return {"version": version, "file": name, "sidecars": len(sidecars)}
 
-    def _write_checkpoint(self, version: int, parts: int | None = None) -> None:
-        """Classic checkpoint: the state at ``version`` as parquet action
-        rows, plus ``_last_checkpoint``. ``parts`` > 1 writes the spec's
+    def _write_checkpoint(self, state: _State, parts: int | None = None) -> None:
+        """Classic checkpoint: ``state`` as parquet action rows, plus
+        ``_last_checkpoint``. ``parts`` > 1 writes the spec's
         MULTI-PART layout (``%020d.checkpoint.%010d.%010d.parquet``, rows
         split round-robin, ``_last_checkpoint`` records ``parts``) — the
         shape a 100 TB table needs so the checkpoint can be written and
@@ -1194,7 +1206,7 @@ class DeltaTable:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        state = self._state(version)
+        version = state.version
         rows = self._ckpt_state_rows(state) + [
             {"add": self._ckpt_add_row(a)} for a in state.adds
         ]
@@ -1298,7 +1310,7 @@ class DeltaTable:
                 }
             }
         )
-        self._publish(v, actions, state.meta)
+        self._publish(state, actions)
         return {"version": v, "clustering_columns": cols}
 
     def clustering_columns(self) -> list[str]:
@@ -1377,7 +1389,7 @@ class DeltaTable:
         if up:
             actions.append(up)
         actions.append({"metaData": new_meta})
-        self._publish(v, actions, meta)
+        self._publish(state, actions)
         return {"version": v, "column": name, "from": frm, "to": to}
 
     def enable_in_commit_timestamps(self) -> dict:
@@ -1411,7 +1423,7 @@ class DeltaTable:
         if up:
             actions.append(up)
         actions.append({"metaData": new_meta})
-        self._publish(v, actions, meta)
+        self._publish(state, actions)
         return {"already_enabled": False, "version": v, "timestamp": ict}
 
     def version_at_timestamp(self, ts_ms: int) -> int:
@@ -1451,7 +1463,7 @@ class DeltaTable:
         if up:
             actions.append(up)
         actions.append({"metaData": new_meta})
-        self._publish(state.version + 1, actions, state.meta)
+        self._publish(state, actions)
         return {"already_enabled": False}
 
     def _cdf_enabled(self, meta: dict) -> bool:
@@ -1515,7 +1527,7 @@ class DeltaTable:
         new_meta["configuration"] = cfg
         v = state.version + 1
         self._publish(
-            v, [self._commit_info("ADD CONSTRAINT"), {"metaData": new_meta}], state.meta
+            state, [self._commit_info("ADD CONSTRAINT"), {"metaData": new_meta}]
         )
         return {"version": v, "constraint": name}
 
@@ -1710,7 +1722,7 @@ class DeltaTable:
                 }
             }
         )
-        self._publish(v, actions, meta)
+        self._publish(state, actions)
         return {
             "already_enabled": False,
             "version": v,
@@ -1804,7 +1816,7 @@ class DeltaTable:
         if up:
             actions.append(up)
         actions.append({"metaData": new_meta})
-        self._publish(v, actions, meta)
+        self._publish(state, actions)
         return {"version": v, "already_enabled": False}
 
     def _guard_renameable(self, name: str, op: str, meta: dict) -> None:
@@ -1848,7 +1860,7 @@ class DeltaTable:
         ]
         v = state.version + 1
         self._publish(
-            v, [self._commit_info("RENAME COLUMN"), {"metaData": new_meta}], meta
+            state, [self._commit_info("RENAME COLUMN"), {"metaData": new_meta}]
         )
         return {"version": v}
 
@@ -1874,7 +1886,7 @@ class DeltaTable:
         new_meta = dict(meta)
         new_meta["schemaString"] = T.StructType(fields).json()
         v = state.version + 1
-        self._publish(v, [self._commit_info("DROP COLUMN"), {"metaData": new_meta}], meta)
+        self._publish(state, [self._commit_info("DROP COLUMN"), {"metaData": new_meta}])
         return {"version": v}
 
     @staticmethod
@@ -2215,7 +2227,7 @@ class DeltaTable:
             meta_action,
             *({"add": a} for a in adds),
         ]
-        t._publish(0, actions)
+        t._publish(None, actions)
         return t
 
     @staticmethod
@@ -2312,7 +2324,7 @@ class DeltaTable:
             actions.append(up)
         actions.append({"metaData": new_meta})
         v = state.version + 1
-        self._publish(v, actions, meta)
+        self._publish(state, actions)
         return {"version": v, "column": name, "default": expr}
 
     def drop_column_default(self, name: str) -> dict:
@@ -2333,7 +2345,7 @@ class DeltaTable:
         new_meta["schemaString"] = T.StructType(fields).json()
         v = state.version + 1
         self._publish(
-            v, [self._commit_info("DROP DEFAULT"), {"metaData": new_meta}], meta
+            state, [self._commit_info("DROP DEFAULT"), {"metaData": new_meta}]
         )
         return {"version": v, "column": name}
 
@@ -2576,7 +2588,7 @@ class DeltaTable:
         if self._rt_cols(meta):
             actions.extend(self._rt_stamp(adds, state))
         v = state.version + 1
-        self._publish(v, actions, state.meta)
+        self._publish(state, actions)
         return {"version": v, "files_added": len(adds)}
 
     def overwrite(self, df: DataFrame) -> dict:
@@ -2618,7 +2630,7 @@ class DeltaTable:
             # no carry-through semantics exist for replaced rows)
             actions.extend(self._rt_stamp(adds, state))
         v = state.version + 1
-        self._publish(v, actions, meta)
+        self._publish(state, actions)
         return {"version": v, "files_added": len(adds), "files_removed": len(old)}
 
 
@@ -2700,7 +2712,7 @@ class DeltaTable:
         if txn is not None:
             actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
         if n_rows == 0:  # empty batch → no-op commit (idempotency ledger)
-            self._publish(v, actions, meta)
+            self._publish(state, actions)
             return {"updated": 0, "inserted": 0, "files_rewritten": 0,
                     "files_carried": len(adds)}
         if ulo is None:
@@ -2721,7 +2733,7 @@ class DeltaTable:
             actions.extend({"add": a} for a in new_adds)
             if self._rt_cols(meta):
                 actions.extend(self._rt_stamp(new_adds, state))
-            self._publish(v, actions, meta)
+            self._publish(state, actions)
             return {"updated": 0, "inserted": n_rows, "files_rewritten": 0,
                     "files_carried": len(adds)}
 
@@ -2865,7 +2877,7 @@ class DeltaTable:
         actions.extend({"add": a} for a in new_adds)
         if rt:
             actions.extend(self._rt_stamp(new_adds, state))
-        self._publish(v, actions, meta)
+        self._publish(state, actions)
         n_updates = updates.count()
         return {
             "updated": matched,
@@ -2903,7 +2915,7 @@ class DeltaTable:
             if p2 in by_abs:
                 hit.append(by_abs[p2])
         if not hit:
-            self._publish(v, actions, meta)
+            self._publish(state, actions)
             return {"deleted": 0, "files_rewritten": 0}
         rt = self._rt_cols(meta)
         if rt:
@@ -2923,7 +2935,7 @@ class DeltaTable:
         actions.extend({"add": a} for a in new_adds)
         if rt:
             actions.extend(self._rt_stamp(new_adds, state))
-        self._publish(v, actions, meta)
+        self._publish(state, actions)
         return {"deleted": deleted, "files_rewritten": len(hit)}
 
     def delete_vectors(self, predicate: str) -> dict:
@@ -3028,7 +3040,7 @@ class DeltaTable:
             key=lambda r: r["fp"],
         )
         if not res:
-            self._publish(v, [self._commit_info("DELETE")], meta)
+            self._publish(state, [self._commit_info("DELETE")])
             return {"deleted": 0, "files_updated": 0}
         now_ms = int(time.time() * 1000)
         actions: list[dict] = [self._commit_info("DELETE")]
@@ -3052,7 +3064,7 @@ class DeltaTable:
             na["dataChange"] = True
             na["deletionVector"] = dvd
             actions.append({"add": na})
-        self._publish(v, actions, meta)
+        self._publish(state, actions)
         return {
             "deleted": sum(r["new_dead"] for r in res),
             "files_updated": len(res),
@@ -3108,7 +3120,7 @@ class DeltaTable:
                     ),
                 }
             actions.append({"add": a2})
-        t._publish(0, actions)
+        t._publish(None, actions)
         return t
 
     def restore(self, version: int) -> dict:
@@ -3130,7 +3142,7 @@ class DeltaTable:
         actions.extend(self._remove_action(a, now_ms) for a in removes)
         actions.extend({"add": dict(a, dataChange=True)} for a in adds)
         v = state.version + 1
-        self._publish(v, actions, state.meta)
+        self._publish(state, actions)
         return {"version": v, "files_added": len(adds), "files_removed": len(removes)}
 
     def table_changes(
@@ -3398,7 +3410,7 @@ class DeltaTable:
             return {"files_rewritten": 0}
         if rt:
             actions.extend(self._rt_stamp(all_new, state))
-        self._publish(state.version + 1, actions, meta)
+        self._publish(state, actions)
         return {"files_rewritten": rewritten}
 
     def vacuum(self, retain_versions: int = 2, min_age_seconds: float = 3600.0) -> dict:
@@ -3559,7 +3571,7 @@ def convert_parquet_to_delta(spark, root: str) -> DeltaTable:
         t._meta_action(df, part_keys, uuid.uuid4().hex),
         *({"add": a} for a in adds),
     ]
-    t._publish(0, actions)
+    t._publish(None, actions)
     return t
 
 

@@ -7456,6 +7456,7 @@ def iceberg_to_delta_uniform(ic: IcebergTable, delta_root: str | None = None):
     snaps = sorted(md["snapshots"], key=lambda s: s["sequence-number"])
     has_dv = False
     prev: dict[str, dict] = {}
+    delta_state = None
     for i in range(len(snaps)):
         entries, _ = ic.files(index=i)
         dv_by_ref: dict[str, dict] = {}
@@ -7567,7 +7568,7 @@ def iceberg_to_delta_uniform(ic: IcebergTable, delta_root: str | None = None):
                         }
                     )
                 actions.append({"add": a})
-        t._publish(i, actions)
+        delta_state = t._publish(delta_state, actions)
         prev = state
     return t
 

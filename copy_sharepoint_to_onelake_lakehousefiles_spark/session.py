@@ -8,6 +8,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+# HotSpot's four tier-4 (C2) compile thresholds at ten times their JDK 17
+# defaults. A job that runs in a fresh session spent more CPU in C2 than
+# in its task threads, compiling Catalyst, Janino and py4j code that runs
+# a few thousand times per session; at x10 that code stays at C1 while a
+# long scan's inner loop still reaches C2. C1-only made a 2e9-row
+# aggregate 6.5x slower and x100 a 2e8-row one 1.8x slower (README design
+# rule 13). Only the driver JVM gets it, which in local[N] is also the
+# executor.
+_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
+
 
 def _workers_can_import_package() -> bool:
     parent = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
@@ -40,6 +53,7 @@ def get_spark(app_name: str = "sharepoint_onelake_spark", cpus: str | None = Non
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.extraJavaOptions", _JIT_OPTIONS)
     )
     # Every Python task re-read the central directories of the 16 zip
     # archives on the worker's path, about 170 ms of CPU before its first

@@ -147,7 +147,7 @@ def test_checkpoint_and_constraint_guards(spark, root):
     t = _mk(spark, root)
     t.enable_column_mapping()
     t.rename_column("v", "val")
-    t._write_checkpoint(t.latest_version())
+    t._write_checkpoint(t._state())
     t2 = DeltaTable(spark, root)
     # schemaString (with mapping metadata) survives the checkpoint parquet
     assert [f.name for f in t2.read().schema.fields] == ["k", "tag", "val"]
@@ -188,7 +188,7 @@ def test_protocol_feature_upgrades(spark, root):
         "protocol" in a for a in t._commit_actions(t.latest_version())
     )
     # the protocol (with feature lists) survives a checkpoint round-trip
-    t._write_checkpoint(t.latest_version())
+    t._write_checkpoint(t._state())
     t2 = DeltaTable(spark, root)
     assert t2.protocol()["readerFeatures"] == ["columnMapping", "deletionVectors"]
     # time travel reads the protocol as of that version

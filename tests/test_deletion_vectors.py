@@ -108,7 +108,7 @@ def test_dv_cow_merge_and_compact_interplay(spark, root):
 def test_dv_checkpoint_carries_descriptor(spark, root):
     t = _mk(spark, root)
     t.delete_vectors("k >= 8")
-    t._write_checkpoint(t.latest_version())
+    t._write_checkpoint(t._state())
     # a fresh handle resolves the snapshot FROM the checkpoint; the DV must
     # still mask (descriptor survives the parquet round-trip)
     t2 = DeltaTable(spark, root)

@@ -258,7 +258,7 @@ def test_txn_ledger_survives_log_cleanup(root):
     by ``seen_txn``: the checkpoint carries every appId's latest txn, so a
     re-delivered ``stream_append`` batch is still recognized."""
     t = _one_file_per_commit_log(root, 12, {1: [{"txn": {"appId": "s1", "version": 5}}]})
-    t._write_checkpoint(11)
+    t._write_checkpoint(t._state(11))
     assert t.cleanup_log(keep_versions=1)["commits_deleted"] == 11
     assert t.seen_txn("s1") == 5
     assert t.seen_txn("other") is None
@@ -294,8 +294,9 @@ def test_commit_on_a_superseded_version_is_refused(spark, root, monkeypatch, op)
 
 
 def test_each_write_replays_the_log_once(spark, root, monkeypatch):
-    """A write lists ``_delta_log`` at most twice: once for the state it
-    plans on, once for the version checksum of the commit it made."""
+    """A write lists ``_delta_log`` once, for the state it plans on: the
+    version checksum of its commit comes from that state with the commit's
+    actions folded in, not from a second replay."""
     t = DeltaTable.create(
         spark, root, spark.range(10).select(F.col("id").alias("k"), F.col("id").alias("v")).coalesce(1)
     )
@@ -316,7 +317,7 @@ def test_each_write_replays_the_log_once(spark, root, monkeypatch):
         run()
         listings[name] = len(calls)
     assert t.latest_version() == len(ops)
-    assert all(n <= 2 for n in listings.values()), listings
+    assert all(n == 1 for n in listings.values()), listings
 
 
 def _hand_written_log(root, cols, adds):
@@ -509,7 +510,7 @@ def test_delete_on_empty_table_is_a_readable_noop(spark, sf_dir, root):
 def test_commit_conflict_raises(spark, root):
     t = DeltaTable.create(spark, root, spark.range(3).select(F.col("id").alias("k")))
     with pytest.raises(FileExistsError):
-        t._publish(0, [{"commitInfo": {"operation": "X"}}])
+        t._publish(None, [{"commitInfo": {"operation": "X"}}])
 
 
 def test_txn_action_recorded(spark, root):
@@ -1298,7 +1299,7 @@ def test_engine_writes_and_reads_multipart_checkpoint(spark, root):
     )
     t.append(spark.range(40, 50).select(F.col("id").alias("k")).repartition(2))
     ck = t.latest_version()
-    t._write_checkpoint(ck, parts=3)
+    t._write_checkpoint(t._state(ck), parts=3)
     names = [
         n for n in os.listdir(t.log_dir)
         if ".checkpoint." in n and n.endswith(".parquet")
@@ -1445,7 +1446,7 @@ def test_row_tracking_end_to_end(spark, root):
     assert rcv5[200] == v_before + 1
     # checkpoint round-trip: domain metadata + baseRowId survive a fresh
     # resolve through the parquet checkpoint alone
-    t._write_checkpoint(t.latest_version())
+    t._write_checkpoint(t._state())
     t2 = DeltaTable(spark, root)
     t2.cleanup_log(keep_versions=1)
     t3 = DeltaTable(spark, root)

@@ -377,7 +377,7 @@ def test_foreign_multipart_classic_checkpoint(spark):
         t = DeltaTable.create(spark, root, base)
         t.append(spark.range(40, 50).select(F.col("id").alias("k")).repartition(3))
         ck = t.latest_version()
-        t._write_checkpoint(ck)
+        t._write_checkpoint(t._state(ck))
         single = os.path.join(t.log_dir, f"{ck:020d}.checkpoint.parquet")
         tbl = pq.read_table(single)
         assert tbl.num_rows >= 4  # adds span both slices below
@@ -417,7 +417,7 @@ def test_incomplete_multipart_checkpoint_is_skipped(spark):
         )
         t.append(spark.range(20, 30).select(F.col("id").alias("k")))
         ck = t.latest_version()
-        t._write_checkpoint(ck)
+        t._write_checkpoint(t._state(ck))
         single = os.path.join(t.log_dir, f"{ck:020d}.checkpoint.parquet")
         tbl = pq.read_table(single)
         pq.write_table(

@@ -64,7 +64,7 @@ def test_random_op_sequences_agree_across_formats(spark, init, ops):
                 if op[0] == "ckpt_v2":
                     dl.write_checkpoint_v2(sidecar_parts=op[1])
                 else:
-                    dl._write_checkpoint(dl.latest_version(), parts=op[1] + 1)
+                    dl._write_checkpoint(dl._state(), parts=op[1] + 1)
                 # resolution through the fresh checkpoint must match a new
                 # handle's view immediately
                 assert _rows(DeltaTable(spark, dl.root).read()) == sorted(model)

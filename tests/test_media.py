@@ -33,33 +33,6 @@ def test_stub_decode_deterministic():
     assert M._stub_decode(b"abc") != M._stub_decode(b"abd")
 
 
-def test_frame_sampling_expands_rows(spark, tmp_path):
-    root, paths = _mk_blobs(tmp_path)
-    media = M.read_media_dir(spark, root, kind="video")
-    frames = M.sample_frames(media, every_ms=500).collect()
-    assert len(frames) > len(paths)  # 1 → N expansion happened
-    for f in frames:
-        assert f["frame_ts_ms"] % 500 == 0
-        assert len(f["frame_features"]) == 4
-
-
-def test_resize_passthrough_updates_meta(spark, tmp_path):
-    root, _ = _mk_blobs(tmp_path)
-    out = M.resize_images(M.read_media_dir(spark, root), 32, 32).collect()
-    assert all(r["width"] == 32 and r["height"] == 32 for r in out)
-
-
-def test_arrow_extractor_matches_pandas_extractor(spark, tmp_path):
-    root, _ = _mk_blobs(tmp_path)
-    media = M.read_media_dir(spark, root)
-    via_pandas = {r["digest"]: r for r in M.extract_features(media).collect()}
-    via_arrow = {r["digest"]: r for r in M.extract_features_arrow(media).collect()}
-    assert set(via_pandas) == set(via_arrow)
-    for k in via_pandas:
-        assert via_pandas[k]["n_bytes"] == via_arrow[k]["n_bytes"]
-        assert via_pandas[k]["features"] == via_arrow[k]["features"]
-
-
 # --- real codec paths (stdlib-decodable formats) -----------------------------
 
 import io
@@ -72,8 +45,6 @@ from copy_sharepoint_to_onelake_lakehousefiles_spark.multimodal.media import (
     decode_audio,
     decode_image,
     encode_ppm,
-    resize_images,
-    sample_frames,
 )
 
 
@@ -140,35 +111,6 @@ def test_extract_features_real_image_means(spark, tmp_path):
     feats = extract_features(media).collect()[0]["features"]
     assert abs(feats[2] - 1.0) < 1e-6  # mean R
     assert abs(feats[3]) < 1e-6 and abs(feats[4]) < 1e-6  # mean G, B
-
-
-def test_resize_real_image_changes_dims(spark, tmp_path):
-    (tmp_path / "img.ppm").write_bytes(_ppm_bytes(8, 6, [9, 9, 9]))
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.multimodal.media import (
-        read_media_dir,
-    )
-
-    media = read_media_dir(spark, str(tmp_path), kind="image")
-    out = resize_images(media, 4, 2).collect()[0]
-    resized = decode_image(bytes(out["content"]))
-    assert resized.shape == (2, 4, 3) and (resized == 9).all()
-    assert out["width"] == 4 and out["height"] == 2
-
-
-def test_sample_frames_real_audio_windows(spark, tmp_path):
-    content, _ = _wav_bytes(seconds=1.0)  # 1 s at 250 ms windows → 4 rows
-    (tmp_path / "tone.wav").write_bytes(content)
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.multimodal.media import (
-        read_media_dir,
-    )
-
-    media = read_media_dir(spark, str(tmp_path), kind="audio")
-    rows = sorted(
-        sample_frames(media, every_ms=250).collect(), key=lambda r: r["frame_ts_ms"]
-    )
-    assert [r["frame_ts_ms"] for r in rows] == [0, 250, 500, 750]
-    for r in rows:  # every real window of a steady sine has RMS ≈ amp/√2
-        assert abs(r["frame_features"][0] - 0.5 / np.sqrt(2)) < 0.01
 
 
 # --- header metadata probe (no codec libraries needed) ------------------------
@@ -814,7 +756,6 @@ def test_gif_animation_roundtrip_and_sampling():
     from copy_sharepoint_to_onelake_lakehousefiles_spark.multimodal.media import (
         decode_gif_frames,
         encode_gif_animation,
-        sample_gif_frames,
     )
 
     frames = []
@@ -827,9 +768,8 @@ def test_gif_animation_roundtrip_and_sampling():
     assert delays == [7, 14, 21, 28, 35]
     assert len(dec) == 5
     assert all(np.array_equal(a, b) for a, b in zip(frames, dec))
-    s = sample_gif_frames(payload, 2)
-    assert np.array_equal(s[0], frames[0]) and np.array_equal(s[1], frames[4])
-    assert len(sample_gif_frames(payload, 99)) == 5
+    # sampling k of these frames is sample_video_frames' job, checked by
+    # test_q157_video_pipeline
 
 
 def test_gif_disposal_methods_and_transparency_hand_built():
@@ -1192,38 +1132,6 @@ def test_tiff_lzw_tampered_stream_never_escapes_decode_errors(payload, data):
         _tiff_lzw_decode(bytes(enc))
     except DECODE_ERRORS:
         pass
-
-
-def test_sample_frames_decodes_compressed_voice_windows(spark, tmp_path):
-    """sample_frames' audio windows must come from REAL decoded samples for
-    G.711 and ADPCM payloads too (decode_audio dispatch) — a steady sine's
-    windows all have RMS ≈ amp/√2, which the hash-stub path cannot
-    produce."""
-    from copy_sharepoint_to_onelake_lakehousefiles_spark.multimodal.media import (
-        WAVE_IMA_ADPCM,
-        WAVE_MULAW,
-        encode_wav,
-        ima_adpcm_encode,
-        mulaw_encode,
-        read_media_dir,
-    )
-
-    t = np.arange(8000) / 8000.0
-    sine = (0.5 * np.sin(2 * np.pi * 440 * t) * 32767).astype(np.int16)
-    (tmp_path / "u.wav").write_bytes(
-        encode_wav(mulaw_encode(sine).tobytes(), WAVE_MULAW, 1, 8000, 8, 1)
-    )
-    (tmp_path / "a.wav").write_bytes(
-        encode_wav(
-            ima_adpcm_encode(sine, 256), WAVE_IMA_ADPCM, 1, 8000, 4, 256,
-            n_frames=len(sine),
-        )
-    )
-    media = read_media_dir(spark, str(tmp_path), kind="audio")
-    rows = sample_frames(media, every_ms=250).collect()
-    assert len(rows) == 8  # 2 clips × 4 windows of 250 ms
-    for r in rows:
-        assert abs(r["frame_features"][0] - 0.5 / np.sqrt(2)) < 0.02
 
 
 def test_tiff_jpeg_compression7_roundtrip():
