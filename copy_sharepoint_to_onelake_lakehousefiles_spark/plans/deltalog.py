@@ -433,9 +433,9 @@ class DeltaTable:
     def _fold(self, base: _State | None, version: int, actions: list[dict]) -> _State:
         """``base`` (None: no table yet) with ``actions`` applied in log
         order, as the state at ``version``. A replay folds a checkpoint
-        and its JSON tail into nothing; a commit folds its own actions
-        into the state it planned on, so its checksum and checkpoint need
-        no second replay."""
+        and its JSON tail into an empty table; a commit folds its own
+        actions into the state it planned on, so its checksum and
+        checkpoint need no second replay."""
         adds = {a["path"]: a for a in base.adds} if base else {}
         meta = base.meta if base else None
         proto = base.protocol if base else dict(PROTOCOL)
