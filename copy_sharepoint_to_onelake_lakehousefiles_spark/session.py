@@ -8,17 +8,19 @@ import os
 
 from pyspark.sql import SparkSession
 
-# HotSpot's four tier-4 (C2) compile thresholds at ten times their JDK 17
+# HotSpot's tier-4 (C2) invocation thresholds at ten times their JDK 17
 # defaults. A job that runs in a fresh session spent more CPU in C2 than
 # in its task threads, compiling Catalyst, Janino and py4j code that runs
-# a few thousand times per session; at x10 that code stays at C1 while a
-# long scan's inner loop still reaches C2. C1-only made a 2e9-row
-# aggregate 6.5x slower and x100 a 2e8-row one 1.8x slower (README design
-# rule 13). Only the driver JVM gets it, which in local[N] is also the
-# executor.
+# a few thousand times per session; at x10 that code stays at C1. The
+# back-edge threshold keeps its default, so a long scan's inner loop
+# reaches C2 through OSR as soon as before: raising it too made a 2e8-row
+# aggregate slower and the task threads run C1 code for longer. C1-only
+# made a 2e9-row aggregate 6.5x slower and x100 a 2e8-row one 1.8x slower
+# (README design rule 13). Only the driver JVM gets it, which in local[N]
+# is also the executor.
 _JIT_OPTIONS = (
     "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
-    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+    "-XX:Tier4CompileThreshold=150000"
 )
 
 

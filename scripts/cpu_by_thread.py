@@ -17,21 +17,29 @@ planner processes (``pyspark.sql.worker.*``), the driver's Python and
 other (shells, spark-submit's launcher JVM and helpers). A last line
 holds the same figures as one JSON object.
 
-A process or thread is counted at its last sample, so processes that
-exit between two samples are undercounted by what they used after their
-last one, and one that lived less than 0.2 s is missed whole: the
-process figures are lower bounds. The JVM's own total includes its
-exited threads, and ``exited`` is that total less the sum of its sampled
-threads. It reads ``/proc`` only.
+A process that has left ``/proc`` was reaped, and what its parent
+reaped meanwhile (``cutime``/``cstime``, which ``perfbench/host.py``'s
+``cpu_s`` counts too) is its whole CPU, so it is counted in full in its
+own class; a child that lived less than one sample goes to its parent's
+class. ``total`` is the kernel's count for the whole reaped tree; it
+exceeds the sum of the classes by what the last processes used after
+their last sample. The JVM's own total includes its exited threads, and
+``exited`` is that total less the sum of its sampled threads. It reads
+``/proc`` and its own ``getrusage`` only.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import resource
 import subprocess
 import sys
 import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.host import descendants  # noqa: E402
 
 INTERVAL_S = 0.2
 TICK = os.sysconf("SC_CLK_TCK")
@@ -39,9 +47,9 @@ THREAD_CLASSES = ("C2 CompilerThre", "C1 CompilerThre", "GC/G1", "Executor task 
 PROCESS_CLASSES = ("jvm", "python_task_workers", "data_source_planners", "driver_python", "other")
 
 
-def read_stat(path: str) -> tuple[str, int, int, float] | None:
-    """(comm, ppid, starttime, CPU-s) from a ``stat`` file, None when the
-    process or thread is gone."""
+def read_stat(path: str) -> tuple[str, int, int, float, float] | None:
+    """(comm, ppid, starttime, own CPU-s, reaped children's CPU-s) from a
+    ``stat`` file, None when the process or thread is gone."""
     try:
         with open(path) as f:
             s = f.read()
@@ -49,7 +57,9 @@ def read_stat(path: str) -> tuple[str, int, int, float] | None:
         return None
     rp = s.rfind(")")
     rest = s[rp + 2:].split()
-    return s[s.find("(") + 1:rp], int(rest[1]), int(rest[19]), (int(rest[11]) + int(rest[12])) / TICK
+    own = (int(rest[11]) + int(rest[12])) / TICK
+    reaped = (int(rest[13]) + int(rest[14])) / TICK
+    return s[s.find("(") + 1:rp], int(rest[1]), int(rest[19]), own, reaped
 
 
 def cmdline(pid: int) -> str:
@@ -86,25 +96,6 @@ def thread_class(comm: str) -> str:
     return "other"
 
 
-def tree(root: int) -> dict[int, tuple[str, int, float]]:
-    """pid → (comm, starttime, CPU-s) for ``root`` and its descendants."""
-    stats, children = {}, {}
-    for name in os.listdir("/proc"):
-        if name.isdigit():
-            st = read_stat(f"/proc/{name}/stat")
-            if st is not None:
-                stats[int(name)] = st
-                children.setdefault(st[1], []).append(int(name))
-    out, todo = {}, [root]
-    while todo:
-        pid = todo.pop()
-        if pid in stats:
-            comm, _, start, cpu = stats[pid]
-            out[pid] = (comm, start, cpu)
-            todo.extend(children.get(pid, ()))
-    return out
-
-
 def main(argv: list[str]) -> int:
     if not argv:
         print(__doc__, file=sys.stderr)
@@ -113,14 +104,22 @@ def main(argv: list[str]) -> int:
     child = subprocess.Popen(argv)
     procs: dict[tuple[int, int], dict] = {}  # (pid, starttime) → last sample
     threads: dict[tuple[int, int, int], tuple[str, float]] = {}  # (pid, start, tid) → (comm, CPU-s)
+    by_proc = dict.fromkeys(PROCESS_CLASSES, 0.0)
     samples = 0
     while child.poll() is None:
-        for pid, (comm, start, cpu) in tree(child.pid).items():
+        live: dict[int, tuple[dict, float]] = {}  # pid → (sample, CPU it reaped since the last one)
+        for pid in descendants(child.pid):
+            st = read_stat(f"/proc/{pid}/stat")
+            if st is None:
+                continue
+            comm, ppid, start, own, reaped = st
             p = procs.get((pid, start))
             if p is None or comm != p["comm"]:
                 # new, or a fork that has since exec'd (spark-submit → java)
-                p = procs[(pid, start)] = {"class": process_class(comm, cmdline(pid))}
-            p["comm"], p["cpu_s"] = comm, cpu
+                p = procs[(pid, start)] = {"class": process_class(comm, cmdline(pid)),
+                                           "reaped": p["reaped"] if p else 0.0}
+            live[pid] = p, reaped - p["reaped"]
+            p.update(comm=comm, ppid=ppid, own=own, reaped=reaped, seen=samples)
             if p["class"] == "jvm":
                 try:
                     tids = os.listdir(f"/proc/{pid}/task")
@@ -130,27 +129,43 @@ def main(argv: list[str]) -> int:
                     st = read_stat(f"/proc/{pid}/task/{tid}/stat")
                     if st is not None:
                         threads[(pid, start, int(tid))] = (st[0], st[3])
+        # A child gone since the last sample was reaped: what its parent
+        # reaped meanwhile is its whole CPU and goes to its class. Children
+        # never sampled go to the parent's.
+        for pid, (p, cpu) in live.items():
+            if cpu <= 0:
+                continue
+            gone = [c for c in procs.values() if c["ppid"] == pid and c["seen"] == samples - 1]
+            if not gone:
+                by_proc[p["class"]] += cpu
+                continue
+            weight = sum(c["own"] + c["reaped"] for c in gone)
+            for c in gone:
+                c["reaped_by_parent"] = True
+                by_proc[c["class"]] += cpu * ((c["own"] + c["reaped"]) / weight if weight else 1 / len(gone))
         samples += 1
         time.sleep(INTERVAL_S)
     wall = time.monotonic() - t0
+    ru = resource.getrusage(resource.RUSAGE_CHILDREN)
 
-    by_proc = dict.fromkeys(PROCESS_CLASSES, 0.0)
     n_proc = dict.fromkeys(PROCESS_CLASSES, 0)
     for p in procs.values():
-        by_proc[p["class"]] += p["cpu_s"]
         n_proc[p["class"]] += 1
+        if not p.get("reaped_by_parent"):
+            by_proc[p["class"]] += p["own"]
     by_thread = dict.fromkeys(THREAD_CLASSES, 0.0)
     for comm, cpu in threads.values():
         by_thread[thread_class(comm)] += cpu
-    by_thread["exited"] = by_proc["jvm"] - sum(by_thread.values())
-    sampled = sum(by_proc.values())
+    jvm_own = sum(p["own"] for p in procs.values() if p["class"] == "jvm")
+    by_thread["exited"] = jvm_own - sum(by_thread.values())
+    total = ru.ru_utime + ru.ru_stime
     report = {
         "cmd": argv, "rc": child.returncode, "wall_s": round(wall, 2), "samples": samples,
         "interval_s": INTERVAL_S,
         "jvm_threads": {k: round(v, 2) for k, v in by_thread.items()},
         "processes": {k: round(v, 2) for k, v in by_proc.items()},
         "process_counts": n_proc,
-        "sampled_s": round(sampled, 2),
+        "total_s": round(total, 2),
     }
     print(f"\ncpu_by_thread: wall {wall:.1f} s, {samples} samples every {INTERVAL_S} s")
     print("JVM threads, CPU-s:")
@@ -159,8 +174,7 @@ def main(argv: list[str]) -> int:
     print("processes, CPU-s:")
     for k in PROCESS_CLASSES:
         print(f"  {k:<30}{by_proc[k]:9.2f}  ({n_proc[k]} processes)")
-    print(f"  {'sampled total':<30}{sampled:9.2f}")
-    print("  (a process that exits between two samples is undercounted)")
+    print(f"  {'total':<30}{total:9.2f}")
     print(json.dumps({"cpu_by_thread": report}))
     return child.returncode
 

@@ -34,8 +34,9 @@ def test_classes_follow_comm_and_command_line():
 
 
 def test_wraps_a_command_and_splits_its_tree():
-    cmd = ("import subprocess, sys; sum(range(10**7));"
-           " subprocess.run([sys.executable, '-c', 'sum(range(5 * 10**7))']); sys.exit(3)")
+    # the child exits a second before its parent, which has reaped it by then
+    cmd = ("import subprocess, sys, time; sum(range(10**7));"
+           " subprocess.run([sys.executable, '-c', 'sum(range(5 * 10**7))']); time.sleep(1); sys.exit(3)")
     p = subprocess.run([sys.executable, str(SCRIPT), sys.executable, "-c", cmd],
                        capture_output=True, text=True, timeout=120)
     assert p.returncode == 3
@@ -44,3 +45,5 @@ def test_wraps_a_command_and_splits_its_tree():
     assert report["processes"]["driver_python"] > 0
     assert report["processes"]["jvm"] == 0
     assert report["process_counts"]["driver_python"] == 2
+    # the child's CPU after its last sample is counted through its parent
+    assert report["processes"]["driver_python"] >= 0.9 * report["total_s"]

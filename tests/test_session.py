@@ -21,11 +21,12 @@ def test_warm_query_compiles_nothing_after_a_large_working_set(spark):
 
 
 def test_session_jvm_keeps_lukewarm_code_out_of_c2(spark):
-    """The session's JVM runs with the four tier-4 thresholds raised, and
-    with C2 still on: no TieredStopAtLevel caps the JIT at C1."""
+    """The session's JVM runs with the three tier-4 invocation thresholds
+    raised, the back-edge (OSR) threshold at its default, and C2 still on:
+    no TieredStopAtLevel caps the JIT at C1."""
     bean = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
     args = [str(a) for a in bean.getInputArguments()]
-    for name in ("Tier4InvocationThreshold", "Tier4MinInvocationThreshold",
-                 "Tier4CompileThreshold", "Tier4BackEdgeThreshold"):
+    for name in ("Tier4InvocationThreshold", "Tier4MinInvocationThreshold", "Tier4CompileThreshold"):
         assert any(a.startswith(f"-XX:{name}=") for a in args), (name, args)
+    assert not any("Tier4BackEdgeThreshold" in a for a in args), args
     assert not any("TieredStopAtLevel" in a for a in args), args
